@@ -100,6 +100,29 @@ object Bench {
     (verdict, load, probe)
   }
 
+  /** A double at 4 decimals, always with a `.` separator: the JVM's
+    * default locale would print `0,1234` under de_DE, which no JSON
+    * parser reads.
+    */
+  private[graft] def fixed4(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
+  /** The one-line JSON result. The printed line rounds every float to
+    * 4 decimals: at full double precision the 137-query line is ~9 KB
+    * and overflows a log-tail capture of a few KB — 0.1 ms resolution
+    * is far below bench noise and cuts the line ~3×. The
+    * `$SPARK_GRAFT_BENCH_OUT` file keeps full precision (`_.toString`).
+    */
+  private[graft] def line(results: Seq[(String, Double)], total: Double,
+      failed: Seq[String], idxSec: Double, gate: String, loadPre: Double,
+      probePre: Double, loadavg: Double, probeSec: Double, sfDir: String,
+      fmt: Double => String): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"index_build_sec":${fmt(idxSec)},"ambient_gate":"$gate","loadavg_pre":${fmt(loadPre)},"probe_64mib_pre":${fmt(probePre)},"loadavg":${fmt(loadavg)},"probe_64mib_sec":${fmt(probeSec)},"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -153,21 +176,11 @@ object Bench {
         name -> times.min
     }
     val total = results.map(_._2).sum
-    val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
     val (loadavg, probeSec) = machineProbe(sfDir)
-    // The printed one-line JSON rounds every float to 4 decimals: at full
-    // double precision the 137-query line is ~9 KB and overflows the
-    // driver's log-tail capture (both BENCH_r12/r13 have parsed:null for
-    // exactly this reason) — 0.1 ms resolution is far below bench noise
-    // and cuts the line ~3×. The $SPARK_GRAFT_BENCH_OUT file keeps full
-    // precision. Same timings, same methodology; only the printed
-    // formatting changed (round-14 measurement-contract fix).
-    def render(fmt: Double => String): String = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"index_build_sec":${fmt(idxSec)},"ambient_gate":"$gate","loadavg_pre":${fmt(loadPre)},"probe_64mib_pre":${fmt(probePre)},"loadavg":${fmt(loadavg)},"probe_64mib_sec":${fmt(probeSec)},"sf":"$sfDir"}"""
-    }
-    println(render(v => f"$v%.4f"))
+    def render(fmt: Double => String): String =
+      line(results, total, failed.reverse, idxSec, gate, loadPre, probePre,
+        loadavg, probeSec, sfDir, fmt)
+    println(render(fixed4))
     // ALSO write the line to a file: the driver's bench artifact keeps
     // only a truncated log tail, which loses the first half of the
     // per-query record — the file is the complete, parseable copy

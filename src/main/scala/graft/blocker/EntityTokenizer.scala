@@ -2,14 +2,17 @@ package graft.blocker
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.Ftm
 
 /** Typed entity tokenizer — the FtM-aware token emission of the
-  * reference (`blocker/tokenizer.py:61-132`), columnar: every family is
-  * a select + explode over the statement table (map-side only; the one
-  * shuffle is the final per-entity count groupBy, which IS the inverted
-  * index build `blocker/index.py:162-169`).
+  * reference (`blocker/tokenizer.py:61-132`), columnar and single-scan:
+  * each statement row emits every (field, token, counted) tuple of the
+  * families that apply to its `prop_type` through ONE generator, and
+  * ONE groupBy on (id, field, token) folds them into the inverted index
+  * (`blocker/index.py:162-169`). The plan is one scan of the statement
+  * table and one exchange, whatever the number of families.
   *
   * Emission families (field → token prefix):
   *  - `name`  → `n:<fingerprint>` — sorted distinct name parts joined
@@ -83,9 +86,6 @@ object EntityTokenizer {
   def parts(c: Column): Column =
     filter(split(foldAscii(c), "[^a-z0-9]+"), p => length(p) > 0)
 
-  private def tok(field: Column, token: Column): Column =
-    struct(field.as("field"), token.as("token"))
-
   /** Matchable-schema statement projection shared by the batch entries
     * build and the streaming tokenizer: filter + column shaping only.
     */
@@ -98,106 +98,99 @@ object EntityTokenizer {
         col("prop_type"), col("value"))
   }
 
+  private val EmittedType = ArrayType(StructType(Seq(
+    StructField("field", StringType), StructField("token", StringType),
+    StructField("counted", BooleanType))))
+
+  /** All (field, token, counted) tuples of one statement row. Each family
+    * is gated on the row's `prop_type`, so a row evaluates only the
+    * families that apply to it. Reads the row's value parts `p` and name
+    * fingerprint `fp` as attributes (see [[emitted]]).
+    */
+  private def tokensOf: Column = {
+    val t = col("prop_type")
+    val v = col("value")
+    val p = col("p")
+    val fp = col("fp")
+    def fam(cond: Column, arr: Column): Column =
+      when(cond, arr).otherwise(array().cast(EmittedType))
+    def one(field: Column, token: Column, counted: Boolean): Column =
+      struct(field.as("field"), token.as("token"), lit(counted).as("counted"))
+    def prefixed(xs: Column, field: String, prefix: String,
+        counted: Boolean): Column =
+      transform(xs, x => one(lit(field), concat(lit(prefix), x), counted))
+    val isName = t === Ftm.T.Name
+    val ident = concat(lit("i:"), regexp_replace(upper(v), "[^A-Z0-9]+", ""))
+    val words = filter(p, w => !w.isInCollection(Stopwords))
+    concat(
+      // set semantics
+      fam(isName && length(fp) > 3 && length(fp) < 200,
+        array(one(lit("name"), concat(lit("n:"), fp), counted = false))),
+      fam(isName, prefixed(filter(p, x => length(x) >= 3 && length(x) <= 30),
+        NamePartField, "np:", counted = false)),
+      fam(isName, transform(symbolsUdf(p),
+        x => one(lit(SymbolField), x, counted = false))),
+      fam(t.isin(Ftm.T.Country, Ftm.T.Phone, Ftm.T.Email),
+        array(one(t, concat(t, lit(":"), lower(substring(v, 1, 300))),
+          counted = false))),
+      fam(t === Ftm.T.Identifier && length(ident) > 2,
+        array(one(lit("identifier"), ident, counted = false))),
+      fam(t === Ftm.T.Date, array(one(lit("date"),
+        concat(lit("d:"), substring(v, 1, 10)), counted = false))),
+      // counted
+      fam(t === Ftm.T.Address, concat(
+        prefixed(filter(words, w => length(w) > 3), "address", "a:",
+          counted = true),
+        prefixed(filter(words, w => length(w) > 6), WordField, "wd:",
+          counted = true))),
+      fam(t.isin(Ftm.T.StringT, Ftm.T.Text, Ftm.T.Identifier),
+        prefixed(filter(words, w => length(w) >= 6), WordField, "wd:",
+          counted = true)))
+  }
+
+  /** Prepared statements → one (id, schema, field, token, counted) row
+    * per token occurrence: a projection computing the value parts and
+    * the name fingerprint once per row, then one explode. Stateless and
+    * map-side only; shared by [[entries]] and the streaming tokenizer
+    * (which dedupes in its own state instead of a batch aggregation).
+    */
+  def emitted(st: DataFrame): DataFrame =
+    st.select(col("id"), col("schema"), col("prop_type"), col("value"),
+        parts(col("value")).as("p"))
+      .withColumn("fp", when(col("prop_type") === Ftm.T.Name,
+        array_join(array_sort(array_distinct(col("p"))), "")))
+      .select(col("id"), col("schema"), explode(tokensOf).as("t"))
+      .select(col("id"), col("schema"), col("t.field").as("field"),
+        col("t.token").as("token"), col("t.counted").as("counted"))
+
   /** Statements → (schema, id, field, token, cnt) entries for matchable
     * schemata. `idCol` selects entity_id vs canonical_id grouping.
+    *
+    * One row per (id, field, token) with the cluster's MERGED schema: a
+    * mixed-schema canonical cluster (Person merged under LegalEntity)
+    * must not emit the same token once per statement schema — that
+    * doubles n in the pair score and inflates xref ranking. The
+    * reference tokenizes the assembled entity, which has one schema.
+    * `cnt` is the number of distinct statement schemas carrying the
+    * token for set-semantics fields and the number of occurrences for
+    * counted fields; the two families never share a field.
     */
-  def entries(stmts: DataFrame, idCol: String = "canonical_id"): DataFrame = {
-    val st = preparedStatements(stmts, idCol)
-    val setFam = setFamilyRows(st)
-      .distinct()
-      .withColumn("cnt", lit(1L))
-    val counted = countedFamilyRows(st)
-      .groupBy(col("id"), col("schema"), col("field"), col("token"))
-      .agg(count(lit(1)).as("cnt"))
-
-    val union = setFam.select(col("schema"), col("id"), col("field"),
-        col("token"), col("cnt"))
-      .unionByName(counted.select(col("schema"), col("id"), col("field"),
-        col("token"), col("cnt")))
-    // One row per (id, field, token) with the cluster's MERGED schema:
-    // a mixed-schema canonical cluster (Person merged under LegalEntity)
-    // must not emit the same token once per statement schema — that
-    // doubles n in the pair score and inflates xref ranking. The
-    // reference tokenizes the assembled entity, which has one schema.
-    // The groupBy key matches the per-entity count shuffle that was
-    // already here; commonSchema runs on the (tiny) distinct-schema set.
-    union
+  def entries(stmts: DataFrame, idCol: String = "canonical_id"): DataFrame =
+    emitted(preparedStatements(stmts, idCol))
       .groupBy(col("id"), col("field"), col("token"))
-      .agg(commonSchemaUdf(collect_set(col("schema"))).as("schema"),
-        sum(col("cnt")).as("cnt"))
-      .select(col("schema"), col("id"), col("field"), col("token"),
-        col("cnt"))
-  }
-
-  /** Set-semantics token families (one row per occurrence, PRE-distinct)
-    * — stateless narrow transforms over prepared statements, shared by
-    * [[entries]] and the streaming tokenizer (which dedupes in its own
-    * state instead of a batch `distinct`).
-    */
-  def setFamilyRows(st: DataFrame): DataFrame = {
-    val p = parts(col("value"))
-
-    val nameFp = st.filter(col("prop_type") === Ftm.T.Name)
-      .select(col("id"), col("schema"),
-        array_join(array_sort(array_distinct(p)), "").as("fp"))
-      .filter(length(col("fp")) > 3 && length(col("fp")) < 200)
-      .select(col("id"), col("schema"), lit("name").as("field"),
-        concat(lit("n:"), col("fp")).as("token"))
-    val nameParts = st.filter(col("prop_type") === Ftm.T.Name)
-      .select(col("id"), col("schema"), explode(p).as("part"))
-      .filter(length(col("part")) >= 3 && length(col("part")) <= 30)
-      .select(col("id"), col("schema"), lit(NamePartField).as("field"),
-        concat(lit("np:"), col("part")).as("token"))
-    val full = st
-      .filter(col("prop_type").isin(Ftm.T.Country, Ftm.T.Phone, Ftm.T.Email))
-      .select(col("id"), col("schema"), col("prop_type").as("field"),
-        concat(col("prop_type"), lit(":"),
-          lower(substring(col("value"), 1, 300))).as("token"))
-    val ident = st.filter(col("prop_type") === Ftm.T.Identifier)
-      .select(col("id"), col("schema"), lit("identifier").as("field"),
-        concat(lit("i:"),
-          regexp_replace(upper(col("value")), "[^A-Z0-9]+", "")).as("token"))
-      .filter(length(col("token")) > 2)
-    val date = st.filter(col("prop_type") === Ftm.T.Date)
-      .select(col("id"), col("schema"), lit("date").as("field"),
-        concat(lit("d:"), substring(col("value"), 1, 10)).as("token"))
-    val symbols = st.filter(col("prop_type") === Ftm.T.Name)
-      .select(col("id"), col("schema"), explode(symbolsUdf(p)).as("token"))
-      .select(col("id"), col("schema"), lit(SymbolField).as("field"),
-        col("token"))
-    nameFp.unionByName(nameParts).unionByName(full)
-      .unionByName(ident).unionByName(date).unionByName(symbols)
-  }
-
-  /** Counted token families (one row per occurrence, PRE-count) —
-    * stateless, shared like [[setFamilyRows]].
-    */
-  def countedFamilyRows(st: DataFrame): DataFrame = {
-    val p = parts(col("value"))
-    val addrWords = st.filter(col("prop_type") === Ftm.T.Address)
-      .select(col("id"), col("schema"), explode(p).as("w"))
-      .filter(!col("w").isInCollection(Stopwords))
-    val addrA = addrWords.filter(length(col("w")) > 3)
-      .select(col("id"), col("schema"), lit("address").as("field"),
-        concat(lit("a:"), col("w")).as("token"))
-    val addrWd = addrWords.filter(length(col("w")) > 6)
-      .select(col("id"), col("schema"), lit(WordField).as("field"),
-        concat(lit("wd:"), col("w")).as("token"))
-    val words = st
-      .filter(col("prop_type").isin(Ftm.T.StringT, Ftm.T.Text,
-        Ftm.T.Identifier))
-      .select(col("id"), col("schema"), explode(p).as("w"))
-      .filter(length(col("w")) >= 6 && !col("w").isInCollection(Stopwords))
-      .select(col("id"), col("schema"), lit(WordField).as("field"),
-        concat(lit("wd:"), col("w")).as("token"))
-    addrA.unionByName(addrWd).unionByName(words)
-  }
+      .agg(collect_set(col("schema")).as("schemas"),
+        count(lit(1)).as("n"), max(col("counted")).as("counted"))
+      .select(commonSchemaUdf(col("schemas")).as("schema"), col("id"),
+        col("field"), col("token"),
+        when(col("counted"), col("n"))
+          .otherwise(size(col("schemas")).cast("long")).as("cnt"))
 
   private val commonSchemaUdf =
     udf((schemata: Seq[String]) => Ftm.commonSchema(schemata))
 
   private val symbolsUdf = udf((parts: Seq[String]) =>
-    parts.flatMap(graft.text.Symbols.blockingSymbols).distinct)
+    if (parts == null) Seq.empty[String]
+    else parts.flatMap(graft.text.Symbols.blockingSymbols).distinct)
 
   /** Symbol tokens of raw (id, schema, value) name rows →
     * (schema, id, field='sy', token, cnt=1), set semantics. The

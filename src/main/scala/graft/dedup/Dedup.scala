@@ -69,7 +69,7 @@ object Dedup {
 
   /** MinHash signature from an already-hashed shingle column. The md5
     * hashing must be materialized as its own projection (see
-    * [[DedupQueries.hashedShingles]]) so it runs once per row (it
+    * [[DedupQueries.hashedShinglesOf]]) so it runs once per row (it
     * previously replicated into each of k `array_min(transform(...))`
     * branches — measured 31× slower; those k interpreted passes are
     * now ONE codegen'd pass, [[graft.functions.MinHashSig]]).

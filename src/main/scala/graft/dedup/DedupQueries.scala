@@ -49,9 +49,6 @@ object DedupQueries {
       .select(col("doc_id"),
         Dedup.shinglesFromWords(col("w"), ShingleN).as("s"))
 
-  private def shingleDf(s: SparkSession, d: String): DataFrame =
-    shingleDfOf(Tables.documents(s, d))
-
   /** Shingles + their md5-derived hashes as a separate projection: `hs`
     * is non-cheap and multiply-referenced downstream, so CollapseProject
     * keeps it materialized — the md5 runs exactly once per shingle.
@@ -59,9 +56,6 @@ object DedupQueries {
   private[graft] def hashedShinglesOf(docs: DataFrame): DataFrame =
     shingleDfOf(docs)
       .withColumn("hs", transform(col("s"), x => Hashing.hash60(x)))
-
-  private def hashedShingles(s: SparkSession, d: String): DataFrame =
-    hashedShinglesOf(Tables.documents(s, d))
 
   def minhashSigs(s: SparkSession, d: String): DataFrame =
     shinglesCk(s, d)

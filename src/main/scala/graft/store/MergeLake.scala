@@ -298,11 +298,10 @@ object MergeLake {
     * rewrite, one partitioned write of the batch plus a manifest
     * commit. The batch is NOT deduped here; cross- and intra-batch
     * duplicates resolve in [[snapshot]]'s Δ-sized window. Returns the
-    * batch's seq (position in the live delta list). `nBuckets` must
-    * match the lake's (the manifest's value is authoritative).
+    * batch's seq (position in the live delta list). The batch is
+    * bucketed with the lake's own bucket count from its manifest.
     */
-  def append(delta: DataFrame, path: String,
-      nBuckets: Int = DefaultBuckets): Int = {
+  def append(delta: DataFrame, path: String): Int = {
     val s = delta.sparkSession
     val root = new Path(path)
     val m = readManifest(s, root)

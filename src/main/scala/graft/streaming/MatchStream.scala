@@ -28,10 +28,10 @@ case class MatchState(seen: Map[String, Double])
   * cadence), yielding live candidate suggestions per new entity.
   *
   * Spark-first shape, three stages:
-  *  1. stateless tokenization — the exact batch emission families
-  *     ([[EntityTokenizer.setFamilyRows]] / `countedFamilyRows`),
-  *     shared code so stream and batch can never drift; the batch
-  *     `distinct`/count aggregations are deferred to stage 3's state;
+  *  1. stateless tokenization — the batch tokenizer's own per-row
+  *     emitter ([[EntityTokenizer.emitted]]), shared code so stream
+  *     and batch can never drift; the batch (id, field, token)
+  *     aggregation is deferred to stage 3's state;
   *  2. a stream-static equi-join on (token, field) against the TF
   *     index plus the broadcast schema-compat table — stateless, so
   *     the static side plans exactly like the batch join (the index
@@ -56,11 +56,9 @@ object MatchStream {
     * via commonSchema — single-schema streams, the normal ingest case,
     * are identical).
     */
-  def queryTokens(stmts: DataFrame, idCol: String = "entity_id"): DataFrame = {
-    val st = EntityTokenizer.preparedStatements(stmts, idCol)
-    EntityTokenizer.setFamilyRows(st)
-      .unionByName(EntityTokenizer.countedFamilyRows(st))
-  }
+  def queryTokens(stmts: DataFrame, idCol: String = "entity_id"): DataFrame =
+    EntityTokenizer.emitted(EntityTokenizer.preparedStatements(stmts, idCol))
+      .drop("counted")
 
   private val Sep = "\u0000"
 

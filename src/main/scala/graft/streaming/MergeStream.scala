@@ -27,13 +27,12 @@ import graft.store.MergeLake
 object MergeStream {
 
   /** Attach the merge-lake sink to a statement stream. */
-  def sink(stmts: DataFrame, path: String,
-      nBuckets: Int = MergeLake.DefaultBuckets): DataStreamWriter[Row] =
+  def sink(stmts: DataFrame, path: String): DataStreamWriter[Row] =
     stmts.writeStream
       .outputMode("append")
       // default micro-batch trigger: a long-lived ingest query; run a
       // drain-and-stop load with .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) MergeLake.append(batch, path, nBuckets): Unit
+        if (!batch.isEmpty) MergeLake.append(batch, path): Unit
       }
 }

@@ -51,8 +51,8 @@ object ResolveStream {
     * the changed members, upsert them. The write is O(affected).
     */
   def applyBatch(s: SparkSession, edges: DataFrame, path: String,
-      seen: String, nBuckets: Int = MergeLake.DefaultBuckets): Unit = {
-    applyBatchChanged(s, edges, path, seen, nBuckets).unpersist(): Unit
+      seen: String): Unit = {
+    applyBatchChanged(s, edges, path, seen).unpersist(): Unit
   }
 
   /** [[applyBatch]] variant returning the changed-member set
@@ -62,7 +62,7 @@ object ResolveStream {
     * Callers unpersist it when done.
     */
   def applyBatchChanged(s: SparkSession, edges: DataFrame, path: String,
-      seen: String, nBuckets: Int = MergeLake.DefaultBuckets): DataFrame = {
+      seen: String): DataFrame = {
     // pin the merge-on-read resolve ONCE per batch: addEdgesChanged
     // consumes the state in 4-5 passes (touched slice ×3, final
     // relabel join) — even with the exchange-free snapshot, repeated
@@ -75,18 +75,17 @@ object ResolveStream {
     try {
       val changed = graft.Caches.pin(Resolver.addEdgesChanged(cc, edges))
       if (!changed.isEmpty)
-        MergeLake.append(asRows(changed, seen), path, nBuckets): Unit
+        MergeLake.append(asRows(changed, seen), path): Unit
       changed
     } finally { cc.unpersist(); () }
   }
 
   /** Attach the resolver-state sink to a judgement-edge stream. */
-  def sink(edges: DataFrame, path: String,
-      nBuckets: Int = MergeLake.DefaultBuckets): DataStreamWriter[Row] =
+  def sink(edges: DataFrame, path: String): DataStreamWriter[Row] =
     edges.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty)
-          applyBatch(batch.sparkSession, batch, path, s"b$batchId", nBuckets)
+          applyBatch(batch.sparkSession, batch, path, s"b$batchId")
       }
 }

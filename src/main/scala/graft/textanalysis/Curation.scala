@@ -38,9 +38,6 @@ object Curation {
   /** Target tokens per training shard. */
   val ShardTokens = 1000L
 
-  private def wordsDf(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.withWords(Tables.documents(s, d))
-
   /** Word n-grams over the materialized `w` attribute (HOF rule: the
     * lambda references only attributes, so the split runs once per doc).
     */

@@ -1,6 +1,8 @@
 package graft.xref
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.blocker.{Blocker, EntityTokenizer}
@@ -46,20 +48,31 @@ object Xref {
 
   /** Scored candidate pairs for a statement table (ids are canonical
     * when `stmts` went through [[graft.resolver.Resolver.applyCanonical]]
-    * first, mirroring the reference's canonicalize-on-write).
+    * first, mirroring the reference's canonicalize-on-write). Lazy: the
+    * result is one plan over the statement table.
     */
-  def scoredPairs(s: SparkSession, stmts0: DataFrame,
-      decided: DataFrame, cfg: Config): DataFrame = {
+  def scoredPairs(s: SparkSession, stmts: DataFrame,
+      decided: DataFrame, cfg: Config): DataFrame =
+    scoredWith(s, stmts, decided, cfg, identity)
+
+  /** The batch pipeline with each layer passed through `build`: the
+    * tokenized entries, the TF table, the assembled entities and the
+    * match views. [[scoredPairs]] passes them through unchanged;
+    * [[run]] materializes each once with lineage cut.
+    */
+  private def scoredWith(s: SparkSession, stmts0: DataFrame,
+      decided: DataFrame, cfg: Config,
+      build: DataFrame => DataFrame): DataFrame = {
     // external=true by default, like the reference's xref view
     // (`xref.py:38,61`)
     val stmts = EntityStore.view(stmts0, withExternal = cfg.external)
-    val entries = EntityTokenizer.entries(stmts)
     val compat = compatDf(s)
-    val tf = Blocker.termFrequencies(entries, compat, boostsDf(s),
-      cfg.blocker, dampFields = EntityTokenizer.DampFields)
+    val tf = build(Blocker.termFrequencies(
+      build(EntityTokenizer.entries(stmts)), compat, boostsDf(s),
+      cfg.blocker, dampFields = EntityTokenizer.DampFields))
     val pairs = Blocker.pairs(tf, compat,
       cfg.blocker.copy(maxPairs = cfg.limit * cfg.limitFactor))
-    scoreCandidates(s, stmts, undecidedOf(pairs, decided), cfg)
+    scoreCandidates(stmts, undecidedOf(pairs, decided), cfg, build)
   }
 
   /** Incremental xref candidates: pairs touching the delta entity set
@@ -130,7 +143,7 @@ object Xref {
       .collect().map(_.getString(0)).toIndexedSeq
     val slice = stmts.join(broadcast((ids ++ refIds).distinct.toDF("cid")),
       stmts("canonical_id") === col("cid"), "left_semi")
-    scoreCandidates(s, slice, undecided, cfg)
+    scoreCandidates(slice, undecided, cfg, identity)
   }
 
   /** Skip already-decided pairs (check_candidate,
@@ -150,18 +163,20 @@ object Xref {
 
   /** The scoring tail shared by the full and delta candidate paths:
     * assemble views, score with the configured algorithm, gate on
-    * focus/range, discount same-dataset pairs, threshold.
+    * focus/range, discount same-dataset pairs, threshold. `build`
+    * receives the assembled entities and the match views.
     */
-  private def scoreCandidates(s: SparkSession, stmts: DataFrame,
-      undecided: DataFrame, cfg: Config): DataFrame = {
-    val assembled = EntityStore.assemble(stmts)
-    val views = EntityMatch.views(assembled, stmts)
+  private def scoreCandidates(stmts: DataFrame, undecided: DataFrame,
+      cfg: Config, build: DataFrame => DataFrame): DataFrame = {
+    val assembled = build(EntityStore.assemble(stmts))
+    val views = build(EntityMatch.views(assembled, stmts))
     val algoCol = cfg.algorithm.replace("-", "_")
     // gate schema must be deterministic under mixed-schema clusters —
-    // reuse the assembled entity's merged FtM schema, not first()
-    val meta = stmts.groupBy(col("canonical_id").as("id"))
-      .agg(collect_set(col("dataset")).as("ds"))
-      .join(assembled.select(col("id"), col("schema")), Seq("id"))
+    // reuse the assembled entity's merged FtM schema, not first(); its
+    // dataset set is the same collect_set the gates need (they only
+    // test overlap, so its sort order is irrelevant)
+    val meta = assembled.select(col("id"), col("datasets").as("ds"),
+      col("schema"))
     val lm = meta.select(col("id").as("lid"), col("ds").as("lds"),
       col("schema").as("lschema"))
     val rm = meta.select(col("id").as("rid"), col("ds").as("rds"),
@@ -226,17 +241,38 @@ object Xref {
     * suggestions) — calling [[autoMerges]] and [[suggestions]]
     * separately executes the whole tokenize/TF/pair/score pipeline
     * twice.
+    *
+    * Build once, then release: the entries, the TF table, the
+    * assembled entities and the match views are each materialized once
+    * with lineage cut (`localCheckpoint`, memory spilling to disk), so
+    * every consumer reads them as a leaf instead of planning and
+    * running its own copy of the subtree (AQE never reuses cloned
+    * exchanges). They are released as soon as `scored` is
+    * materialized; the only thing that outlives the call is the
+    * DISK_ONLY `scored` table both returned frames read.
     */
   def run(s: SparkSession, stmts: DataFrame, decided: DataFrame,
       cfg: Config = Config()): (DataFrame, DataFrame) = {
+    val built = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    val once = (df: DataFrame) => {
+      val cut = df.localCheckpoint(eager = true)
+      built ++= cut.queryExecution.logical.collect {
+        case r: LogicalRDD => r.rdd
+      }
+      cut
+    }
     // DISK_ONLY, not localCheckpoint(true): the scored table is bounded
     // by limit·limitFactor (50k at reference defaults) but operators
     // raise the cap — spilling to local disk keeps a raised cap from
     // pinning executor memory; the extra pass is one scan of a slim
     // (lid, rid, score) table
-    val scored = scoredPairs(s, stmts, decided, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    scored.count() // materialize once, before both consumers fork
+    val scored =
+      try {
+        val sc = scoredWith(s, stmts, decided, cfg, once)
+          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        sc.count() // materialize once, before both consumers fork
+        sc
+      } finally built.foreach(_.unpersist(blocking = false))
     val gate = cfg.autoThreshold
       .map(t => col("score") > t).getOrElse(lit(false))
     val merges = scored.filter(gate)

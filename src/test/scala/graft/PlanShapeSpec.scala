@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards: the scale claims the scaladocs make, asserted on
@@ -112,5 +113,38 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan(textanalysis.Curation.queries("q_doc_wsample")(spark, dir))
     assert(p.contains("TakeOrderedAndProject"),
       s"q_doc_wsample lost its top-N plan:\n$p")
+  }
+
+  private def occurrences(p: String, s: String): Int =
+    p.sliding(s.length).count(_ == s)
+
+  /** The xref test corpus as a parquet statement table. */
+  private lazy val corpusDir: String = {
+    val d = java.nio.file.Files.createTempDirectory("plan-shape-stmts")
+      .resolve("statements").toString
+    xref.XrefCorpus.statements(spark).write.parquet(d)
+    d
+  }
+
+  test("the entity tokenizer scans the statement table once") {
+    val p = plan(blocker.EntityTokenizer.entries(spark.read.parquet(corpusDir)))
+    assert(occurrences(p, "FileScan") === 1, s"entries rescans:\n$p")
+    assert(occurrences(p, "Exchange") === 1, s"entries reshuffles:\n$p")
+  }
+
+  test("xref scores from its built layers, never the statement table") {
+    val (merges, _) = xref.Xref.run(spark, spark.read.parquet(corpusDir),
+      spark.emptyDataFrame.selectExpr("'' AS src", "'' AS dst"),
+      xref.Xref.Config(autoThreshold = Some(0.6)))
+    // the query run materializes as `scored`: its plan reads the
+    // entries/TF and assembled/views frames as leaves
+    val rel = merges.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r
+    }.getOrElse(fail("run returned frames not backed by the scored table"))
+    val p = rel.cacheBuilder.cachedPlan.toString
+    assert(occurrences(p, "FileScan") === 0,
+      s"the scoring query rescans statements:\n$p")
+    assert(occurrences(p, "ExistingRDD") > 0, s"no built layer read:\n$p")
+    rel.cacheBuilder.clearCache()
   }
 }

@@ -59,16 +59,16 @@ class MergeLakeCrashSpec extends AnyFunSuite {
   test("crash before the append publish: old state reads; replay lands") {
     val path = freshLake()
     crashAt("append-written")(
-      MergeLake.append(df(("b#name", "Bobby", "v2")), path, 4))
+      MergeLake.append(df(("b#name", "Bobby", "v2")), path))
     assert(stateOf(path) === base, "orphan delta became visible")
     // replay the batch — the orphan dir must not collide or resurface
-    MergeLake.append(df(("b#name", "Bobby", "v2")), path, 4)
+    MergeLake.append(df(("b#name", "Bobby", "v2")), path)
     assert(stateOf(path) === base - (("b#name", "Bob")) + (("b#name", "Bobby")))
   }
 
   test("crash between compact write and publish: deltas stay live") {
     val path = freshLake()
-    MergeLake.append(df(("b#name", "Bobby", "v2")), path, 4)
+    MergeLake.append(df(("b#name", "Bobby", "v2")), path)
     val resolved = base - (("b#name", "Bob")) + (("b#name", "Bobby"))
     crashAt("compact-written")(MergeLake.compact(spark, path))
     assert(stateOf(path) === resolved, "half-compacted state surfaced")
@@ -82,7 +82,7 @@ class MergeLakeCrashSpec extends AnyFunSuite {
 
   test("crash after the compact publish: new state committed; GC later") {
     val path = freshLake()
-    MergeLake.append(df(("b#name", "Bobby", "v2")), path, 4)
+    MergeLake.append(df(("b#name", "Bobby", "v2")), path)
     val resolved = base - (("b#name", "Bob")) + (("b#name", "Bobby"))
     crashAt("compact-published")(MergeLake.compact(spark, path))
     assert(stateOf(path) === resolved)
@@ -96,7 +96,7 @@ class MergeLakeCrashSpec extends AnyFunSuite {
     // the CURRENT manifest remains under the root afterwards
     sys.props.put("graft.mergelake.retain", "1")
     try {
-      MergeLake.append(df(("d#name", "Dan", "v3")), path, 4)
+      MergeLake.append(df(("d#name", "Dan", "v3")), path)
       MergeLake.compact(spark, path)
       val root = new Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -113,7 +113,7 @@ class MergeLakeCrashSpec extends AnyFunSuite {
     val path = freshLake()
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    MergeLake.append(df(("b#name", "Bobby", "v2")), path, 4)
+    MergeLake.append(df(("b#name", "Bobby", "v2")), path)
     // the manifest an in-flight reader holds while the compaction runs
     val before = MergeLake.readManifest(spark, root)
     MergeLake.compact(spark, path) // default retain=2: previous kept
@@ -127,7 +127,7 @@ class MergeLakeCrashSpec extends AnyFunSuite {
       (d: String) =>
         assert(names(d), s"dir $d of the previous horizon collected") }
     // ... and one more compaction cycle retires it
-    MergeLake.append(df(("c#name", "Carla", "v3")), path, 4)
+    MergeLake.append(df(("c#name", "Carla", "v3")), path)
     MergeLake.compact(spark, path)
     val names2 = fs.listStatus(root).map(_.getPath.getName).toSet
     assert(!names2(f"manifest-${before.version}%08d"),

@@ -56,9 +56,9 @@ class MergeLakeRaceSpec extends AnyFunSuite {
   test("two racing appends: loser fails loudly, retry lands its data") {
     val path = freshLake()
     val e = race {
-      MergeLake.append(df(("a#name", "Alicia", "vA")), path, 4)
+      MergeLake.append(df(("a#name", "Alicia", "vA")), path)
     } {
-      MergeLake.append(df(("b#name", "Bobby", "vB")), path, 4)
+      MergeLake.append(df(("b#name", "Bobby", "vB")), path)
     }
     assert(e.getMessage.contains("lost a race"),
       s"loser must fail loudly, got: ${e.getMessage}")
@@ -66,7 +66,7 @@ class MergeLakeRaceSpec extends AnyFunSuite {
     val afterRace = base - (("b#name", "Bob")) + (("b#name", "Bobby"))
     assert(stateOf(path) === afterRace, "race left an inconsistent read")
     // a plain retry of the losing batch lands it
-    MergeLake.append(df(("a#name", "Alicia", "vA")), path, 4)
+    MergeLake.append(df(("a#name", "Alicia", "vA")), path)
     assert(stateOf(path) ===
       afterRace - (("a#name", "Alice")) + (("a#name", "Alicia")))
     // the loser's orphan delta dir (data written, never referenced) is
@@ -91,13 +91,13 @@ class MergeLakeRaceSpec extends AnyFunSuite {
 
   test("append racing a compact: compact loses loudly, retry folds all") {
     val path = freshLake()
-    MergeLake.append(df(("b#name", "Bobby", "v2")), path, 4)
+    MergeLake.append(df(("b#name", "Bobby", "v2")), path)
     // the compact stages its manifest (after the re-read that would
     // have caught an EARLIER append), then the append commits first
     val e = race {
       MergeLake.compact(spark, path): Unit
     } {
-      MergeLake.append(df(("d#name", "Dan", "v3")), path, 4): Unit
+      MergeLake.append(df(("d#name", "Dan", "v3")), path): Unit
     }
     assert(e.getMessage.contains("lost a race"),
       s"compact must fail loudly, got: ${e.getMessage}")
@@ -117,7 +117,7 @@ class MergeLakeRaceSpec extends AnyFunSuite {
       .createTempDirectory("mlrace").toString + "/lake"
     MergeLake.init(df().limit(0), path, nBuckets = 4)
     assert(stateOf(path) === Set.empty)
-    MergeLake.append(df(("a#name", "Alice", "v2")), path, 4)
+    MergeLake.append(df(("a#name", "Alice", "v2")), path)
     assert(stateOf(path) === Set(("a#name", "Alice")))
     MergeLake.compact(spark, path)
     assert(stateOf(path) === Set(("a#name", "Alice")))
@@ -129,7 +129,7 @@ class MergeLakeRaceSpec extends AnyFunSuite {
       .toDF("stmt_id", "id", "schema", "field", "value", "last_seen")
       .withColumn("stmt_id", org.apache.spark.sql.functions.lit(null)
         .cast("string"))
-    val e = intercept[Exception](MergeLake.append(bad, path, 4))
+    val e = intercept[Exception](MergeLake.append(bad, path))
     def causes(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ causes(t.getCause)

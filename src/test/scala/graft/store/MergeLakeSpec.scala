@@ -32,8 +32,8 @@ class MergeLakeSpec extends AnyFunSuite {
     // one batch updates b and inserts d; a later batch re-updates d
     MergeLake.append(df(
       ("b#name", "Bob", "v2"),
-      ("d#name", "Dan", "v2")), path, nBuckets = 4)
-    MergeLake.append(df(("d#name", "Daniel", "v3")), path, nBuckets = 4)
+      ("d#name", "Dan", "v2")), path)
+    MergeLake.append(df(("d#name", "Daniel", "v3")), path)
     val expected = Set(
       ("a#name", "Alice", "v1"),
       ("b#name", "Bob", "v2"),
@@ -44,7 +44,7 @@ class MergeLakeSpec extends AnyFunSuite {
     assert(touched.nonEmpty)
     assert(stateOf(path) === expected) // compaction is state-preserving
     // all deltas folded: a fresh append gets seq 1 again
-    assert(MergeLake.append(df(("e#name", "Eve", "v4")), path, 4) === 1)
+    assert(MergeLake.append(df(("e#name", "Eve", "v4")), path) === 1)
     assert(stateOf(path) === expected + (("e#name", "Eve", "v4")))
   }
 
@@ -54,7 +54,7 @@ class MergeLakeSpec extends AnyFunSuite {
     // many buckets so the single-row delta cannot touch them all
     val base = (1 to 64).map(i => (s"e$i#name", s"N$i", "v1"))
     MergeLake.init(df(base: _*), path, nBuckets = 16)
-    MergeLake.append(df(("e1#name", "N1b", "v2")), path, nBuckets = 16)
+    MergeLake.append(df(("e1#name", "N1b", "v2")), path)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = MergeLake.readManifest(spark, root)
@@ -100,8 +100,7 @@ class MergeLakeSpec extends AnyFunSuite {
     var expected = base.map(r => (r._1, r._2, r._3)).toSet
     for (k <- 1 to 8) {
       val id = s"e$k#name"
-      MergeLake.append(df((id, s"N${k}b", s"v${k + 1}")), path,
-        nBuckets = 16)
+      MergeLake.append(df((id, s"N${k}b", s"v${k + 1}")), path)
       expected = expected.filterNot(_._1 == id) +
         ((id, s"N${k}b", s"v${k + 1}"))
       MergeLake.compact(spark, path, maxGens = 3)
@@ -130,7 +129,7 @@ class MergeLakeSpec extends AnyFunSuite {
     // with a small delta: the base never shuffles — every shuffle in
     // the plan reads ONLY delta files (the Δ-sized resolve window),
     // and the base is kept behind a broadcast anti-join
-    MergeLake.append(df(("e1#name", "N1b", "v2")), path, nBuckets = 8)
+    MergeLake.append(df(("e1#name", "N1b", "v2")), path)
     val plan = MergeLake.snapshot(spark, path)
       .queryExecution.executedPlan
     assert(plan.toString.contains("LeftAnti"),

@@ -40,8 +40,8 @@ class MergeStreamSpec extends AnyFunSuite {
     val batch2 = Seq(("c#name", "Caroline", "v3"))
 
     // batch twin: two explicit appends
-    MergeLake.append(df(batch1: _*), batchPath, nBuckets = 4)
-    MergeLake.append(df(batch2: _*), batchPath, nBuckets = 4)
+    MergeLake.append(df(batch1: _*), batchPath)
+    MergeLake.append(df(batch2: _*), batchPath)
 
     // stream: the same rows as two micro-batches through the sink
     val src = MemoryStream[(String, String, String)]
@@ -51,7 +51,7 @@ class MergeStreamSpec extends AnyFunSuite {
         "value", "last_seen")
       .select("stmt_id", "id", "schema", "field", "value", "last_seen")
     src.addData(batch1: _*)
-    val q = MergeStream.sink(stmts, streamPath, nBuckets = 4).start()
+    val q = MergeStream.sink(stmts, streamPath).start()
     try {
       q.processAllAvailable()
       src.addData(batch2: _*)

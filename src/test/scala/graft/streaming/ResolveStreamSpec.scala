@@ -36,7 +36,7 @@ class ResolveStreamSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String)]
     val edges = src.toDF().toDF("src", "dst")
     src.addData(batch1: _*)
-    val q = ResolveStream.sink(edges, path, nBuckets = 4).start()
+    val q = ResolveStream.sink(edges, path).start()
     try {
       q.processAllAvailable()
       src.addData(batch2: _*)

@@ -1,6 +1,7 @@
 package graft.xref
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -115,5 +116,26 @@ class XrefSpec extends AnyFunSuite {
     assert(merges.exceptAll(merges2).count() === 0L)
     assert(merges2.exceptAll(merges).count() === 0L)
     assert(sugg.count() === sugg2.count())
+  }
+
+  test("run leaves only its scored table persisted, run after run") {
+    val sc = spark.sparkContext
+    val corpus = XrefCorpus.statements(spark)
+    val cfg = Xref.Config(algorithm = "logic-v1", autoThreshold = Some(0.6))
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val added = (1 to 2).map { _ =>
+      val start = persisted
+      val (merges, sugg) = Xref.run(spark, corpus, emptyDecided, cfg)
+      assert(merges.count() > 0 && sugg.count() > 0)
+      persisted -- start
+    }
+    // each run holds exactly one frame: its DISK_ONLY scored table; the
+    // entries, TF, assembled entities and views it built are released
+    added.foreach { ids =>
+      assert(ids.size === 1, s"persisted after run: $ids")
+      assert(sc.getPersistentRDDs(ids.head).getStorageLevel ===
+        StorageLevel.DISK_ONLY)
+    }
+    added.flatten.foreach(id => sc.getPersistentRDDs(id).unpersist())
   }
 }
