@@ -239,7 +239,7 @@ object Soak {
       // ingest (statement lake write) → xref → resolve → apply →
       // sorted-aggregate. Per-stage wall + shuffle recorded for
       // PLANS.md; nothing may scale superlinearly in N.
-      import graft.store.{EntityStore, StatementLake}
+      import graft.store.EntityStore
       import graft.xref.Xref
       var lastShuffle = 0L
       def stageShuffleMb(): Double = {

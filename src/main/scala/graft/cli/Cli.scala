@@ -536,7 +536,7 @@ object ReconcileMain {
     val threshold = flags.get("threshold").map(_.toDouble)
       .getOrElse(Reconcile.Threshold)
     val (decisions, merges, commands) = Reconcile.reconcile(
-      s, stmts, snaks, canonicals, decided, candidates, threshold,
+      stmts, snaks, canonicals, decided, candidates, threshold,
       create = !flags.get("create").contains("false"),
       retrieved = flags.get("retrieved"),
       sourceUrl = flags.get("source-url"))

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
@@ -11,42 +12,98 @@ import graft.functions.Hashing
   *
   * Scale design: signatures are computed entirely inside whole-stage
   * codegen (split / transform / aggregate higher-order functions over the
-  * text column — no UDF, no shuffle), so the only shuffles are (a) the
-  * band-bucket groupBy-join, whose per-bucket fan-out is bounded by
-  * [[LshBucketCap]] (see [[dropHotBuckets]] — the blocker's stopword cap
-  * and the streaming screen's `NearDupBucketCap`, applied to the batch
-  * path), and (b) the final distinct on candidate pairs. Verification
-  * joins fetch shingle sets for candidate pairs only — never the full
-  * cross product.
+  * text column — no UDF, no shuffle). Every banding channel then runs
+  * the one capped-pair operator, [[cappedPairs]]: a single key exchange,
+  * a window count that drops keys held by more than the cap (the
+  * blocker's stopword cap, [[LshBucketCap]]) before any list is
+  * collected, and in-row pair generation — no self-join, no anti-join.
+  * Candidate pairs are verified by [[withJaccard]], whose shuffle joins
+  * fetch the sets of candidate pairs only — never the cross product,
+  * and never a forced broadcast.
   */
 object Dedup {
 
   /** Maximum signatures a (band, key) bucket may hold before it is
-    * treated as boilerplate and dropped from candidate generation.
-    * Mirrors [[graft.streaming.DocumentStream.NearDupBucketCap]] so the
-    * batch and streaming near-dup screens bound skew identically. A
-    * boilerplate-heavy corpus can put k near-identical (but not
-    * byte-identical, so exact-dedup-first does not collapse them)
-    * signatures into one bucket; without the cap that bucket alone
-    * emits k²/2 pairs — the skew blow-up the blocker's stopword cost
-    * model exists to prevent (`nomenklatura/blocker/index.py:66-71` is
-    * the reference's own precedent). Docs in a dropped bucket still
-    * pair through their other bands, exactly like the stopword
-    * anti-join leaves entities matchable on their rarer tokens.
+    * treated as boilerplate and dropped from candidate generation. The
+    * streaming near-dup screen
+    * ([[graft.streaming.DocumentStream.nearDupStream]]) caps its
+    * per-bucket state at the same value, so the batch and streaming
+    * screens bound skew identically. A boilerplate-heavy corpus can put
+    * k near-identical (but not byte-identical, so exact-dedup-first does
+    * not collapse them) signatures into one bucket; without the cap that
+    * bucket alone emits k²/2 pairs — the skew blow-up the blocker's
+    * stopword cost model exists to prevent
+    * (`nomenklatura/blocker/index.py:66-71` is the reference's own
+    * precedent). Docs in a dropped bucket still pair through their other
+    * bands, exactly like the stopword cap leaves entities matchable on
+    * their rarer tokens.
     */
   val LshBucketCap = 64L
 
-  /** Buckets minus hot keys: drop every (band, key) shared by more
-    * than `cap` rows. The hot-key list is tiny by construction
-    * (≤ rows/cap keys), so the anti-join broadcasts under AQE — the
-    * same shape as the blocker's stopword anti-join.
+  /** Pairs of rows sharing a key, over keys held by at most `cap` rows.
+    *
+    * One explicit-count repartition on `keys` (exempt from AQE
+    * coalescing, so the pair fan-out runs on every core), then a window
+    * count per key and `df <= cap` BEFORE the collect: no collected list
+    * ever holds more than `cap` items, so a boilerplate key cannot blow
+    * the aggregation buffer. Each surviving key collects its `item`s and
+    * emits `pair(x, y)` for every ordered (x, y) that `keep` accepts;
+    * the result has the pair struct's fields as columns. The pair array
+    * is its own projection before the explode (a Generate over an inline
+    * higher-order function re-runs the lambda per output row).
+    *
+    * There is no self-join: a self-join plans the keyed subtree once per
+    * consumer and AQE never reuses the twin exchanges. The same pair may
+    * come out of several keys; callers that want a set `distinct` it.
     */
-  def dropHotBuckets(buckets: DataFrame, cap: Long): DataFrame = {
-    val hot = buckets.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("df")).filter(col("df") > cap)
-      .select(col("band"), col("key"))
-    buckets.join(hot, Seq("band", "key"), "left_anti")
+  def cappedPairs(rows: DataFrame, keys: Seq[String], cap: Long,
+      item: Column)(pair: (Column, Column) => Column,
+      keep: Column => Column): DataFrame = {
+    val ks = keys.map(col)
+    val prs = flatten(transform(col("ds"),
+      x => filter(transform(col("ds"), y => pair(x, y)), keep)))
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism,
+        ks: _*)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(ks: _*)))
+      .filter(col("df") <= cap)
+      .groupBy(ks: _*).agg(collect_list(item).as("ds"))
+      .select(prs.as("prs"))
+      .select(explode(col("prs")).as("p"))
+      .select("p.*")
   }
+
+  /** `cand` plus `jaccard`, the raw set Jaccard
+    * `inter / (|sa| + |sb| − inter)` of the `setCol` arrays `sets` holds
+    * for ids `a` and `b`. Callers round it their own way.
+    *
+    * The arrays are fetched with shuffle joins on `a`, then `b`, with no
+    * broadcast hint: the fetched side carries a whole set per candidate
+    * pair and the pair count grows with duplication, so a forced
+    * broadcast would grow with the data (the planner still broadcasts a
+    * side whose estimated size is under its threshold). Both join legs
+    * are repartitioned to an explicit count — the pair keys are tiny,
+    * so AQE would otherwise coalesce the join onto one task, which then
+    * computes every intersection single-threaded.
+    */
+  def withJaccard(cand: DataFrame, sets: DataFrame, idCol: String,
+      setCol: String): DataFrame = {
+    val par = cand.sparkSession.sparkContext.defaultParallelism
+    val inter = size(array_intersect(col("sa"), col("sb")))
+    cand.repartition(par, col("a"))
+      .join(sets.select(col(idCol).as("a"), col(setCol).as("sa")), Seq("a"))
+      .repartition(par, col("b"))
+      .join(sets.select(col(idCol).as("b"), col(setCol).as("sb")), Seq("b"))
+      .select(cand.columns.toSeq.map(col) :+ (inter.cast("double") /
+        (size(col("sa")) + size(col("sb")) - inter)).as("jaccard"): _*)
+  }
+
+  /** The (a, b) pair struct of two collected ids. */
+  private[graft] def idPair(x: Column, y: Column): Column =
+    struct(x.as("a"), y.as("b"))
+
+  /** `keep` for pairs whose `a` sorts before their `b`. */
+  private[graft] def ascending(p: Column): Column =
+    p.getField("a") < p.getField("b")
 
   /** Lowercased word tokens of a text column. */
   def words(text: Column): Column =
@@ -82,19 +139,14 @@ object Dedup {
     minhashSigFromHashes(transform(shingleCol, s => Hashing.hash60(s)), k)
 
   /** Candidate pairs from LSH banding: split the k-signature into
-    * `bands` bands of `rowsPerBand`, bucket on (band, key), drop hot
-    * buckets over `cap` ([[dropHotBuckets]]), join within the kept
-    * buckets, distinct. Returns (a, b) with a < b.
+    * `bands` bands of `rowsPerBand`, bucket on (band, key), pair within
+    * the buckets of at most `cap` rows ([[cappedPairs]]), distinct.
+    * Returns (a, b) with a < b.
     */
   def lshCandidates(sig: DataFrame, idCol: String, bands: Int,
-      rowsPerBand: Int, cap: Long = LshBucketCap): DataFrame = {
-    val buckets = dropHotBuckets(
-      lshBuckets(sig, idCol, bands, rowsPerBand), cap)
-    val l = buckets.select(col("band"), col("key"), col(idCol).as("a"))
-    val r = buckets.select(col("band"), col("key"), col(idCol).as("b"))
-    l.join(r, Seq("band", "key")).filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
+      rowsPerBand: Int, cap: Long = LshBucketCap): DataFrame =
+    cappedPairs(lshBuckets(sig, idCol, bands, rowsPerBand),
+      Seq("band", "key"), cap, col(idCol))(idPair, ascending).distinct()
 
   /** The per-band (band, key) struct array over a signature column —
     * shared by [[lshBuckets]] and the streaming near-dup screen so
@@ -108,8 +160,8 @@ object Dedup {
     }: _*)
 
   /** The (id, band, key) bucket rows behind [[lshCandidates]] — exposed
-    * so cross-set joins (delta vs. corpus) can reuse the banding without
-    * the self-join.
+    * so the delta-vs-corpus screen can pair the same buckets under its
+    * own `keep` predicate.
     */
   def lshBuckets(sig: DataFrame, idCol: String, bands: Int,
       rowsPerBand: Int): DataFrame =
@@ -148,48 +200,19 @@ object Dedup {
           .reduce(_ + _).as("simhash"))
   }
 
-  /** Hamming-near pairs via banding of the simhash: two signatures
-    * within `maxDist` bits must agree on at least one of `bands`
-    * `bandBits`-wide bands when bands > maxDist (pigeonhole). Exact
-    * distance checked after the bucket join — so the result is complete
-    * for maxDist ≤ bands − 1 among signatures outside hot buckets:
-    * buckets over `cap` are dropped first ([[dropHotBuckets]]), the
-    * same boilerplate skew guard as the minhash path.
-    */
-  def simhashPairs(sigs: DataFrame, idCol: String, bands: Int,
-      bandBits: Int, maxDist: Int, cap: Long = LshBucketCap): DataFrame =
-    // materialize the signatures ONCE, at full parallelism: the sig
-    // projection is CPU-heavy (32-way byte sampling / token hashing),
-    // usually sits on a one-row-group scan (1 task), and feeds THREE
-    // consumers (both self-join legs + the hot-bucket aggregate) —
-    // unmaterialized it evaluated three times single-threaded
-    // (measured ~0.34 s × 3 at sf0.1). The repartition is exempt from
-    // AQE coalescing, so the compute spreads over the session's cores;
-    // the pin is corpus-sized (id + one long per doc) and keeps its
-    // lineage (recoverable, unlike checkpoint blocks). Callers whose
-    // sigs are already a stored table (lake artifacts) use
-    // [[simhashPairsFrom]] directly and skip the pin.
-    simhashPairsFrom(graft.Caches.pin(sigs
-      .repartition(sigs.sparkSession.sparkContext.defaultParallelism,
-        col(idCol))), idCol, bands, bandBits, maxDist, cap)
-
-  /** The banding/join core of [[simhashPairs]] over an
-    * already-materialized signature table.
-    *
-    * ONE (band, key) exchange, no self-join: the former dropHotBuckets
-    * + equi-join cloned the banding subtree per consumer (AQE never
-    * reuses the twin exchanges — three scans/shuffles of the sig
-    * table). A window count applies the hot-bucket cap (identical to
-    * [[dropHotBuckets]], and ahead of the collect so no bucket list
-    * can exceed `cap`), then each bucket emits its a<b pairs in-row —
-    * the pair multiset matches the old join's, and the trailing
-    * distinct dedups across bands exactly as before.
+  /** Hamming-near pairs via banding of a materialized simhash table:
+    * two signatures within `maxDist` bits must agree on at least one of
+    * `bands` `bandBits`-wide bands when bands > maxDist (pigeonhole).
+    * Exact distance is checked after pairing — so the result is
+    * complete for maxDist ≤ bands − 1 among signatures outside hot
+    * buckets: buckets over `cap` are dropped ([[cappedPairs]]), the
+    * same boilerplate skew guard as the minhash path. Callers hand in
+    * a stored signature table (a lake artifact); the single key
+    * exchange reads it once, so it needs no pin.
     */
   def simhashPairsFrom(sigsCk: DataFrame, idCol: String, bands: Int,
       bandBits: Int, maxDist: Int, cap: Long = LshBucketCap): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val mask = (1L << bandBits) - 1
-    val par = sigsCk.sparkSession.sparkContext.defaultParallelism
     val banded = sigsCk.select(col(idCol), col("simhash"),
       explode(array((0 until bands).map(i =>
         struct(lit(i).as("band"),
@@ -197,24 +220,12 @@ object Dedup {
         .as("bk"))
       .select(col(idCol), col("simhash"), col("bk.band").as("band"),
         col("bk.key").as("key"))
-      .repartition(par, col("band"), col("key"))
-    val capped = banded
-      .withColumn("df", count(lit(1)).over(
-        Window.partitionBy(col("band"), col("key"))))
-      .filter(col("df") <= cap)
-      .groupBy(col("band"), col("key"))
-      .agg(collect_list(struct(col(idCol).as("id"), col("simhash")))
-        .as("ds"))
-    val prs = flatten(transform(col("ds"), x =>
-      filter(transform(col("ds"), y => struct(
-        x.getField("id").as("a"), y.getField("id").as("b"),
+    cappedPairs(banded, Seq("band", "key"), cap,
+        struct(col(idCol).as("id"), col("simhash")))(
+      (x, y) => struct(x.getField("id").as("a"), y.getField("id").as("b"),
         bit_count(x.getField("simhash").bitwiseXOR(y.getField("simhash")))
-          .as("hamming"))),
-        p => p.getField("a") < p.getField("b"))))
-    capped.select(prs.as("prs"))
-      .select(explode(col("prs")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        col("p.hamming").as("hamming"))
+          .as("hamming")),
+      ascending)
       .distinct()
       .filter(col("hamming") <= maxDist)
   }

@@ -104,23 +104,11 @@ object DedupQueries {
     lshPairsFrom(parShingles(docs))
 
   private def lshPairsFrom(sh: DataFrame): DataFrame = {
-    val par = sh.sparkSession.sparkContext.defaultParallelism
     val sigs = sh.select(col("doc_id"),
       Dedup.minhashSigFromHashes(col("hs"), MinhashK).as("sig"))
     val cand = Dedup.lshCandidates(sigs, "doc_id", Bands, RowsPerBand)
-    val a = sh.select(col("doc_id").as("a"), col("s").as("sa"))
-    val b = sh.select(col("doc_id").as("b"), col("s").as("sb"))
-    val inter = size(array_intersect(col("sa"), col("sb")))
-    // explicit-count repartitions on both verify legs: the pair-key
-    // bytes are tiny, so AQE coalesces the join exchanges to one task
-    // — which then computes EVERY set intersection and shuffles every
-    // fetched array single-threaded (measured 2.2 s of a 3.5 s query
-    // in the char-gram sibling)
-    cand.repartition(par, col("a")).join(a, Seq("a"))
-      .repartition(par, col("b")).join(b, Seq("b"))
-      .select(col("a"), col("b"),
-        round(inter.cast("double") /
-          (size(col("sa")) + size(col("sb")) - inter), 4).as("jaccard"))
+    Dedup.withJaccard(cand, sh, "doc_id", "s")
+      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
       .filter(col("jaccard") >= JaccardThreshold)
   }
 
@@ -149,24 +137,14 @@ object DedupQueries {
       ngramPairsOf(charGramsCk(s, d)))
 
   private def ngramPairsOf(cg: DataFrame): DataFrame = {
-    val par = cg.sparkSession.sparkContext.defaultParallelism
     val sigs = cg.select(col("doc_id"),
       Dedup.minhashSigFromHashes(col("cg"), MinhashK).as("sig"))
     val cand = Dedup.lshCandidates(sigs, "doc_id", Bands, RowsPerBand)
-    val a = cg.select(col("doc_id").as("a"), col("cg").as("sa"))
-    val b = cg.select(col("doc_id").as("b"), col("cg").as("sb"))
-    val inter = size(array_intersect(col("sa"), col("sb")))
     // floor-form rounding: Spark and DuckDB round() disagree on decimal
-    // ties, and char-gram unions are large enough to land on them.
-    // Explicit-count repartitions on both verify legs — see
-    // [[lshPairsFrom]] (the coalesced verify stage here measured 2.2 s
-    // single-task).
-    cand.repartition(par, col("a")).join(a, Seq("a"))
-      .repartition(par, col("b")).join(b, Seq("b"))
+    // ties, and char-gram unions are large enough to land on them
+    Dedup.withJaccard(cand, cg, "doc_id", "cg")
       .select(col("a"), col("b"),
-        (floor(inter.cast("double") /
-          (size(col("sa")) + size(col("sb")) - inter) * 10000 + 0.5) / 10000)
-          .as("jaccard"))
+        (floor(col("jaccard") * 10000 + 0.5) / 10000).as("jaccard"))
       .filter(col("jaccard") >= CharJaccardThreshold)
   }
 
@@ -189,44 +167,19 @@ object DedupQueries {
 
   private def incrementalFrom(sh: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val par = sh.sparkSession.sparkContext.defaultParallelism
     val sigs = sh.select(col("doc_id"),
       Dedup.minhashSigFromHashes(col("hs"), MinhashK).as("sig"))
-    // ONE (band, key) exchange, NO delta⋈base equi-join: the former
-    // dropHotBuckets + split + join cloned the CPU-heavy
-    // minhash+banding subtree per consumer (six ~2 s-cpu stages at
-    // sf0.1; AQE never reuses the twin exchanges). A window count
-    // applies the hot-bucket cap on the single exchange — identical
-    // semantics to dropHotBuckets, and it runs BEFORE the collect so
-    // the collected lists are ≤ cap (no boilerplate key can blow the
-    // aggregation buffer) — then each bucket emits its delta×base
-    // pairs in-row; the pair set is exactly the old join's.
-    val buckets = Dedup.lshBuckets(sigs, "doc_id", Bands, RowsPerBand)
-      .repartition(par, col("band"), col("key"))
-    val capped = buckets
-      .withColumn("df", count(lit(1)).over(
-        Window.partitionBy(col("band"), col("key"))))
-      .filter(col("df") <= Dedup.LshBucketCap)
-      .groupBy(col("band"), col("key"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-    val prs = flatten(transform(filter(col("ds"), a => a % 10 === 7),
-      a => transform(filter(col("ds"), b => b % 10 =!= 7),
-        b => struct(a.as("a"), b.as("b")))))
-    val cand = capped.select(prs.as("prs"))
-      .select(explode(col("prs")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    // each capped bucket pairs its delta docs with its base docs only
+    val cand = Dedup.cappedPairs(
+        Dedup.lshBuckets(sigs, "doc_id", Bands, RowsPerBand),
+        Seq("band", "key"), Dedup.LshBucketCap, col("doc_id"))(
+      Dedup.idPair,
+      p => p.getField("a") % 10 === 7 && p.getField("b") % 10 =!= 7)
       .distinct()
-    // broadcast the candidate pairs, never the shingle corpus
-    val inter = size(array_intersect(col("sa"), col("sb")))
-    val withA = sh.select(col("doc_id").as("a"), col("s").as("sa"))
-      .join(broadcast(cand), Seq("a"))
     val w = Window.partitionBy(col("a"))
       .orderBy(col("jaccard").desc, col("b").asc)
-    sh.select(col("doc_id").as("b"), col("s").as("sb"))
-      .join(broadcast(withA), Seq("b"))
-      .select(col("a"), col("b"),
-        round(inter.cast("double") /
-          (size(col("sa")) + size(col("sb")) - inter), 4).as("jaccard"))
+    Dedup.withJaccard(cand, sh, "doc_id", "s")
+      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
       .filter(col("jaccard") >= JaccardThreshold)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -502,8 +455,8 @@ object DedupQueries {
   }
 
   /** Winnowing-pair frequency cap: a fingerprint shared by more
-    * documents than this is boilerplate and is dropped before the
-    * self-join — the skew guard that bounds any join key's fan-out
+    * documents than this is boilerplate and is dropped before pair
+    * generation — the skew guard that bounds any key's fan-out
     * (the blocker stopword rationale, applied to fingerprints).
     */
   val WinnowDfCap = 20L
@@ -517,13 +470,13 @@ object DedupQueries {
     * the full fingerprint-set Jaccard. Position-aware window-min
     * sampling makes this channel sensitive to contiguous cloned spans
     * that bag-of-shingles minhash dilutes. Same scale shape as every
-    * other channel: explode → frequency cap → capped equi-join →
-    * pair aggregate; no fingerprint can fan out more than
-    * [[WinnowDfCap]]².
+    * other channel: explode → frequency cap → in-bucket pairs
+    * ([[Dedup.cappedPairs]]) → pair aggregate; no fingerprint can fan
+    * out more than [[WinnowDfCap]]².
     */
   // Lake artifacts, not lineage, for the fingerprint tables: the
-  // build is a staged HOF pipeline fanned out FIVE ways (explode ×2 via
-  // the rare self-join, the df aggregate, both jaccard set sides) —
+  // build is a staged HOF pipeline fanned out several ways (the
+  // capped explode, both jaccard set sides, the spans hit join) —
   // lineage reuse re-inlines the staged projections per consumer and
   // the plan goes quadratic (measured: subset verify 200+ s at sf0.01
   // vs ~2 s materialized). The winnow + spans queries share them, and
@@ -615,49 +568,19 @@ object DedupQueries {
   }
 
   def winnowPairsQ(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val fps = fpSetsCk(s, d)
-    val par = s.sparkContext.defaultParallelism
-    // ONE explode, ONE corpus exchange, NO self-join. The r13 plan
-    // re-exploded the fp table FOUR times and computed the df-cap
-    // aggregate twice (Catalyst clones the subtree per self-join
-    // consumer and AQE never reuses the twin exchanges — measured
-    // 4 × 101k-row shuffle writes / ~23 s summed stage cpu at sf0.1).
-    // Instead: window-count the per-fingerprint df on the single
-    // h-exchange, drop boilerplate, collect each surviving
-    // fingerprint's ≤ WinnowDfCap doc ids (the cap bounds the list —
-    // the collect can never see a hot key), and emit the a<b pairs
-    // in-row; the pair multiset is exactly the old equi-join's.
-    val ex = fps.select(col("doc_id"), explode(col("fp")).as("h"))
-      .repartition(par, col("h"))
-    val rareDocs = ex
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .filter(col("df") <= WinnowDfCap)
-      .groupBy(col("h")).agg(collect_list(col("doc_id")).as("ds"))
-    // pairs materialized as their own projection BEFORE the explode
-    // (the HOF-attribute rule: a Generate over an inline HOF re-runs
-    // the lambda per output row)
-    val prs = flatten(transform(col("ds"), a =>
-      filter(transform(col("ds"), b => struct(a.as("a"), b.as("b"))),
-        p => p.getField("a") < p.getField("b"))))
-    val cand = rareDocs
-      .select(prs.as("prs"))
-      .select(explode(col("prs")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    // one explode and one fingerprint exchange: boilerplate
+    // fingerprints (df > WinnowDfCap) are dropped before any pair
+    // fan-out, and a pair survives on WinnowMinShared rare hits
+    val cand = Dedup.cappedPairs(
+        fps.select(col("doc_id"), explode(col("fp")).as("h")),
+        Seq("h"), WinnowDfCap, col("doc_id"))(Dedup.idPair, Dedup.ascending)
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= WinnowMinShared)
-    val inter = size(array_intersect(col("fa"), col("fb")))
-    // broadcast the PAIRS (the near-dup set, small by construction),
-    // never the fp corpus: the old plan built the whole fp table into
-    // a broadcast hash relation twice — corpus-sized at 100 TB
-    val withA = fps.select(col("doc_id").as("a"), col("fp").as("fa"))
-      .join(broadcast(cand), Seq("a"))
-    fps.select(col("doc_id").as("b"), col("fp").as("fb"))
-      .join(broadcast(withA), Seq("b"))
+    Dedup.withJaccard(cand, fps, "doc_id", "fp")
       .select(col("a"), col("b"), col("shared"),
-        round(inter.cast("double") /
-          (size(col("fa")) + size(col("fb")) - inter), 4).as("jaccard"))
+        round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** Minimum same-diagonal samples for a reported clone span. */

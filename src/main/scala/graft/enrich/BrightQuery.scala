@@ -1,6 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,7 @@ final class BrightQueryEnricher(records: DataFrame,
     * addresses: array)` → matched records, top-[[perQuery]] per
     * (query, name) by revenue then headcount.
     */
-  def matchOrganizations(s: SparkSession, queries: DataFrame): DataFrame = {
+  def matchOrganizations(queries: DataFrame): DataFrame = {
     val skipLit = typedlit(skipJurisdictions.toSeq.sorted)
     val q = queries
       .filter(col("schema").isin("Organization", "Company", "PublicBody"))
@@ -98,8 +98,8 @@ final class BrightQueryEnricher(records: DataFrame,
       col("bq_legal_entity_jurisdiction_code").as("jurisdiction"),
       col("bq_legal_entity_date_founded").as("incorporation_date"))
 
-  def enrich(s: SparkSession, queries: DataFrame): DataFrame =
-    companyEntities(matchOrganizations(s, queries))
+  def enrich(queries: DataFrame): DataFrame =
+    companyEntities(matchOrganizations(queries))
 }
 
 object BrightQueryEnricher {

@@ -77,7 +77,7 @@ object BrightQueryQueries {
     graft.IndexLake.artifact(s, d, "bq_mirror")(records(s, d))
 
   def enrichQ(s: SparkSession, d: String): DataFrame =
-    new BrightQueryEnricher(recordsCk(s, d)).enrich(s, orgQueries(s, d))
+    new BrightQueryEnricher(recordsCk(s, d)).enrich(orgQueries(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_enrich_brightquery" -> (enrichQ _))

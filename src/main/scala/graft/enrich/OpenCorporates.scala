@@ -1,6 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.Territories
@@ -41,7 +41,7 @@ final class OpenCorporatesEnricher(registry: DataFrame,
     * `(id, schema, caption, countries: array<string>, oc_url)` against
     * the mirrored registry. One output row per (query, company) match.
     */
-  def searchCompanies(s: SparkSession, queries: DataFrame): DataFrame = {
+  def searchCompanies(queries: DataFrame): DataFrame = {
     val parentM = typedlit(Territories.administeringParentMap)
     val isoLit = typedlit(Territories.isoCountryCodes.toSeq.sorted)
     val histLit = typedlit(Territories.historicalCodes.toSeq.sorted)
@@ -93,8 +93,8 @@ final class OpenCorporatesEnricher(registry: DataFrame,
       col("current_status").as("status"))
 
   /** Gated search + entity shaping in one call. */
-  def enrich(s: SparkSession, queries: DataFrame): DataFrame =
-    companyEntities(searchCompanies(s, queries))
+  def enrich(queries: DataFrame): DataFrame =
+    companyEntities(searchCompanies(queries))
 }
 
 object OpenCorporatesEnricher {

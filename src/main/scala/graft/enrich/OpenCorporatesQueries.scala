@@ -76,7 +76,7 @@ object OpenCorporatesQueries {
 
   def enrichQ(s: SparkSession, d: String): DataFrame =
     new OpenCorporatesEnricher(registry(s, d))
-      .enrich(s, companyQueries(s, d))
+      .enrich(companyQueries(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_enrich_companies" -> (enrichQ _))

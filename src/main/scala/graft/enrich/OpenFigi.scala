@@ -1,6 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** OpenFIGI-style securities enricher in mirror form (reference

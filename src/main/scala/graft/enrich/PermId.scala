@@ -1,6 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PermID-style organization enricher in mirror form (reference
@@ -41,7 +41,7 @@ final class PermIdEnricher(orgs: DataFrame, maxRecords: Int = 999) {
     * with no distinct shuffle at all: scan → generate → broadcast-join,
     * map-only end to end.
     */
-  def matchOrganizations(s: SparkSession, queries: DataFrame): DataFrame = {
+  def matchOrganizations(queries: DataFrame): DataFrame = {
     val q = queries.filter(col("schema").isin("Organization", "Company",
       "PublicBody"))
     // (name × country) product with the wildcard record, capped; the
@@ -112,8 +112,8 @@ final class PermIdEnricher(orgs: DataFrame, maxRecords: Int = 999) {
       col("ticker"),
       when(col("ticker").isNotNull, "corp.public").as("topics"))
 
-  def enrich(s: SparkSession, queries: DataFrame): DataFrame =
-    permOrgEntities(matchOrganizations(s, queries))
+  def enrich(queries: DataFrame): DataFrame =
+    permOrgEntities(matchOrganizations(queries))
 }
 
 object PermIdEnricher {

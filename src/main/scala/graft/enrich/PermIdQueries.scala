@@ -64,7 +64,7 @@ object PermIdQueries {
     graft.IndexLake.artifact(s, d, "permid_orgs")(orgs(s, d))
 
   def enrichQ(s: SparkSession, d: String): DataFrame =
-    new PermIdEnricher(orgsCk(s, d)).enrich(s, orgQueries(s, d))
+    new PermIdEnricher(orgsCk(s, d)).enrich(orgQueries(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_enrich_permid" -> (enrichQ _))

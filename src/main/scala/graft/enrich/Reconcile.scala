@@ -203,8 +203,8 @@ object Reconcile {
     *
     * Returns (decisions, mergeEdges, commands).
     */
-  def reconcile(s: SparkSession, stmts: DataFrame,
-      snaks: DataFrame, canonicals: DataFrame, decided: DataFrame,
+  def reconcile(stmts: DataFrame, snaks: DataFrame,
+      canonicals: DataFrame, decided: DataFrame,
       candidates: DataFrame, threshold: Double = Threshold,
       create: Boolean = true, retrieved: Option[String] = None,
       sourceUrl: Option[String] = None)

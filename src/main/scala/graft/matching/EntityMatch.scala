@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.model.Ftm

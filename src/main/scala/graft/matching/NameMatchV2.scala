@@ -315,7 +315,7 @@ object NameMatchV2 {
   }
 
   private def strictSim(a0: String, b0: String,
-      person: Boolean = true): Double = {
+      person: Boolean): Double = {
     def core(a: String, b: String): Double = {
       if (a == b) return 1.0
       if (hasCjk(a) || hasCjk(b)) return 0.0
@@ -737,7 +737,7 @@ object NameMatchV2 {
     * "Ivan IV"-style regnal numbers where the conversion misfires.
     */
   private def numberizeParts(parts: List[String],
-      roman: Boolean = false): List[String] = {
+      roman: Boolean): List[String] = {
     def one(a: String): Option[Int] =
       NumberWords.get(a)
         .orElse(if (roman) OrdinalWords.get(a) else None)
@@ -812,7 +812,7 @@ object NameMatchV2 {
     }
     def goTail(xs: List[String]): List[String] = xs match {
       case Nil => Nil
-      case h :: t if h.length == 1 && h.head.isLetter => go(xs)
+      case h :: _ if h.length == 1 && h.head.isLetter => go(xs)
       case h :: t => h :: go(t)
     }
     val out = go(parts)

@@ -79,7 +79,7 @@ object Training {
       featCols.map(c => col(c).cast("double"))): _*).cache()
     val n = cached.count().toDouble
     val k = featCols.length
-    var w = Array.fill(k)(0.0)
+    val w = Array.fill(k)(0.0)
     var b = 0.0
     for (_ <- 1 to epochs) {
       // gradient of the log-loss as one aggregation: for each feature

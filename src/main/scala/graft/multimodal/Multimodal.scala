@@ -223,10 +223,17 @@ object Multimodal {
     * bands of [[AHashBandBits]] bits = the full 64, complete for
     * distance ≤ [[DecAHashMaxDist]]).
     */
-  def phashDecodedQ(s: SparkSession, d: String): DataFrame = {
+  def phashDecodedQ(s: SparkSession, d: String): DataFrame =
+    decodedPhashPairs(decodedAhashSigsCk(s, d))
+
+  /** The banding and hamming check of [[phashDecodedQ]] over any
+    * (doc_id, ahash_lo, ahash_hi) table; buckets over `cap` are dropped
+    * ([[graft.dedup.Dedup.cappedPairs]]).
+    */
+  def decodedPhashPairs(sigs: DataFrame,
+      cap: Long = graft.dedup.Dedup.LshBucketCap): DataFrame = {
     val mask = (1L << AHashBandBits) - 1
-    val banded = graft.dedup.Dedup.dropHotBuckets(
-      decodedAhashSigsCk(s, d).select(col("doc_id"), col("ahash_lo"),
+    val banded = sigs.select(col("doc_id"), col("ahash_lo"),
         col("ahash_hi"),
         explode(array((0 until DecAHashBands).map { i =>
           val word = if (i < 4) "ahash_lo" else "ahash_hi"
@@ -234,21 +241,19 @@ object Multimodal {
             expr(s"shiftright($word, ${AHashBandBits * (i % 4)}) & $mask")
               .as("key"))
         }: _*)).as("bk"))
-        .select(col("doc_id"), col("ahash_lo"), col("ahash_hi"),
-          col("bk.band").as("band"), col("bk.key").as("key")),
-      graft.dedup.Dedup.LshBucketCap)
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a"),
-      col("ahash_lo").as("lo_a"), col("ahash_hi").as("hi_a"))
-    val r = banded.select(col("band"), col("key"), col("doc_id").as("b"),
-      col("ahash_lo").as("lo_b"), col("ahash_hi").as("hi_b"))
-    l.join(r, Seq("band", "key")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)")
-          .as("hamming"))
+      .select(col("doc_id"), col("ahash_lo"), col("ahash_hi"),
+        col("bk.band").as("band"), col("bk.key").as("key"))
+    def bits(x: Column, y: Column, word: String): Column =
+      bit_count(x.getField(word).bitwiseXOR(y.getField(word)))
+    graft.dedup.Dedup.cappedPairs(banded, Seq("band", "key"), cap,
+        struct(col("doc_id"), col("ahash_lo"), col("ahash_hi")))(
+      (x, y) => struct(x.getField("doc_id").as("a"),
+        y.getField("doc_id").as("b"),
+        (bits(x, y, "ahash_lo") + bits(x, y, "ahash_hi")).as("hamming")),
+      graft.dedup.Dedup.ascending)
       .distinct()
       .filter(col("hamming") <= DecAHashMaxDist)
   }
-
 
   // ---------------------------------------------- real container decode
 

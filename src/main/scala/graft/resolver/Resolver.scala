@@ -1,6 +1,6 @@
 package graft.resolver
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cluster resolution: positive same-as edges → connected components →

@@ -3,7 +3,7 @@ package graft.resolver
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.blocker.{Blocker, BlockerQueries}
+import graft.blocker.BlockerQueries
 import graft.store.StarStatements
 
 /** Resolver operators wired to the blocker's candidate pairs: positive

@@ -3,8 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** One Lloyd iteration of spherical k-means over the embedding corpus —
   * the centroid-training step that turns [[SimilarityQueries.ivfTopK]]'s
   * "every ~37th vector is a centroid" seed into data-adapted IVF lists.

@@ -2,9 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-
-import graft.Tables
 
 /** Product quantization — the ANN memory path beyond int8
   * ([[SimilarityQueries.quantizeQ]]): split each 64-dim vector into
@@ -168,7 +165,7 @@ object Pq {
     */
   def pqRerankTopK(s: SparkSession, d: String): DataFrame = {
     val p = SimilarityQueries.nearPreparedCk(s, d)
-    rerankFromShortlist(s, d, p,
+    rerankFromShortlist(p,
       Similarity.topkPerQid(adcScoresFrom(s, d, p),
           TopK * RerankFactor, col("ad6").asc, col("vec_id").asc)
         .select(col("qid"), col("vec_id")))
@@ -178,8 +175,7 @@ object Pq {
     * `(qid, vec_id)` — split out so q_sim_recall can feed the SAME
     * shortlist to both PQ arms instead of paying the ADC scan twice.
     */
-  def rerankFromShortlist(s: SparkSession, d: String, p: DataFrame,
-      short: DataFrame): DataFrame = {
+  def rerankFromShortlist(p: DataFrame, short: DataFrame): DataFrame = {
     val q = p.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("nrm").as("qnrm"))

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
   * the embedding corpus with k-means lists, then deduplicate ONLY
   * within each cluster — the pairwise cosine work is bounded by cluster

@@ -401,7 +401,7 @@ object SimilarityQueries {
     val pq = short.filter(col("rn") <= TopK)
       .select(col("qid"), col("vec_id"))
       .withColumn("pq_hit", lit(1))
-    val pqrr = Pq.rerankFromShortlist(s, d, p,
+    val pqrr = Pq.rerankFromShortlist(p,
         short.select(col("qid"), col("vec_id")))
       .select(col("qid"), col("vec_id"))
       .withColumn("pqrr_hit", lit(1))

@@ -110,20 +110,18 @@ object DocumentStream {
     * bands is emitted once per band — downstream dedupes on (a, b),
     * exactly like the batch `.distinct()`.
     *
+    * Per-bucket state is capped at [[Dedup.LshBucketCap]] signatures —
+    * the batch screen's hot-bucket cap: a hot (band, key) bucket
+    * (boilerplate-heavy ingest) would otherwise grow state and do
+    * O(n²) emission work without bound. Once a bucket holds that many
+    * signatures, further arrivals in it are DROPPED (an over-common key
+    * is uninformative) — real near-dups of a dropped doc still surface
+    * through its other [[DedupQueries.Bands]]−1 bands unless ALL of
+    * them are hot.
+    *
     * `stateTtl` follows the [[MatchStream.candidates]] rule: only set
     * it under a real ProcessingTime trigger.
     */
-  /** Per-bucket state cap — the streaming analogue of the blocker's
-    * stopword cost cap / the winnow df cap: a hot (band, key) bucket
-    * (boilerplate-heavy ingest) would otherwise grow state and do
-    * O(n²) emission work without bound. Once a bucket holds this many
-    * signatures, further arrivals in it are DROPPED (the batch
-    * stopword semantics: an over-common key is uninformative) — real
-    * near-dups of a dropped doc still surface through its other
-    * [[DedupQueries.Bands]]−1 bands unless ALL of them are hot.
-    */
-  val NearDupBucketCap = 64
-
   def nearDupStream(docs: DataFrame, stateTtl: Option[String] = None)
       : Dataset[NearDupCandidate] = {
     import DedupQueries.{MinhashK, Bands, RowsPerBand}
@@ -149,7 +147,7 @@ object DocumentStream {
           else {
             var seen = state.getOption.getOrElse(Seq.empty)
             val out = List.newBuilder[NearDupCandidate]
-            for (r <- rows if seen.size < NearDupBucketCap &&
+            for (r <- rows if seen.size < Dedup.LshBucketCap &&
                 !seen.exists(_._1 == r.doc_id)) {
               for ((oid, osig) <- seen) {
                 val agree = r.sig.zip(osig).count(p => p._1 == p._2)

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** The distributed kernel of BPE tokenizer training: adjacent-symbol
   * pair counting over the corpus vocabulary (Sennrich et al. 2016,
   * "Neural Machine Translation of Rare Words with Subword Units" —

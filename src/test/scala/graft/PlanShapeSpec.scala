@@ -64,25 +64,36 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("the dedup band pipelines carry the hot-bucket cap") {
     // the r6 skew guard: candidate generation must drop capped buckets
-    // before any pair fan-out. The ingest builder (lshPairsOf) still
-    // uses the Dedup.dropHotBuckets LEFT-ANTI join; the live banding
-    // queries (simhash_pairs, incremental) apply the SAME cap as a
-    // window count + filter on their single (band, key) exchange
-    // (r14: the anti-join cloned the banding subtree per consumer and
-    // AQE never reused the twin exchanges).
-    val p0 = plan(dedup.DedupQueries.lshPairsOf(Tables.documents(spark, dir)))
-    assert(p0.contains("LeftAnti"), s"lshPairsOf lost the bucket cap:\n$p0")
-    val live: Seq[(String, DataFrame)] = Seq(
+    // before any pair fan-out. Every banding channel runs
+    // Dedup.cappedPairs, which applies the cap as a window count + filter
+    // on its single key exchange, ahead of the collect
+    val banded: Seq[(String, DataFrame)] = Seq(
+      "lshPairsOf" ->
+        dedup.DedupQueries.lshPairsOf(Tables.documents(spark, dir)),
       "q_dedup_simhash_pairs" ->
         dedup.DedupQueries.queries("q_dedup_simhash_pairs")(spark, dir),
       "q_dedup_incremental" ->
-        dedup.DedupQueries.queries("q_dedup_incremental")(spark, dir))
-    for ((name, df) <- live) {
+        dedup.DedupQueries.queries("q_dedup_incremental")(spark, dir),
+      "q_mm_phash_decoded" ->
+        multimodal.Multimodal.queries("q_mm_phash_decoded")(spark, dir))
+    for ((name, df) <- banded) {
       val p = plan(df)
       assert(p.contains("windowspecdefinition"),
         s"$name lost the window df count:\n$p")
       assert(p.contains(s"<= ${dedup.Dedup.LshBucketCap}"),
         s"$name lost the bucket-cap filter:\n$p")
+      assert(!p.contains("LeftAnti"), s"$name plans a hot-key anti-join:\n$p")
+    }
+  }
+
+  test("the dedup verify joins carry no broadcast hint") {
+    // the fetched side holds a whole shingle or fingerprint set per
+    // candidate pair, so a forced broadcast would grow with duplication
+    for (name <- Seq("q_dedup_incremental", "q_dedup_winnow")) {
+      val p = dedup.DedupQueries.queries(name)(spark, dir)
+        .queryExecution.optimizedPlan.toString
+      assert(!p.contains("strategy=broadcast"),
+        s"$name forces a broadcast:\n$p")
     }
   }
 

@@ -1,9 +1,13 @@
 package graft.dedup
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.multimodal.Multimodal
 import graft.resolver.Resolver
 
 /** Cluster-closure election and deterministic sampling semantics —
@@ -135,11 +139,161 @@ class DedupOpsSpec extends AnyFunSuite {
     // one bit and pair normally
     val sigs = ((0 until 100).map(i => (i.toLong, 0L)) ++
       Seq((200L, 0x3FFFFFL), (201L, 0x3FFFFEL))).toDF("doc_id", "simhash")
-    val pairs = Dedup.simhashPairs(sigs, "doc_id",
+    val pairs = Dedup.simhashPairsFrom(sigs, "doc_id",
       DedupQueries.SimhashBands, DedupQueries.SimhashBandBits,
       DedupQueries.SimhashMaxDist)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(pairs.toSeq === Seq((200L, 201L, 1)))
+  }
+
+  /** The banding channels as they were before [[Dedup.cappedPairs]]:
+    * an anti-join against the keys held by more than `cap` rows, then a
+    * self-join on (band, key). Kept as the reference the capped-pair
+    * operator must equal row for row.
+    */
+  private object Reference {
+    def dropHotBuckets(buckets: DataFrame, cap: Long): DataFrame = {
+      val hot = buckets.groupBy(col("band"), col("key"))
+        .agg(count(lit(1)).as("df")).filter(col("df") > cap)
+        .select(col("band"), col("key"))
+      buckets.join(hot, Seq("band", "key"), "left_anti")
+    }
+
+    def lshCandidates(sig: DataFrame, cap: Long): DataFrame = {
+      val buckets = dropHotBuckets(Dedup.lshBuckets(sig, "doc_id",
+        DedupQueries.Bands, DedupQueries.RowsPerBand), cap)
+      val l = buckets.select(col("band"), col("key"), col("doc_id").as("a"))
+      val r = buckets.select(col("band"), col("key"), col("doc_id").as("b"))
+      l.join(r, Seq("band", "key")).filter(col("a") < col("b"))
+        .select(col("a"), col("b")).distinct()
+    }
+
+    def simhashPairs(sigs: DataFrame, cap: Long): DataFrame = {
+      import DedupQueries.{SimhashBands, SimhashBandBits, SimhashMaxDist}
+      val mask = (1L << SimhashBandBits) - 1
+      val banded = dropHotBuckets(sigs.select(col("doc_id"), col("simhash"),
+          explode(array((0 until SimhashBands).map(i =>
+            struct(lit(i).as("band"), expr(
+              s"shiftright(simhash, ${SimhashBandBits * i}) & $mask")
+              .as("key"))): _*)).as("bk"))
+        .select(col("doc_id"), col("simhash"), col("bk.band").as("band"),
+          col("bk.key").as("key")), cap)
+      val l = banded.select(col("band"), col("key"), col("doc_id").as("a"),
+        col("simhash").as("sa"))
+      val r = banded.select(col("band"), col("key"), col("doc_id").as("b"),
+        col("simhash").as("sb"))
+      l.join(r, Seq("band", "key")).filter(col("a") < col("b"))
+        .select(col("a"), col("b"),
+          bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= SimhashMaxDist)
+    }
+
+    def decodedPhashPairs(sigs: DataFrame, cap: Long): DataFrame = {
+      import Multimodal.{AHashBandBits, DecAHashBands, DecAHashMaxDist}
+      val mask = (1L << AHashBandBits) - 1
+      val banded = dropHotBuckets(sigs.select(col("doc_id"),
+          col("ahash_lo"), col("ahash_hi"),
+          explode(array((0 until DecAHashBands).map { i =>
+            val word = if (i < 4) "ahash_lo" else "ahash_hi"
+            struct(lit(i).as("band"), expr(
+              s"shiftright($word, ${AHashBandBits * (i % 4)}) & $mask")
+              .as("key"))
+          }: _*)).as("bk"))
+        .select(col("doc_id"), col("ahash_lo"), col("ahash_hi"),
+          col("bk.band").as("band"), col("bk.key").as("key")), cap)
+      val l = banded.select(col("band"), col("key"), col("doc_id").as("a"),
+        col("ahash_lo").as("lo_a"), col("ahash_hi").as("hi_a"))
+      val r = banded.select(col("band"), col("key"), col("doc_id").as("b"),
+        col("ahash_lo").as("lo_b"), col("ahash_hi").as("hi_b"))
+      l.join(r, Seq("band", "key")).filter(col("a") < col("b"))
+        .select(col("a"), col("b"),
+          expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)")
+            .as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= DecAHashMaxDist)
+    }
+  }
+
+  /** Per-doc keys for eight bands. Each band plants keys held by
+    * exactly cap − 1, cap and cap + 1 docs (three keys of random sizes
+    * when the cap is unbounded) and up to three
+    * single-row keys; every other doc draws one of two pool keys, one
+    * bit apart, so most same-bucket pairs also pass the hamming checks.
+    * Keys stay under 16, inside every channel's band width.
+    */
+  private def bucketTable(cap: Long): Gen[Seq[(Long, Seq[Long])]] = {
+    val sizes: Gen[Seq[Int]] =
+      if (cap == Long.MaxValue) Gen.listOfN(3, Gen.choose(2, 8))
+      else Gen.const(Seq(cap - 1, cap, cap + 1).filter(_ > 0).map(_.toInt))
+    for {
+      planted <- Gen.listOfN(8, sizes)
+      singles <- Gen.listOfN(8, Gen.choose(0, 3))
+      extra <- Gen.choose(1, 8)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val n = planted.zip(singles).map { case (p, k) => p.sum + k }.max + extra
+      val ids = rnd.shuffle((0 until n).map(i => i * 31L + 5)).toIndexedSeq
+      val keys = Array.ofDim[Long](8, n)
+      for (b <- 0 until 8) {
+        val fixed = planted(b).zipWithIndex.flatMap { case (sz, g) =>
+          Seq.fill(sz)(g.toLong) } ++ (0 until singles(b)).map(8L + _)
+        rnd.shuffle((0 until n).toIndexedSeq).zipWithIndex.foreach {
+          case (doc, i) =>
+            keys(b)(doc) = if (i < fixed.length) fixed(i)
+              else 4L + rnd.nextInt(2)
+        }
+      }
+      (0 until n).map(d => (ids(d), (0 until 8).map(b => keys(b)(d))))
+    }
+  }
+
+  private def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map((r: Row) => r.toSeq)
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** Asserts equal row bags; returns the reference row count. */
+  private def sameRows(name: String, got: DataFrame, want: DataFrame)
+      : Int = {
+    val cols = want.columns.toSeq.map(col)
+    val (g, w) = (bag(got.select(cols: _*)), bag(want.select(cols: _*)))
+    assert(g === w, s"$name\nonly new: ${g.keySet -- w.keySet}" +
+      s"\nonly reference: ${w.keySet -- g.keySet}")
+    w.values.sum
+  }
+
+  test("capped-pair channels equal the anti-join + self-join reference") {
+    def packed(keys: Seq[Long], width: Int, from: Int, to: Int): Long =
+      (from until to).map(b => keys(b) << (width * (b - from))).sum
+    for (cap <- Seq(1L, 2L, 64L, Long.MaxValue)) {
+      val rows = bucketTable(cap)(Gen.Parameters.default, Seed(cap + 13))
+        .get
+      // LSH: band b is signature slots 4b..4b+3 = (key, 0, 0, 0)
+      val lsh = rows.map { case (id, k) =>
+        (id, (0 until 4).flatMap(b => Seq(k(b), 0L, 0L, 0L))) }
+        .toDF("doc_id", "sig")
+      val sim = rows.map { case (id, k) =>
+        (id, packed(k, DedupQueries.SimhashBandBits, 0,
+          DedupQueries.SimhashBands)) }.toDF("doc_id", "simhash")
+      val ph = rows.map { case (id, k) =>
+        (id, packed(k, Multimodal.AHashBandBits, 0, 4),
+          packed(k, Multimodal.AHashBandBits, 4, 8)) }
+        .toDF("doc_id", "ahash_lo", "ahash_hi")
+      val n = Seq(
+        sameRows(s"lsh, cap $cap", Dedup.lshCandidates(lsh, "doc_id",
+          DedupQueries.Bands, DedupQueries.RowsPerBand, cap),
+          Reference.lshCandidates(lsh, cap)),
+        sameRows(s"simhash, cap $cap", Dedup.simhashPairsFrom(sim, "doc_id",
+          DedupQueries.SimhashBands, DedupQueries.SimhashBandBits,
+          DedupQueries.SimhashMaxDist, cap), Reference.simhashPairs(sim, cap)),
+        sameRows(s"phash, cap $cap", Multimodal.decodedPhashPairs(ph, cap),
+          Reference.decodedPhashPairs(ph, cap)))
+      // a cap of 1 pairs nothing; a larger cap keeps the planted
+      // cap-sized keys, and the big tables also pass the hamming checks
+      if (cap > 1) assert(n.head > 0, s"cap $cap: no lsh pair")
+      if (cap > 2) assert(n.forall(_ > 0), s"cap $cap: empty channel $n")
+    }
   }
 
   test("exact substring dedup: cross-doc and within-doc spans, exactly") {

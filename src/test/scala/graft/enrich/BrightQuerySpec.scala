@@ -48,7 +48,7 @@ class BrightQuerySpec extends AnyFunSuite {
 
   test("matching, id guards, fallbacks, ranking") {
     val out = new BrightQueryEnricher(records)
-      .enrich(spark, queries)
+      .enrich(queries)
       .select("query_id", "match_id").as[(String, String)]
       .collect().toSet
     assert(out === Set(
@@ -58,7 +58,7 @@ class BrightQuerySpec extends AnyFunSuite {
 
   test("top-N window ranks by revenue then headcount") {
     val out = new BrightQueryEnricher(records, perQuery = 1)
-      .enrich(spark, queries)
+      .enrich(queries)
       .filter($"query_id" === "q1")
       .select("match_id").as[String].collect().toSeq
     assert(out === Seq("bq-le-1")) // revenue 900 beats 500

@@ -50,7 +50,7 @@ class OpenCorporatesSpec extends AnyFunSuite {
 
   test("search gating, country resolution, slug ids") {
     val out = new OpenCorporatesEnricher(registry)
-      .enrich(spark, queries)
+      .enrich(queries)
       .select("query_id", "match_id").as[(String, String)]
       .collect().toSet
     assert(out === Set(
@@ -63,7 +63,7 @@ class OpenCorporatesSpec extends AnyFunSuite {
 
   test("company entity shape: jurisdiction root, renamed fields") {
     val row = new OpenCorporatesEnricher(registry)
-      .enrich(spark, queries)
+      .enrich(queries)
       .filter($"match_id" === "oc-companies-us-de-00112")
       .select("name", "jurisdiction", "registration_number",
         "legal_form", "incorporation_date", "status")

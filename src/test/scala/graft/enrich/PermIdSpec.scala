@@ -37,7 +37,7 @@ class PermIdSpec extends AnyFunSuite {
   private def enricher = new PermIdEnricher(orgs)
 
   test("name + wildcard + LEI matching with dedup and ids") {
-    val out = enricher.enrich(spark, queries)
+    val out = enricher.enrich(queries)
       .select("query_id", "match_id").as[(String, String)]
       .collect().toSet
     assert(out === Set(
@@ -47,7 +47,7 @@ class PermIdSpec extends AnyFunSuite {
   }
 
   test("status table and multi-line address cleanup") {
-    val rows = enricher.enrich(spark, queries)
+    val rows = enricher.enrich(queries)
       .filter($"query_id" === "q1")
       .select("match_id", "status", "address", "topics")
       .as[(String, String, String, String)].collect().toMap2
@@ -74,7 +74,7 @@ class PermIdSpec extends AnyFunSuite {
       ("q6", "Company", Seq("Null Country Org"),
         Option.empty[Seq[String]], Option.empty[String]))
       .toDF("id", "schema", "names", "countries", "lei")
-    val out = new PermIdEnricher(withNullCountry).enrich(spark, qs)
+    val out = new PermIdEnricher(withNullCountry).enrich(qs)
       .select("query_id", "match_id").as[(String, String)]
       .collect().toSet
     assert(out === Set("q5" -> "permid-P4", "q6" -> "permid-P4"))
@@ -87,7 +87,7 @@ class PermIdSpec extends AnyFunSuite {
     // 60 names x (1 distinct country, no room for wildcard at cap 60)
     val capped = new PermIdEnricher(orgs, maxRecords = 60)
     // nothing matches, but the fan-out itself must not exceed the cap
-    assert(capped.enrich(spark, many).count() === 0)
+    assert(capped.enrich(many).count() === 0)
   }
 
   private implicit class MapOps(

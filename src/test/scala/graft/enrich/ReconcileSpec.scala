@@ -123,7 +123,7 @@ class ReconcileSpec extends AnyFunSuite {
       .select(col("member").as("entity_id"), col("canonical").as("qid"))
     val candidates = Reconcile.searchCandidates(stmts, snaks)
     val (decisions, merges, commands) = Reconcile.reconcile(
-      spark, stmts, snaks, canonicals, decided, candidates,
+      stmts, snaks, canonicals, decided, candidates,
       retrieved = Some("2024-06-01"))
     val d = decisions.orderBy("entity_id").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
@@ -172,7 +172,7 @@ class ReconcileSpec extends AnyFunSuite {
       .select(col("member").as("entity_id"), col("canonical").as("qid"))
     val candidates = Reconcile.searchCandidates(noPersonLink, snaks)
     val (decisions, merges, commands) = Reconcile.reconcile(
-      spark, noPersonLink, snaks, empty, decided, candidates)
+      noPersonLink, snaks, empty, decided, candidates)
     assert(decisions.filter(col("decision") === "create").count() === 2)
     assert(merges.count() === 0)
     val lines = commands.select("line").as[String].collect()
