@@ -34,6 +34,45 @@ object Caches {
     df
   }
 
+  /** The intermediates of one pipeline call, built once and released
+    * together: `cut` materializes with lineage cut
+    * (`localCheckpoint(eager)`, memory spilling to disk); `persist` is
+    * [[pin]]'s DISK_ONLY persist without the eager count — the first
+    * action over the frame fills it, so a frame whose first consumer
+    * reads all of it pays no extra job. `release()` frees every block
+    * either one made. A caller releases in a `finally` once its product
+    * is materialized, so the call leaves nothing persisted but what it
+    * returns.
+    */
+  final class Held {
+    private val rdds =
+      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    private val persisted =
+      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+
+    def cut(df: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      val c = df.localCheckpoint(eager = true)
+      rdds ++= c.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }
+      c
+    }
+
+    def persist(df: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      persisted += df
+      df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    }
+
+    def release(): Unit = {
+      rdds.foreach(_.unpersist(blocking = false))
+      persisted.foreach(_.unpersist(blocking = false))
+      rdds.clear()
+      persisted.clear()
+    }
+  }
+
   /** WHEN NOT TO PIN — the array-decode boundary (measured r10):
     * df.persist at ANY storage level stores COLUMNAR batches and
     * re-decodes them on every scan; for a small table of big arrays

@@ -96,8 +96,9 @@ object DedupQueries {
     * queries the same table is a lake artifact instead —
     * [[shinglesCk]].
     */
-  private def parShingles(docs: DataFrame): DataFrame =
-    graft.Caches.pin(hashedShinglesOf(docs.repartition(
+  private def parShingles(docs: DataFrame,
+      pin: DataFrame => DataFrame = graft.Caches.pin): DataFrame =
+    pin(hashedShinglesOf(docs.repartition(
       docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))))
 
   def lshPairsOf(docs: DataFrame): DataFrame =
@@ -205,32 +206,44 @@ object DedupQueries {
     * Scale shape: the pair list is tiny relative to the corpus (it IS
     * the near-dup set), so the component step runs on edges only —
     * driver union-find under 2M edges, pointer-doubled propagation
-    * above — and the length/election joins are per-cluster aggregates
-    * over the members, never touching unclustered documents.
+    * above — and the election is one window per cluster over the
+    * members, never touching unclustered documents.
     */
   def clustersQ(s: SparkSession, d: String): DataFrame =
     clustersFrom(clusterCcCk(s, d), Tables.documents(s, d))
 
-  def clustersOf(docs: DataFrame): DataFrame =
-    clustersFrom(ccOf(lshPairsOf(docs)), docs)
+  /** [[clustersQ]] over an arbitrary docs frame. The shingle table is
+    * persisted only until the components are built (they are collected
+    * or checkpointed), so the call leaves nothing persisted.
+    */
+  def clustersOf(docs: DataFrame): DataFrame = {
+    val held = new graft.Caches.Held
+    try clustersFrom(ccOf(lshPairsFrom(parShingles(docs, held.persist))),
+      docs)
+    finally held.release()
+  }
 
   private def ccOf(lshPairs: DataFrame): DataFrame =
     graft.resolver.Resolver.connectedComponents(lshPairs.select(
       col("a").cast("string").as("src"), col("b").cast("string").as("dst")))
 
-  private def clustersFrom(cc: DataFrame, docs: DataFrame)
-      : DataFrame = {
-    val len = docs.select(
-      col("doc_id").cast("string").as("id"),
-      length(col("text")).as("len"))
-    val wl = cc.join(len, Seq("id"))
-    // scalar max + fetch-back join (struct-valued min_by/max_by falls
-    // back to SortAggregate; the geocode query measured the difference)
-    val ml = wl.groupBy(col("cluster")).agg(max(col("len")).as("mlen"))
-    val canon = wl.join(ml, Seq("cluster"))
-      .filter(col("len") === col("mlen"))
-      .groupBy(col("cluster")).agg(min(col("id")).as("canonical"))
-    wl.join(canon, Seq("cluster"))
+  private def clustersFrom(cc: DataFrame, docs: DataFrame): DataFrame =
+    elect(cc, docs.select(col("doc_id").cast("string").as("id"),
+      length(col("text")).as("len")))
+
+  /** Survivor election over `(id, cluster)` components and `(id, len)`
+    * lengths: one window per cluster ordered `len desc, id asc` — its
+    * first row is the canonical (longest text, min id on ties). Emits
+    * `(doc_id, canonical, keep)` per clustered member. A NULL length
+    * sorts last; a cluster of NULL lengths only (never built by the
+    * pipelines: a NULL text has no shingles, so it never pairs) elects
+    * its min id.
+    */
+  private[graft] def elect(cc: DataFrame, len: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("cluster")).orderBy(col("len").desc, col("id").asc)
+    cc.join(len, Seq("id"))
+      .withColumn("canonical", first(col("id")).over(w))
       .select(col("id").as("doc_id"), col("canonical"),
         (col("id") === col("canonical")).as("keep"))
   }

@@ -24,20 +24,31 @@ object Resolver {
     * vertex that appears in an edge.
     *
     * Two physical strategies, same semantics:
-    *  - edge sets below `driverLimit` run a path-compressed union-find
-    *    on the driver — the reference's own in-memory resolver
+    *  - the driver path collects the edge rows ONCE — at most
+    *    `driverLimit + 1` of them, as given (duplicates, either
+    *    direction and self-loops included; ids as strings), so the
+    *    edge input's plan runs a single time — and, when they number at
+    *    most `driverLimit`, runs a path-compressed union-find over them
+    *    on the driver: the reference's own in-memory resolver
     *    (`resolver/linker.py:20-36`) at the scale it actually runs at,
-    *    without paying ~2 Spark jobs per label-propagation round;
-    *  - larger graphs fall back to distributed min-label propagation
-    *    (one shuffle per round, convergence folded into the same agg).
+    *    without paying ~2 Spark jobs per label-propagation round.
+    *    `driverLimit` bounds the edge rows the driver holds;
+    *  - more edges than that fall back to distributed min-label
+    *    propagation (one shuffle per round, convergence folded into the
+    *    same agg) over the symmetrized, distinct edge set.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       driverLimit: Long = 2000000L): DataFrame = {
+    val cap = math.min(driverLimit, Int.MaxValue - 1L).toInt
+    val rows = edges.select(col("src").cast("string"),
+      col("dst").cast("string")).limit(cap + 1).collect()
+    if (rows.length <= driverLimit)
+      return driverUnionFind(edges.sparkSession,
+        rows.iterator.map(r => (r.getString(0), r.getString(1))))
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    if (sym.count() <= driverLimit) return driverUnionFind(sym)
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id"))
       .localCheckpoint(true)
@@ -80,14 +91,13 @@ object Resolver {
     labels
   }
 
-  /** Driver-side path-compressed union-find over a (small) symmetric
-    * edge list; cluster label = min member id, matching the distributed
-    * path bit-for-bit.
+  /** Driver-side path-compressed union-find over a (small) edge list in
+    * any direction; cluster label = min member id, matching the
+    * distributed path bit-for-bit.
     */
-  private def driverUnionFind(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
+  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
+      pairs: Iterator[(String, String)]): DataFrame = {
     import spark.implicits._
-    val pairs = sym.as[(String, String)].collect()
     val parent = scala.collection.mutable.Map.empty[String, String]
     def find(x: String): String = {
       var root = x

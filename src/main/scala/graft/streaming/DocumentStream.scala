@@ -60,21 +60,20 @@ object DocumentStream {
   /** Stateless LM perplexity gate on a document stream: score each
     * arriving document against a STATIC, broadcast
     * [[graft.textanalysis.LangModel.LmModel]] (trained once on the
-    * lake's reference slice, shipped to executors in the closure — the
-    * CCNet serving shape) and keep documents whose mean token
-    * log-probability clears the floor. Map-only like [[qualityGate]]:
-    * no state, no shuffle, and the same fixed-point arithmetic as the
-    * batch scorer, so re-scoring a gated stream in batch reproduces
-    * the decisions exactly (asserted in DocumentStreamSpec).
+    * lake's reference slice, shipped to executors as a broadcast — the
+    * CCNet serving shape, and the scorer the batch curate gate runs)
+    * and keep documents whose mean token log-probability clears the
+    * floor. Map-only like [[qualityGate]]: no state, no shuffle, and
+    * the same fixed-point arithmetic as the batch scorer, so re-scoring
+    * a gated stream in batch reproduces the decisions exactly (asserted
+    * in DocumentStreamSpec).
     */
   def lmGate(docs: DataFrame, model: graft.textanalysis.LangModel.LmModel,
-      minLogp: Double): DataFrame = {
-    val score = udf((ws: Seq[String]) =>
-      model.avgLogp(ws).map(Double.box).orNull)
+      minLogp: Double): DataFrame =
     docs
-      .withColumn("avg_logp", score(TextAnalysis.words(col("text"))))
+      .withColumn("avg_logp", graft.textanalysis.LangModel.avgLogpOf(model,
+        TextAnalysis.words(col("text"))))
       .filter(col("avg_logp") >= minLogp)
-  }
 
   /** Stateless TRAINED-classifier gate on a document stream: score
     * each arriving document against the frozen quality-model

@@ -336,24 +336,33 @@ object Curation {
     * `div` (not double floor) keeps the window ids exact past 2^53
     * tokens.
     */
-  def packOf(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n"))
-      .filter(col("n") > 0)
-      .withColumn("k", shuffleKey(lit(0)))
-      .withColumn("shard", pmod(col("k"), lit(ShuffleShards.toLong)))
+  def packOf(docs: DataFrame): DataFrame =
+    packFrom(docs.select(col("doc_id"),
+      size(TextAnalysis.words(col("text"))).cast("long").as("n_tokens")))
+      .select(col("shard"), col("doc_id"), col("n_tokens"), col("start_tok"),
+        col("first_window"), col("window_offset"), col("n_windows"))
+
+  /** The packing arithmetic over a frame that already carries its
+    * token count as `n_tokens` (BIGINT): drops token-less rows and adds
+    * `shard`, `start_tok`, `first_window`, `window_offset` and
+    * `n_windows`; every other column passes through. [[packOf]] and the
+    * curate pipeline (which carries its words from the quality gate)
+    * both pack through it.
+    */
+  private[graft] def packFrom(toks: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("shard"))
       .orderBy(col("k").asc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("start_tok", coalesce(sum(col("n")).over(w), lit(0L)))
-      .select(col("shard"), col("doc_id"), col("n").as("n_tokens"),
-        col("start_tok"),
-        expr(s"start_tok div $PackContext").as("first_window"),
-        pmod(col("start_tok"), lit(PackContext)).as("window_offset"),
-        (expr(s"(start_tok + n - 1) div $PackContext") -
-          expr(s"start_tok div $PackContext") + lit(1L)).as("n_windows"))
+    toks.filter(col("n_tokens") > 0)
+      .withColumn("k", shuffleKey(lit(0)))
+      .withColumn("shard", pmod(col("k"), lit(ShuffleShards.toLong)))
+      .withColumn("start_tok", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .withColumn("first_window", expr(s"start_tok div $PackContext"))
+      .withColumn("window_offset", pmod(col("start_tok"), lit(PackContext)))
+      .withColumn("n_windows",
+        expr(s"(start_tok + n_tokens - 1) div $PackContext") -
+          expr(s"start_tok div $PackContext") + lit(1L))
+      .drop("k")
   }
 
   def packQ(s: SparkSession, d: String): DataFrame =

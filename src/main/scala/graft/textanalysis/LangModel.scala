@@ -1,6 +1,6 @@
 package graft.textanalysis
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,13 +24,18 @@ import graft.Tables
   *   S(w)        = coalesce(count(w), 0.5) / T    (0.5 = OOV pseudocount)
   * First token of a document scores S(w) without the backoff penalty.
   *
-  * Scale shape (100 TB): the LM tables are vocabulary-sized hash
-  * aggregates with full map-side combine (the corpus token stream never
-  * self-joins); scoring is two equi-joins of the token stream against
-  * the unigram table and one against the bigram table — all
-  * hash-partitioned on the term key, no window, no sort. A production
-  * run writes the count tables to the lake once and scores any corpus
-  * against them; a pruned LM (top-|V| rows) becomes a broadcast join.
+  * Scale shape (100 TB): training is ONE vocabulary-sized hash
+  * aggregate over the train slice's (prev, term) token rows, with full
+  * map-side combine (the corpus token stream never self-joins), and
+  * one count of its vocabulary. Under the top-|V| cap ([[LmTopV]]) the
+  * bigram table is collected once into an [[LmModel]] and broadcast;
+  * above it the pruned tables are. Scoring a corpus ([[lmScoreOf]]) is
+  * then one map-side projection per document — no token explode, no
+  * join, no shuffle. `q_text_lm` keeps the relational form over the
+  * stored count tables ([[lmModelCk]]): two equi-joins of the token
+  * stream against the unigram table and one against the bigram table,
+  * all broadcast — the oracle-gated plan and the reference the
+  * model scorer is checked against.
   *
   * Per-token log terms are floored to 1e-6 fixed-point BIGINT before
   * the per-document sum (the same determinism rule as BM25/k-means:
@@ -80,9 +85,11 @@ object LangModel {
     */
   def lmModelCk(s: SparkSession, d: String): DataFrame =
     graft.IndexLake.artifact(s, d, "lm_model") {
+      // the persisted tables back the artifact write and stay for
+      // the session, like every stored artifact's build
       val (uni, bi, tot) =
         lmTables(corpusTokenRows(s, d).filter(bucket < TrainBuckets),
-          LmTopV, LmBigramsPerContext)
+          LmTopV, LmBigramsPerContext, new graft.Caches.Held)
       uni.select(lit("uni").as("kind"), lit(null).cast("string").as("prev"),
           col("term"), col("un").as("cnt"))
         .unionByName(bi.select(lit("bi").as("kind"), col("prev"),
@@ -106,10 +113,14 @@ object LangModel {
 
   /** Token rows (doc_id, term, prev) of the document corpus, scattered
     * once (explicit count — AQE-coalesce-exempt) so tokenize+posexplode
-    * runs at full parallelism for every consumer.
+    * runs at full parallelism for every consumer instead of on the
+    * one-row-group scan task.
     */
-  private def corpusTokenRows(s: SparkSession, d: String): DataFrame =
-    tokenRows(Tables.documents(s, d))
+  private def corpusTokenRows(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    tokenRows(TextAnalysis.withWords(docs.repartition(
+      s.sparkContext.defaultParallelism, col("doc_id"))))
+  }
 
   def lmScoreQ(s: SparkSession, d: String): DataFrame = {
     val (uni, bi, tot) = lmTablesCk(s, d)
@@ -122,37 +133,59 @@ object LangModel {
   def lmScoreOf(docs: DataFrame, topV: Long): DataFrame =
     lmScoreOf(docs, topV, LmBigramsPerContext)
 
+  /** `(doc_id, n_tokens, avg_logp)` for every document with words: the
+    * LM trains on the frame's own train slice ([[heldOutModel]]) and
+    * scores every document in one map-side projection
+    * ([[avgLogpOf]]) — no token explode, no join, no shuffle on the
+    * scoring side. Equal row for row to the relational scorer
+    * ([[lmScoreFrom]], which `q_text_lm` runs over the stored model);
+    * an empty train slice scores NULL.
+    */
   def lmScoreOf(docs: DataFrame, topV: Long,
       bigramsPerContext: Int): DataFrame = {
-    val rows = tokenRows(docs)
-    val (uni, bi, tot) =
-      lmTables(rows.filter(bucket < TrainBuckets), topV, bigramsPerContext)
-    lmScoreFrom(rows, uni, bi, tot)
+    val words = TextAnalysis.withWords(docs)
+      .filter(size(col("w")) > 0).select(col("doc_id"), col("w"))
+    val model = heldOutModel(words, topV, bigramsPerContext)
+    words.select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
+      avgLogpOf(model, col("w")).as("avg_logp"))
   }
 
-  /** Token rows (doc_id, term, prev) of a document frame. Scatters the
-    * raw docs once (explicit count — AQE-coalesce-exempt) so the
-    * tokenize+posexplode runs at full parallelism for every consumer
-    * (train aggregate and/or scoring pass) instead of on the
-    * one-row-group scan task. posexplode's pos is 0-based, element_at
-    * is 1-based, so element_at(w, pos) IS the previous word.
+  /** The [[LmModel]] trained on the train slice (md5 bucket below
+    * [[TrainBuckets]]) of a `(doc_id, w)` words frame — the split
+    * [[lmScoreOf]] and the curate pipeline score against.
     */
-  private def tokenRows(docs: DataFrame): DataFrame =
-    TextAnalysis.withWords(docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id")))
-      .filter(size(col("w")) > 0)
-      .select(col("doc_id"), col("w"))
+  def heldOutModel(words: DataFrame, topV: Long = LmTopV,
+      bigramsPerContext: Int = LmBigramsPerContext): LmModel =
+    trainRows(tokenRows(words.filter(bucket < TrainBuckets)), topV,
+      bigramsPerContext)
+
+  /** `avg_logp` of a words column under `model`, map-side: the model
+    * ships to executors once as a broadcast and [[LmModel.avgLogp]]
+    * scores each row. NULL for an empty array or an empty model.
+    */
+  def avgLogpOf(model: LmModel, w: Column): Column = {
+    val m = SparkSession.active.sparkContext.broadcast(model)
+    udf((ws: Seq[String]) => m.value.avgLogp(ws).map(Double.box).orNull)
+      .apply(w)
+  }
+
+  /** Token rows (doc_id, term, prev) of a `(doc_id, w)` words frame.
+    * posexplode's pos is 0-based, element_at is 1-based, so
+    * element_at(w, pos) IS the previous word.
+    */
+  private[graft] def tokenRows(words: DataFrame): DataFrame =
+    words.filter(size(col("w")) > 0)
       .select(col("doc_id"), col("w"),
         posexplode(col("w")).as(Seq("pos", "term")))
       .select(col("doc_id"), col("term"),
         when(col("pos") > 0, element_at(col("w"), col("pos"))).as("prev"))
 
-  /** The scoring tail over token rows and (uni, bi, tot) count tables —
-    * integer e6 sums keep the result partitioning-invariant.
+  /** The relational scoring tail over token rows and (uni, bi, tot)
+    * count tables — the `q_text_lm` plan over the stored model. Integer
+    * e6 sums keep the result partitioning-invariant.
     */
-  private def lmScoreFrom(rows: DataFrame, uni: DataFrame, bi: DataFrame,
-      tot: DataFrame): DataFrame = {
+  private[graft] def lmScoreFrom(rows: DataFrame, uni: DataFrame,
+      bi: DataFrame, tot: DataFrame): DataFrame = {
     val unPrev = uni.select(col("term").as("prev"), col("un").as("un_prev"))
     val pUni = coalesce(col("un").cast("double"), lit(OovCount)) /
       col("t").cast("double")
@@ -178,54 +211,104 @@ object LangModel {
           (col("n_tokens").cast("double") * lit(1e6)), 6).as("avg_logp"))
   }
 
-  /** Capped LM count tables from (prev, term) token rows — the shared
-    * train core of [[lmScoreOf]] and [[train]]. ONE training pass over
-    * the corpus: grouping on (prev, term) with prev-null rows included
-    * makes the bigram table a sufficient statistic — unigram counts
-    * and the token total are vocabulary-sized rollups of it
-    * (un(w) = Σ_prev bc(prev, w): every token occurrence is exactly
-    * one (prev, term) row). localCheckpoint before the fan-out so the
-    * derived tables don't each re-inline the corpus explode (the
-    * PLANS.md fan-out rule). Returns (uni ≤ topV rows,
-    * bi ≤ topV·bigramsPerContext rows, 1-row full-corpus token total —
-    * computed BEFORE any cap: pruned mass becomes OOV mass, it does
-    * not vanish).
+  /** The one training pass over the corpus: grouping on (prev, term)
+    * with prev-null rows included makes the bigram table a sufficient
+    * statistic — unigram counts and the token total are
+    * vocabulary-sized rollups of it (un(w) = Σ_prev bc(prev, w): every
+    * token occurrence is exactly one (prev, term) row). Persisted, not
+    * checkpointed (corpus-vocabulary-sized, several consumers): lineage
+    * retained, no on-heap block tax; the vocabulary count, which reads
+    * all of it, fills it.
     */
-  private def lmTables(tokenRows: DataFrame, topV: Long,
-      bigramsPerContext: Int): (DataFrame, DataFrame, DataFrame) = {
-    // pinned, not checkpointed (corpus-vocabulary-sized, three
-    // consumers): lineage retained, no on-heap block tax
-    val biAll = graft.Caches.pin(tokenRows
+  private def bigramCounts(tokenRows: DataFrame, held: graft.Caches.Held)
+      : DataFrame =
+    held.persist(tokenRows
       .groupBy(col("prev"), col("term")).agg(count(lit(1)).as("bc")))
-    val uniAll = biAll.groupBy(col("term")).agg(sum(col("bc")).as("un"))
+
+  private def unigramsOf(biAll: DataFrame): DataFrame =
+    biAll.groupBy(col("term")).agg(sum(col("bc")).as("un"))
+
+  /** Capped LM count tables from (prev, term) token rows — the
+    * relational model `q_text_lm` stores ([[lmModelCk]]). Returns
+    * (uni ≤ topV rows, bi ≤ topV·bigramsPerContext rows, 1-row
+    * full-corpus token total — computed BEFORE any cap: pruned mass
+    * becomes OOV mass, it does not vanish). What it persists goes to
+    * `held`.
+    */
+  private[graft] def lmTables(tokenRows: DataFrame, topV: Long,
+      bigramsPerContext: Int, held: graft.Caches.Held)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val biAll = bigramCounts(tokenRows, held)
+    val uniAll = unigramsOf(biAll)
     val tot = uniAll.agg(sum(col("un")).as("t"))
-    // top-|V| cap (see LmTopV): the count runs on the checkpointed
-    // vocabulary table, never the corpus. Both prune sides key on the
-    // same kept-term set, so a surviving bigram always finds its
-    // context count (bc non-null ⇒ un_prev non-null).
+    // top-|V| cap (see LmTopV): the count runs on the persisted
+    // vocabulary table, never the corpus
     val (uni, bi) =
       if (uniAll.count() <= topV)
         (uniAll, biAll.filter(col("prev").isNotNull)
           .select(col("prev"), col("term"), col("bc")))
-      else {
-        val keep = uniAll
-          .orderBy(col("un").desc, col("term").asc).limit(topV.toInt)
-          .select(col("term")).localCheckpoint(true)
-        val biKept = biAll.filter(col("prev").isNotNull)
-          .select(col("prev"), col("term"), col("bc"))
-          .join(keep, Seq("term"), "left_semi")
-          .join(keep.select(col("term").as("prev")), Seq("prev"),
-            "left_semi")
-        // |V|·N bound: top continuations per context (see
-        // LmBigramsPerContext) — a per-context window, never global
-        val wCtx = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("prev"))
-          .orderBy(col("bc").desc, col("term").asc)
-        (uniAll.join(keep, Seq("term"), "left_semi"),
-          biKept.withColumn("brn", row_number().over(wCtx))
-            .filter(col("brn") <= bigramsPerContext).drop("brn"))
-      }
+      else pruned(biAll, uniAll, topV, bigramsPerContext, held)
     (uni, bi, tot)
+  }
+
+  /** The top-|V| prune of the count tables: the top-topV terms (count
+    * desc, term asc) keep their counts, and the top bigramsPerContext
+    * continuations per context (count desc, term asc) among bigrams
+    * whose both terms are kept. Both prune sides key on the same
+    * kept-term set, so a surviving bigram always finds its context
+    * count (bc non-null ⇒ un_prev non-null).
+    */
+  private def pruned(biAll: DataFrame, uniAll: DataFrame, topV: Long,
+      bigramsPerContext: Int, held: graft.Caches.Held)
+      : (DataFrame, DataFrame) = {
+    val keep = held.cut(uniAll
+      .orderBy(col("un").desc, col("term").asc).limit(topV.toInt)
+      .select(col("term")))
+    val biKept = biAll.filter(col("prev").isNotNull)
+      .select(col("prev"), col("term"), col("bc"))
+      .join(keep, Seq("term"), "left_semi")
+      .join(keep.select(col("term").as("prev")), Seq("prev"), "left_semi")
+    // |V|·N bound: top continuations per context (see
+    // LmBigramsPerContext) — a per-context window, never global
+    val wCtx = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("prev"))
+      .orderBy(col("bc").desc, col("term").asc)
+    (uniAll.join(keep, Seq("term"), "left_semi"),
+      biKept.withColumn("brn", row_number().over(wCtx))
+        .filter(col("brn") <= bigramsPerContext).drop("brn"))
+  }
+
+  /** Train an [[LmModel]] from token rows: one corpus aggregation, one
+    * vocabulary count (which also yields the full token total), then
+    * under the topV cap ONE collect of the bigram table — unigrams are
+    * its rollup on the driver; above the cap the pruned tables of
+    * [[lmTables]], collected. Every block it persists is released
+    * before it returns.
+    */
+  private def trainRows(rows: DataFrame, topV: Long,
+      bigramsPerContext: Int): LmModel = {
+    val held = new graft.Caches.Held
+    try {
+      val biAll = bigramCounts(rows, held)
+      val uniAll = unigramsOf(biAll)
+      val v = uniAll.agg(count(lit(1)), sum(col("un"))).head()
+      val total = if (v.isNullAt(1)) 0L else v.getLong(1)
+      if (v.getLong(0) <= topV) {
+        val bc = biAll.collect()
+        LmModel(bc.groupMapReduce(_.getString(1))(_.getLong(2))(_ + _),
+          bc.iterator.filter(!_.isNullAt(0))
+            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+            .toMap,
+          total)
+      } else {
+        val (uni, bi) =
+          pruned(biAll, uniAll, topV, bigramsPerContext, held)
+        LmModel(uni.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+          bi.collect()
+            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
+          total)
+      }
+    } finally held.release()
   }
 
   // -------------------------------------------------- servable model form
@@ -233,8 +316,9 @@ object LangModel {
   /** A trained LM small enough to broadcast (production prunes to the
     * top-|V| unigrams/bigrams before shipping — the count tables are
     * already vocabulary-sized). `avgLogp` reproduces the fixed-point
-    * arithmetic of [[lmScoreOf]] exactly, so a stream gated with this
-    * model and a batch rescore agree bit-for-bit.
+    * arithmetic of the relational scorer exactly (StrictMath.log is
+    * Spark's `log`), so a stream gated with this model, [[lmScoreOf]]
+    * and the stored-model query agree bit-for-bit.
     */
   final case class LmModel(uni: Map[String, Long],
       bi: Map[(String, String), Long], total: Long) extends Serializable {
@@ -252,7 +336,7 @@ object LangModel {
             case (Some(bc), Some(un)) => bc.toDouble / un.toDouble
             case _ => Backoff * pUni
           }
-        s6 += math.floor(math.log(p) * 1e6 + 0.5).toLong
+        s6 += math.floor(StrictMath.log(p) * 1e6 + 0.5).toLong
         prev = w
       }
       Some(BigDecimal(s6.toDouble / (words.length * 1e6))
@@ -261,32 +345,20 @@ object LangModel {
   }
 
   /** Train an [[LmModel]] on the ENTIRE given frame (callers hold out
-    * their own reference slice — [[lmScoreOf]] shows the hash-split
-    * idiom). One corpus aggregation; the collects are capped BY
-    * CONSTRUCTION to ≤ topV unigram rows and ≤ topV·bigramsPerContext
-    * bigram rows (the [[lmTables]] prune — unique bigrams grow with
-    * corpus content, so an uncapped collect would be a driver OOM at
-    * scale). Pruned terms degrade to OOV and pruned bigrams to
-    * backoff exactly as in [[lmScoreOf]]; `total` is the FULL pre-cap
-    * token count, and [[LmModel.avgLogp]] already backs off on pruned
-    * contexts.
+    * their own reference slice — [[heldOutModel]] is the hash-split
+    * idiom). The collects are capped BY CONSTRUCTION to ≤ topV unigram
+    * rows and ≤ topV·bigramsPerContext bigram rows once the vocabulary
+    * exceeds topV (unique bigrams grow with corpus content, so an
+    * uncapped collect would be a driver OOM at scale). Pruned terms
+    * degrade to OOV and pruned bigrams to backoff exactly as in the
+    * relational scorer; `total` is the FULL pre-cap token count.
     */
   def train(docs: DataFrame): LmModel =
     train(docs, LmTopV, LmBigramsPerContext)
 
-  def train(docs: DataFrame, topV: Long, bigramsPerContext: Int): LmModel = {
-    val rows = TextAnalysis.withWords(docs)
-      .filter(size(col("w")) > 0)
-      .select(col("w"), posexplode(col("w")).as(Seq("pos", "term")))
-      .select(col("term"),
-        when(col("pos") > 0, element_at(col("w"), col("pos"))).as("prev"))
-    val (uniDf, biDf, totDf) = lmTables(rows, topV, bigramsPerContext)
-    val uni = uniDf.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bi = biDf.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    LmModel(uni, bi, totDf.head().getLong(0))
-  }
+  def train(docs: DataFrame, topV: Long, bigramsPerContext: Int): LmModel =
+    trainRows(tokenRows(TextAnalysis.withWords(docs)), topV,
+      bigramsPerContext)
 
   // ---------------------------------------------------------------- oracle
 

@@ -1,8 +1,6 @@
 package graft.xref
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.blocker.{Blocker, EntityTokenizer}
@@ -253,14 +251,7 @@ object Xref {
     */
   def run(s: SparkSession, stmts: DataFrame, decided: DataFrame,
       cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    val once = (df: DataFrame) => {
-      val cut = df.localCheckpoint(eager = true)
-      built ++= cut.queryExecution.logical.collect {
-        case r: LogicalRDD => r.rdd
-      }
-      cut
-    }
+    val built = new graft.Caches.Held
     // DISK_ONLY, not localCheckpoint(true): the scored table is bounded
     // by limit·limitFactor (50k at reference defaults) but operators
     // raise the cap — spilling to local disk keeps a raised cap from
@@ -268,11 +259,11 @@ object Xref {
     // (lid, rid, score) table
     val scored =
       try {
-        val sc = scoredWith(s, stmts, decided, cfg, once)
+        val sc = scoredWith(s, stmts, decided, cfg, built.cut)
           .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
         sc.count() // materialize once, before both consumers fork
         sc
-      } finally built.foreach(_.unpersist(blocking = false))
+      } finally built.release()
     val gate = cfg.autoThreshold
       .map(t => col("score") > t).getOrElse(lit(false))
     val merges = scored.filter(gate)

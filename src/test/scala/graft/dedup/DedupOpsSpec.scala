@@ -26,19 +26,31 @@ class DedupOpsSpec extends AnyFunSuite {
     val cc = Resolver.connectedComponents(pairs)
     val len = Seq(("1", 5L), ("2", 9L), ("3", 9L), ("8", 4L), ("9", 2L))
       .toDF("id", "len")
-    val wl = cc.join(len, Seq("id"))
-    val ml = wl.groupBy(col("cluster")).agg(max(col("len")).as("mlen"))
-    val canon = wl.join(ml, Seq("cluster"))
-      .filter(col("len") === col("mlen"))
-      .groupBy(col("cluster")).agg(min(col("id")).as("canonical"))
-    val out = wl.join(canon, Seq("cluster"))
-      .select(col("id"), col("canonical"),
-        (col("id") === col("canonical")).as("keep"))
-      .orderBy("id").collect()
+    val out = DedupQueries.elect(cc, len)
+      .orderBy("doc_id").collect()
       .map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
     assert(out.toSeq === Seq(
       ("1", "2", false), ("2", "2", true), ("3", "2", false),
       ("8", "8", true), ("9", "8", false)))
+    // generated clusters whose lengths tie often: the one-window
+    // election equals the max + fetch-back reference row for row
+    val clusters = for {
+      sizes <- Gen.listOfN(12, Gen.choose(1, 6))
+      lens <- Gen.listOfN(sizes.sum, Gen.choose(3L, 5L))
+      seed <- Gen.long
+    } yield {
+      val ids = new scala.util.Random(seed)
+        .shuffle((0 until sizes.sum).map(i => s"d${i * 7 % 101}"))
+      val cl = sizes.zipWithIndex.flatMap { case (n, c) => Seq.fill(n)(c) }
+      ids.zip(cl).zip(lens).map { case ((id, c), l) => (id, s"c$c", l) }
+    }
+    for (seed <- 1L to 4L) {
+      val rows = clusters(Gen.Parameters.default, Seed(seed)).get
+      val cc = rows.map(r => (r._1, r._2)).toDF("id", "cluster")
+      val len = rows.map(r => (r._1, r._3)).toDF("id", "len")
+      sameRows(s"election, seed $seed", DedupQueries.elect(cc, len),
+        Reference.elect(cc, len))
+    }
   }
 
   test("incremental dedup pairs delta docs with the corpus only") {
@@ -152,6 +164,18 @@ class DedupOpsSpec extends AnyFunSuite {
     * operator must equal row for row.
     */
   private object Reference {
+    /** The survivor election as a scalar max plus two fetch-back joins. */
+    def elect(cc: DataFrame, len: DataFrame): DataFrame = {
+      val wl = cc.join(len, Seq("id"))
+      val ml = wl.groupBy(col("cluster")).agg(max(col("len")).as("mlen"))
+      val canon = wl.join(ml, Seq("cluster"))
+        .filter(col("len") === col("mlen"))
+        .groupBy(col("cluster")).agg(min(col("id")).as("canonical"))
+      wl.join(canon, Seq("cluster"))
+        .select(col("id").as("doc_id"), col("canonical"),
+          (col("id") === col("canonical")).as("keep"))
+    }
+
     def dropHotBuckets(buckets: DataFrame, cap: Long): DataFrame = {
       val hot = buckets.groupBy(col("band"), col("key"))
         .agg(count(lit(1)).as("df")).filter(col("df") > cap)

@@ -1,5 +1,6 @@
 package graft.resolver
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +32,59 @@ class ResolverSpec extends AnyFunSuite {
     val edges = Seq("a" -> "b", "c" -> "b", "d" -> "e", "f" -> "e",
       "e" -> "a", "p" -> "q")
     assert(cc(edges) === cc(edges, driverLimit = 0L))
+  }
+
+  test("driver and distributed paths agree at the driverLimit boundary") {
+    // duplicate, reversed and self-loop edges; 10 rows
+    val base = Seq("a" -> "b", "b" -> "a", "a" -> "b", "c" -> "c",
+      "c" -> "d", "e" -> "f", "f" -> "g", "g" -> "e", "h" -> "h", "d" -> "b")
+    def comps(edges: Seq[(String, String)], limit: Long) = {
+      val out = Resolver.connectedComponents(edges.toDF("src", "dst"),
+        driverLimit = limit)
+      // the driver path's labels are a local relation, the distributed
+      // path's a checkpointed RDD
+      val driver = out.queryExecution.logical.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation])
+      (driver, out.collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    }
+    val want = Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
+      "e" -> "e", "f" -> "e", "g" -> "e", "h" -> "h")
+    val limit = base.size.toLong
+    // edge count == driverLimit: the driver path; driverLimit 0 forces
+    // the distributed one
+    assert(comps(base, limit) === ((true, want)))
+    assert(comps(base, 0L) === ((false, want)))
+    // edge count == driverLimit + 1: the distributed path
+    val more = base :+ ("h" -> "i")
+    val wantMore = want + ("i" -> "h")
+    assert(comps(more, limit) === ((false, wantMore)))
+    assert(comps(more, limit + 1) === ((true, wantMore)))
+  }
+
+  test("the driver path runs its edge input's shuffle stages once") {
+    import org.apache.spark.SchedulerProbe
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    // one exchange in the input plan: the distinct aggregate
+    val edges = spark.range(0, 40).select(
+      (col("id") % 7).cast("string").as("src"),
+      ((col("id") + 1) % 7).cast("string").as("dst")).distinct()
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (SchedulerProbe.isShuffleMap(e.stageInfo))
+          shuffleStages.incrementAndGet()
+    }
+    SchedulerProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val got = Resolver.connectedComponents(edges)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      SchedulerProbe.drain(sc)
+      assert(got === (0 until 7).map(i => i.toString -> "0").toMap)
+      assert(shuffleStages.get === 1)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("pointer doubling converges a deep chain within the round budget") {

@@ -1,6 +1,8 @@
 package graft.textanalysis
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -128,6 +130,44 @@ class LangModelSpec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(capped.avgLogp(Seq("a", "b", "a")) ===
       Some(avg(Seq(4 / 7.0, 0.4 * 2 / 7.0, 0.5))))
+  }
+
+  test("model scorer equals the relational scorer row for row") {
+    val trainIds = (1L to 400L).filter(bucketOf(_) < LangModel.TrainBuckets)
+    val heldIds = (1L to 400L).filter(bucketOf(_) >= LangModel.TrainBuckets)
+    // texts over a 6-word vocabulary, so a topV of 2 prunes and 100
+    // does not; one-word and token-less documents included
+    val text = Gen.oneOf(
+      Gen.listOfN(1, Gen.oneOf("a", "b", "c", "d", "e", "f")),
+      Gen.choose(0, 9).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf("a", "a", "b", "c", "d", "e", "f", "B!"))))
+      .map(_.mkString(" "))
+    def corpus(ids: Seq[Long]): Gen[Seq[(Long, String)]] = for {
+      n <- Gen.choose(4, 14)
+      picked <- Gen.pick(n, ids)
+      texts <- Gen.listOfN(n, text)
+    } yield picked.toSeq.zip(texts)
+    val docsGen =
+      Gen.zip(corpus(trainIds), corpus(heldIds)).map(p => p._1 ++ p._2)
+    // every (topV, per-context cap) pairing, each on its own corpus
+    val cases = for (topV <- Seq(2L, 100L); perContext <- Seq(1, 64))
+      yield (topV, perContext)
+    for (((topV, perContext), seed) <- cases.zipWithIndex) {
+      val docs = docsGen(Gen.Parameters.default, Seed(seed + 1L)).get
+      val df = docs.toDF("doc_id", "text")
+      val got = LmReference.rowsOf(LangModel.lmScoreOf(df, topV, perContext))
+      assert(got === LmReference.scores(df, topV, perContext),
+        s"seed $seed, topV $topV, per context $perContext: $docs")
+      assert(got.map(_._1) === docs.filter(_._2.exists(_.isLetter))
+        .map(_._1).toSet)
+    }
+    // an empty train slice: word counts still, every score NULL
+    val held = heldIds.take(3).zip(Seq("a b a", "c", "d e"))
+      .toDF("doc_id", "text")
+    val empty = LmReference.rowsOf(LangModel.lmScoreOf(held))
+    assert(empty === Set((heldIds(0), 3L, None), (heldIds(1), 1L, None),
+      (heldIds(2), 2L, None)))
+    assert(empty === LmReference.scores(held))
   }
 
   test("corpus invariants at sf0.001") {
