@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 
 /** The operational CLI surface, driven through the real `main` entry
   * points (the sessions resolve to the shared test session via
@@ -16,7 +16,7 @@ import graft.SparkSpec
 class CliSpec extends AnyFunSuite {
   import SparkSpec.spark
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
   private def tmp(name: String) =
     Files.createTempDirectory(s"cli-$name").toString + "/out"
 

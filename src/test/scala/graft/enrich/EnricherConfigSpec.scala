@@ -3,7 +3,7 @@ package graft.enrich
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.store.EntityStore
 
 /** Pins the enricher-config loader on the reference's OWN config files
@@ -15,11 +15,11 @@ class EnricherConfigSpec extends AnyFunSuite {
   import SparkSpec.spark
   import EnricherConfigs._
 
-  val refDir = "/root/reference/enrichers"
+  private def config(name: String) = ReferenceFiles(s"enrichers/$name")
 
   test("parses the reference offshoreleaks config verbatim") {
     val env = Map("GRAPH_API_KEY" -> "sekrit")
-    val cfg = load(s"$refDir/offshoreleaks.yml", env.get)
+    val cfg = load(config("offshoreleaks.yml"), env.get)
     assert(cfg.name === "offshoreleaks")
     assert(cfg.title === "ICIJ OffshoreLeaks")
     assert(cfg.tpe === "nomenklatura.enrich.yente:YenteEnricher")
@@ -32,11 +32,11 @@ class EnricherConfigSpec extends AnyFunSuite {
   }
 
   test("the other reference configs parse with their defaults") {
-    val nom = load(s"$refDir/nominatim.yml", _ => None)
+    val nom = load(config("nominatim.yml"), _ => None)
     assert(nom.clazz === "NominatimEnricher")
     assert(nom.cacheDays === 90) // common.py default
     assert(!nom.stripNamespace)
-    val wd = load(s"$refDir/wikidata.yml", _ => None)
+    val wd = load(config("wikidata.yml"), _ => None)
     assert(wd.clazz === "WikidataEnricher")
     assert(wd.depth === 1)
     assert(wd.cacheDays === 10)
@@ -55,7 +55,8 @@ class EnricherConfigSpec extends AnyFunSuite {
     }
     // a non-yente config cannot instantiate the yente mirror
     intercept[IllegalArgumentException] {
-      makeYente(load(s"$refDir/nominatim.yml", _ => None),
+      makeYente(parse(
+        "type: nomenklatura.enrich.nominatim:NominatimEnricher\n", _ => None),
         spark.range(0).toDF())
     }
   }
@@ -75,7 +76,7 @@ class EnricherConfigSpec extends AnyFunSuite {
         entities.filter(col("id") === "m2"), "other_ds"))
     val q = EntityStore.statements(
       entities.filter(col("id") === "q1"), "local")
-    val cfg = load(s"$refDir/offshoreleaks.yml",
+    val cfg = load(config("offshoreleaks.yml"),
       Map("GRAPH_API_KEY" -> "k").get)
     val enricher = makeYente(cfg, mirror)
     val cands = enricher.matchEntities(spark, q).collect()

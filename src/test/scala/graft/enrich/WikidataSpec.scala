@@ -3,7 +3,7 @@ package graft.enrich
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.store.EntityStore
 
 /** Wikidata claim→statement transform: parser edge cases, value
@@ -120,7 +120,7 @@ class WikidataSpec extends AnyFunSuite {
 
     val donations = EntityStore.statements(
       EntityStore.readIjson(spark,
-        "/root/reference/tests/fixtures/donations.ijson"), "donations")
+        ReferenceFiles("tests/fixtures/donations.ijson")), "donations")
     val enricher = new DatasetEnricher("donations-mirror", donations)
     val cand = enricher.matchCandidates(spark, wdStmts)
       .orderBy(col("match_score").desc)

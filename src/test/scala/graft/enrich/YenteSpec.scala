@@ -3,7 +3,7 @@ package graft.enrich
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.model.Ftm
 import graft.store.EntityStore
 
@@ -14,7 +14,7 @@ import graft.store.EntityStore
 class YenteSpec extends AnyFunSuite {
   import SparkSpec.spark
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
 
   lazy val stmts = EntityStore.statements(
     EntityStore.readIjson(spark, fixture), "donations").cache()

@@ -2,6 +2,8 @@ package graft.matching
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ReferenceFiles
+
 /** The entity_bench accuracy gate (reference
   * `contrib/entity_bench/benchmark.py` over `checks.yml`): the only
   * accuracy corpus that is independent of the frozen name-bench CSV
@@ -13,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class EntityBenchSpec extends AnyFunSuite {
 
   lazy val checks: Seq[EntityBench.Check] =
-    EntityBench.loadChecks(EntityBench.DefaultChecksPath)
+    EntityBench.loadChecks(
+      ReferenceFiles.readable(EntityBench.DefaultChecksPath))
 
   test("parses the full checks corpus") {
     assert(checks.size === 228)

@@ -2,6 +2,8 @@ package graft.matching
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ReferenceFiles
+
 /** Match/no-match agreement of the partial logic-v2 port against the
   * reference's frozen name-bench run
   * (`contrib/name_bench/run_data/logicv2-frozen.csv`): same entity
@@ -11,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NameBenchParitySpec extends AnyFunSuite {
 
-  val fixture =
-    "/root/reference/contrib/name_bench/run_data/logicv2-frozen.csv"
+  lazy val fixture =
+    ReferenceFiles("contrib/name_bench/run_data/logicv2-frozen.csv")
   val Threshold = 0.7
 
   final case class Case(schema: String, name1: String, name2: String,

@@ -2,6 +2,8 @@ package graft.matching
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ReferenceFiles
+
 /** Parity of the OFAC emulation against the reference's captured
   * fixtures from the live Sanctions List Search tool
   * (`tests/matching/name_based/ofac_fixtures.csv`, scores 0-100) and
@@ -10,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OfacParitySpec extends AnyFunSuite {
 
-  val fixture =
-    "/root/reference/tests/matching/name_based/ofac_fixtures.csv"
+  lazy val fixture =
+    ReferenceFiles("tests/matching/name_based/ofac_fixtures.csv")
 
   def pv(name: String): EntityView =
     EntityView("x", "Person", Seq(name), Nil, Nil, Nil, Nil, Nil, Nil,

@@ -3,7 +3,7 @@ package graft.matching
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.store.EntityStore
 
 /** Trainer regression test (`erun/train.py` analogue): perturbation-
@@ -15,7 +15,7 @@ class TrainingSpec extends AnyFunSuite {
   import SparkSpec.spark
   import spark.implicits._
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
 
   def typo(s: String): String =
     if (s.length < 6) s + "x"

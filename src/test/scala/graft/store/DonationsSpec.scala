@@ -3,7 +3,7 @@ package graft.store
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.blocker.EntityTokenizer
 
 /** Ingestion anchored on the reference's own canonical fixture
@@ -16,7 +16,7 @@ import graft.blocker.EntityTokenizer
 class DonationsSpec extends AnyFunSuite {
   import SparkSpec.spark
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
   val tchibo = "4e0bd810e1fcb49990a2b31709b6140c4c9139c5"
 
   lazy val entities = EntityStore.readIjson(spark, fixture).cache()

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 
 /** The bucketed statement lake must actually remove the shuffles the
   * runbook says it removes: assembling from the bucketed table needs
@@ -23,7 +23,7 @@ class StatementLakeSpec extends AnyFunSuite {
 
   test("bucketed lake assembles without exchanges") {
     val stmts = EntityStore.statements(EntityStore.readIjson(spark,
-      "/root/reference/tests/fixtures/donations.ijson"), "donations")
+      ReferenceFiles("tests/fixtures/donations.ijson")), "donations")
     val dir = Files.createTempDirectory("lake").toString
 
     // flat parquet: the layout is lost, assembly shuffles

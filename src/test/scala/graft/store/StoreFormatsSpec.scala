@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 
 /** Statement CSV / pack round-trips and versioned-store semantics over
   * the donations fixture (reference `cli.py:322-334`,
@@ -14,7 +14,7 @@ import graft.SparkSpec
 class StoreFormatsSpec extends AnyFunSuite {
   import SparkSpec.spark
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
   lazy val stmts = EntityStore.statements(
     EntityStore.readIjson(spark, fixture), "donations").cache()
 

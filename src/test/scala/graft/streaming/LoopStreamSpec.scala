@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.cli.CliArgs
 import graft.store.{EntityStore, MergeLake}
 import graft.xref.Xref
@@ -35,7 +35,7 @@ class LoopStreamSpec extends AnyFunSuite {
   private type Stmt = LoopStreamSpecStmt
 
   test("streamed increments leave the batch run's canonical table") {
-    val fixture = "/root/reference/tests/fixtures/donations.ijson"
+    val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
     val all = EntityStore.statements(
         EntityStore.readIjson(spark, fixture), "donations")
       .withColumn("stmt_id", col("id"))

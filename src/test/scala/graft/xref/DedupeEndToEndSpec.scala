@@ -3,7 +3,7 @@ package graft.xref
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.resolver.Resolver
 import graft.store.EntityStore
 
@@ -18,7 +18,7 @@ import graft.store.EntityStore
 class DedupeEndToEndSpec extends AnyFunSuite {
   import SparkSpec.spark
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
 
   test("donations dedupe: xref -> merge -> apply -> assemble -> ijson") {
     import spark.implicits._

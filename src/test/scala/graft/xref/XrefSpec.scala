@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ReferenceFiles, SparkSpec}
 import graft.store.EntityStore
 
 /** End-to-end xref over the reference's donations fixture, asserting its
@@ -15,7 +15,7 @@ import graft.store.EntityStore
 class XrefSpec extends AnyFunSuite {
   import SparkSpec.spark
 
-  val fixture = "/root/reference/tests/fixtures/donations.ijson"
+  lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
 
   lazy val entities = EntityStore.readIjson(spark, fixture).cache()
   lazy val stmts = EntityStore.statements(entities, "donations").cache()
