@@ -1,15 +1,42 @@
 package graft
 
-/** One switch for every per-(session, sfDir) stored-index cache in the
-  * engine — the checkpoint-cached artifacts a production lake would
+/** The one per-(session, sfDir) memo of the engine — the analyzed
+  * table readers, the stored-index artifacts a production lake would
   * materialize at ingest (blocker TF/entries, resolver score table,
   * wikidata snak table, trained IVF centroids, PQ codes, banded
-  * corpus, winnow fingerprints, BPE merges). A long-lived session
-  * iterating regenerated data directories calls this between dirs;
-  * otherwise every cache would pin its checkpoints for the session's
-  * lifetime and a regenerated dir would keep serving its stale index.
+  * corpus, winnow fingerprints, BPE merges), their session pins and
+  * the scalars collected from them — plus [[clearAll]], the one switch
+  * that drops it. A long-lived session iterating regenerated data
+  * directories calls `clearAll` between dirs; otherwise every entry
+  * would pin its checkpoints for the session's lifetime and a
+  * regenerated dir would keep serving its stale index.
   */
 object Caches {
+
+  private val memoMap = scala.collection.concurrent.TrieMap
+    .empty[(org.apache.spark.sql.SparkSession, String, String), Any]
+
+  /** Get-or-build `name` for (session, data dir). Entries of stopped
+    * sessions are dropped on every access, so a long-lived JVM cycling
+    * SparkSessions never retains a dead session (nor, through its
+    * frames, the stopped context).
+    *
+    * A TrieMap, not `ConcurrentHashMap.computeIfAbsent`: builds nest
+    * (an artifact build reads [[Tables]], a stats artifact reads the
+    * postings pin), and `computeIfAbsent` throws on a recursive update.
+    * Concurrent first touches may both build; the value inserted first
+    * is the one every caller gets. Names are therefore unique across
+    * the engine, and a session copy of a lake artifact (a pin or a
+    * checkpoint over `IndexLake.artifact(s, d, n)`) takes a name other
+    * than `n`: under a shared name the inner artifact scan, inserted
+    * during the outer build, would be returned and the copy dropped.
+    */
+  def memo[T](s: org.apache.spark.sql.SparkSession, sfDir: String,
+      name: String)(build: => T): T = {
+    memoMap.keysIterator.filter(_._1.sparkContext.isStopped)
+      .foreach(memoMap.remove)
+    memoMap.getOrElseUpdate((s, sfDir, name), build).asInstanceOf[T]
+  }
 
   /** Session-pin a multiply-consumed frame: eager persist (one parallel
     * materialization job; every consumer then reads the cache) with
@@ -28,7 +55,6 @@ object Caches {
     */
   def pin(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    if (sys.env.contains("GRAFT_NO_PIN")) return df // A/B diagnostics
     df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     df.count()
     df
@@ -73,7 +99,7 @@ object Caches {
     }
   }
 
-  /** WHEN NOT TO PIN — the array-decode boundary (measured r10):
+  /* WHEN NOT TO PIN — the array-decode boundary (measured r10):
     * df.persist at ANY storage level stores COLUMNAR batches and
     * re-decodes them on every scan; for a small table of big arrays
     * fanned out compute-heavily (the banded embedding corpus, the
@@ -86,19 +112,14 @@ object Caches {
     * seconds).
     */
 
+  /** Drop every in-session memo entry and fingerprint and release
+    * the proposal scaffolds; the lake artifacts on disk key on the
+    * data fingerprint and need no clearing.
+    */
   def clearAll(): Unit = {
-    Tables.clearMemo()
-    blocker.BlockerQueries.clearTfCache()
-    resolver.ResolverQueries.clearCache()
-    enrich.WikidataQueries.clearCache()
-    enrich.Propose.clearCache()
-    similarity.KMeans.clearCache()
-    similarity.Pq.clearCache()
-    similarity.SimilarityQueries.clearCache()
-    dedup.DedupQueries.clearCache()
-    textanalysis.Bpe.clearCache()
-    search.Search.clearCache()
-    IndexLake.clearMemo()
+    memoMap.clear()
+    IndexLake.resetFingerprints()
+    enrich.Propose.releaseScaffolds()
   }
 
   /** Build and publish every stored-index artifact for a data dir —

@@ -150,8 +150,9 @@ object IndexLake {
 
   def fingerprint(sfDir: String): String =
     // memoized per session: every artifact path re-derives it, and the
-    // listing walk is an RPC storm on object stores. clearMemo drops it
-    // (the regenerated-dir path), so a refreshed dir re-fingerprints.
+    // listing walk is an RPC storm on object stores. Caches.clearAll
+    // drops it (the regenerated-dir path), so a refreshed dir
+    // re-fingerprints.
     fpMemo.getOrElseUpdate(sfDir, {
       val p = new Path(sfDir)
       val fs = fsOf(p)
@@ -183,21 +184,20 @@ object IndexLake {
   private def ready(fs: FileSystem, dir: Path): Boolean =
     fs.exists(marker(dir))
 
-  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   /** Read-or-build: return `name` for `sfDir`, building and publishing
-    * it first if absent. The returned frame is a plain parquet scan of
-    * the artifact — column pruning and predicate pushdown apply to
-    * every consumer, unlike a checkpointed in-memory frame.
+    * it first if absent, memoized per session in [[Caches.memo]]. The
+    * returned frame is a plain parquet scan of the artifact — column
+    * pruning and predicate pushdown apply to every consumer, unlike a
+    * checkpointed in-memory frame.
     */
   def artifact(s: SparkSession, sfDir: String, name: String)
       (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, sfDir, name), {
+    Caches.memo(s, sfDir, name) {
       val dir = path(sfDir, name)
       val fs = fsOf(dir)
       if (!ready(fs, dir)) publish(fs, dir, build)
       s.read.parquet(dir.toString)
-    })
+    }
 
   /** Publish protocol (object-store safe): write to a temp sibling,
     * strip the committer's own `_SUCCESS` from it, move it into place,
@@ -271,17 +271,15 @@ object IndexLake {
       }
     }
 
-  /** Drop the in-session memo (regenerated-dir hygiene — the on-disk
-    * artifacts key on the data fingerprint and need no clearing).
-    */
-  def clearMemo(): Unit = { memo.clear(); fpMemo.clear() }
+  /** Forget the memoized fingerprints (part of `Caches.clearAll`). */
+  private[graft] def resetFingerprints(): Unit = fpMemo.clear()
 
   /** Delete every on-disk artifact for `sfDir` (tests). */
   def invalidate(sfDir: String): Unit = {
     val p = new Path(root, fingerprint(sfDir))
     val fs = fsOf(p)
     if (fs.exists(p)) fs.delete(p, true)
-    clearMemo()
+    Caches.clearAll()
   }
 
   /** Retire stale artifact generations: every engine build re-keys the

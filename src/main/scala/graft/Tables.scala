@@ -15,31 +15,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, path) memo of the ANALYZED reader frame. Every bare
-    * `spark.read.parquet(path)` runs a driver-launched footer/schema
-    * job before the plan even exists (measured ~25-40 ms each; a
-    * multi-table query paid 4-7 of them per CALL, q_blk_index_add's
-    * census showed 7 before the first real stage). The plan is
-    * immutable and lazy — memoizing it reuses the resolved schema and
-    * file listing without touching row data, so no result ever
-    * persists across runs. [[clearMemo]] (wired into
-    * graft.Caches.clearAll) drops the memo when a data dir is
-    * regenerated mid-session, same contract as every other session
-    * memo.
+  /** The ANALYZED reader frame, memoized per (session, dir) in
+    * [[Caches.memo]]. Every bare `spark.read.parquet(path)` runs a
+    * driver-launched footer/schema job before the plan even exists
+    * (measured ~25-40 ms each; a multi-table query paid 4-7 of them per
+    * CALL, q_blk_index_add's census showed 7 before the first real
+    * stage). The plan is immutable and lazy — memoizing it reuses the
+    * resolved schema and file listing without touching row data, so no
+    * result ever persists across runs. `Caches.clearAll` drops the memo
+    * when a data dir is regenerated mid-session.
     */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def clearMemo(): Unit = memo.clear()
-
-  def read(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    // evict entries owned by stopped sessions: a long-lived JVM cycling
-    // SparkSessions would otherwise retain dead sessions' analyzed
-    // frames (and through them the stopped contexts) forever
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    memo.computeIfAbsent((spark, s"$sfDir/$table.parquet"),
-      { case (s, p) => s.read.parquet(p) })
-  }
+  def read(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    Caches.memo(spark, sfDir, s"$table.parquet")(
+      spark.read.parquet(s"$sfDir/$table.parquet"))
 
   def lineitem(s: SparkSession, d: String): DataFrame = read(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = read(s, d, "orders")

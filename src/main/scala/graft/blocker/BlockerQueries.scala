@@ -72,9 +72,6 @@ object BlockerQueries {
   def tfCk(s: SparkSession, d: String): DataFrame =
     graft.IndexLake.artifact(s, d, "blocker_tf")(tf(s, d))
 
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearTfCache(): Unit = graft.IndexLake.clearMemo()
-
   /** Served from the lake artifact, like every other TF consumer — the
     * artifact IS tf()'s output, so this is a map-only parquet scan
     * (recomputing from entries billed ~15 sequential shuffle stages

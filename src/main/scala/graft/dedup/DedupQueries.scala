@@ -497,18 +497,16 @@ object DedupQueries {
   // artifact (the PQ-codes / banded-corpus / blocker-TF pattern).
   // read-once-then-cache on top of the lake artifact (the near_banded
   // pattern): the winnow/spans queries fan each table out several ways
-  // and the arrays decode expensively from parquet per consumer
-  private val fpCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
+  // and the arrays decode expensively from parquet per consumer. Each
+  // pin's memo name differs from its artifact's (see Caches.memo).
   def fpSetsCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "sets"), graft.Caches.pin(
+    graft.Caches.memo(s, d, "fp_sets_pinned")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "fp_sets")(
         graft.textanalysis.TextAnalysis.fingerprintSets(
           Tables.documents(s, d)))))
 
   def fpPosCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "pos"), graft.Caches.pin(
+    graft.Caches.memo(s, d, "fp_pos_pinned")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "fp_pos")(
         graft.textanalysis.TextAnalysis.fingerprintPositions(
           Tables.documents(s, d)))))
@@ -530,7 +528,7 @@ object DedupQueries {
     * blocks holding the only copy mid-pipeline.
     */
   def shinglesCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "shingles"), graft.Caches.pin(
+    graft.Caches.memo(s, d, "shingles_pinned")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "shingles")(
         hashedShinglesOf(scattered(s, d)))))
 
@@ -538,7 +536,7 @@ object DedupQueries {
     * artifact — the char-channel sibling of [[shinglesCk]].
     */
   def charGramsCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "char_grams"), graft.Caches.pin(
+    graft.Caches.memo(s, d, "char_grams_pinned")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "char_grams") {
         val n = CharGramN
         // one pass: char array → codes (lambda only touches its own
@@ -573,12 +571,6 @@ object DedupQueries {
   def substrPosCk(s: SparkSession, d: String): DataFrame =
     graft.IndexLake.artifact(s, d, "substr_pos")(
       substrPosOf(scattered(s, d)))
-
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = {
-    fpCache.clear()
-    graft.IndexLake.clearMemo()
-  }
 
   def winnowPairsQ(s: SparkSession, d: String): DataFrame = {
     val fps = fpSetsCk(s, d)

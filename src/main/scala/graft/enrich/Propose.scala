@@ -261,12 +261,12 @@ object Propose {
     single.unionByName(p27)
   }
 
-  /** Persisted batch scaffolds, unpersisted by [[clearCache]] (hooked
-    * into `Caches.clearAll`). NOT unpersisted per-call: Spark's cache
-    * manager deduplicates by logical plan, so a re-issued batch (bench
-    * repeats, a retried job) REUSES the earlier scaffold's cache — an
-    * eager per-call unpersist would drop that shared entry and force a
-    * cold rebuild every time (measured 2.3 → 4.3 s).
+  /** Persisted batch scaffolds, unpersisted by [[releaseScaffolds]]
+    * (called only by `Caches.clearAll`). NOT unpersisted per-call:
+    * Spark's cache manager deduplicates by logical plan, so a re-issued
+    * batch (bench repeats, a retried job) REUSES the earlier scaffold's
+    * cache — an eager per-call unpersist would drop that shared entry
+    * and force a cold rebuild every time (measured 2.3 → 4.3 s).
     */
   private val scaffolds =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -284,7 +284,7 @@ object Propose {
   }
 
   /** Unpersist every scaffold this session pinned. */
-  def clearCache(): Unit = {
+  private[graft] def releaseScaffolds(): Unit = {
     var df = scaffolds.poll()
     while (df != null) { df.unpersist(blocking = false); df = scaffolds.poll() }
   }

@@ -106,9 +106,6 @@ object KMeans {
       cent
     }
 
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = graft.IndexLake.clearMemo()
-
   // ---------------------------------------------------------------- oracle
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

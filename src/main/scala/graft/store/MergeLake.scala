@@ -307,11 +307,6 @@ object MergeLake {
     val m = readManifest(s, root)
     val seq = m.deltas.size + 1
     val dir = f"delta-$seq%06d-${UUID.randomUUID()}"
-    if (sys.env.contains("GRAFT_PLAN_DEBUG")) {
-      val lp = delta.queryExecution.logical
-      println(s"[plan-debug] append $path chars=${lp.toString.length} " +
-        s"nodes=${lp.collect { case _ => 1 }.size}")
-    }
     val bucketed = withBucket(delta, m.nBuckets, m.bucketCol)
     bucketed
       .write.mode("overwrite").partitionBy("bucket")

@@ -144,9 +144,6 @@ object Bpe {
     out.toSeq
   }
 
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String)]]
-
   /** [[trainMerges]] once per corpus, the ordered merge list published
     * as a tiny `(rnk, a, b)` lake artifact — a tokenizer is trained
     * once and then applied everywhere (the stored-index pattern of the
@@ -154,7 +151,7 @@ object Bpe {
     * stored chain without re-running the sequential trainer.
     */
   def trainedMergesCk(s: SparkSession, d: String): Seq[(String, String)] =
-    mergeCache.getOrElseUpdate((s, d), {
+    graft.Caches.memo(s, d, "bpe_merge_list") {
       val df = graft.IndexLake.artifact(s, d, "bpe_merges") {
         import s.implicits._
         // vocab rolls up from the postings artifact: ingest trains the
@@ -165,10 +162,7 @@ object Bpe {
       }
       df.orderBy(col("rnk")).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
-    })
-
-  /** Drop cached merge lists (see graft.IndexLake). */
-  def clearCache(): Unit = { mergeCache.clear(); graft.IndexLake.clearMemo() }
+    }
 
   // --------------------------------------------------------------- encode
 

@@ -83,13 +83,15 @@ object LangModel {
     * and its vocabulary count per invocation (~0.5-0.8 s of JobCount
     * build time at sf0.1).
     */
-  def lmModelCk(s: SparkSession, d: String): DataFrame =
-    graft.IndexLake.artifact(s, d, "lm_model") {
-      // the persisted tables back the artifact write and stay for
-      // the session, like every stored artifact's build
+  def lmModelCk(s: SparkSession, d: String): DataFrame = {
+    // the persisted tables back the artifact write only: the returned
+    // frame scans the published parquet, so they are released once the
+    // call returns
+    val held = new graft.Caches.Held
+    try graft.IndexLake.artifact(s, d, "lm_model") {
       val (uni, bi, tot) =
         lmTables(corpusTokenRows(s, d).filter(bucket < TrainBuckets),
-          LmTopV, LmBigramsPerContext, new graft.Caches.Held)
+          LmTopV, LmBigramsPerContext, held)
       uni.select(lit("uni").as("kind"), lit(null).cast("string").as("prev"),
           col("term"), col("un").as("cnt"))
         .unionByName(bi.select(lit("bi").as("kind"), col("prev"),
@@ -97,7 +99,8 @@ object LangModel {
         .unionByName(tot.select(lit("tot").as("kind"),
           lit(null).cast("string").as("prev"),
           lit(null).cast("string").as("term"), col("t").as("cnt")))
-    }
+    } finally held.release()
+  }
 
   /** (uni, bi, tot) views of [[lmModelCk]] — each consumer's filter and
     * projection prune the artifact scan.

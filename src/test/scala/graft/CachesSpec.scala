@@ -40,7 +40,7 @@ class CachesSpec extends AnyFunSuite {
       // and the result matches a from-scratch rebuild bit-for-bit
       val viaDisk = blocker.BlockerQueries.tfCk(spark, dir)
         .orderBy("field", "token", "id").collect().toSeq
-      IndexLake.clearMemo()
+      Caches.clearAll()
       val reread = blocker.BlockerQueries.tfCk(spark, dir)
         .orderBy("field", "token", "id").collect().toSeq
       assert(viaDisk === reread)
@@ -66,7 +66,7 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-partial").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       // plant a garbage directory where the artifact would live,
       // WITHOUT the _SUCCESS marker — a crashed writer's leftovers
@@ -84,7 +84,7 @@ class CachesSpec extends AnyFunSuite {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 
@@ -92,7 +92,7 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-race").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
@@ -113,7 +113,7 @@ class CachesSpec extends AnyFunSuite {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 
@@ -123,19 +123,19 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-uri").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", s"file:$tmp")
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       val viaLake = blocker.BlockerQueries.tfCk(spark, dir).count()
       val fp = IndexLake.fingerprint(dir)
       assert(Files.exists(Paths.get(tmp, fp, "blocker_tf", "_SUCCESS")))
-      IndexLake.clearMemo()
+      Caches.clearAll()
       assert(blocker.BlockerQueries.tfCk(spark, dir).count() === viaLake)
     } finally {
       prev match {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 
@@ -143,7 +143,7 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-gc").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       def mk(name: String, ageMs: Long): Unit = {
         val d = Paths.get(tmp, name, "some_artifact")
@@ -169,7 +169,7 @@ class CachesSpec extends AnyFunSuite {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 

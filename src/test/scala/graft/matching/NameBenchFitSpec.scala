@@ -5,15 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Scratch diagnostic for the round-10 global fit: dumps, for every
   * frozen name-bench row, our score, the frozen score, and the
   * best-pairing edge list (matched edges and classified extras) as a
-  * TSV at /tmp/name_bench_fit.tsv — the input to the offline
+  * TSV at target/name_bench_fit.tsv — the input to the offline
   * constraint analysis (which weight constants could carry the
   * TACTICAL/Academy residual, and which green rows pin them).
   */
 class NameBenchFitSpec extends AnyFunSuite {
   test("dump per-row alignment edges") {
     val spec = new NameBenchParitySpec
-    val out = new java.io.PrintWriter("/tmp/name_bench_fit.tsv")
-    spec.cases.zipWithIndex.foreach { case (c, i) =>
+    val cases = spec.cases
+    val out = new java.io.PrintWriter("target/name_bench_fit.tsv")
+    try cases.zipWithIndex.foreach { case (c, i) =>
       val sink = scala.collection.mutable.ListBuffer
         .empty[List[(Option[String], Option[String], Double, Double)]]
       val s = NameMatchV2.traceSink.withValue(sink) {
@@ -31,8 +32,7 @@ class NameBenchFitSpec extends AnyFunSuite {
       }.mkString(";")
       out.println(f"$i\t${c.schema}\t${c.frozenScore}%.4f\t$s%.6f\t" +
         f"${c.name1}\t${c.name2}\t$edges")
-    }
-    out.close()
-    info("wrote /tmp/name_bench_fit.tsv")
+    } finally out.close()
+    info("wrote target/name_bench_fit.tsv")
   }
 }
