@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Force FULL evaluation of every output column: `count()` lets
     * Catalyst prune the projections (a map-only query would be timed as
@@ -125,16 +125,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val (gate, loadPre, probePre) = ambientGate(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = cli.CliArgs.session("bench")
     // untimed warmup: first-query cost is dominated by one-off JVM work
     // (codegen compiler, shuffle machinery, parquet reader init), not
     // engine throughput — absorb it before the timed loop

@@ -79,9 +79,7 @@ object Caches {
     def cut(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
       val c = df.localCheckpoint(eager = true)
-      rdds ++= c.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
+      rdds ++= checkpointRdds(c)
       c
     }
 
@@ -99,6 +97,15 @@ object Caches {
     }
   }
 
+  /** The RDDs a frame reads through `LogicalRDD` leaves: for a
+    * `localCheckpoint` result, the blocks its rows live in.
+    */
+  private def checkpointRdds(df: org.apache.spark.sql.Dataset[_])
+      : Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+
   /* WHEN NOT TO PIN — the array-decode boundary (measured r10):
     * df.persist at ANY storage level stores COLUMNAR batches and
     * re-decodes them on every scan; for a small table of big arrays
@@ -114,10 +121,23 @@ object Caches {
 
   /** Drop every in-session memo entry and fingerprint and release
     * the proposal scaffolds; the lake artifacts on disk key on the
-    * data fingerprint and need no clearing.
+    * data fingerprint and need no clearing. A dropped pin or checkpoint
+    * is released too — otherwise its blocks outlive the entry for the
+    * session's life, and the next "rebuild" of an unchanged pin is a
+    * cache hit on them. So a frame taken from the memo must not run
+    * after `clearAll`: its checkpoint blocks are gone.
     */
   def clearAll(): Unit = {
+    val dropped = memoMap.toList
     memoMap.clear()
+    dropped.foreach {
+      case ((s, _, _), df: org.apache.spark.sql.Dataset[_])
+          if !s.sparkContext.isStopped =>
+        if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+          df.unpersist(blocking = false)
+        checkpointRdds(df).foreach(_.unpersist(blocking = false))
+      case _ => ()
+    }
     IndexLake.resetFingerprints()
     enrich.Propose.releaseScaffolds()
   }

@@ -1,0 +1,90 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.SparkSession
+
+/** The one stage profiler of the drivers (Soak, tools/JobCount): a
+  * listener counting jobs, completed stages, shuffle bytes written and
+  * the largest single-stage write. [[lap]] returns the deltas since the
+  * previous lap (or since [[Profile.attach]]), so a driver brackets each
+  * stage it reports with laps instead of keeping running totals.
+  *
+  * Listener events arrive asynchronously: `lap` first waits (at most
+  * [[Profile.SettleMs]]) until every job the listener has seen start
+  * has also ended, so a stage that just returned is billed to its own
+  * lap rather than the next one.
+  */
+final class Profile private (keepStages: Boolean) extends SparkListener {
+  import Profile.Lap
+
+  private val started = new AtomicLong
+  private val ended = new AtomicLong
+  private val stages = new AtomicLong
+  private val written = new AtomicLong
+  private var peak = 0L
+  private val infos =
+    new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+  private var lastJobs, lastStages, lastWritten = 0L
+  private var lastT = System.nanoTime()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    started.incrementAndGet()
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    ended.incrementAndGet()
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val w = e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+    written.addAndGet(w)
+    stages.incrementAndGet()
+    synchronized { if (w > peak) peak = w }
+    if (keepStages) infos.add(e.stageInfo)
+  }
+
+  def lap(): Lap = {
+    val deadline = System.nanoTime() + Profile.SettleMs * 1000000L
+    while (ended.get < started.get && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    synchronized {
+      val now = System.nanoTime()
+      val (j, st, w) = (started.get, stages.get, written.get)
+      val done = Iterator.continually(infos.poll())
+        .takeWhile(_ != null).toVector
+      val l = Lap((now - lastT) / 1e9, j - lastJobs, st - lastStages,
+        w - lastWritten, peak, done)
+      lastT = now; lastJobs = j; lastStages = st; lastWritten = w
+      peak = 0L
+      l
+    }
+  }
+
+  /** `f` between two laps: its result and the lap that bills it. */
+  def timed[A](f: => A): (A, Lap) = {
+    lap()
+    val a = f
+    (a, lap())
+  }
+}
+
+object Profile {
+  /** Upper bound on how long [[Profile.lap]] waits for job-end events. */
+  val SettleMs = 2000L
+
+  /** Deltas over one lap; `stageInfos` is filled only for a profiler
+    * attached with `keepStages`.
+    */
+  final case class Lap(wallSec: Double, jobs: Long, stages: Long,
+      shuffleBytes: Long, peakStageBytes: Long,
+      stageInfos: Seq[StageInfo]) {
+    def shuffleMb: Double = shuffleBytes / 1e6
+    def peakStageMb: Double = peakStageBytes / 1e6
+  }
+
+  def attach(s: SparkSession, keepStages: Boolean = false): Profile = {
+    val p = new Profile(keepStages)
+    s.sparkContext.addSparkListener(p)
+    p
+  }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,32 +30,37 @@ import graft.xref.Xref
   * buckets the cap dropped and that the capped pipeline's pair volume
   * and wall time stay bounded.
   *
-  * Usage: runMain graft.Soak [sfDir] [replicas] [xref|curate|dedup]
+  * The other modes: `retrieval` (N× corpus, fixed standing queries,
+  * sparse and dense arms), `wd` (N× review batch against the 1×
+  * wikidata dump), `merge` and `resolve` (append / edge-fold wall
+  * against delta size), `flow` (the reference README flow end to end,
+  * per stage) and `loopstream` (the composed incremental loop through
+  * the [[graft.streaming.LoopStream]] driver, per stage per batch, end
+  * state bit-equal to one from-scratch run). `flow` and `loopstream`
+  * read the nomenklatura donations fixture at
+  * `/root/reference/tests/fixtures/donations.ijson`.
+  *
+  * Usage: runMain graft.Soak [sfDir] [replicas] [mode] [args], with
+  * mode one of
+  * {{{
+  *   xref [maxPairCost]            (the default)
+  *   curate | dedup | retrieval | wd | merge | resolve
+  *   flow [threshold]
+  *   loopstream [threshold] [batches]
+  * }}}
   */
 object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val mode = args.lift(2).getOrElse("xref")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    @volatile var shuffleWrite = 0L
-    @volatile var peakStageWrite = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(
-          s: SparkListenerStageCompleted): Unit = {
-        val w = s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shuffleWrite += w
-        if (w > peakStageWrite) peakStageWrite = w
-      }
-    })
+    val spark = cli.CliArgs.session("soak")
+    // modes that report one whole-run total take a single lap at the
+    // end; staged modes lap around each stage they report
+    val prof = Profile.attach(spark)
+    def shuffleJson(l: Profile.Lap): String =
+      f""""shuffle_write_mb":${l.shuffleMb}%.1f,""" +
+        f""""peak_stage_shuffle_mb":${l.peakStageMb}%.1f"""
 
     if (mode == "curate") {
       val docs = docCorpus(spark, sfDir, replicas)
@@ -70,8 +74,7 @@ object Soak {
       println(f"""{"soak":"curate","sf":"$sfDir","replicas":$replicas,""" +
         f""""docs":$nDocs,"out":$nOut,"report":${report.json},""" +
         f""""wall_sec":$wall%.1f,""" +
-        f""""shuffle_write_mb":${shuffleWrite / 1e6}%.1f,""" +
-        f""""peak_stage_shuffle_mb":${peakStageWrite / 1e6}%.1f}""")
+        shuffleJson(prof.lap()) + "}")
       spark.stop()
       return
     }
@@ -114,8 +117,7 @@ object Soak {
         f""""cand_pairs":$cand,"verified_pairs":$verified,""" +
         f""""wall_sec":$wall%.1f,""" +
         f""""substr_docs":$substrDocs,"substr_wall_sec":$substrWall%.1f,""" +
-        f""""shuffle_write_mb":${shuffleWrite / 1e6}%.1f,""" +
-        f""""peak_stage_shuffle_mb":${peakStageWrite / 1e6}%.1f}""")
+        shuffleJson(prof.lap()) + "}")
       spark.stop()
       return
     }
@@ -162,8 +164,7 @@ object Soak {
         f""""sparse_rows":$sparseRows,"sparse_wall_sec":$sparseWall%.1f,""" +
         f""""vecs":$nVecs,"dense_rows":$denseRows,""" +
         f""""dense_wall_sec":$denseWall%.1f,"wall_sec":$wall%.1f,""" +
-        f""""shuffle_write_mb":${shuffleWrite / 1e6}%.1f,""" +
-        f""""peak_stage_shuffle_mb":${peakStageWrite / 1e6}%.1f}""")
+        shuffleJson(prof.lap()) + "}")
       spark.stop()
       return
     }
@@ -223,8 +224,7 @@ object Soak {
         f""""propose_rows":$nPropose,"propose_wall_sec":$proposeWall%.1f,""" +
         f""""reconcile_rows":$nReconcile,"reconcile_wall_sec":$reconcileWall%.1f,""" +
         f""""summaries_rows":$nSummaries,"summaries_wall_sec":$summariesWall%.1f,""" +
-        f""""shuffle_write_mb":${shuffleWrite / 1e6}%.1f,""" +
-        f""""peak_stage_shuffle_mb":${peakStageWrite / 1e6}%.1f}""")
+        shuffleJson(prof.lap()) + "}")
       spark.stop()
       return
     }
@@ -237,32 +237,21 @@ object Soak {
       // re-pointed inside each replica — every entity ends up with
       // N−1 exact duplicates, the worst case for the blocker):
       // ingest (statement lake write) → xref → resolve → apply →
-      // sorted-aggregate. Per-stage wall + shuffle recorded for
-      // PLANS.md; nothing may scale superlinearly in N.
+      // sorted-aggregate. Per-stage wall + shuffle (one profiler lap
+      // per stage, its counts included) recorded for PLANS.md; nothing
+      // may scale superlinearly in N.
       import graft.store.EntityStore
       import graft.xref.Xref
-      var lastShuffle = 0L
-      def stageShuffleMb(): Double = {
-        val d = (shuffleWrite - lastShuffle) / 1e6
-        lastShuffle = shuffleWrite
-        d
-      }
-      def timed[A](f: => A): (A, Double) = {
-        val t = System.nanoTime()
-        val a = f
-        (a, (System.nanoTime() - t) / 1e9)
-      }
       val scratch = java.nio.file.Files
         .createTempDirectory("graft-flow-soak").toString
       val fixture = "/root/reference/tests/fixtures/donations.ijson"
 
       // -- ingest: fixture → statements ×N → bucketed statement lake
-      val (nStmts, ingestWall) = timed {
+      val (nStmts, ingest) = prof.timed {
         donationsCorpus(spark, fixture, replicas)
           .write.mode("overwrite").parquet(s"$scratch/lake")
         spark.read.parquet(s"$scratch/lake").count()
       }
-      val ingestShuffle = stageShuffleMb()
       val lake = spark.read.parquet(s"$scratch/lake")
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       lake.count()
@@ -282,51 +271,39 @@ object Soak {
         blocker = graft.blocker.Blocker.Config.reference.copy(
           maxPairCost =
             graft.blocker.Blocker.Config.reference.maxPairCost * replicas))
-      val ((merges, suggestions), xrefWall) = timed {
+      val ((merges, nMerges, nSuggest), xref) = prof.timed {
         val (m, sg) = Xref.run(spark, lake, decided, cfg)
-        (m.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY),
-          sg.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+        val merges = Caches.pin(m)
+        (merges, merges.count(), sg.count())
       }
-      val nMerges = merges.count()
-      val nSuggest = suggestions.count()
-      val xrefShuffle = stageShuffleMb()
 
       // -- resolve: connected components over the merge edges
-      val (cm, resolveWall) = timed {
-        val m = cli.CliArgs.canonicalMapOf(merges)
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        m.count()
-        m
-      }
+      val (cm, resolve) =
+        prof.timed(Caches.pin(cli.CliArgs.canonicalMapOf(merges)))
       val nCanon = cm.count()
-      val resolveShuffle = stageShuffleMb()
 
       // -- apply: canonicalize the lake through the map, write back
-      val (nApplied, applyWall) = timed {
+      val (nApplied, apply) = prof.timed {
         cli.CliArgs.applyCanonical(lake, cm)
           .write.mode("overwrite").parquet(s"$scratch/canonical")
         spark.read.parquet(s"$scratch/canonical").count()
       }
-      val applyShuffle = stageShuffleMb()
 
       // -- sorted-aggregate: one merged ijson entity per cluster
-      val (nOut, aggWall) = timed {
+      val (nOut, agg) = prof.timed {
         EntityStore.toIjson(EntityStore.assemble(
           spark.read.parquet(s"$scratch/canonical"))).count()
       }
-      val aggShuffle = stageShuffleMb()
 
+      def stage(name: String, l: Profile.Lap): String =
+        f""""${name}_wall_sec":${l.wallSec}%.1f,""" +
+          f""""${name}_shuffle_mb":${l.shuffleMb}%.1f,"""
       println(f"""{"soak":"flow","fixture":"donations","replicas":$replicas,""" +
-        f""""stmts":$nStmts,""" +
-        f""""ingest_wall_sec":$ingestWall%.1f,"ingest_shuffle_mb":$ingestShuffle%.1f,""" +
-        f""""xref_wall_sec":$xrefWall%.1f,"xref_shuffle_mb":$xrefShuffle%.1f,""" +
-        f""""merges":$nMerges,"suggestions":$nSuggest,""" +
-        f""""resolve_wall_sec":$resolveWall%.1f,"resolve_shuffle_mb":$resolveShuffle%.1f,""" +
-        f""""canonical_ids":$nCanon,""" +
-        f""""apply_wall_sec":$applyWall%.1f,"apply_shuffle_mb":$applyShuffle%.1f,""" +
-        f""""applied_rows":$nApplied,""" +
-        f""""agg_wall_sec":$aggWall%.1f,"agg_shuffle_mb":$aggShuffle%.1f,""" +
-        f""""entities_out":$nOut}""")
+        f""""stmts":$nStmts,""" + stage("ingest", ingest) +
+        stage("xref", xref) + f""""merges":$nMerges,"suggestions":$nSuggest,""" +
+        stage("resolve", resolve) + f""""canonical_ids":$nCanon,""" +
+        stage("apply", apply) + f""""applied_rows":$nApplied,""" +
+        stage("agg", agg) + f""""entities_out":$nOut}""")
       spark.stop()
       return
     }
@@ -384,7 +361,7 @@ object Soak {
         f""""snapshot_wall_sec":$readWall%.2f,""" +
         f""""compact_wall_sec":$compactWall%.1f,""" +
         f""""touched_buckets":${touched.size},""" +
-        f""""shuffle_write_mb":${shuffleWrite / 1e6}%.1f}""")
+        f""""shuffle_write_mb":${prof.lap().shuffleMb}%.1f}""")
       spark.stop()
       return
     }
@@ -412,9 +389,6 @@ object Soak {
       val t0 = System.nanoTime()
       ResolveStream.init(Resolver.connectedComponents(baseEdges), path)
       val initWall = (System.nanoTime() - t0) / 1e9
-      // start from the running total: otherwise batch 1 is billed the
-      // init's shuffle (the r10 record's inflated first-batch column)
-      var lastShuffle2 = shuffleWrite
       // batch k: edges (v_{4i+1}, v_{4i+2}) for i % mod == k merge
       // adjacent pair-clusters into 4-cliques; disjoint slices per mod
       val deltas = Seq(4096L, 256L, 16L).zipWithIndex.map {
@@ -425,12 +399,9 @@ object Soak {
               v(col("id") * 4 + 2).as("dst"))
             .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
           val n = del.count()
-          val t = System.nanoTime()
-          ResolveStream.applyBatch(spark, del, path, s"b$k")
-          val w = (System.nanoTime() - t) / 1e9
-          val sh = (shuffleWrite - lastShuffle2) / 1e6
-          lastShuffle2 = shuffleWrite
-          (n, w, sh)
+          val (_, l) =
+            prof.timed(ResolveStream.applyBatch(spark, del, path, s"b$k"))
+          (n, l.wallSec, l.shuffleMb)
       }
       // equality vs one full re-cluster of the union edge set
       val allEdges = baseEdges.unionByName(
@@ -526,20 +497,20 @@ object Soak {
       // per-stage instrumentation via the LoopStream hook
       val stageLog = scala.collection.mutable.ArrayBuffer
         .empty[(String, Double, Double, Int, Double)]
-      // start from the running total or batch 0's merge is billed the
-      // whole init's shuffle (the resolve soak's r10 lesson)
-      var lastSh = shuffleWrite
+      // each stage's shuffle is the profiler lap since the previous
+      // stage ended; the drain starts a lap, so the landing writes and
+      // the init are billed to no stage
       LoopStream.stageHook = (stage, wall) => {
-        val sh = (shuffleWrite - lastSh) / 1e6
-        lastSh = shuffleWrite
+        val sh = prof.lap().shuffleMb
         if (stage == "maintain") {
           // end of a batch: record the statement lake's live delta
           // count and its resolved-snapshot wall (the flatness rows)
-          val t = System.nanoTime()
-          val dirs = MergeLake.deltaCount(spark, p.lake)
-          MergeLake.snapshot(spark, p.lake).count(): Unit
-          val readW = (System.nanoTime() - t) / 1e9
-          stageLog += ((stage, wall, sh, dirs, readW))
+          val (dirs, read) = prof.timed {
+            val n = MergeLake.deltaCount(spark, p.lake)
+            MergeLake.snapshot(spark, p.lake).count(): Unit
+            n
+          }
+          stageLog += ((stage, wall, sh, dirs, read.wallSec))
         } else stageLog += ((stage, wall, sh, -1, -1.0))
       }
       val schema = MergeLake.snapshot(spark, p.lake).drop("bucket").schema
@@ -556,6 +527,7 @@ object Soak {
       // index fold or an overwritten edge generation diverges the
       // canonical lake.
       def drain(): Unit = {
+        prof.lap()
         val q = LoopStream.sink(
           spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(incoming),
@@ -614,238 +586,6 @@ object Soak {
       return
     }
 
-    if (mode == "loop") {
-      // The COMPOSED incremental loop at corpus scale — the production
-      // shape of the nomenklatura dataflow operating continuously (the
-      // batch analogue of `resolver/resolver.py:353-401`): day 0 lands
-      // and resolves a corpus; days 1..K are CHAINED measured
-      // increments — MERGE ingest → index refresh → delta xref →
-      // incremental decide → Δ-scoped apply, each batch xrefing
-      // against the corpus as grown by the earlier ones — and the END
-      // STATE must be bit-equal to one from-scratch batch run (full
-      // xref → full re-cluster → full apply) over the final corpus. Every increment stage
-      // is Δ-sized except the index refresh, which is the ingest's
-      // corpus-scan artifact rebuild (Bench bills the same work
-      // separately as index_build_sec for the same reason).
-      import graft.cli.CliArgs
-      import graft.resolver.Resolver
-      import graft.store.{EntityStore, MergeLake}
-      import graft.streaming.ResolveStream
-      import graft.xref.Xref
-      import spark.implicits._
-      var last = 0L
-      def stageMb(): Double = {
-        val d = (shuffleWrite - last) / 1e6; last = shuffleWrite; d
-      }
-      def timed[A](f: => A): (A, Double) = {
-        val t = System.nanoTime(); val a = f
-        (a, (System.nanoTime() - t) / 1e9)
-      }
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft-loop-soak").toString
-      val fixture = "/root/reference/tests/fixtures/donations.ijson"
-      // Δ = the replica-0 entities in one xxhash bucket (~1/8 of 474)
-      // — fixed-size while the corpus scales with N
-      def isDeltaId(c: org.apache.spark.sql.Column) =
-        c.endsWith("-r0") && pmod(xxhash64(c), lit(8)) === 0
-      val rows = donationsCorpus(spark, fixture, replicas)
-        .withColumn("stmt_id", col("id"))
-        .withColumn("last_seen", lit("d0")) // lake tie-break key only
-      val day0 = rows.filter(!isDeltaId(col("canonical_id")))
-      val delta = rows.filter(isDeltaId(col("canonical_id")))
-        .withColumn("last_seen", lit("d1"))
-      val lakePath = s"$scratch/lake"
-      val statePath = s"$scratch/state"
-      val threshold = args.lift(3).map(_.toDouble).getOrElse(0.4)
-      // the equality oracle needs the blocker's top-N cut to never
-      // bind (a binding cut makes day0 ∪ delta vs the union run
-      // incomparable at the rank margin); pair-cost cap scales with N
-      // like every soak ("knobs that must scale")
-      val cfg = Xref.Config(autoThreshold = Some(threshold),
-        limit = 400000,
-        blocker = graft.blocker.Blocker.Config.reference.copy(
-          maxPairCost = graft.blocker.Blocker.Config.reference
-            .maxPairCost * replicas))
-      val decidedNone = Seq.empty[(String, String)].toDF("src", "dst")
-      def corpus() = MergeLake.snapshot(spark, lakePath)
-        .drop("stmt_id", "bucket")
-      // every stage hands off through the lake, like production (the
-      // reference persists xref decisions in its judgement store) —
-      // and NOT as a pin: a pinned handoff caches the data but keeps
-      // the cumulative LOGICAL plan, and Catalyst analysis
-      // (DeduplicateRelations) over the stacked xref trees measured
-      // 60 s/decide + 200 s/apply of pure driver time at 10×
-      def land(df: DataFrame, name: String): DataFrame = {
-        df.write.mode("overwrite").parquet(s"$scratch/$name")
-        spark.read.parquet(s"$scratch/$name")
-      }
-
-      // ---- day 0: land + resolve the base corpus (batch setup).
-      // The statement lake buckets by ENTITY (bucketBy canonical_id —
-      // immutable per stmt_id here), so the per-increment slice read of
-      // a touched entity's post-merge statements is a pruned point
-      // lookup, and the blocker index is built once (corpus-sized, the
-      // same work Bench bills as index_build_sec) then FOLDED FORWARD
-      // per increment by BlockerIndex.refresh in O(|Δ|·tokens).
-      val (_, d0IngestW) = timed(
-        MergeLake.init(day0, lakePath, bucketBy = "canonical_id"))
-      val c0 = Caches.pin(corpus())
-      val tokenize = (st: DataFrame) => graft.blocker.EntityTokenizer
-        .entries(EntityStore.view(st, withExternal = cfg.external))
-      val idxPath = s"$scratch/blkidx"
-      val (_, d0IdxW) = timed(
-        graft.blocker.BlockerIndex.init(c0, idxPath, tokenize))
-      val (merges0, d0XrefW) = timed {
-        val (m, _) = Xref.run(spark, c0, decidedNone, cfg)
-        land(m.select("src", "dst"), "merges0")
-      }
-      val nM0 = merges0.count()
-      val (_, d0DecideW) = timed(ResolveStream.init(
-        Resolver.connectedComponents(merges0), statePath))
-      c0.unpersist()
-      val d0Mb = stageMb()
-
-      // ---- days 1..K: the increments, CHAINED (the continuous
-      // production shape) — each batch re-lands, re-xrefs against the
-      // corpus AS GROWN BY the earlier batches (its decided set is
-      // day-0's edges plus every earlier batch's), folds into the
-      // persisted resolver state, and Δ-applies. Measured per batch.
-      val Batches = 3
-      final case class Inc(rows: Long, mergeW: Double, mergeMb: Double,
-        idxW: Double, idxMb: Double, dxW: Double, dxMb: Double,
-        edges: Long, decideW: Double, decideMb: Double, changed: Long,
-        applyW: Double, applyMb: Double, applied: Long)
-      var c1: DataFrame = null
-      var deltaEdgesAll: DataFrame = merges0.limit(0)
-      val incs = (0 until Batches).map { k =>
-        val deltaK = delta
-          .filter(pmod(xxhash64(col("canonical_id")), lit(Batches)) === k)
-          .withColumn("last_seen", lit(s"d${k + 1}"))
-        val nRows = deltaK.count()
-        val (_, mergeW) = timed(MergeLake.append(deltaK, lakePath): Unit)
-        val mergeMb = stageMb()
-        if (c1 != null) c1.unpersist()
-        c1 = Caches.pin(corpus())
-        // index refresh is now the O(|Δ|·tokens) fold: read the touched
-        // entities' post-merge statements back from the entity-bucketed
-        // lake (pruned point read), retokenize ONLY them, fold the
-        // signed stat deltas into the stored artifacts (r11's 13.5-21 s
-        // / 62 MB corpus rebuild per batch was the loop's one
-        // corpus-proportional stage)
-        val touchedIds = deltaK.select(col("canonical_id")).distinct()
-          .collect().map(_.getString(0)).toIndexedSeq
-        val (_, idxW) = timed {
-          val bs = MergeLake.bucketsOf(spark, lakePath, touchedIds)
-          val slice = MergeLake.snapshot(spark, lakePath, Some(bs))
-            .join(broadcast(touchedIds.toDF("cid")),
-              col("canonical_id") === col("cid"), "left_semi")
-            .drop("bucket")
-          graft.blocker.BlockerIndex.refresh(spark, idxPath, slice,
-            touchedIds, s"d${k + 1}", tokenize)
-        }
-        val idxMb = stageMb()
-        // the TF the delta xref consumes is a lazy VIEW over the
-        // maintained artifacts — no corpus pass, no pin to leak
-        val tf = graft.blocker.BlockerIndex.termFrequencies(spark,
-          idxPath, Xref.compatDf(spark), Xref.boostsDf(spark),
-          cfg.blocker,
-          dampFields = graft.blocker.EntityTokenizer.DampFields)
-        val decided = land(merges0.unionByName(deltaEdgesAll), "decided")
-        val isDeltaK = isDeltaId(col("id")) &&
-          pmod(xxhash64(col("id")), lit(Batches)) === k
-        val (edgesK, dxW) = timed {
-          land(Xref.scoredDeltaPairs(spark, c1, decided, isDeltaK, cfg,
-            Some(tf))
-            .filter(col("score") > threshold)
-            .select(col("lid").as("src"), col("rid").as("dst")),
-            s"delta-edges-$k")
-        }
-        val nDx = edgesK.count()
-        val dxMb = stageMb()
-        val (changed, decideW) = timed(ResolveStream
-          .applyBatchChanged(spark, edgesK, statePath, s"d${k + 1}"))
-        val nChanged = changed.count()
-        val decideMb = stageMb()
-        // Δ-scoped apply: re-elect canonicals for the clusters the
-        // batch touched, rewrite ONLY their members' statements — the
-        // write set a production increment actually lands
-        val (nApplied, applyW) = timed {
-          val st1 = ResolveStream.state(spark, statePath)
-          val touched = changed.select(col("cluster")).distinct()
-          val members = st1.join(broadcast(touched), Seq("cluster"),
-            "left_semi")
-          val cm = Resolver.canonicalMap(members, CliArgs.idWeight)
-          val slice = c1.join(
-            broadcast(members.select(col("id").as("canonical_id"))),
-            Seq("canonical_id"), "left_semi")
-          CliArgs.applyCanonical(slice, cm)
-            .write.mode("overwrite").parquet(s"$scratch/apply-delta-$k")
-          spark.read.parquet(s"$scratch/apply-delta-$k").count()
-        }
-        val applyMb = stageMb()
-        changed.unpersist()
-        deltaEdgesAll = land(deltaEdgesAll.unionByName(edgesK),
-          s"edges-all-$k")
-        Inc(nRows, mergeW, mergeMb, idxW, idxMb, dxW, dxMb, nDx,
-          decideW, decideMb, nChanged, applyW, applyMb, nApplied)
-      }
-      val deltaEdges = deltaEdgesAll
-
-      // ---- the oracle: loop end state ≡ one from-scratch batch run
-      val stLoop = Caches.pin(ResolveStream.state(spark, statePath))
-      val outLoop = CliArgs.applyCanonical(c1,
-          Resolver.canonicalMap(stLoop, CliArgs.idWeight))
-        .select(col("id"), col("canonical_id"), col("prop"), col("value"))
-      val (mergesF, fullXrefW) = timed {
-        val (m, _) = Xref.run(spark, c1, decidedNone, cfg)
-        land(m.select("src", "dst"), "merges-full")
-      }
-      val (outFull, fullRestW) = timed {
-        val o = CliArgs.applyCanonical(c1, CliArgs.canonicalMapOf(mergesF))
-          .select(col("id"), col("canonical_id"), col("prop"), col("value"))
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        o.count(); o
-      }
-      val mismatches = outLoop.exceptAll(outFull).count() +
-        outFull.exceptAll(outLoop).count()
-      def undirected(e: DataFrame): DataFrame = e.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      val eLoop = undirected(merges0.unionByName(deltaEdges))
-      val eFull = undirected(mergesF)
-      val edgeDiff = eLoop.exceptAll(eFull).count() +
-        eFull.exceptAll(eLoop).count()
-
-      val incJson = incs.map { i =>
-        f"""{"rows":${i.rows},"merge_wall_sec":${i.mergeW}%.2f,""" +
-          f""""merge_shuffle_mb":${i.mergeMb}%.1f,""" +
-          f""""index_refresh_wall_sec":${i.idxW}%.1f,""" +
-          f""""index_refresh_shuffle_mb":${i.idxMb}%.1f,""" +
-          f""""delta_xref_wall_sec":${i.dxW}%.2f,""" +
-          f""""delta_xref_shuffle_mb":${i.dxMb}%.1f,""" +
-          f""""delta_edges":${i.edges},""" +
-          f""""decide_wall_sec":${i.decideW}%.2f,""" +
-          f""""decide_shuffle_mb":${i.decideMb}%.1f,""" +
-          f""""changed_members":${i.changed},""" +
-          f""""apply_wall_sec":${i.applyW}%.2f,""" +
-          f""""apply_shuffle_mb":${i.applyMb}%.1f,""" +
-          f""""applied_rows":${i.applied}}"""
-      }.mkString("[", ",", "]")
-      println(f"""{"soak":"loop","fixture":"donations","replicas":$replicas,""" +
-        f""""stmts":${c1.count()},"day0_merges":$nM0,""" +
-        f""""day0_ingest_wall_sec":$d0IngestW%.1f,""" +
-        f""""day0_index_build_wall_sec":$d0IdxW%.1f,""" +
-        f""""day0_xref_wall_sec":$d0XrefW%.1f,""" +
-        f""""day0_decide_wall_sec":$d0DecideW%.1f,""" +
-        f""""day0_shuffle_mb":$d0Mb%.1f,""" +
-        f""""increments":$incJson,""" +
-        f""""full_xref_wall_sec":$fullXrefW%.1f,""" +
-        f""""full_rest_wall_sec":$fullRestW%.1f,""" +
-        f""""edge_diff":$edgeDiff,"state_mismatches":$mismatches}""")
-      spark.stop()
-      return
-    }
-
     val stmts = corpus(spark, sfDir, replicas)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nStmts = stmts.count()
@@ -874,8 +614,7 @@ object Soak {
       f""""statements":$nStmts,"entities":$nEntities,""" +
       f""""wall_sec":$wall%.1f,"merges":$nMerges,""" +
       f""""suggestions":$nSuggest,""" +
-      f""""shuffle_write_mb":${shuffleWrite / 1e6}%.1f,""" +
-      f""""peak_stage_shuffle_mb":${peakStageWrite / 1e6}%.1f}""")
+      shuffleJson(prof.lap()) + "}")
     spark.stop()
   }
 

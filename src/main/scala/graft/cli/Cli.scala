@@ -43,17 +43,32 @@ object CliArgs {
     (pos.result(), flags)
   }
 
-  def session(app: String): SparkSession = {
-    val b = SparkSession.builder().appName(s"graft-$app")
-    // sensible single-node defaults; spark-submit confs win
-    if (!sys.props.contains("spark.master")) b.master("local[*]")
-    val s = b.config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The one SparkSession entry of every driver. A live active or
+    * default session (a spec's shared one, a host application's) is
+    * returned untouched — `getOrCreate` on it would overwrite its
+    * runtime confs with this builder's. A session built here gets
+    * single-node defaults, each overridden by a spark-submit (or
+    * `-Dspark.*`) setting: master `local[$SPARK_GRAFT_CPUS]` (every
+    * core when unset), one shuffle partition per core, UTC, no UI and
+    * a bounded plan string.
+    */
+  def session(app: String): SparkSession =
+    Seq(SparkSession.getActiveSession, SparkSession.getDefaultSession)
+      .flatten.find(!_.sparkContext.isStopped).getOrElse {
+        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+          Runtime.getRuntime.availableProcessors.toString)
+        val b = SparkSession.builder().appName(s"graft-$app")
+        Seq("spark.master" -> s"local[$cpus]",
+          "spark.sql.shuffle.partitions" -> cpus,
+          "spark.sql.session.timeZone" -> "UTC",
+          "spark.ui.enabled" -> "false",
+          "spark.sql.maxPlanStringLength" -> "65536")
+          .filterNot { case (k, _) => sys.props.contains(k) }
+          .foreach { case (k, v) => b.config(k, v) }
+        val s = b.getOrCreate()
+        s.sparkContext.setLogLevel("WARN")
+        s
+      }
 
   def isIjson(path: String): Boolean =
     path.endsWith(".ijson") || path.endsWith(".json")
@@ -303,7 +318,7 @@ object ResolverLoadMain {
     val (pos, _) = CliArgs.parse(args)
     val (in, out) = (pos.head, pos(1))
     val s = CliArgs.session("load-resolver")
-    graft.resolver.ResolverOps.load(s,
+    graft.resolver.ResolverOps.load(
         s.read.text(in).withColumnRenamed("value", "line"))
       .write.mode("overwrite").parquet(out)
     println(s"[load-resolver] wrote $out")

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.matching.ScoringLoss
 
 /** `ScoringLossMain <pairs.json> [threshold]` — the pair-file loss
@@ -13,14 +11,7 @@ object ScoringLossMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScoringLossMain <pairs.json> [threshold]")
     val threshold = args.lift(1).map(_.toDouble).getOrElse(0.7)
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliArgs.session("scoring-loss")
     val pairs = ScoringLoss.readPairs(spark, args(0))
     val scored = ScoringLoss.scoredPairs(pairs)
     ScoringLoss.report(scored, threshold).show(50, truncate = false)

@@ -103,7 +103,7 @@ final class DatasetEnricher(val name: String, mirror: DataFrame) {
   */
 final class ResponseCache(path: String) {
 
-  def put(s: SparkSession, entries: DataFrame): Unit =
+  def put(entries: DataFrame): Unit =
     entries.select(col("key"), col("text"),
       current_timestamp().as("stored_at"))
       .write.mode("append").parquet(path)

@@ -160,7 +160,7 @@ final class NominatimEnricher(gazetteer: DataFrame,
         col("q_key"))
 
     cache.foreach { c =>
-      c.put(s, fresh.select(col("q_key").as("key"),
+      c.put(fresh.select(col("q_key").as("key"),
         to_json(struct(col("match_id"), col("full"), col("country"),
           col("city"), col("state"), col("postalCode"))).as("text")))
     }

@@ -1,6 +1,6 @@
 package graft.resolver
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Resolver edit operations in batch DataFrame form — the reference
@@ -134,7 +134,7 @@ object ResolverOps {
       .as("line"))
 
   /** Edge load from JSON lines (`resolver/resolver.py:638-651`). */
-  def load(s: SparkSession, lines: DataFrame): DataFrame =
+  def load(lines: DataFrame): DataFrame =
     lines.select(from_json(col("line"),
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.StringType)).as("a"))

@@ -11,11 +11,9 @@ import graft.store.{EntityStore, MergeLake, RefIndex}
 import graft.xref.Xref
 
 /** The COMPOSED incremental loop as ONE continuous streaming driver —
-  * the streaming twin of the batch loop soak (Soak `loop`), and the
-  * shape a deployed nomenklatura pipeline actually runs: statements
-  * arrive as micro-batches and each `foreachBatch` executes the full
-  * production increment through the SAME code paths the batch loop
-  * uses —
+  * the shape a deployed nomenklatura pipeline actually runs:
+  * statements arrive as micro-batches and each `foreachBatch` executes
+  * the full production increment —
   *
   *  1. MERGE ingest     — [[MergeLake.append]], O(Δ)
   *  2. index folds      — [[BlockerIndex.refresh]], O(|Δ|·tokens), and
@@ -38,8 +36,9 @@ import graft.xref.Xref
   *
   * so a day's increment costs its own volume at every stage. The end
   * state (the canonical lake) is bit-equal to one from-scratch batch
-  * run over the final corpus — LoopStreamSpec proves it with the same
-  * oracle the batch soak uses.
+  * run over the final corpus — LoopStreamSpec proves it on the
+  * donations fixture, and Soak `loopstream` at N× replicas with the
+  * same oracle.
   *
   * Exactly-once: foreachBatch is at-least-once on retry, and the sink
   * pins a persistent `checkpointLocation` under the loop root so batch

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.search.Search
@@ -28,7 +28,7 @@ object RetrievalStream {
   /** Frozen (qid, term, idf) rows + avgdl from a corpus' postings —
     * the "train" half, run once on the lake.
     */
-  def frozenStats(s: SparkSession, postings: DataFrame,
+  def frozenStats(postings: DataFrame,
       queryTerms: Seq[(Int, String)]): (Seq[(Int, String, Double)], Double) = {
     val statsRow = postings.select(col("doc_id"), col("dl")).distinct().agg(
       count(lit(1)).as("n_docs"),

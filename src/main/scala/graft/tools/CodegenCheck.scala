@@ -6,14 +6,9 @@ package graft.tools
   */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.cli.CliArgs.session("codegen-check")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
+import graft.Profile
 
 /** Scratch profiler: count Spark jobs/stages each named query bills —
   * the wd-family queries are fixed-overhead bound (sequential
@@ -13,44 +10,16 @@ import org.apache.spark.sql.SparkSession
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = new AtomicInteger()
-    val stages = new AtomicInteger()
-    val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val ms = (for {a <- i.completionTime; b <- i.submissionTime}
-          yield a - b).getOrElse(-1L)
-        val m = i.taskMetrics
-        stageLog.add(f"    stage ${i.stageId}%3d ${ms}%6d ms tasks=${i.numTasks}%3d " +
-          f"cpu=${m.executorRunTime}%6d ms in=${m.inputMetrics.recordsRead}%8d " +
-          f"sh=${m.shuffleReadMetrics.recordsRead}%8d/${m.shuffleWriteMetrics.recordsWritten}%8d " +
-          i.name.take(60))
-      }
-    })
+    val spark = graft.cli.CliArgs.session("jobcount")
+    val prof = Profile.attach(spark,
+      keepStages = sys.env.contains("SPARK_GRAFT_STAGES"))
     graft.Caches.ensureAll(spark, sfDir)
     val names = args.toSeq
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       // warm
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      Thread.sleep(300)
-      jobs.set(0); stages.set(0); stageLog.clear()
+      prof.lap()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
@@ -58,11 +27,16 @@ object JobCount {
       val tPlan = (System.nanoTime() - t0) / 1e9 - tBuild
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"[jobcount] $n%-20s jobs=${jobs.get}%3d stages=${stages.get}%3d sec=$sec%.2f build=$tBuild%.2f plan=$tPlan%.2f")
-      if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-        val it2 = stageLog.iterator()
-        while (it2.hasNext) println("[jobcount]" + it2.next())
+      val l = prof.lap()
+      println(f"[jobcount] $n%-20s jobs=${l.jobs}%3d stages=${l.stages}%3d sec=$sec%.2f build=$tBuild%.2f plan=$tPlan%.2f")
+      l.stageInfos.foreach { i =>
+        val ms = (for {a <- i.completionTime; b <- i.submissionTime}
+          yield a - b).getOrElse(-1L)
+        val m = i.taskMetrics
+        println(f"[jobcount]    stage ${i.stageId}%3d ${ms}%6d ms tasks=${i.numTasks}%3d " +
+          f"cpu=${m.executorRunTime}%6d ms in=${m.inputMetrics.recordsRead}%8d " +
+          f"sh=${m.shuffleReadMetrics.recordsRead}%8d/${m.shuffleWriteMetrics.recordsWritten}%8d " +
+          i.name.take(60))
       }
     }
     spark.stop()

@@ -1,19 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: print the formatted physical plan of named queries. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.cli.CliArgs.session("plandump")
+    spark.conf.set("spark.sql.maxPlanStringLength", "1000000")
     graft.Caches.ensureAll(spark, sfDir)
     args.foreach { n =>
       println(s"==== $n ====")

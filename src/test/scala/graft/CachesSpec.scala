@@ -22,6 +22,24 @@ class CachesSpec extends AnyFunSuite {
     assert(before === after)
   }
 
+  test("clearAll releases the session pins and checkpoints it drops") {
+    val sc = spark.sparkContext
+    def touch(): Unit = {
+      search.Search.postingsCk(spark, dir)
+      dedup.DedupQueries.fpSetsCk(spark, dir)
+      similarity.SimilarityQueries.nearPreparedCk(spark, dir)
+    }
+    // first touch publishes any missing artifact; the measured touch
+    // below only reads the lake and pins the session copies
+    touch()
+    Caches.clearAll()
+    val baseline = sc.getPersistentRDDs.size
+    touch()
+    assert(sc.getPersistentRDDs.size === baseline + 3)
+    Caches.clearAll()
+    assert(sc.getPersistentRDDs.size === baseline)
+  }
+
   test("ensureAll publishes on-disk artifacts; reads match rebuilds") {
     val tmp = Files.createTempDirectory("graft-index-spec").toString
     val prev = sys.props.get("graft.index.dir")

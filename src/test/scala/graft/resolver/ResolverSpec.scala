@@ -138,7 +138,7 @@ class ResolverSpec extends AnyFunSuite {
     val log = Seq(("a", "b", "positive", 0.9, "u", "2024-01-01T00:00:00"))
       .toDF("target", "source", "judgement", "score", "user", "created_at")
       .withColumn("deleted_at", lit(null).cast("string"))
-    val back = ResolverOps.load(spark, ResolverOps.dump(log))
+    val back = ResolverOps.load(ResolverOps.dump(log))
     val r = back.head()
     assert(r.getString(0) === "a" && r.getString(1) === "b" &&
       r.getString(2) === "positive" && r.getDouble(3) === 0.9)

@@ -12,8 +12,8 @@ import graft.xref.Xref
 /** The streaming composed loop (MERGE → index fold → delta xref →
   * incremental decide → Δ-apply, one foreachBatch per micro-batch)
   * must leave EXACTLY the canonical statement table one from-scratch
-  * batch run produces over the final corpus — the streaming analogue
-  * of the batch loop soak's end-state oracle, but asserted on the
+  * batch run produces over the final corpus — the end-state oracle
+  * Soak `loopstream` runs at N× replicas, asserted on the
   * incrementally-maintained canonical LAKE itself (the strongest
   * surface: it catches a missed rewrite of a cross-cluster entity
   * reference, which a recomputed-at-the-end comparison would not).
@@ -52,7 +52,7 @@ class LoopStreamSpec extends AnyFunSuite {
       .createTempDirectory("loopstream").toString
     val p = LoopStream.Paths(root)
     // the blocker cut must never bind or stream/batch diverge at the
-    // rank margin (the loop soak's comparability rule)
+    // rank margin (Soak `loopstream` uses the same limit)
     val cfg = Xref.Config(autoThreshold = Some(0.4), limit = 400000)
     LoopStream.init(spark, day0, p, cfg)
 

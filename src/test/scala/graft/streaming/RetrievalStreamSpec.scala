@@ -23,7 +23,7 @@ class RetrievalStreamSpec extends AnyFunSuite {
 
   test("streamed scores equal the batch ranking's scores") {
     val (qidf, avgdl) = RetrievalStream.frozenStats(
-      spark, Search.postingsOf(docs), queryTerms)
+      Search.postingsOf(docs), queryTerms)
     implicit val sc = spark.sqlContext
     val src = MemoryStream[(Long, String)]
     val q = RetrievalStream
@@ -51,7 +51,7 @@ class RetrievalStreamSpec extends AnyFunSuite {
 
   test("terms absent from the training corpus score zero, not crash") {
     val (qidf, avgdl) = RetrievalStream.frozenStats(
-      spark, Search.postingsOf(docs), Seq(5 -> "zeppelin"))
+      Search.postingsOf(docs), Seq(5 -> "zeppelin"))
     assert(qidf.isEmpty)
     // a query with no trained terms simply never fires
     val out = RetrievalStream.retrievalGate(
