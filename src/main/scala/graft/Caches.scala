@@ -178,7 +178,8 @@ object Caches {
       () => multimodal.Multimodal.ahashSigsCk(s, d),
       () => textanalysis.Curation.crossdocGramsCk(s, d),
       () => enrich.ProposeQueries.scaffoldCk(s, d),
-      // builds the merge-demo lake if absent (read-or-build marker)
+      // publishes the merge-demo lake if absent (IndexLake.stored, the
+      // same _SUCCESS-gated publish as every parquet artifact)
       () => store.StoreQueries.mergeQ(s, d),
       () => matching.MatchingQueries.analysisCk(s, d),
       () => textanalysis.Bpe.trainedMergesCk(s, d),

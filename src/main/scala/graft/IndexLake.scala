@@ -193,21 +193,37 @@ object IndexLake {
   def artifact(s: SparkSession, sfDir: String, name: String)
       (build: => DataFrame): DataFrame =
     Caches.memo(s, sfDir, name) {
-      val dir = path(sfDir, name)
-      val fs = fsOf(dir)
-      if (!ready(fs, dir)) publish(fs, dir, build)
+      val dir = stored(sfDir, name) { tmp =>
+        val df = build
+        // spread the artifact over the session's parallelism: an
+        // AQE-coalesced single file would scan as ONE task in every
+        // consumer (a 36k-row analysis index cost 1.3 s single-threaded;
+        // 0.3 s spread). At lake scale the same rule sizes files so a
+        // scan saturates the cluster.
+        val parts = math.min(32,
+          df.sparkSession.sparkContext.defaultParallelism)
+        df.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
+      }
       s.read.parquet(dir.toString)
     }
 
-  /** Publish protocol (object-store safe): write to a temp sibling,
-    * strip the committer's own `_SUCCESS` from it, move it into place,
-    * then write OUR marker last. Readers gate on the marker, so a
-    * non-atomic (copy-per-file) rename can expose a partial directory
-    * but never a trusted one. The swap runs in a bounded retry loop:
-    * after any failed move the marker is re-checked — if another
-    * builder won, its copy is kept and ours discarded; a marker-less
-    * leftover (crashed builder) is cleared and the move retried.
+  /** Read-or-build a stored directory: return the published `name` dir
+    * for `sfDir`, running `write` into a fresh scratch dir and
+    * publishing it first if absent. The parquet [[artifact]]s and the
+    * stateful query scenarios (a MERGE lake or an index that runs its
+    * own init/refresh sequence) share this one publish, so every
+    * stored thing lives under the owned [[root]], is re-keyed by the
+    * fingerprint and is reached by [[invalidate]] and [[gc]]. Writers
+    * must be deterministic per data dir: a raced build is discarded in
+    * favour of the winner's.
     */
+  def stored(sfDir: String, name: String)(write: Path => Unit): Path = {
+    val dir = path(sfDir, name)
+    val fs = fsOf(dir)
+    if (!ready(fs, dir)) publish(fs, dir, write)
+    dir
+  }
+
   /** Per-artifact publish locks: different artifacts build and publish
     * CONCURRENTLY (the parallel-ingest path in `Caches.ensureAll` —
     * independent write-once DAGs, so a global lock would serialize the
@@ -217,21 +233,25 @@ object IndexLake {
     */
   private val publishLocks = TrieMap.empty[String, Object]
 
-  private def publish(fs: FileSystem, dir: Path, df: DataFrame): Unit =
+  /** Publish protocol (object-store safe): write to a temp sibling,
+    * strip the committer's own `_SUCCESS` from it, move it into place,
+    * then write OUR marker last. Readers gate on the marker, so a
+    * non-atomic (copy-per-file) rename can expose a partial directory
+    * but never a trusted one. The swap runs in a bounded retry loop:
+    * after any failed move the marker is re-checked — if another
+    * builder won, its copy is kept and ours discarded; a marker-less
+    * leftover (crashed builder) is cleared and the move retried. A
+    * writer that throws leaves no temp sibling behind.
+    */
+  private def publish(fs: FileSystem, dir: Path, write: Path => Unit): Unit =
     publishLocks.getOrElseUpdate(dir.toString, new Object).synchronized {
       if (ready(fs, dir)) return
       ensureRoot(new Path(root), fsOf(new Path(root)))
       fs.mkdirs(dir.getParent)
       val tmp = new Path(dir.getParent,
         s".${dir.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      // spread the artifact over the session's parallelism: an
-      // AQE-coalesced single file would scan as ONE task in every
-      // consumer (a 36k-row analysis index cost 1.3 s single-threaded;
-      // 0.3 s spread). At lake scale the same rule sizes files so a
-      // scan saturates the cluster.
-      val parts = math.min(32,
-        df.sparkSession.sparkContext.defaultParallelism)
-      df.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
+      try write(tmp)
+      catch { case e: Throwable => fs.delete(tmp, true); throw e }
       // the committer's marker must not pre-announce the artifact
       // mid-copy on stores where rename is per-file
       fs.delete(marker(tmp), false)

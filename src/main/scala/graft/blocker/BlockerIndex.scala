@@ -1,13 +1,10 @@
 package graft.blocker
 
-import java.nio.charset.StandardCharsets
-import java.util.UUID
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.MergeLake
+import graft.store.{ManifestLog, MergeLake}
 
 /** Incrementally-maintained blocker index — the production answer to
   * the one corpus-proportional stage left in the composed incremental
@@ -57,11 +54,11 @@ import graft.store.MergeLake
   * stats write, entries-lake append, index-manifest commit — and only
   * the LAST publishes: readers resolve the newest `blkidx-<N>` and
   * read the entries lake AT ITS RECORDED VERSION, so a crash between
-  * steps leaves the previous index state fully consistent. Stats
-  * generations are deterministic per `gen`, and a replayed refresh
-  * reuses a completed stats dir and re-appends the (identical) packed
-  * batch — last-writer-wins makes the duplicate append a no-op, so
-  * replay converges (same idempotence story as MergeLake).
+  * steps leaves the previous index state fully consistent. A replayed
+  * refresh rewrites its `stats-<gen>` dir against the committed state
+  * and re-appends the packed batch — last-writer-wins makes the
+  * duplicate append a no-op, so replay converges (same idempotence
+  * story as MergeLake).
   */
 object BlockerIndex {
 
@@ -69,77 +66,38 @@ object BlockerIndex {
   final case class IdxManifest(version: Int, entVersion: Int,
       statsDirs: Seq[String])
 
-  private val IdxRe = "blkidx-([0-9]{8})".r
-
   private def fs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private def entriesPath(indexPath: String): String =
     new Path(indexPath, "entries").toString
 
-  // ---- index manifest I/O --------------------------------------------
+  // ---- index manifest codec ------------------------------------------
 
-  private def versions(f: FileSystem, root: Path): Seq[Int] =
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).map(_.getPath.getName).collect {
-      case IdxRe(n) => n.toInt
-    }.toSeq
-
-  def readManifest(s: SparkSession, indexPath: String): IdxManifest = {
-    val root = new Path(indexPath)
-    val f = fs(s, root)
-    val vs = versions(f, root)
-    require(vs.nonEmpty, s"not a blocker index (no blkidx manifest " +
-      s"under $root)")
-    val v = vs.max
-    val in = f.open(new Path(root, f"blkidx-$v%08d"))
-    val text =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    var entVersion = -1
-    val stats = Seq.newBuilder[String]
-    text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-      line.split(' ') match {
-        case Array("graft-blkidx", "1") => ()
-        case Array("entversion", n) => entVersion = n.toInt
-        case Array("stats", d) => stats += d
-        case other => sys.error(s"bad blkidx line: ${other.mkString(" ")}")
+  private val log = new ManifestLog[IdxManifest]("blkidx", "blocker index")(
+    m => ("graft-blkidx 1" +: s"entversion ${m.entVersion}" +:
+      m.statsDirs.map(d => s"stats $d")).map(_ + "\n").mkString,
+    (v, text) => {
+      var entVersion = -1
+      val stats = Seq.newBuilder[String]
+      text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
+        line.split(' ') match {
+          case Array("graft-blkidx", "1") => ()
+          case Array("entversion", n) => entVersion = n.toInt
+          case Array("stats", d) => stats += d
+          case other => sys.error(s"bad blkidx line: ${other.mkString(" ")}")
+        }
       }
-    }
-    require(entVersion >= 0, s"blkidx-$v missing entversion")
-    IdxManifest(v, entVersion, stats.result())
-  }
+      require(entVersion >= 0, s"blkidx-$v missing entversion")
+      IdxManifest(v, entVersion, stats.result())
+    })
 
-  /** Same loud-lost-race commit protocol as the MergeLake manifest:
-    * tmp + exists-check + rename + read-back (single concurrent index
-    * writer assumed — it is the same writer as the statement MERGE).
-    */
+  def readManifest(s: SparkSession, indexPath: String): IdxManifest =
+    log.read(s, new Path(indexPath))
+
   private def commit(s: SparkSession, indexPath: String,
-      m: IdxManifest): Unit = {
-    val root = new Path(indexPath)
-    val f = fs(s, root)
-    val body = new StringBuilder("graft-blkidx 1\n")
-    body ++= s"entversion ${m.entVersion}\n"
-    m.statsDirs.foreach(d => body ++= s"stats $d\n")
-    val tmp = new Path(root, f"blkidx-${m.version}%08d.tmp-${UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(body.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new Path(root, f"blkidx-${m.version}%08d")
-    def lost(): Nothing = {
-      f.delete(tmp, false)
-      sys.error(s"blocker-index publish lost a race: $dst already " +
-        "committed by another writer")
-    }
-    if (f.exists(dst)) lost()
-    if (!f.rename(tmp, dst)) lost()
-    val in = f.open(dst)
-    val committed =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    if (committed != body.toString)
-      sys.error(s"blocker-index publish raced and was clobbered: $dst")
-  }
+      m: IdxManifest): Unit =
+    log.commit(s, new Path(indexPath), m.version, m)
 
   // ---- packing -------------------------------------------------------
 
@@ -202,15 +160,15 @@ object BlockerIndex {
     tfs.unionByName(tdf).unionByName(n)
   }
 
-  private def writeStats(s: SparkSession, indexPath: String, dir: String,
-      rows: DataFrame): Unit = {
-    val p = new Path(indexPath, dir)
-    val f = fs(s, p)
-    // deterministic per generation: a replayed refresh reuses a
-    // completed write, a crashed partial is overwritten
-    if (!f.exists(new Path(p, "_SUCCESS")))
-      rows.write.mode("overwrite").parquet(p.toString)
-  }
+  /** Always rewritten, never reused: a stats dir no committed manifest
+    * names holds retractions computed against the state its writer
+    * read, and a writer that lost a commit race retries against a
+    * state that has moved on. After a plain crash the rewrite is
+    * identical.
+    */
+  private def writeStats(indexPath: String, dir: String,
+      rows: DataFrame): Unit =
+    rows.write.mode("overwrite").parquet(new Path(indexPath, dir).toString)
 
   // ---- writes --------------------------------------------------------
 
@@ -229,7 +187,7 @@ object BlockerIndex {
     val ids = entries.select(col("id")).distinct()
     MergeLake.init(packedBatch(entries, ids, "init"),
       entriesPath(indexPath), nBuckets)
-    writeStats(s, indexPath, "stats-init", statRows(entries, 1))
+    writeStats(indexPath, "stats-init", statRows(entries, 1))
     commit(s, indexPath, IdxManifest(0,
       MergeLake.currentVersion(s, entriesPath(indexPath)),
       Seq("stats-init")))
@@ -271,7 +229,7 @@ object BlockerIndex {
     val newEntries = tokenize(sliceStmts)
       .join(touchedDf, Seq("id"), "left_semi")
 
-    writeStats(s, indexPath, statsDir,
+    writeStats(indexPath, statsDir,
       statRows(newEntries, 1).unionByName(statRows(oldExploded, -1)))
     MergeLake.append(packedBatch(newEntries, touchedDf, gen), lake)
     commit(s, indexPath, IdxManifest(m.version + 1,
@@ -288,8 +246,8 @@ object BlockerIndex {
     * what keeps the TF view's read cost flat as generations accumulate
     * (each uncompacted delta adds a window leg to every snapshot and a
     * log dir to every stats fold). Crash-safe like refresh: nothing is
-    * visible until the final manifest commit; the folded stats dir is
-    * deterministic per target version, so a replay reuses it.
+    * visible until the final manifest commit, and a replay rewrites the
+    * folded stats dir.
     */
   def compact(s: SparkSession, indexPath: String): Unit = {
     val m = readManifest(s, indexPath)
@@ -305,7 +263,7 @@ object BlockerIndex {
         coalesce(col("df"), lit(0L)) =!= 0 ||
         coalesce(col("freq"), lit(0L)) =!= 0 ||
         coalesce(col("tdf"), lit(0L)) =!= 0)
-    writeStats(s, indexPath, dir, folded)
+    writeStats(indexPath, dir, folded)
     MergeLake.compact(s, lake): Unit
     commit(s, indexPath, IdxManifest(m.version + 1,
       MergeLake.currentVersion(s, lake), Seq(dir)))
@@ -313,35 +271,11 @@ object BlockerIndex {
   }
 
   /** Drop stats generations and blkidx manifests outside the retention
-    * horizon (current + previous manifest — the same in-flight-reader
-    * grace MergeLake keeps). Everything deleted is unreachable from
-    * every retained manifest.
+    * horizon ([[ManifestLog.retained]] — the same in-flight-reader grace
+    * MergeLake keeps).
     */
-  private def gc(s: SparkSession, indexPath: String): Unit = {
-    val root = new Path(indexPath)
-    val f = fs(s, root)
-    val keep = versions(f, root).sorted.takeRight(2)
-    val live = keep.flatMap { v =>
-      // re-read via the single-version path: readManifest resolves max
-      val in = f.open(new Path(root, f"blkidx-$v%08d"))
-      val text =
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.map(_.trim).collect {
-        case l if l.startsWith("stats ") => l.stripPrefix("stats ")
-      }
-    }.toSet
-    f.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      val stale =
-        (n.startsWith("stats-") && !live(n)) ||
-          (n match {
-            case IdxRe(v) => !keep.contains(v.toInt)
-            case _ => n.startsWith("blkidx-") && n.contains(".tmp-")
-          })
-      if (stale) f.delete(st.getPath, true): Unit
-    }
-  }
+  private def gc(s: SparkSession, indexPath: String): Unit =
+    log.trim(s, new Path(indexPath))(_.startsWith("stats-"), _.statsDirs)
 
   // ---- reads ---------------------------------------------------------
 

@@ -143,13 +143,12 @@ object BlockerQueries {
     val all = StarStatements(s, d).withColumn("num", num)
     val cols = Seq("id", "schema", "field", "value").map(col)
     val tokenize = (df: DataFrame) => Blocker.entries(df, cfg)
-    // built under a scratch dir, published atomically (BuildOnce):
-    // racing sessions can't init() over each other's half-built index,
-    // and the engine-build hash inside the fingerprint retires stale
-    // artifacts
-    val path = graft.store.BuildOnce(s, "/tmp/graft-blkidx-" +
-      sys.props.getOrElse("user.name", "anon") + "/" +
-      graft.IndexLake.fingerprint(d)) { tmp =>
+    // built under a scratch dir, published atomically
+    // (IndexLake.stored): racing sessions can't init() over each
+    // other's half-built index, and the engine-build hash inside the
+    // fingerprint retires stale artifacts
+    val path = graft.IndexLake.stored(d, "q_blk_index_add") { p =>
+      val tmp = p.toString
       val base = all.filter(col("num") % 7 =!= 0)
         .withColumn("value",
           when(col("field") === "name" && col("num") % 3 === 0,
@@ -180,7 +179,8 @@ object BlockerQueries {
       // measured 25 jobs / 3.3 s at sf0.1; compacted ~8 jobs)
       BlockerIndex.compact(s, tmp)
     }
-    BlockerIndex.termFrequencies(s, path, compatDf(s), boostsDf(s), cfg)
+    BlockerIndex.termFrequencies(s, path.toString, compatDf(s), boostsDf(s),
+      cfg)
       .withColumn("weight", round(col("weight"), 6))
   }
 

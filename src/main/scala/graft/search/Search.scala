@@ -324,9 +324,8 @@ object Search {
     val isUpd = col("doc_id") % 7 =!= 0 && col("doc_id") % 11 === 3
     val updText = concat(lit("refreshed doc "),
       substring(col("text"), 1, 40))
-    val path = graft.store.BuildOnce(s, "/tmp/graft-searchidx-" +
-      sys.props.getOrElse("user.name", "anon") + "/" +
-      graft.IndexLake.fingerprint(d)) { tmp =>
+    val path = graft.IndexLake.stored(d, "q_search_index_add") { p =>
+      val tmp = p.toString
       SearchIndex.init(s, tmp, docs.filter(!isNew))
       SearchIndex.refresh(s, tmp,
         docs.filter(isNew && col("doc_id") % 2 === 0), "v2")
@@ -338,8 +337,8 @@ object Search {
       // bare scan of one folded generation per lake
       SearchIndex.maintain(s, tmp, compactEvery = 1)
     }
-    bm25Core(s, SearchIndex.postings(s, path), QueryTerms,
-      statsPre = Some(SearchIndex.stats(s, path)))
+    bm25Core(s, SearchIndex.postings(s, path.toString), QueryTerms,
+      statsPre = Some(SearchIndex.stats(s, path.toString)))
   }
 
   // ---------------------------------------------------------------- oracle

@@ -36,12 +36,13 @@ import org.apache.spark.sql.functions._
   * '''Crash-atomic publish.''' Nothing is visible until a manifest
   * names it. A manifest is one file listing, per bucket, the base
   * directory that currently owns it, plus the ordered live delta
-  * directories; it is written complete to a `.tmp` name and renamed to
-  * `manifest-<N+1>` — a single-file atomic create — and readers always
-  * resolve the highest committed `manifest-<N>`. A crash before the
-  * rename leaves orphan directories no manifest references (invisible;
-  * swept by the next compaction's GC); a crash after it leaves the new
-  * state fully committed. There is never a half-state: compaction does
+  * directories; it is committed through the shared [[ManifestLog]]
+  * (written complete to a `.tmp` name and renamed to `manifest-<N+1>` —
+  * a single-file atomic create), and readers always resolve the highest
+  * committed `manifest-<N>`. A crash before the rename leaves orphan
+  * directories no manifest references (invisible; swept by the next
+  * compaction's GC); a crash after it leaves the new state fully
+  * committed. There is never a half-state: compaction does
   * not delete-and-rename in place, it writes touched buckets to a NEW
   * base directory and repoints the manifest (MergeLakeCrashSpec kills
   * the writer between every step and asserts before-or-after, never
@@ -49,7 +50,8 @@ import org.apache.spark.sql.functions._
   * store; readers racing a compaction's post-publish GC get a
   * retention horizon — by default the previous committed manifest and
   * everything it references stay on disk for one extra compaction
-  * cycle (`GRAFT_MERGELAKE_RETAIN`, default 2; see [[retained]]).
+  * cycle (`GRAFT_MERGELAKE_RETAIN`, default 2; see
+  * [[ManifestLog.retained]]).
   *
   * '''Exchange-free snapshot.''' The resolved read decomposes
   * last-writer-wins into `delta_resolved ∪ (base ⟕̸ delta_keys)`: the
@@ -85,51 +87,25 @@ object MergeLake {
       bucketDirs: Map[Int, String], deltas: Seq[String],
       schemaJson: String = "", bucketCol: String = "stmt_id")
 
-  /** Test-only failpoint: invoked with a step name at every
-    * side-effect boundary; a spec that throws from here simulates a
-    * crash between steps (MergeLakeCrashSpec).
-    */
-  private[store] var onStep: String => Unit = _ => ()
-
   private def fs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  // ---- manifest I/O ------------------------------------------------
+  // ---- manifest codec ----------------------------------------------
 
-  private val ManifestRe = "manifest-([0-9]{8})".r
-
-  private def manifestVersions(f: FileSystem, root: Path): Seq[Int] =
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).map(_.getPath.getName).collect {
-      case ManifestRe(n) => n.toInt
-    }.toSeq
-
-  /** Version of the current committed manifest — the pin a caller-side
-    * manifest records for later [[snapshot]] reads at this exact state.
-    */
-  def currentVersion(s: SparkSession, path: String): Int =
-    readManifest(s, new Path(path)).version
-
-  /** Number of live (uncompacted) delta directories — each one adds a
-    * window leg to every [[snapshot]]; schedulers compare this against
-    * their compaction threshold (manifest read only, no data touched).
-    */
-  def deltaCount(s: SparkSession, path: String): Int =
-    readManifest(s, new Path(path)).deltas.size
-
-  private[graft] def readManifest(s: SparkSession, root: Path): Manifest = {
-    val f = fs(s, root)
-    val versions = manifestVersions(f, root)
-    require(versions.nonEmpty, s"not a MergeLake (no manifest under $root)")
-    readManifestVersion(f, root, versions.max)
+  private def encode(m: Manifest): String = {
+    val body = new StringBuilder("graft-mergelake 1\n")
+    body ++= s"nbuckets ${m.nBuckets}\n"
+    if (m.bucketCol != "stmt_id") body ++= s"bucketcol ${m.bucketCol}\n"
+    if (m.schemaJson.nonEmpty)
+      body ++= s"schema ${java.util.Base64.getEncoder.encodeToString(
+        m.schemaJson.getBytes(StandardCharsets.UTF_8))}\n"
+    m.bucketDirs.toSeq.sortBy(_._1).foreach { case (k, d) =>
+      body ++= s"bucket $k $d\n" }
+    m.deltas.foreach(d => body ++= s"delta $d\n")
+    body.toString
   }
 
-  private def readManifestVersion(f: FileSystem, root: Path,
-      v: Int): Manifest = {
-    val in = f.open(new Path(root, f"manifest-$v%08d"))
-    val text =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
+  private def decode(v: Int, text: String): Manifest = {
     var nBuckets = DefaultBuckets
     var schemaJson = ""
     var bucketCol = "stmt_id"
@@ -151,55 +127,28 @@ object MergeLake {
       bucketCol)
   }
 
-  /** Atomic commit: write the complete manifest body to a tmp name,
-    * then rename to `manifest-<version+1>`. Loud-failure guard for the
-    * two-writer race: on HDFS rename-onto-existing fails by itself, but
-    * on RawLocalFileSystem and POSIX-rename object-store connectors it
-    * silently OVERWRITES — so the destination is exists()-checked
-    * immediately before the rename, and the committed file is read back
-    * and compared after it. A loser of the race therefore errors
-    * (either pre-rename, or post-rename when the read-back shows
-    * another writer's body) instead of silently clobbering or being
-    * clobbered. The check is best-effort — a sub-millisecond mutual
-    * window remains on overwrite-rename filesystems — which is why
-    * single-concurrent-writer stays the documented production
-    * assumption (the class doc); the guard turns the likely races loud.
+  private val log = new ManifestLog[Manifest]("manifest", "MergeLake")(
+    encode, decode)
+
+  /** Version of the current committed manifest — the pin a caller-side
+    * manifest records for later [[snapshot]] reads at this exact state.
     */
-  private def publish(s: SparkSession, root: Path, m: Manifest): Unit = {
-    val f = fs(s, root)
-    val body = new StringBuilder("graft-mergelake 1\n")
-    body ++= s"nbuckets ${m.nBuckets}\n"
-    if (m.bucketCol != "stmt_id") body ++= s"bucketcol ${m.bucketCol}\n"
-    if (m.schemaJson.nonEmpty)
-      body ++= s"schema ${java.util.Base64.getEncoder.encodeToString(
-        m.schemaJson.getBytes(StandardCharsets.UTF_8))}\n"
-    m.bucketDirs.toSeq.sortBy(_._1).foreach { case (k, d) =>
-      body ++= s"bucket $k $d\n" }
-    m.deltas.foreach(d => body ++= s"delta $d\n")
-    val next = m.version + 1
-    val tmp = new Path(root, f"manifest-$next%08d.tmp-${UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(body.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    onStep("publish-staged")
-    val dst = new Path(root, f"manifest-$next%08d")
-    def lost(): Nothing = {
-      f.delete(tmp, false)
-      sys.error(s"manifest publish lost a race: $dst already committed " +
-        "by another writer (single-writer assumption violated); this " +
-        "batch's data directories are unreferenced and will be GC'd — " +
-        "re-read the manifest and retry the write")
-    }
-    if (f.exists(dst)) lost()
-    if (!f.rename(tmp, dst)) lost()
-    val in = f.open(dst)
-    val committed =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    if (committed != body.toString)
-      sys.error(s"manifest publish raced and was clobbered: $dst holds " +
-        "another writer's commit (single-writer assumption violated)")
-  }
+  def currentVersion(s: SparkSession, path: String): Int =
+    readManifest(s, new Path(path)).version
+
+  /** Number of live (uncompacted) delta directories — each one adds a
+    * window leg to every [[snapshot]]; schedulers compare this against
+    * their compaction threshold (manifest read only, no data touched).
+    */
+  def deltaCount(s: SparkSession, path: String): Int =
+    readManifest(s, new Path(path)).deltas.size
+
+  private[graft] def readManifest(s: SparkSession, root: Path): Manifest =
+    log.read(s, root)
+
+  /** Commit `m` as the next manifest version. */
+  private def publish(s: SparkSession, root: Path, m: Manifest): Unit =
+    log.commit(s, root, m.version + 1, m)
 
   // ---- writes ------------------------------------------------------
 
@@ -282,7 +231,7 @@ object MergeLake {
     bucketed
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(new Path(root, dir).toString)
-    onStep("init-written")
+    ManifestLog.onStep("init-written")
     // the schema rides in the manifest so an EMPTY init (day-0 of a
     // stream, zero merge edges yet) leaves a readable lake: an empty
     // partitioned write produces no bucket dirs and no parquet footers,
@@ -311,7 +260,7 @@ object MergeLake {
     bucketed
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(new Path(root, dir).toString)
-    onStep("append-written")
+    ManifestLog.onStep("append-written")
     // empty-batch no-op: a zero-row partitioned write leaves no bucket
     // dirs and no parquet footers, so committing it would both add a
     // schema-less delta every later snapshot fails to read AND grow the
@@ -368,13 +317,10 @@ object MergeLake {
       buckets: Option[Seq[Int]] = None,
       version: Option[Int] = None): DataFrame = {
     val root = new Path(path)
-    val m = version match {
-      // pinned read: a caller whose own manifest references a specific
-      // lake version (the blocker index) resolves THAT committed state,
-      // not whatever a concurrent append published since
-      case Some(v) => readManifestVersion(fs(s, root), root, v)
-      case None => readManifest(s, root)
-    }
+    // pinned read: a caller whose own manifest references a specific
+    // lake version (the blocker index) resolves THAT committed state,
+    // not whatever a concurrent append published since
+    val m = log.read(s, root, version)
     def scoped(df: DataFrame): DataFrame = buckets match {
       case Some(bs) => df.filter(col("bucket").isin(bs: _*))
       case None => df
@@ -443,7 +389,7 @@ object MergeLake {
       .repartition(col("bucket")) // one file set per bucket dir
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(new Path(root, newDir).toString)
-    onStep("compact-written")
+    ManifestLog.onStep("compact-written")
     // re-read before publishing: appends that landed while we resolved
     // are NOT folded into newDir, so they must survive as deltas (they
     // are newer than everything folded — last-writer-wins order holds)
@@ -452,46 +398,17 @@ object MergeLake {
     val owned = m2.bucketDirs ++ touched.map(_ -> newDir).toMap
     publish(s, root, m2.copy(bucketDirs = owned,
       deltas = m2.deltas.filterNot(folded)))
-    onStep("compact-published")
+    ManifestLog.onStep("compact-published")
     gc(s, root)
     touched
   }
 
-  /** GC horizon: how many committed manifests (current included) stay
-    * readable, with everything they reference. A reader that resolved
-    * manifest N races a concurrent compaction's GC; retaining the
-    * previous generation gives it a full compaction cycle of grace —
-    * the snapshot-isolation horizon a production lake sizes by reader
-    * latency. Override with `graft.mergelake.retain` /
-    * `GRAFT_MERGELAKE_RETAIN` (≥ 1).
-    */
-  private def retained: Int =
-    sys.props.get("graft.mergelake.retain")
-      .orElse(sys.env.get("GRAFT_MERGELAKE_RETAIN"))
-      .map(_.toInt).getOrElse(2).max(1)
-
   /** Drop lake directories (and stale manifests) that no manifest
-    * inside the retention horizon references. Only
-    * `base-*`/`delta-*`/`manifest-*` names are ever touched — callers
-    * may keep their own markers in the root. Crash-safe: everything
-    * deleted here is unreachable from every retained manifest.
+    * inside the retention horizon ([[ManifestLog.retained]]) references.
+    * Only `base-*`/`delta-*`/`manifest-*` names are ever touched —
+    * callers may keep their own markers in the root.
     */
-  private def gc(s: SparkSession, root: Path): Unit = {
-    val f = fs(s, root)
-    val keep = manifestVersions(f, root).sorted.takeRight(retained).toSet
-    val live = keep.toSeq.flatMap { v =>
-      val m = readManifestVersion(f, root, v)
-      m.bucketDirs.values ++ m.deltas
-    }.toSet
-    f.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      val stale =
-        ((n.startsWith("base-") || n.startsWith("delta-")) && !live(n)) ||
-          (n match {
-            case ManifestRe(v) => !keep(v.toInt)
-            case _ => n.startsWith("manifest-") && n.contains(".tmp-")
-          })
-      if (stale) f.delete(st.getPath, true): Unit
-    }
-  }
+  private def gc(s: SparkSession, root: Path): Unit =
+    log.trim(s, root)(n => n.startsWith("base-") || n.startsWith("delta-"),
+      m => m.bucketDirs.values ++ m.deltas)
 }

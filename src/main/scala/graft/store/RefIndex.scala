@@ -1,8 +1,5 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
-import java.util.UUID
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,7 +42,7 @@ import org.apache.spark.sql.functions._
   * end to end. The pinned old read stays valid because the lake's GC
   * horizon retains the previous manifest generation and this index
   * re-syncs every increment, so its sync point is never more than one
-  * committed batch behind ([[MergeLake.retained]]).
+  * committed batch behind ([[ManifestLog.retained]]).
   *
   * '''Crash atomicity / replay.''' The manifest commits LAST; a replay
   * after a committed refresh re-reads old == new (both at the current
@@ -59,69 +56,33 @@ object RefIndex {
     */
   final case class Manifest(version: Int, stmtVersion: Int)
 
-  private val IdxRe = "refidx-([0-9]{8})".r
-
   private def fs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private def postingsPath(indexPath: String): String =
     new Path(indexPath, "postings").toString
 
-  private def versions(f: FileSystem, root: Path): Seq[Int] =
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).map(_.getPath.getName).collect {
-      case IdxRe(n) => n.toInt
-    }.toSeq
-
-  def readManifest(s: SparkSession, indexPath: String): Manifest = {
-    val root = new Path(indexPath)
-    val f = fs(s, root)
-    val vs = versions(f, root)
-    require(vs.nonEmpty, s"not a ref index (no refidx manifest under $root)")
-    val v = vs.max
-    val in = f.open(new Path(root, f"refidx-$v%08d"))
-    val text =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    var stmtVersion = -1
-    text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-      line.split(' ') match {
-        case Array("graft-refidx", "1") => ()
-        case Array("stmtversion", n) => stmtVersion = n.toInt
-        case other => sys.error(s"bad refidx line: ${other.mkString(" ")}")
+  private val log = new ManifestLog[Manifest]("refidx", "ref index")(
+    m => s"graft-refidx 1\nstmtversion ${m.stmtVersion}\n",
+    (v, text) => {
+      var stmtVersion = -1
+      text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
+        line.split(' ') match {
+          case Array("graft-refidx", "1") => ()
+          case Array("stmtversion", n) => stmtVersion = n.toInt
+          case other => sys.error(s"bad refidx line: ${other.mkString(" ")}")
+        }
       }
-    }
-    require(stmtVersion >= 0, s"refidx-$v missing stmtversion")
-    Manifest(v, stmtVersion)
-  }
+      require(stmtVersion >= 0, s"refidx-$v missing stmtversion")
+      Manifest(v, stmtVersion)
+    })
 
-  /** Same loud-lost-race commit protocol as the MergeLake/BlockerIndex
-    * manifests (single concurrent writer assumed — it is the loop's
-    * own MERGE writer).
-    */
+  def readManifest(s: SparkSession, indexPath: String): Manifest =
+    log.read(s, new Path(indexPath))
+
   private def commit(s: SparkSession, indexPath: String,
-      m: Manifest): Unit = {
-    val root = new Path(indexPath)
-    val f = fs(s, root)
-    val body = s"graft-refidx 1\nstmtversion ${m.stmtVersion}\n"
-    val tmp = new Path(root, f"refidx-${m.version}%08d.tmp-${UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new Path(root, f"refidx-${m.version}%08d")
-    def lost(): Nothing = {
-      f.delete(tmp, false)
-      sys.error(s"ref-index publish lost a race: $dst already committed")
-    }
-    if (f.exists(dst)) lost()
-    if (!f.rename(tmp, dst)) lost()
-    val in = f.open(dst)
-    val committed =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    if (committed != body)
-      sys.error(s"ref-index publish raced and was clobbered: $dst")
-  }
+      m: Manifest): Unit =
+    log.commit(s, new Path(indexPath), m.version, m)
 
   /** Entity-reference pairs of a statement frame: one row per distinct
     * (referenced id, referring entity).
@@ -216,10 +177,14 @@ object RefIndex {
     * count crosses the threshold (tombstoned pairs whose latest row is
     * `live = false` stay one row each — corpus-bounded; truly dead
     * keys are rare enough that dropping them is left to the lake's
-    * normal fold).
+    * normal fold), and trim the `refidx-<N>` log to the retention
+    * horizon — one sync point commits per refresh, so without the trim
+    * a long-lived loop grows the root without bound.
     */
   def maintain(s: SparkSession, indexPath: String,
-      compactEvery: Int = 8): Unit =
+      compactEvery: Int = 8): Unit = {
     if (MergeLake.deltaCount(s, postingsPath(indexPath)) >= compactEvery)
       MergeLake.compact(s, postingsPath(indexPath)): Unit
+    log.trim(s, new Path(indexPath))(_ => false, _ => Nil)
+  }
 }

@@ -241,18 +241,17 @@ object StoreQueries {
       .withColumn("last_seen", lit("v3"))
     val cols = Seq("stmt_id", "id", "schema", "field", "value", "last_seen")
       .map(col)
-    // read-or-build like every stored artifact, built under a scratch
-    // dir and published atomically (BuildOnce) — the apply sequence is
-    // deterministic per data dir, so a raced rebuild is byte-equivalent
-    val path = BuildOnce(s, "/tmp/graft-merge-" +
-      sys.props.getOrElse("user.name", "anon") + "/" +
-      graft.IndexLake.fingerprint(d)) { tmp =>
+    // read-or-build like every stored artifact (IndexLake.stored) — the
+    // apply sequence is deterministic per data dir, so a raced rebuild
+    // is byte-equivalent
+    val path = graft.IndexLake.stored(d, "q_store_merge") { p =>
+      val tmp = p.toString
       MergeLake.init(base.select(cols: _*), tmp)
       MergeLake.append(delta1.select(cols: _*), tmp)
       MergeLake.append(delta2.select(cols: _*), tmp)
       MergeLake.compact(s, tmp): Unit
     }
-    MergeLake.snapshot(s, path).select(cols: _*)
+    MergeLake.snapshot(s, path.toString).select(cols: _*)
   }
 
   val mergeSql: String = s"""
@@ -307,9 +306,7 @@ object StoreQueries {
       .withColumn("last_seen", lit("v2"))
     val d2 = all.filter(col("num") % 3 === 0)
       .withColumn("last_seen", lit("v3"))
-    val path = BuildOnce(s, "/tmp/graft-refidx-" +
-      sys.props.getOrElse("user.name", "anon") + "/" +
-      graft.IndexLake.fingerprint(d)) { tmp =>
+    val path = graft.IndexLake.stored(d, "q_ref_index_add") { tmp =>
       val lakeP = s"$tmp/lake"
       val idxP = s"$tmp/refidx"
       MergeLake.init(base.select(cols: _*), lakeP,

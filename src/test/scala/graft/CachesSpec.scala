@@ -157,6 +157,36 @@ class CachesSpec extends AnyFunSuite {
     }
   }
 
+  test("scenario lakes publish under the owned index root") {
+    // a root that does not exist yet: the publish creates it 0700
+    val tmp = Files.createTempDirectory("graft-index-scenario")
+      .resolve("root").toString
+    val prev = sys.props.get("graft.index.dir")
+    sys.props.put("graft.index.dir", tmp)
+    Caches.clearAll()
+    def rows(): Seq[String] = store.StoreQueries.mergeQ(spark, dir)
+      .collect().map(_.mkString("|")).toSeq.sorted
+    try {
+      val built = rows()
+      val lake = Paths.get(tmp, IndexLake.fingerprint(dir), "q_store_merge")
+      assert(Files.exists(lake.resolve("_SUCCESS")))
+      // the lake itself: four commits (init, two appends, the compaction)
+      assert(store.MergeLake.currentVersion(spark, lake.toString) === 4)
+      assert(java.nio.file.attribute.PosixFilePermissions.toString(
+        Files.getPosixFilePermissions(Paths.get(tmp))) === "rwx------")
+      IndexLake.invalidate(dir)
+      assert(!Files.exists(lake))
+      assert(rows() === built)
+      assert(Files.exists(lake.resolve("_SUCCESS")))
+    } finally {
+      prev match {
+        case Some(v) => sys.props.put("graft.index.dir", v)
+        case None => sys.props.remove("graft.index.dir")
+      }
+      Caches.clearAll()
+    }
+  }
+
   test("gc retires stale generations, keeps the current and the young") {
     val tmp = Files.createTempDirectory("graft-index-gc").toString
     val prev = sys.props.get("graft.index.dir")

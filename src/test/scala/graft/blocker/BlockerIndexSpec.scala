@@ -126,12 +126,40 @@ class BlockerIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("already committed"))
   }
 
-  // The index-manifest commit's two-writer loud-failure guard is the
-  // same exists-check + rename + read-back protocol MergeLake.publish
-  // uses, whose interleavings MergeLakeRaceSpec pins through the
-  // publish-staged failpoint; BlockerIndex has no failpoint of its
-  // own, and a pre-planted manifest is not a race (readManifest simply
-  // resolves it as the current state and builds on top).
+  test("a refresh racing another refresh: loser fails loudly, retry lands") {
+    val path = java.nio.file.Files
+      .createTempDirectory("blkidx").toString + "/idx"
+    val base = stmts(
+      ("a", "Customer", "name", "Alpha Beta"),
+      ("b", "Customer", "name", "Beta Gamma"))
+    BlockerIndex.init(base, path, tokenize, nBuckets = 4)
+    // the winner renames b and adds c; the loser renames b too, so its
+    // retry must retract the WINNER's b tokens, not the base's
+    val won = stmts(
+      ("a", "Customer", "name", "Alpha Beta"),
+      ("b", "Customer", "name", "Beta Omega"),
+      ("c", "Customer", "name", "Gamma Delta"))
+    val both = stmts(
+      ("a", "Customer", "name", "Alpha Beta"),
+      ("b", "Customer", "name", "Beta Zeta"),
+      ("c", "Customer", "name", "Gamma Delta"))
+    def loser(): Unit = BlockerIndex.refresh(spark, path,
+      sliceOf(both, Seq("b")), Seq("b"), "gL", tokenize)
+    // the loser stages its first commit (the entries-lake append), the
+    // winner's whole refresh commits inside the failpoint, and the
+    // loser's commit then finds its version taken
+    val e = graft.store.Failpoint.race(loser()) {
+      BlockerIndex.refresh(spark, path, sliceOf(won, Seq("b", "c")),
+        Seq("b", "c"), "gW", tokenize)
+    }
+    assert(e.getMessage.contains("lost a race"),
+      s"loser must fail loudly, got: ${e.getMessage}")
+    assert(idxStats(path) === batchStats(won), "race left a hybrid index")
+    assert(idxTf(path, cfg) === batchTf(won, cfg))
+    loser()
+    assert(idxStats(path) === batchStats(both), "retry did not land")
+    assert(idxTf(path, cfg) === batchTf(both, cfg))
+  }
 
   test("forced per-refresh compaction preserves equality") {
     val path = java.nio.file.Files

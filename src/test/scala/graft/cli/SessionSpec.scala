@@ -11,7 +11,10 @@ import graft.{Profile, SparkSpec}
 
 /** Every driver takes its session from [[CliArgs.session]] and profiles
   * stages through [[Profile]]: a live session is reused untouched, and
-  * no second session builder or listener appears in `src/main`.
+  * no second session builder or listener appears in `src/main`. Every
+  * Hadoop rename — the commit point of a stored state — sits in one of
+  * the two publish routines: [[graft.store.ManifestLog]]'s commit and
+  * [[graft.IndexLake]]'s publish.
   */
 class SessionSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -37,20 +40,29 @@ class SessionSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(p)
   }
 
-  test("src/main builds sessions only in CliArgs and listens only in Profile") {
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+  private val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+
+  /** Files of `src/main` holding `needle`, with their counts. */
+  private def holders(needle: String): Map[String, Int] = {
     assert(Files.isDirectory(root), s"$root not found")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    def holders(needle: String): Map[String, Int] = files.map { f: Path =>
-      root.relativize(f).toString ->
-        java.util.regex.Pattern.quote(needle).r
-          .findAllIn(Files.readString(f)).size
-    }.filter(_._2 > 0).toMap
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList.map { f: Path =>
+        root.relativize(f).toString ->
+          java.util.regex.Pattern.quote(needle).r
+            .findAllIn(Files.readString(f)).size
+      }.filter(_._2 > 0).toMap
+  }
+
+  test("src/main builds sessions only in CliArgs and listens only in Profile") {
     assert(holders("SparkSession.builder") ===
       Map("graft/cli/Cli.scala" -> 1))
     assert(holders("extends SparkListener") ===
       Map("graft/Profile.scala" -> 1))
     assert(holders("new SparkListener").isEmpty)
+  }
+
+  test("src/main renames only in the manifest log and the IndexLake publish") {
+    assert(holders(".rename(").keySet ===
+      Set("graft/store/ManifestLog.scala", "graft/IndexLake.scala"))
   }
 }

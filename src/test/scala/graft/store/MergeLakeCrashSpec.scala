@@ -23,12 +23,12 @@ class MergeLakeCrashSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
 
   private def crashAt[A](step: String)(op: => A): Unit = {
-    MergeLake.onStep = s =>
+    ManifestLog.onStep = s =>
       if (s == step) throw new RuntimeException(s"injected crash at $s")
     try {
       val e = intercept[RuntimeException](op)
       assert(e.getMessage.contains("injected crash"))
-    } finally MergeLake.onStep = _ => ()
+    } finally ManifestLog.onStep = _ => ()
   }
 
   private def freshLake(): String = {

@@ -42,20 +42,9 @@ class MergeLakeRaceSpec extends AnyFunSuite {
   private val base =
     Set(("a#name", "Alice"), ("b#name", "Bob"), ("c#name", "Carol"))
 
-  /** Run `loser`, injecting `winner` at the loser's FIRST
-    * publish-staged point (the winner's own steps pass through).
-    */
-  private def race(loser: => Unit)(winner: => Unit): Throwable = {
-    var fired = false
-    MergeLake.onStep = s =>
-      if (s == "publish-staged" && !fired) { fired = true; winner }
-    try intercept[RuntimeException](loser)
-    finally MergeLake.onStep = _ => ()
-  }
-
   test("two racing appends: loser fails loudly, retry lands its data") {
     val path = freshLake()
-    val e = race {
+    val e = Failpoint.race {
       MergeLake.append(df(("a#name", "Alicia", "vA")), path)
     } {
       MergeLake.append(df(("b#name", "Bobby", "vB")), path)
@@ -94,7 +83,7 @@ class MergeLakeRaceSpec extends AnyFunSuite {
     MergeLake.append(df(("b#name", "Bobby", "v2")), path)
     // the compact stages its manifest (after the re-read that would
     // have caught an EARLIER append), then the append commits first
-    val e = race {
+    val e = Failpoint.race {
       MergeLake.compact(spark, path): Unit
     } {
       MergeLake.append(df(("d#name", "Dan", "v3")), path): Unit

@@ -1,5 +1,6 @@
 package graft.store
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -73,5 +74,53 @@ class RefIndexSpec extends AnyFunSuite {
       Set(("x", "b"), ("y", "b"), ("z", "a")))
     assert(pairs(RefIndex.referrers(spark, idxP,
       Seq("z", "y").toDF("id"))) === Set(("z", "a"), ("y", "b")))
+  }
+
+  private def freshIndex(prefix: String): (String, String) = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val (lakeP, idxP) = (s"$root/lake", s"$root/refidx")
+    MergeLake.init(stmts(("a", "entity", "x", "d0")), lakeP,
+      bucketBy = "canonical_id")
+    RefIndex.init(spark, idxP, lakeP)
+    (lakeP, idxP)
+  }
+
+  test("maintain trims the refidx log to the retention horizon") {
+    val (lakeP, idxP) = freshIndex("refidx-log")
+    for (i <- 1 to 10) {
+      MergeLake.append(stmts((s"n$i", "entity", "x", s"d$i")), lakeP)
+      RefIndex.refresh(spark, idxP, lakeP, Seq(s"n$i"), s"d$i")
+    }
+    val root = new Path(idxP)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a crashed commit's staged file
+    fs.create(new Path(root, "refidx-00000011.tmp-crashed")).close()
+    RefIndex.maintain(spark, idxP)
+    val names = fs.listStatus(root).map(_.getPath.getName).toSeq
+    assert(names.count(_.matches("refidx-[0-9]{8}")) <=
+      ManifestLog.retained, s"refidx log not trimmed: $names")
+    assert(!names.exists(_.contains(".tmp-")), s"stray tmp kept: $names")
+    assert(RefIndex.readManifest(spark, idxP).version === 10)
+    assert(pairs(RefIndex.postings(spark, idxP)) ===
+      (0 to 10).map(i => ("x", if (i == 0) "a" else s"n$i")).toSet)
+  }
+
+  test("a refresh racing another refresh: loser fails loudly, retry lands") {
+    val (lakeP, idxP) = freshIndex("refidx-race")
+    MergeLake.append(stmts(("b", "entity", "y", "d1")), lakeP)
+    def refresh(): Unit = RefIndex.refresh(spark, idxP, lakeP, Seq("b"), "d1")
+    val e = Failpoint.race(refresh())(refresh())
+    assert(e.getMessage.contains("lost a race"),
+      s"loser must fail loudly, got: ${e.getMessage}")
+    val synced = Set(("x", "a"), ("y", "b"))
+    assert(pairs(RefIndex.postings(spark, idxP)) === synced)
+    assert(RefIndex.readManifest(spark, idxP).stmtVersion ===
+      MergeLake.currentVersion(spark, lakeP))
+    // the retry finds the batch already synced; the next one lands
+    refresh()
+    assert(pairs(RefIndex.postings(spark, idxP)) === synced)
+    MergeLake.append(stmts(("c", "entity", "y", "d2")), lakeP)
+    RefIndex.refresh(spark, idxP, lakeP, Seq("c"), "d2")
+    assert(pairs(RefIndex.postings(spark, idxP)) === synced + (("y", "c")))
   }
 }
