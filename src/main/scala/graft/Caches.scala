@@ -178,9 +178,14 @@ object Caches {
       () => multimodal.Multimodal.ahashSigsCk(s, d),
       () => textanalysis.Curation.crossdocGramsCk(s, d),
       () => enrich.ProposeQueries.scaffoldCk(s, d),
-      // publishes the merge-demo lake if absent (IndexLake.stored, the
-      // same _SUCCESS-gated publish as every parquet artifact)
+      // the four scenario lakes: each publishes its init/refresh/
+      // compact sequence if absent (IndexLake.stored, the same
+      // _SUCCESS-gated publish as every parquet artifact), so no timed
+      // query pays it
       () => store.StoreQueries.mergeQ(s, d),
+      () => store.StoreQueries.refIndexAddQ(s, d),
+      () => blocker.BlockerQueries.indexAddQ(s, d),
+      () => search.Search.indexAddQ(s, d),
       () => matching.MatchingQueries.analysisCk(s, d),
       () => textanalysis.Bpe.trainedMergesCk(s, d),
       () => textanalysis.Classifier.modelCk(s, d),

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * listener counting jobs, completed stages, shuffle bytes written and
   * the largest single-stage write. [[lap]] returns the deltas since the
   * previous lap (or since [[Profile.attach]]), so a driver brackets each
-  * stage it reports with laps instead of keeping running totals.
+  * stage it reports with laps instead of keeping running totals;
+  * [[total]] still reports the whole run since attach.
   *
   * Listener events arrive asynchronously: `lap` first waits (at most
   * [[Profile.SettleMs]]) until every job the listener has seen start
@@ -23,11 +24,12 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
   private val ended = new AtomicLong
   private val stages = new AtomicLong
   private val written = new AtomicLong
-  private var peak = 0L
+  private var peak, allPeak = 0L
   private val infos =
     new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
   private var lastJobs, lastStages, lastWritten = 0L
-  private var lastT = System.nanoTime()
+  private val attachedT = System.nanoTime()
+  private var lastT = attachedT
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
     started.incrementAndGet()
@@ -39,14 +41,18 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
     val w = e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
     written.addAndGet(w)
     stages.incrementAndGet()
-    synchronized { if (w > peak) peak = w }
+    synchronized { if (w > peak) peak = w; if (w > allPeak) allPeak = w }
     if (keepStages) infos.add(e.stageInfo)
   }
 
-  def lap(): Lap = {
+  private def settle(): Unit = {
     val deadline = System.nanoTime() + Profile.SettleMs * 1000000L
     while (ended.get < started.get && System.nanoTime() < deadline)
       Thread.sleep(5)
+  }
+
+  def lap(): Lap = {
+    settle()
     synchronized {
       val now = System.nanoTime()
       val (j, st, w) = (started.get, stages.get, written.get)
@@ -57,6 +63,17 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
       lastT = now; lastJobs = j; lastStages = st; lastWritten = w
       peak = 0L
       l
+    }
+  }
+
+  /** Everything since [[Profile.attach]], whatever laps were taken in
+    * between: its wall clock, counts, shuffle bytes and largest stage.
+    */
+  def total(): Lap = {
+    settle()
+    synchronized {
+      Lap((System.nanoTime() - attachedT) / 1e9, started.get, stages.get,
+        written.get, allPeak, Vector.empty)
     }
   }
 

@@ -121,11 +121,4 @@ object EnricherConfigs {
       algorithm = algorithm, cutoff = cutoff,
       stripNamespace = cfg.stripNamespace)
   }
-
-  def makeNominatim(cfg: EnricherConfig,
-      gazetteer: DataFrame): NominatimEnricher = {
-    require(cfg.clazz == "NominatimEnricher",
-      s"Invalid enricher: '${cfg.tpe}' is not a nominatim config")
-    new NominatimEnricher(gazetteer)
-  }
 }

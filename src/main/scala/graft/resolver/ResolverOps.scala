@@ -144,15 +144,6 @@ object ResolverOps {
         col("a")(5).as("created_at"),
         lit(null).cast("string").as("deleted_at"))
 
-  /** Candidate ranking for human review (`resolver/resolver.py:306-315`):
-    * live suggestions ordered score-descending, nulls last.
-    */
-  def rankSuggestions(edges: DataFrame, limit: Int = 5000): DataFrame =
-    live(edges).filter(col("judgement") === NoJudgement)
-      .orderBy(col("score").desc_nulls_last, col("target").asc,
-        col("source").asc)
-      .limit(limit)
-
   /** Conflicting-match report (`conflicting_match.py:14-47`): subjects
     * suggested against two candidates that are negatively decided
     * against each other.

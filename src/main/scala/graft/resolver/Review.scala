@@ -110,14 +110,6 @@ object Review {
     else own.iterator.map(a =>
       other.iterator.map(b => typeCompare(tpe, a, b)).max).max)
 
-  /** Review style class of a similarity — the TUI's color thresholds
-    * (`tui/comparison.py:36-40`): > 0.95 green ("strong"), > 0.7
-    * orange ("close"), else default.
-    */
-  def simClass(sim: Column): Column =
-    when(sim > 0.95, "strong").when(sim > 0.7, "close")
-      .otherwise("none")
-
   /** `render_comparison` as data (`tui/comparison.py:47-84`): one row
     * per (pair, prop) with both sides' sorted values, the best
     * same-type similarity per side, and the display weight. Property

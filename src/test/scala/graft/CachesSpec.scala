@@ -50,7 +50,10 @@ class CachesSpec extends AnyFunSuite {
       val fp = IndexLake.fingerprint(dir)
       val names = Seq("blocker_entries", "blocker_tf", "resolver_scores",
         "wd_snaks", "ivf_centroids", "pq_codebook", "pq_codes",
-        "near_banded", "fp_sets", "fp_pos", "bpe_merges")
+        "near_banded", "fp_sets", "fp_pos", "bpe_merges",
+        // the four scenario lakes, so no timed query builds one
+        "q_store_merge", "q_blk_index_add", "q_ref_index_add",
+        "q_search_index_add")
       for (n <- names)
         assert(Files.exists(Paths.get(tmp, fp, n, "_SUCCESS")),
           s"artifact $n not published")

@@ -14,7 +14,8 @@ import graft.{Profile, SparkSpec}
   * no second session builder or listener appears in `src/main`. Every
   * Hadoop rename — the commit point of a stored state — sits in one of
   * the two publish routines: [[graft.store.ManifestLog]]'s commit and
-  * [[graft.IndexLake]]'s publish.
+  * [[graft.IndexLake]]'s publish. [[graft.Soak]] times through the
+  * profiler and formats no float by hand.
   */
 class SessionSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -37,6 +38,10 @@ class SessionSpec extends AnyFunSuite {
       assert(l.stageInfos.isEmpty) // not attached with keepStages
       val idle = p.lap()
       assert((idle.jobs, idle.stages, idle.shuffleBytes) === ((0L, 0L, 0L)))
+      // the since-attach totals ignore the laps taken in between
+      val t = p.total()
+      assert((t.jobs, t.shuffleBytes, t.peakStageBytes) ===
+        ((l.jobs, l.shuffleBytes, l.peakStageBytes)))
     } finally spark.sparkContext.removeSparkListener(p)
   }
 
@@ -59,6 +64,12 @@ class SessionSpec extends AnyFunSuite {
     assert(holders("extends SparkListener") ===
       Map("graft/Profile.scala" -> 1))
     assert(holders("new SparkListener").isEmpty)
+  }
+
+  test("Soak times through Profile and renders through its one writer") {
+    val soak = Files.readString(root.resolve("graft/Soak.scala"))
+    assert(!soak.contains("System.nanoTime"))
+    assert("%\\.\\d+f".r.findFirstIn(soak).isEmpty)
   }
 
   test("src/main renames only in the manifest log and the IndexLake publish") {
