@@ -13,7 +13,8 @@ object BlockerQueries {
 
   val cfg: Blocker.Config = Blocker.Config()
 
-  private def compatDf(s: SparkSession): DataFrame = {
+  /** The star schema's compatible-schema pairs, as `(ls, rs)`. */
+  private[graft] def compatDf(s: SparkSession): DataFrame = {
     import s.implicits._
     StarStatements.compat.toDF("ls", "rs")
   }

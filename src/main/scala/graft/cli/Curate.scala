@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.dedup.DedupQueries
 import graft.textanalysis.{Curation, LangModel, TextAnalysis}
 
-/** `curate` — the end-to-end training-corpus curation pipeline as one
-  * spark-submit main, composing the library's LLM-data operators the
-  * way `DedupeMain` composes the entity operators:
+/** The end-to-end training-corpus curation pipeline behind `nk curate`,
+  * composing the library's LLM-data operators the way `nk dedupe`
+  * composes the entity operators:
   *
   *   1. exact dedup        (md5(text) groups, min-doc_id survivor)
   *   2. quality gate       (composite heuristic, `--min-quality`)
@@ -42,7 +42,7 @@ import graft.textanalysis.{Curation, LangModel, TextAnalysis}
   * the report byte-for-byte.
   *
   * {{{
-  *   spark-submit --class graft.cli.CurateMain graft.jar \
+  *   spark-submit --class graft.cli.Nk graft.jar curate \
   *     documents.parquet /out/curated --min-quality 0.3 --min-logp -12
   * }}}
   */
@@ -134,26 +134,5 @@ object CurateMain {
       (curated, Report(input, nExact, nUnscoreable, nQual, nLm, nNear,
         Curation.ShuffleShards, nWindows))
     } finally held.release()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val (pos, flags) = CliArgs.parse(args)
-    require(pos.length == 2, "usage: curate <documents.parquet> <outDir>")
-    val spark = CliArgs.session("curate")
-    val minQuality = flags.getOrElse("min-quality", "0.3").toDouble
-    val minLogp = flags.getOrElse("min-logp", "-12.0").toDouble
-    val (curated, report) =
-      run(spark, spark.read.parquet(pos.head), minQuality, minLogp)
-    curated.write.mode("overwrite").partitionBy("shard")
-      .parquet(s"${pos(1)}/corpus")
-    // Hadoop FS, not java.nio: outDir may be hdfs:// or s3:// under
-    // spark-submit — both outputs must honor the same scheme
-    val reportPath = new org.apache.hadoop.fs.Path(pos(1), "report.json")
-    val fs = reportPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(reportPath, true)
-    try os.write(report.json.getBytes("UTF-8")) finally os.close()
-    // NO spark.stop(): the CLI convention here (and what keeps these
-    // mains drivable from the shared test session) — spark-submit
-    // tears the JVM down anyway
   }
 }

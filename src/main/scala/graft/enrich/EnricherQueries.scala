@@ -19,11 +19,6 @@ import graft.store.StarStatements
   */
 object EnricherQueries {
 
-  private def compatDf(s: SparkSession): DataFrame = {
-    import s.implicits._
-    StarStatements.compat.toDF("ls", "rs")
-  }
-
   private val cfg = BlockerQueries.cfg
 
   def candidatesQ(s: SparkSession, d: String): DataFrame = {
@@ -31,7 +26,7 @@ object EnricherQueries {
     val topk = Blocker.matchTopK(
       t.filter(col("id").startsWith("c:")),
       t.filter(col("id").startsWith("s:")),
-      compatDf(s), cfg)
+      BlockerQueries.compatDf(s), cfg)
     // expand pull-size: restrict the mirror statements to matched
     // candidate ids BEFORE counting — only matched ids shuffle, never
     // one row per mirror entity

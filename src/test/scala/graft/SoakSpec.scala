@@ -12,20 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the session alive with no listener of its own behind.
   */
 class SoakSpec extends AnyFunSuite {
-  import SparkSpec.spark
+  import SparkSpec.{listeners, spark}
 
   private val sf = "/root/testdata/sf0.001"
-
-  /** Listeners on the session's bus (`listenerBus` is Spark-private to
-    * Scala callers, public in bytecode).
-    */
-  private def listeners: Seq[String] = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("listeners").invoke(bus)
-      .asInstanceOf[java.util.List[AnyRef]].asScala.map(_.getClass.getName)
-      .toSeq
-  }
 
   private def soak(args: String*): JsonNode = {
     val prev = Locale.getDefault

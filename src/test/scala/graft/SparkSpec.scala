@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for the test suite. */
@@ -17,5 +19,16 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Listeners on the session's bus (`listenerBus` is Spark-private to
+    * Scala callers, public in bytecode).
+    */
+  def listeners: Seq[String] = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("listeners").invoke(bus)
+      .asInstanceOf[java.util.List[AnyRef]].asScala.map(_.getClass.getName)
+      .toSeq
   }
 }

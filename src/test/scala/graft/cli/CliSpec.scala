@@ -7,9 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{ReferenceFiles, SparkSpec}
 
-/** The operational CLI surface, driven through the real `main` entry
-  * points (the sessions resolve to the shared test session via
-  * getOrCreate): the donations dedupe must run as a command, 474 in →
+/** The operational CLI surface, driven through [[Nk.run]] on the
+  * shared test session: the donations dedupe must run as a command, 474 in →
   * fewer out with the Johanna Quandt duplicate merged; xref + apply +
   * sorted-aggregate must compose to the same result.
   */
@@ -22,7 +21,7 @@ class CliSpec extends AnyFunSuite {
 
   test("dedupe main: donations ijson in, merged ijson out") {
     val out = tmp("dedupe")
-    DedupeMain.main(Array(fixture, out, "--dataset", "donations"))
+    Nk.run(spark, Array("dedupe", fixture, out, "--dataset", "donations"))
     val lines = spark.read.text(out)
     val n = lines.count()
     assert(n > 0 && n < 474, s"expected <474 merged entities, got $n")
@@ -37,14 +36,14 @@ class CliSpec extends AnyFunSuite {
 
   test("xref + apply + sorted-aggregate compose to the dedupe result") {
     val xrefOut = tmp("xref")
-    XrefMain.main(Array(fixture, xrefOut, "--dataset", "donations",
+    Nk.run(spark, Array("xref", fixture, xrefOut, "--dataset", "donations",
       "--algorithm", "regression-v1", "--auto-threshold", "0.5"))
     val merges = spark.read.parquet(s"$xrefOut/merges")
     assert(merges.count() > 0)
     assert(spark.read.parquet(s"$xrefOut/suggestions").count() > 0)
 
     val applyOut = tmp("apply")
-    ApplyMain.main(Array(fixture, applyOut, "--dataset", "donations",
+    Nk.run(spark, Array("apply", fixture, applyOut, "--dataset", "donations",
       "--edges", s"$xrefOut/merges"))
     val canonical = spark.read.parquet(applyOut)
     // all 474 source entities survive, under fewer canonical ids
@@ -52,7 +51,7 @@ class CliSpec extends AnyFunSuite {
     assert(canonical.select("canonical_id").distinct().count() < 474)
 
     val aggOut = tmp("agg")
-    SortedAggregateMain.main(Array(applyOut, aggOut))
+    Nk.run(spark, Array("sorted-aggregate", applyOut, aggOut))
     val n = spark.read.text(aggOut).count()
     assert(n === canonical.select("canonical_id").distinct().count())
   }
@@ -70,7 +69,7 @@ class CliSpec extends AnyFunSuite {
     stmts.filter(col("canonical_id") =!= jqId)
       .write.mode("overwrite").parquet(s"$qDir/index")
     val out = tmp("match")
-    MatchMain.main(Array(s"$qDir/query", s"$qDir/index", out))
+    Nk.run(spark, Array("match", s"$qDir/query", s"$qDir/index", out))
     val top = spark.read.parquet(out)
       .orderBy(col("match_score").desc).head
     val fjqId = captions.filter(col("caption") === "Frau Johanna Quandt")
@@ -91,7 +90,7 @@ class CliSpec extends AnyFunSuite {
     stmts.filter(col("canonical_id") =!= jqId)
       .write.mode("overwrite").parquet(s"$dir/mirror")
     val out = tmp("enrich")
-    EnrichMain.main(Array(s"$dir/query", s"$dir/mirror", out,
+    Nk.run(spark, Array("enrich", s"$dir/query", s"$dir/mirror", out,
       "--cutoff", "0.5"))
     assert(spark.read.parquet(s"$out/candidates").count() > 0)
     val pulled = spark.read.parquet(s"$out/statements")
@@ -107,7 +106,7 @@ class CliSpec extends AnyFunSuite {
         "strip_namespace: false\n" +
         "cache_days: 30\n").getBytes("UTF-8"))
     val out2 = tmp("enrich_cfg")
-    EnrichMain.main(Array(s"$dir/query", s"$dir/mirror", out2,
+    Nk.run(spark, Array("enrich", s"$dir/query", s"$dir/mirror", out2,
       "--cutoff", "0.5", "--config", cfgPath))
     val cands2 = spark.read.parquet(s"$out2/candidates")
     assert(cands2.count() > 0)
@@ -128,13 +127,13 @@ class CliSpec extends AnyFunSuite {
     val dir = tmp("res").stripSuffix("/out")
     edges.write.mode("overwrite").parquet(s"$dir/edges")
 
-    ResolverDumpMain.main(Array(s"$dir/edges", s"$dir/dump"))
-    ResolverLoadMain.main(Array(s"$dir/dump", s"$dir/loaded"))
+    Nk.run(spark, Array("dump-resolver", s"$dir/edges", s"$dir/dump"))
+    Nk.run(spark, Array("load-resolver", s"$dir/dump", s"$dir/loaded"))
     val rt = spark.read.parquet(s"$dir/loaded")
     assert(rt.count() === 3)
     assert(rt.filter(col("judgement") === "positive").count() === 2)
 
-    PruneMain.main(Array(s"$dir/edges", s"$dir/pruned"))
+    Nk.run(spark, Array("prune", s"$dir/edges", s"$dir/pruned"))
     val pruned = spark.read.parquet(s"$dir/pruned")
     // the suggestion between two co-clustered members is redundant
     assert(pruned.filter(col("judgement") === "suggested").count() === 0)
@@ -148,10 +147,10 @@ class CliSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/edges")
     Seq(("c", "a")).toDF("src", "dst")
       .write.mode("overwrite").parquet(s"$dir/delta")
-    ResolveStateMain.main(Array("init", s"$dir/edges", s"$dir/state"))
-    ResolveStateMain.main(
-      Array("add", s"$dir/delta", s"$dir/state", "--ts", "t1"))
-    ResolveStateMain.main(Array("state", s"$dir/state", s"$dir/out"))
+    Nk.run(spark, Array("resolve-state", "init", s"$dir/edges", s"$dir/state"))
+    Nk.run(spark,
+      Array("resolve-state", "add", s"$dir/delta", s"$dir/state", "--ts", "t1"))
+    Nk.run(spark, Array("resolve-state", "state", s"$dir/state", s"$dir/out"))
     val got = spark.read.parquet(s"$dir/out").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     // the delta merged {b,c} with new vertex 'a' (the new min label);
@@ -162,7 +161,7 @@ class CliSpec extends AnyFunSuite {
 
   test("make-sortable emits id-ordered ijson that aggregates cleanly") {
     val out = tmp("sortable")
-    MakeSortableMain.main(Array(fixture, out, "--dataset", "donations"))
+    Nk.run(spark, Array("make-sortable", fixture, out, "--dataset", "donations"))
     val lines = spark.read.text(out).collect().map(_.getString(0))
     assert(lines.length === 474)
     assert(lines.toSeq === lines.toSeq.sorted)
@@ -183,7 +182,7 @@ class CliSpec extends AnyFunSuite {
     Seq((jqId, fjqId, 1.0), (jqId, sklId, 0.0), (fjqId, sklId, 0.0))
       .toDF("lid", "rid", "label")
       .write.mode("overwrite").parquet(s"$dir/pairs")
-    TrainMain.main(Array(s"$dir/pairs", fixture, s"$dir/model.json",
+    Nk.run(spark, Array("train", s"$dir/pairs", fixture, s"$dir/model.json",
       "--epochs", "30"))
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/model.json")), "UTF-8")
@@ -213,7 +212,7 @@ class CliSpec extends AnyFunSuite {
   test("reconcile main runs the write-back loop from files") {
     val dir = tmp("reconcile").stripSuffix("/out")
     val (entities, snaks) = writeWriteBackFixture(dir)
-    ReconcileMain.main(Array(entities, snaks, s"$dir/out",
+    Nk.run(spark, Array("reconcile", entities, snaks, s"$dir/out",
       "--retrieved", "2024-06-01"))
     val decisions = spark.read.parquet(s"$dir/out/decisions").collect()
       .map(r => r.getAs[String]("entity_id") ->
@@ -239,7 +238,7 @@ class CliSpec extends AnyFunSuite {
     val (entities, snaks) = writeWriteBackFixture(dir)
     Seq(("p1", "Q1")).toDF("entity_id", "qid")
       .write.mode("overwrite").parquet(s"$dir/pairs")
-    ProposeMain.main(Array(entities, snaks, s"$dir/pairs",
+    Nk.run(spark, Array("propose", entities, snaks, s"$dir/pairs",
       s"$dir/batch.qs", "--retrieved", "2024-06-01",
       "--create-unmatched", "true"))
     val qs = spark.read.text(s"$dir/batch.qs")

@@ -11,7 +11,7 @@ import graft.SparkSpec
 import graft.dedup.DedupQueries
 import graft.textanalysis.{Curation, LmReference, TextAnalysis}
 
-/** The corpus-curation pipeline driven through its real main: stage
+/** The corpus-curation pipeline driven through `nk curate`: stage
   * counts are monotone, the output corpus matches the report, survivors
   * are deterministic, and re-running reproduces the report exactly.
   * [[CurateSpec.reference]] keeps the join-per-stage form of the
@@ -24,7 +24,7 @@ class CurateSpec extends AnyFunSuite {
 
   test("curate main: gated, deduped, sharded corpus with exact report") {
     val out = Files.createTempDirectory("curate").toString + "/o"
-    CurateMain.main(Array(docsPath, out))
+    Nk.run(spark, Array("curate", docsPath, out))
     val report = Files.readString(Paths.get(s"$out/report.json"))
     val corpus = spark.read.parquet(s"$out/corpus")
     val counts = "\\d+".r.findAllIn(report).map(_.toLong).toSeq
@@ -44,7 +44,7 @@ class CurateSpec extends AnyFunSuite {
     assert(corpus.select(col("shard")).distinct().count() > 1)
     // deterministic: a second run reproduces the report byte-for-byte
     val out2 = Files.createTempDirectory("curate2").toString + "/o"
-    CurateMain.main(Array(docsPath, out2))
+    Nk.run(spark, Array("curate", docsPath, out2))
     assert(Files.readString(Paths.get(s"$out2/report.json")) === report)
   }
 

@@ -1,0 +1,149 @@
+package graft.cli
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
+import graft.xref.XrefCorpus
+
+/** [[Nk]] on the suite's shared session, over the in-repo xref corpus:
+  * the composed xref → apply → sorted-aggregate path equals `dedupe`,
+  * bad arguments fail with the verb's usage before any session is
+  * used, `merge-lake` leaves the session alive with its listeners, and
+  * `name-bench`, `bench-checks` and `lexicon-bench` never ask for a
+  * session.
+  */
+class NkSpec extends AnyFunSuite {
+  import SparkSpec.{listeners, spark}
+
+  /** A session thunk for calls that must never use one. */
+  private def noSession: SparkSession = fail("the verb used the session")
+
+  private lazy val dir = {
+    val d = Files.createTempDirectory("nk").toString
+    XrefCorpus.statements(spark).write.parquet(s"$d/stmts")
+    d
+  }
+
+  /** ijson entities as (id, schema, prop → sorted values). */
+  private def entities(out: String): Set[(String, String, Map[String, Seq[String]])] = {
+    val m = new ObjectMapper()
+    spark.read.text(out).collect().map { r =>
+      val e = m.readTree(r.getString(0))
+      val props = e.get("properties").fields.asScala.map { f =>
+        f.getKey -> f.getValue.elements.asScala.map(_.asText).toSeq.sorted
+      }.toMap
+      (e.get("id").asText, e.get("schema").asText, props)
+    }.toSet
+  }
+
+  test("xref + apply + sorted-aggregate give the dedupe entities") {
+    val algo = Seq("--algorithm", "logic-v1", "--auto-threshold", "0.6")
+    assert(Nk.run(spark, Array("xref", s"$dir/stmts", s"$dir/xref") ++ algo) ===
+      s"[xref] wrote $dir/xref/merges, $dir/xref/suggestions and $dir/xref/edges")
+    assert(spark.read.parquet(s"$dir/xref/merges").count() > 0)
+    Nk.run(spark, Array("apply", s"$dir/stmts", s"$dir/canon",
+      "--edges", s"$dir/xref/merges"))
+    Nk.run(spark, Array("sorted-aggregate", s"$dir/canon", s"$dir/agg"))
+
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Nk.run(spark, Array("dedupe", s"$dir/stmts", s"$dir/dedupe") ++ algo)
+    assert(sc.getPersistentRDDs.keySet.toSet === before,
+      "dedupe left its input persisted")
+
+    val composed = entities(s"$dir/agg")
+    assert(composed === entities(s"$dir/dedupe"))
+    val sources = spark.read.parquet(s"$dir/stmts")
+      .select("canonical_id").distinct().count()
+    assert(composed.size < sources, "no entities merged")
+  }
+
+  test("bad arguments throw the verb's usage before any session use") {
+    def usageOf(args: String*): String =
+      intercept[IllegalArgumentException](Nk.run(noSession, args.toArray))
+        .getMessage
+    val xrefUsage = "usage: nk xref <statements> <out> [--dataset NAME]"
+    assert(usageOf("xreff", "in", "out").contains(Nk.Usage))
+    assert(usageOf("xref", "in").contains(xrefUsage))
+    val typo = usageOf("xref", "in", "out", "--auto-treshold", "0.7")
+    assert(typo.contains("--auto-treshold") && typo.contains(xrefUsage))
+    assert(usageOf("xref", "in", "out", "--auto-threshold").contains(xrefUsage))
+    assert(usageOf("merge-lake", "grow", "lake")
+      .contains("usage: nk merge-lake init <statements> <lakeDir>"))
+    assert(usageOf("apply", "in", "out").contains("apply needs --edges"))
+
+    // a switch never takes the next token as its value
+    val call = Nk.parse(Array("loop-stream", "run", "--drain", "in", "root"),
+      noSession)
+    assert(call.cmd.name === "loop-stream run")
+    assert(call.pos === Seq("in", "root"))
+    assert(call.flags === Map("drain" -> "true"))
+
+    assert(Nk.run(noSession, Array()) === Nk.Usage)
+    assert(Nk.run(noSession, Array("--help")) === Nk.Usage)
+    Nk.Table.foreach(c => assert(Nk.Usage.contains(c.usage)))
+  }
+
+  test("merge-lake verbs leave the shared session alive with its listeners") {
+    val stmts = spark.read.parquet(s"$dir/stmts")
+    stmts.filter(col("prop") === "name")
+      .withColumn("value", upper(col("value")))
+      .write.parquet(s"$dir/delta")
+    spark.range(1).count()
+    val before = listeners
+    val lake = s"$dir/lake"
+    assert(Nk.run(spark, Array("merge-lake", "init", s"$dir/stmts", lake)) ===
+      s"[merge-lake] initialized $lake")
+    assert(Nk.run(spark, Array("merge-lake", "append", s"$dir/delta", lake))
+      .startsWith("[merge-lake] appended delta"))
+    assert(Nk.run(spark, Array("merge-lake", "compact", lake))
+      .startsWith("[merge-lake] compacted"))
+    Nk.run(spark, Array("merge-lake", "snapshot", lake, s"$dir/snap"))
+    assert(!spark.sparkContext.isStopped)
+    assert(listeners === before)
+    val snap = spark.read.parquet(s"$dir/snap")
+    assert(snap.count() === stmts.count())
+    assert(snap.filter(col("prop") === "name")
+      .filter(col("value") =!= upper(col("value"))).count() === 0)
+  }
+
+  test("name-bench, bench-checks and lexicon-bench use no session") {
+    val cases = s"$dir/cases.csv"
+    Files.write(Paths.get(cases), Seq("schema,name1,name2,is_match",
+      "Person,Johanna Quandt,Johanna Quandt,true",
+      "Person,Johanna Quandt,Stefan Quandt,false").asJava)
+    val out = Nk.run(noSession, Array("name-bench", cases, "--runs", "1",
+      "--comparator", "logic-v2"))
+    assert(out.linesIterator.next() ===
+      "[name-bench] 2 cases, runs=1, threshold=0.7")
+    assert(out.contains("[name-bench] logic-v2"))
+    // the reference corpora are absent here: each fails on its file,
+    // not on a session
+    for (args <- Seq(Array("bench-checks", s"$dir/absent.yml"),
+        Array("lexicon-bench", s"$dir/absent.csv", s"$dir/absent.yml")))
+      intercept[java.nio.file.NoSuchFileException](Nk.run(noSession, args))
+  }
+
+  test("scoring-loss returns its table as the report") {
+    val pairs = s"$dir/pairs.json"
+    def entity(id: String, name: String) = s"""{"id":"$id",""" +
+      s""""schema":"Person","properties":{"name":["$name"]},"datasets":[]}"""
+    def pair(l: String, r: String, judgement: String) =
+      s"""{"left":$l,"right":$r,"judgement":"$judgement","weight":0.0}"""
+    Files.write(Paths.get(pairs), Seq(
+      pair(entity("a", "Vladimir Petrov"), entity("b", "Vladimir Petrov"),
+        "positive"),
+      pair(entity("c", "Maria Lopez"), entity("d", "John Smith"),
+        "negative")).asJava)
+    val table = Nk.run(spark, Array("scoring-loss", pairs, "0.7"))
+    assert(table.linesIterator.exists(_.contains("mean_loss")))
+    assert(table.contains("|logic-v2"))
+  }
+}

@@ -15,7 +15,8 @@ import graft.{Profile, SparkSpec}
   * Hadoop rename — the commit point of a stored state — sits in one of
   * the two publish routines: [[graft.store.ManifestLog]]'s commit and
   * [[graft.IndexLake]]'s publish. [[graft.Soak]] times through the
-  * profiler and formats no float by hand.
+  * profiler and formats no float by hand, and the CLI's one `main` and
+  * one session stop are [[Nk]]'s.
   */
 class SessionSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -64,6 +65,12 @@ class SessionSpec extends AnyFunSuite {
     assert(holders("extends SparkListener") ===
       Map("graft/Profile.scala" -> 1))
     assert(holders("new SparkListener").isEmpty)
+  }
+
+  test("graft/cli has one main and one session stop, both in Nk") {
+    def inCli(needle: String) = holders(needle).filter(_._1.startsWith("graft/cli/"))
+    assert(inCli("def main(") === Map("graft/cli/Nk.scala" -> 1))
+    assert(inCli(".stop()") === Map("graft/cli/Nk.scala" -> 1))
   }
 
   test("Soak times through Profile and renders through its one writer") {

@@ -9,7 +9,7 @@ import graft.SparkSpec
 import graft.blocker.{Blocker, EntityTokenizer}
 import graft.xref.Xref
 
-/** WatchMatchMain end-to-end: a corpus statement table on disk, a
+/** `nk watch-match` end-to-end: a corpus statement table on disk, a
   * watch directory with one JSON-lines batch, one available-now drain —
   * the Parquet output must equal the batch matchTopK ranking.
   */
@@ -31,7 +31,7 @@ class WatchMatchSpec extends AnyFunSuite {
         """"prop_type":"name","value":"Johanna Quandt"}""" + "\n")
         .getBytes("UTF-8"))
 
-    WatchMatchMain.main(Array(
+    Nk.run(spark, Array("watch-match",
       s"$tmp/corpus.parquet", s"$tmp/watch", s"$tmp/out"))
 
     val got = spark.read.parquet(s"$tmp/out").collect()

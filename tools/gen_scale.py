@@ -6,7 +6,9 @@ Usage: python3 tools/gen_scale.py <srcDir> <dstDir> <replicas>
 Replica r gets:
   - every *key / id column offset by r * 100_000_000 (keeps each
     replica's modular-arithmetic distributions uniform; nation/region
-    dimension tables are copied as-is);
+    dimension tables are copied as-is). A source key of 100_000_000 or
+    more would collide across replicas, so the script exits non-zero,
+    naming the table and column, before it writes anything;
   - document text with a per-replica token suffix (replica 0 keeps the
     original) so cross-replica token overlap is ZERO: within-replica
     near-dup/selectivity structure is preserved exactly, and the corpus
@@ -49,11 +51,30 @@ def signs(r: int, dims: int) -> list:
     return out
 
 
+def colliding_keys(con, src):
+    """(table, column, max) of every key column whose values reach OFF:
+    replica r adds r * OFF, so such a key would collide across replicas."""
+    out = []
+    for t, keys in KEYS.items():
+        maxes = con.sql(
+            f"select {', '.join(f'max({k})' for k in keys)} "
+            f"from '{src}/{t}.parquet'").fetchone()
+        out += [(t, k, m) for k, m in zip(keys, maxes)
+                if m is not None and m >= OFF]
+    return out
+
+
 def main():
     src, dst, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
     import os
-    os.makedirs(dst, exist_ok=True)
     con = duckdb.connect()
+    bad = colliding_keys(con, src)
+    for t, k, m in bad:
+        print(f"gen_scale: {t}.{k} reaches {m} >= {OFF}; replicas would "
+              f"collide", file=sys.stderr)
+    if bad:
+        sys.exit(1)
+    os.makedirs(dst, exist_ok=True)
     dims = con.sql(
         f"select len(embedding) from '{src}/embeddings.parquet' limit 1"
     ).fetchone()[0]
