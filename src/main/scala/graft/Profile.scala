@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one stage profiler of the drivers (Soak, tools/JobCount): a
   * listener counting jobs, completed stages, shuffle bytes written and
-  * the largest single-stage write. [[lap]] returns the deltas since the
+  * the largest single-stage write, plus the process CPU time and the
+  * number of Janino compiles of generated code (driver and local
+  * executors share the process). [[lap]] returns the deltas since the
   * previous lap (or since [[Profile.attach]]), so a driver brackets each
   * stage it reports with laps instead of keeping running totals;
   * [[total]] still reports the whole run since attach.
@@ -30,6 +32,10 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
   private var lastJobs, lastStages, lastWritten = 0L
   private val attachedT = System.nanoTime()
   private var lastT = attachedT
+  private val attachedCpu = Profile.cpuNanos()
+  private var lastCpu = attachedCpu
+  private val attachedCompiles = Profile.compiles()
+  private var lastCompiles = attachedCompiles
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
     started.incrementAndGet()
@@ -55,25 +61,31 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
     settle()
     synchronized {
       val now = System.nanoTime()
+      val (cpu, cc) = (Profile.cpuNanos(), Profile.compiles())
       val (j, st, w) = (started.get, stages.get, written.get)
       val done = Iterator.continually(infos.poll())
         .takeWhile(_ != null).toVector
       val l = Lap((now - lastT) / 1e9, j - lastJobs, st - lastStages,
-        w - lastWritten, peak, done)
+        w - lastWritten, peak, done, (cpu - lastCpu) / 1e9,
+        cc - lastCompiles)
       lastT = now; lastJobs = j; lastStages = st; lastWritten = w
+      lastCpu = cpu; lastCompiles = cc
       peak = 0L
       l
     }
   }
 
   /** Everything since [[Profile.attach]], whatever laps were taken in
-    * between: its wall clock, counts, shuffle bytes and largest stage.
+    * between: its wall clock, counts, shuffle bytes, largest stage, CPU
+    * and compiles.
     */
   def total(): Lap = {
     settle()
     synchronized {
       Lap((System.nanoTime() - attachedT) / 1e9, started.get, stages.get,
-        written.get, allPeak, Vector.empty)
+        written.get, allPeak, Vector.empty,
+        (Profile.cpuNanos() - attachedCpu) / 1e9,
+        Profile.compiles() - attachedCompiles)
     }
   }
 
@@ -90,14 +102,29 @@ object Profile {
   val SettleMs = 2000L
 
   /** Deltas over one lap; `stageInfos` is filled only for a profiler
-    * attached with `keepStages`.
+    * attached with `keepStages`. `cpuS` is the CPU time of the whole
+    * process (JIT, GC and every other thread included) and `compiles`
+    * the number of generated classes Spark compiled, both counted
+    * process-wide, so concurrent work elsewhere in the JVM is billed
+    * to the lap too.
     */
   final case class Lap(wallSec: Double, jobs: Long, stages: Long,
       shuffleBytes: Long, peakStageBytes: Long,
-      stageInfos: Seq[StageInfo]) {
+      stageInfos: Seq[StageInfo], cpuS: Double, compiles: Long) {
     def shuffleMb: Double = shuffleBytes / 1e6
     def peakStageMb: Double = peakStageBytes / 1e6
   }
+
+  private val os = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  private def cpuNanos(): Long = os.getProcessCpuTime
+
+  /** Janino compiles so far: one histogram sample per compiled class. */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
 
   def attach(s: SparkSession, keepStages: Boolean = false): Profile = {
     val p = new Profile(keepStages)

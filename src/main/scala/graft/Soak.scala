@@ -138,8 +138,8 @@ object Soak {
       (report, curated.count())
     }
     head ++ ListMap("docs" -> nDocs, "out" -> nOut,
-      "report" -> Mapper.readTree(report.json), "wall_sec" -> l.wallSec) ++
-      shuffle
+      "report" -> Mapper.readTree(report.json), "wall_sec" -> l.wallSec,
+      "cpu_sec" -> l.cpuS, "compiles" -> l.compiles) ++ shuffle
   }
 
   private def dedup(r: Soaking): Rec = {
@@ -586,8 +586,8 @@ object Soak {
       (merges.count(), suggestions.count())
     }
     head ++ ListMap("statements" -> nStmts, "entities" -> nEntities,
-      "wall_sec" -> l.wallSec, "merges" -> nMerges,
-      "suggestions" -> nSuggest) ++ shuffle
+      "wall_sec" -> l.wallSec, "cpu_sec" -> l.cpuS, "compiles" -> l.compiles,
+      "merges" -> nMerges, "suggestions" -> nSuggest) ++ shuffle
   }
 
   /** The reference blocker caps with the pair-cost cap scaled by N:

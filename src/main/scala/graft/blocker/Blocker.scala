@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.TextExpressions.lower
+
 /** The blocking stage of the engine: tokenize entities into an inverted
   * index, weight tokens by TF-IDF, eliminate high-cost tokens (dynamic
   * stopwords = the skew guard), and generate candidate duplicate pairs by

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.TextExpressions.{lower, upper}
 import graft.model.Ftm
 
 /** Typed entity tokenizer — the FtM-aware token emission of the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
+import graft.functions.TextExpressions.lower
 
 /** Document deduplication operators for large-scale training-data
   * pipelines: exact (content-hash groupBy), MinHash + LSH banding,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Hashing
+import graft.functions.TextExpressions.lower
 
 /** Driver-facing dedup queries over `documents` (and `part` for exact),
   * each with a DuckDB oracle mirroring the signature math exactly

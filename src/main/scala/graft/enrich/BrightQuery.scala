@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.lower
+
 /** BrightQuery-style legal-entity enricher in mirror form (reference
   * `enrich/brightquery.py:22-191`). The opendata.org legal-entity
   * corpus is mirrored into a table; the per-payload POST + retry

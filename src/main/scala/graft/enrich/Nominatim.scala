@@ -3,6 +3,8 @@ package graft.enrich
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.lower
+
 /** Nominatim-style geocoding enricher in mirror form (reference
   * `enrich/nominatim.py:17-73`): Address entities are geocoded against
   * a mirrored gazetteer table instead of per-address HTTP calls.

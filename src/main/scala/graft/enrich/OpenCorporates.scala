@@ -3,6 +3,7 @@ package graft.enrich
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.lower
 import graft.text.Territories
 
 /** OpenCorporates-style company-registry enricher in mirror form

@@ -3,6 +3,8 @@ package graft.enrich
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.lower
+
 /** OpenFIGI-style securities enricher in mirror form (reference
   * `enrich/openfigi.py:15-128`). OpenFIGI's mapping database is
   * mirrored into a table `(figi, composite_figi, name, isin, ticker,

@@ -3,6 +3,8 @@ package graft.enrich
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.upper
+
 /** PermID-style organization enricher in mirror form (reference
   * `enrich/permid.py:28-204`). The open PermID dataset is mirrored
   * into a table; the reference's batch-CSV record matching becomes a

@@ -3,6 +3,8 @@ package graft.enrich
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.upper
+
 /** Driver-facing PermID query: parts play the mirrored PermID
   * organization table, suppliers the query entities. Exercises the
   * Organization gate, the (name × country) record fan-out with the

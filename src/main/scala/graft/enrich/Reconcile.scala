@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.blocker.Blocker
+import graft.functions.TextExpressions.lower
 import graft.matching.Algorithms
 
 /** The wikidata reconciliation loop in batch form

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExpressions.lower
 import graft.model.Ftm
 
 /** Wikidata claim → FtM statement transform (reference

@@ -1,10 +1,13 @@
 package graft.functions
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, String2StringExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler similarity as a NATIVE Catalyst expression — the
@@ -177,6 +180,68 @@ case class OfacSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Static case-mapping kernels for [[CaseMap]]: exactly what Spark's
+  * UTF8_BINARY `lower`/`upper` compute. With ICU case mappings on (the
+  * `spark.sql.icu.caseMappings.enabled` default) that is the ASCII fast
+  * path, else ICU's `UCharacter` mapping of the string with invalid
+  * UTF-8 replaced; with them off, `UTF8String`'s own JDK mapping.
+  *
+  * Spark reaches the ICU branch through `CollationAwareUTF8String`,
+  * whose static initializer title-cases every code point (1,114,112
+  * ICU word BreakIterators, ~2 s of CPU and a large allocation burst)
+  * on the first `lower`/`upper` of the JVM, although UTF8_BINARY
+  * mapping never reads that table. These kernels call the same
+  * `UCharacter` methods directly and never load that class.
+  */
+object CaseKernels {
+  def lower(v: UTF8String, icu: Boolean): UTF8String =
+    if (!icu) v.toLowerCase
+    else if (v.isFullAscii) v.toLowerCaseAscii
+    else UTF8String.fromString(UCharacter.toLowerCase(v.toValidString))
+
+  def upper(v: UTF8String, icu: Boolean): UTF8String =
+    if (!icu) v.toUpperCase
+    else if (v.isFullAscii) v.toUpperCaseAscii
+    else UTF8String.fromString(UCharacter.toUpperCase(v.toValidString))
+}
+
+/** `lower`/`upper` of a UTF8_BINARY string through [[CaseKernels]].
+  * Its name, SQL text and type rules are those of Spark's `Lower` and
+  * `Upper`, so auto-generated column names and answers do not change;
+  * like them it reads the ICU flag from the session conf when first
+  * evaluated. A collated string fails analysis instead of being mapped
+  * with binary semantics.
+  */
+case class CaseMap(child: Expression, upper: Boolean)
+    extends UnaryExpression with String2StringExpression {
+
+  private lazy val icu: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = if (upper) "upper" else "lower"
+  override protected def flatArguments: Iterator[Any] = Iterator(child)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    super.checkInputDataTypes() match {
+      case TypeCheckResult.TypeCheckSuccess if child.dataType != StringType =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$prettyName maps UTF8_BINARY strings only, not ${child.dataType}")
+      case r => r
+    }
+
+  override def convert(v: UTF8String): UTF8String =
+    if (upper) CaseKernels.upper(v, icu) else CaseKernels.lower(v, icu)
+
+  protected override def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.CaseKernels.$prettyName($c, $icu)")
+
+  protected override def withNewChildInternal(
+      newChild: Expression): Expression = copy(child = newChild)
+}
+
 /** Column-API entry points for the native text expressions. */
 object TextExpressions {
   def jaroWinkler(a: Column, b: Column): Column =
@@ -190,4 +255,12 @@ object TextExpressions {
   def ofacName(a: Column, b: Column): Column =
     Bridge.column(OfacSim(
       Bridge.expression(a), Bridge.expression(b)))
+
+  /** Spark's `lower`, through [[CaseMap]]. */
+  def lower(c: Column): Column =
+    Bridge.column(CaseMap(Bridge.expression(c), upper = false))
+
+  /** Spark's `upper`, through [[CaseMap]]. */
+  def upper(c: Column): Column =
+    Bridge.column(CaseMap(Bridge.expression(c), upper = true))
 }

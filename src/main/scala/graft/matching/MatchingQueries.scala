@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.blocker.BlockerQueries
+import graft.functions.TextExpressions.{lower, upper}
 import graft.store.StarStatements
 
 /** Pair-scoring stage: feature comparators over candidate pairs, composed

@@ -1,5 +1,7 @@
 package graft.text
 
+import java.util.regex.Pattern
+
 /** Pure-Scala name normalization: the engine's stand-in for the
   * fingerprints/rigour cleanup chain the reference wraps in
   * `matching/compat.py:27-59` (lowercase, person-prefix removal, ascii
@@ -197,12 +199,18 @@ object TextNorm {
     */
   private val Apostrophes: Set[Char] = Set('\'', '’', '‘', 'ʻ', 'ʼ', '`', '´')
 
+  // Every regex of the scoring path is compiled once here; a
+  // `String.replaceAll` compiles its pattern on every call.
+  private val Spaces = Pattern.compile("\\s+")
+  private val NonAlnum = Pattern.compile("[^A-Z0-9]")
+
   /** Light cleanup (`clean_name_light`): lowercase, squash whitespace,
     * keep letters/digits/spaces.
     */
   def cleanNameLight(s: String): Option[String] = {
-    val out = s.toLowerCase.filterNot(Apostrophes).map(c =>
-      if (c.isLetterOrDigit) c else ' ').replaceAll("\\s+", " ").trim
+    val spaced = s.toLowerCase.filterNot(Apostrophes).map(c =>
+      if (c.isLetterOrDigit) c else ' ')
+    val out = Spaces.matcher(spaced).replaceAll(" ").trim
     if (out.isEmpty) None else Some(out)
   }
 
@@ -287,13 +295,16 @@ object TextNorm {
   // key replacing first destroys the longer phrase it is part of
   // ("limited" → "ltd" would turn "limited liability company" into
   // "ltd liability co" so the "llc" entry could never fire).
-  private val LegalFormsOrdered: Seq[(String, String)] =
-    LegalForms.toSeq.sortBy { case (k, _) => (-k.length, k) }
+  private val LegalFormsOrdered: Seq[(Pattern, String)] =
+    LegalForms.toSeq.sortBy { case (k, _) => (-k.length, k) }.map {
+      case (long, short) =>
+        Pattern.compile(s"\\b${Pattern.quote(long)}\\b") -> short
+    }
 
   private def replaceLegalForms(s: String): String = {
     var out = s
     for ((long, short) <- LegalFormsOrdered)
-      out = out.replaceAll(s"\\b${java.util.regex.Pattern.quote(long)}\\b", short)
+      out = long.matcher(out).replaceAll(short)
     out
   }
 
@@ -305,7 +316,8 @@ object TextNorm {
     cleanNameAscii(removePersonPrefixes(original.toLowerCase)) match {
       case None => None
       case Some(cleaned) =>
-        val replaced = replaceLegalForms(cleaned).replaceAll("\\s+", " ").trim
+        val replaced =
+          Spaces.matcher(replaceLegalForms(cleaned)).replaceAll(" ").trim
         if (replaced.isEmpty) None else Some(replaced)
     }
 
@@ -391,7 +403,7 @@ object TextNorm {
     * generic arm of `StrictFormat.normalize`).
     */
   def cleanIdentifier(s: String): Option[String] = {
-    val out = s.toUpperCase.replaceAll("[^A-Z0-9]", "")
+    val out = NonAlnum.matcher(s.toUpperCase).replaceAll("")
     if (out.length < 3) None else Some(out)
   }
 }

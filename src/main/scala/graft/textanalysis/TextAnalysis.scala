@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Hashing
+import graft.functions.TextExpressions.lower
 
 /** Text-analysis operators for training-data pipelines: token/statistics
   * profiling, quality scoring, n-gram language ID, and winnowing document

@@ -247,23 +247,22 @@ object Xref {
     * running its own copy of the subtree (AQE never reuses cloned
     * exchanges). They are released as soon as `scored` is
     * materialized; the only thing that outlives the call is the
-    * DISK_ONLY `scored` table both returned frames read.
+    * DISK_ONLY checkpoint of `scored` both returned frames read. A
+    * checkpoint is not registered in the `CacheManager`, so the call
+    * leaves no cache entry behind, and its blocks go with the frames.
     */
   def run(s: SparkSession, stmts: DataFrame, decided: DataFrame,
       cfg: Config = Config()): (DataFrame, DataFrame) = {
     val built = new graft.Caches.Held
-    // DISK_ONLY, not localCheckpoint(true): the scored table is bounded
-    // by limit·limitFactor (50k at reference defaults) but operators
-    // raise the cap — spilling to local disk keeps a raised cap from
-    // pinning executor memory; the extra pass is one scan of a slim
-    // (lid, rid, score) table
+    // DISK_ONLY: the scored table is bounded by limit·limitFactor (50k
+    // at reference defaults) but operators raise the cap — local disk
+    // keeps a raised cap from pinning executor memory; the extra pass
+    // is one scan of a slim (lid, rid, score) table. Materialized once,
+    // before both consumers fork.
     val scored =
-      try {
-        val sc = scoredWith(s, stmts, decided, cfg, built.cut)
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        sc.count() // materialize once, before both consumers fork
-        sc
-      } finally built.release()
+      try scoredWith(s, stmts, decided, cfg, built.cut).localCheckpoint(
+        eager = true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      finally built.release()
     val gate = cfg.autoThreshold
       .map(t => col("score") > t).getOrElse(lit(false))
     val merges = scored.filter(gate)

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards: the scale claims the scaladocs make, asserted on
@@ -44,6 +46,17 @@ class PlanShapeSpec extends AnyFunSuite {
       val p = plan(q(spark, dir))
       assert(!p.contains("CartesianProduct"),
         s"$name plans a CartesianProduct")
+    }
+  }
+
+  test("no query maps case through Spark's Lower or Upper") {
+    // every DataFrame lower/upper goes through graft.functions.CaseMap,
+    // which never loads Spark's code-point title-case table
+    for ((name, q) <- SparkEntry.queries) {
+      val found = q(spark, dir).queryExecution.analyzed
+        .collectWithSubqueries { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e @ (_: Lower | _: Upper) => e.sql })
+      assert(found.isEmpty, s"$name evaluates $found")
     }
   }
 
@@ -144,18 +157,29 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("xref scores from its built layers, never the statement table") {
-    val (merges, _) = xref.Xref.run(spark, spark.read.parquet(corpusDir),
-      spark.emptyDataFrame.selectExpr("'' AS src", "'' AS dst"),
-      xref.Xref.Config(autoThreshold = Some(0.6)))
-    // the query run materializes as `scored`: its plan reads the
+    // run materializes its one scoring query as a local checkpoint; the
+    // listener sees that query's executed plan, which must read the
     // entries/TF and assembled/views frames as leaves
-    val rel = merges.queryExecution.withCachedData.collectFirst {
-      case r: InMemoryRelation => r
-    }.getOrElse(fail("run returned frames not backed by the scored table"))
-    val p = rel.cacheBuilder.cachedPlan.toString
+    val scoring = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint" &&
+            qe.analyzed.output.map(_.name) == Seq("lid", "rid", "score"))
+          scoring.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      xref.Xref.run(spark, spark.read.parquet(corpusDir),
+        spark.emptyDataFrame.selectExpr("'' AS src", "'' AS dst"),
+        xref.Xref.Config(autoThreshold = Some(0.6)))
+      val deadline = System.nanoTime() + 10000000000L
+      while (scoring.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(scoring.size === 1, "run did not materialize one scoring query")
+    val p = scoring.peek()
     assert(occurrences(p, "FileScan") === 0,
       s"the scoring query rescans statements:\n$p")
     assert(occurrences(p, "ExistingRDD") > 0, s"no built layer read:\n$p")
-    rel.cacheBuilder.clearCache()
   }
 }

@@ -21,6 +21,17 @@ object SparkSpec {
     s
   }
 
+  /** Tables registered in the session's `CacheManager`
+    * (`numCachedEntries` is Spark-private to Scala callers, public in
+    * bytecode).
+    */
+  def cachedEntries: Int = {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cache.getClass.getMethod("numCachedEntries").invoke(cache)
+      .asInstanceOf[Int]
+  }
+
   /** Listeners on the session's bus (`listenerBus` is Spark-private to
     * Scala callers, public in bytecode).
     */

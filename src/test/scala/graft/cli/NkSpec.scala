@@ -14,13 +14,14 @@ import graft.xref.XrefCorpus
 
 /** [[Nk]] on the suite's shared session, over the in-repo xref corpus:
   * the composed xref → apply → sorted-aggregate path equals `dedupe`,
+  * `xref` leaves no entry in the session's `CacheManager`,
   * bad arguments fail with the verb's usage before any session is
   * used, `merge-lake` leaves the session alive with its listeners, and
   * `name-bench`, `bench-checks` and `lexicon-bench` never ask for a
   * session.
   */
 class NkSpec extends AnyFunSuite {
-  import SparkSpec.{listeners, spark}
+  import SparkSpec.{cachedEntries, listeners, spark}
 
   /** A session thunk for calls that must never use one. */
   private def noSession: SparkSession = fail("the verb used the session")
@@ -63,6 +64,14 @@ class NkSpec extends AnyFunSuite {
     val sources = spark.read.parquet(s"$dir/stmts")
       .select("canonical_id").distinct().count()
     assert(composed.size < sources, "no entities merged")
+  }
+
+  test("xref leaves the CacheManager as it found it") {
+    val before = cachedEntries
+    Nk.run(spark, Array("xref", s"$dir/stmts", s"$dir/xref-cache",
+      "--algorithm", "logic-v1", "--auto-threshold", "0.6"))
+    assert(spark.read.parquet(s"$dir/xref-cache/merges").count() > 0)
+    assert(cachedEntries === before, "xref left a cached table")
   }
 
   test("bad arguments throw the verb's usage before any session use") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Profile, SparkSpec}
@@ -46,6 +46,22 @@ class SessionSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(p)
   }
 
+  test("Profile laps count process CPU and Janino compiles") {
+    val p = Profile.attach(spark)
+    try {
+      p.lap()
+      // a literal no earlier query used: its generated class is new
+      // source, so Spark's codegen cache cannot serve it
+      val tag = System.nanoTime()
+      spark.range(5000).select((col("id") * lit(tag) % 7).as("m"))
+        .agg(sum(col("m"))).collect()
+      val l = p.lap()
+      assert(l.cpuS > 0.0 && l.compiles >= 1, l)
+      val t = p.total()
+      assert(t.cpuS >= l.cpuS && t.compiles >= l.compiles)
+    } finally spark.sparkContext.removeSparkListener(p)
+  }
+
   private val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
 
   /** Files of `src/main` holding `needle`, with their counts. */
@@ -77,6 +93,37 @@ class SessionSpec extends AnyFunSuite {
     val soak = Files.readString(root.resolve("graft/Soak.scala"))
     assert(!soak.contains("System.nanoTime"))
     assert("%\\.\\d+f".r.findFirstIn(soak).isEmpty)
+  }
+
+  /** Scala code with its comments, string and char literals blanked. */
+  private def codeOnly(src: String): String =
+    """'(?:\\.|[^'\\])'|"{3}[\s\S]*?"{3}|"[^"\\\n]*(?:\\.[^"\\\n]*)*"|//[^\n]*|/\*[\s\S]*?\*/""".r
+      .replaceAllIn(src, " ")
+
+  test("src/main calls lower/upper only through TextExpressions") {
+    // `functions._` brings Spark's own pair, which initializes
+    // CollationAwareUTF8String; only the explicit import of the kernel
+    // beside it routes a bare `lower(`/`upper(` to `CaseMap`.
+    val sparkFns = "import org.apache.spark.sql.functions."
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList.flatMap { f: Path =>
+        val rel = root.relativize(f).toString
+        val src = Files.readString(f)
+        val code = codeOnly(src)
+        val bare = "(?<![\\w.])(lower|upper)\\(".r
+          .findAllMatchIn(code).map(_.group(1)).toSet
+        val routed = bare.filter { n =>
+          s"import graft\\.functions\\.TextExpressions\\.(_|$n\\b|\\{[^}]*\\b$n\\b)".r
+            .findFirstIn(src).isDefined
+        }
+        val qualified = "\\b(\\w+)\\.(lower|upper)\\(".r.findAllMatchIn(code)
+          .filter(_.group(1) != "TextExpressions").map(_.matched).toList
+        if (rel == "graft/functions/TextExpressions.scala" ||
+            !src.contains(sparkFns)) Nil
+        else (bare -- routed).toList.map(n => s"$rel: bare $n(") ++
+          qualified.map(q => s"$rel: $q")
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("src/main renames only in the manifest log and the IndexLake publish") {

@@ -134,6 +134,59 @@ class TextSpec extends AnyFunSuite {
     assert(TextNorm.fingerprintName("Acme Limited") === Some("acme ltd"))
   }
 
+  // The per-call regex forms TextNorm used before it precompiled its
+  // patterns; the properties below hold the precompiled ones to them.
+  private val OldApostrophes = Set('\'', '’', '‘', 'ʻ', 'ʼ', '`', '´')
+
+  private def oldCleanLight(s: String): Option[String] = {
+    val out = s.toLowerCase.filterNot(OldApostrophes).map(c =>
+      if (c.isLetterOrDigit) c else ' ').replaceAll("\\s+", " ").trim
+    if (out.isEmpty) None else Some(out)
+  }
+
+  private def oldFingerprint(original: String): Option[String] =
+    oldCleanLight(TextNorm.foldAscii(
+      TextNorm.removePersonPrefixes(original.toLowerCase))).flatMap { cleaned =>
+      val forms = TextNorm.LegalForms.toSeq.sortBy { case (k, _) => (-k.length, k) }
+      val replaced = forms.foldLeft(cleaned) { case (out, (long, short)) =>
+        out.replaceAll(s"\\b${java.util.regex.Pattern.quote(long)}\\b", short)
+      }.replaceAll("\\s+", " ").trim
+      if (replaced.isEmpty) None else Some(replaced)
+    }
+
+  /** A name around legal form `key`: its words in random case and
+    * separated by random blanks or punctuation, between a random prefix
+    * (person titles, accents, Cyrillic) and suffix.
+    */
+  private def aroundLegalForm(key: String): Gen[String] = for {
+    pre <- Gen.oneOf("", "Mr ", "Dr. ", "Frau ", "Acme ", "Müller ",
+      "  Ça ", "Группа ", "O'Neil ", "x")
+    words <- Gen.sequence[Seq[String], String](key.split(' ').toSeq.map(w =>
+      Gen.oneOf(w, w.toUpperCase, w.capitalize)))
+    sep <- Gen.oneOf(" ", "  ", "\t", "-", ", ")
+    post <- Gen.oneOf("", " Holdings", ",", " & Co", " (Intl)", "x",
+      " limitedx", " e v", "s")
+    noise <- Gen.alphaNumStr.map(_.take(6))
+  } yield s"$pre${words.mkString(sep)}$post $noise"
+
+  test("fingerprint equals the per-call regex form around every legal form") {
+    for (key <- TextNorm.LegalForms.keys.toSeq.sorted)
+      forAll(aroundLegalForm(key)) { name =>
+        assert(TextNorm.fingerprintName(name) === oldFingerprint(name), name)
+        assert(TextNorm.cleanNameLight(name) === oldCleanLight(name), name)
+      }
+  }
+
+  test("identifier cleanup equals its per-call regex form") {
+    val text = Gen.oneOf(Gen.asciiPrintableStr, Gen.alphaNumStr,
+      Gen.const("Müller & Söhne -- a.b_c"))
+    forAll(text) { s =>
+      val id = s.toUpperCase.replaceAll("[^A-Z0-9]", "")
+      assert(TextNorm.cleanIdentifier(s) ===
+        (if (id.length < 3) None else Some(id)), s)
+    }
+  }
+
   test("metaphone dropped-prefix exceptions keep the new initial vowel") {
     assert(Phonetics.metaphone("AEBERHARD") ===
       Phonetics.metaphone("EBERHARD"))
