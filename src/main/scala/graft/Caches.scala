@@ -65,10 +65,11 @@ object Caches {
     * (`localCheckpoint(eager)`, memory spilling to disk); `persist` is
     * [[pin]]'s DISK_ONLY persist without the eager count — the first
     * action over the frame fills it, so a frame whose first consumer
-    * reads all of it pays no extra job. `release()` frees every block
-    * either one made. A caller releases in a `finally` once its product
-    * is materialized, so the call leaves nothing persisted but what it
-    * returns.
+    * reads all of it pays no extra job; `adopt` takes over the
+    * checkpoint blocks a frame built elsewhere reads. `release()` frees
+    * every block these hold. A caller releases in a `finally` once its
+    * product is materialized, so the call leaves nothing persisted but
+    * what it returns.
     */
   final class Held {
     private val rdds =
@@ -87,6 +88,12 @@ object Caches {
         : org.apache.spark.sql.DataFrame = {
       persisted += df
       df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    }
+
+    def adopt(df: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      rdds ++= checkpointRdds(df)
+      df
     }
 
     def release(): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.resolver.Resolver
-import graft.store.EntityStore
+import graft.store.{EntityStore, StatementFormats}
 import graft.xref.Xref
 
 /** The shared pieces of the [[Nk]] verbs and the other mains (Bench,
@@ -40,13 +40,15 @@ object CliArgs {
       }
 
   /** Entities/statements input → the 14-column statement table:
-    * `.ijson`/`.json` is line-delimited FtM entities, anything else a
+    * `.ijson`/`.json` is line-delimited FtM entities, `.csv` a
+    * statement CSV ([[StatementFormats]]), anything else a
     * statement-table Parquet path.
     */
   def readStatements(s: SparkSession, path: String,
       dataset: String): DataFrame =
     if (path.endsWith(".ijson") || path.endsWith(".json"))
       EntityStore.statements(EntityStore.readIjson(s, path), dataset)
+    else if (path.endsWith(".csv")) StatementFormats.readCsv(s, path)
     else s.read.parquet(path)
 
   /** Id precedence for canonical selection: QID > NK- > raw

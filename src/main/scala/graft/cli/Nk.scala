@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.resolver.ResolverOps
-import graft.store.{EntityStore, MergeLake}
+import graft.store.{EntityStore, MergeLake, StatementFormats}
 import graft.xref.Xref
 
 /** `nk` — the one command-line entry point, mirroring the reference's
@@ -23,8 +23,10 @@ import graft.xref.Xref
   * `bench-checks` and `lexicon-bench` never start one.
   *
   * Entity inputs ending in `.ijson`/`.json` are read as line-delimited
-  * FtM entities; anything else is a statement-table Parquet path.
-  * Outputs are Parquet for tables and text for ijson.
+  * FtM entities, `.csv` as a statement CSV; anything else is a
+  * statement-table Parquet path. Outputs are Parquet for tables (a
+  * statement CSV for an `apply` output ending in `.csv`) and text for
+  * ijson.
   *
   * {{{
   *   spark-submit --class graft.cli.Nk graft.jar dedupe \
@@ -203,8 +205,10 @@ object Nk {
         "canonicalize statements through the merge edges of --edges") { c =>
       val Seq(in, out) = c.pos
       val edges = c("edges")
-      save(CliArgs.applyCanonical(c.stmts(in),
-        CliArgs.canonicalMapOf(c.parquet(edges))), out)
+      val canon = CliArgs.applyCanonical(c.stmts(in),
+        CliArgs.canonicalMapOf(c.parquet(edges)))
+      if (out.endsWith(".csv")) StatementFormats.writeCsv(canon, out)
+      else save(canon, out)
       s"[apply] wrote $out"
     },
     // `cli.py:232-236`
@@ -224,8 +228,8 @@ object Nk {
         "auto-threshold" -> c.flag("auto-threshold", "0.5"),
         "algorithm" -> c.flag("algorithm", "regression-v1")))
       val decided = Seq.empty[(String, String)].toDF("src", "dst")
-      val cm = CliArgs.canonicalMapOf(
-        Xref.autoMerges(c.spark, stmts, decided, cfg))
+      val (merges, _) = Xref.run(c.spark, stmts, decided, cfg)
+      val cm = CliArgs.canonicalMapOf(c.held.adopt(merges))
       writeLines(EntityStore.toIjson(EntityStore.assemble(
         CliArgs.applyCanonical(stmts, cm))), out)
       s"[dedupe] wrote $out"
@@ -673,7 +677,7 @@ object Nk {
         "per-algorithm mean loss and confusion over judged pairs") { c =>
       import graft.matching.ScoringLoss
       val threshold = c.pos.lift(1).map(_.toDouble).getOrElse(0.7)
-      val report = ScoringLoss.report(ScoringLoss.scoredPairs(
+      val report = ScoringLoss.report(ScoringLoss.scoreJudged(
         ScoringLoss.readPairs(c.spark, c.pos(0))), threshold)
       val table = new java.io.ByteArrayOutputStream()
       Console.withOut(table)(report.show(50, truncate = false))

@@ -25,14 +25,11 @@ import graft.functions.TextExpressions.lower
 object Dedup {
 
   /** Maximum signatures a (band, key) bucket may hold before it is
-    * treated as boilerplate and dropped from candidate generation. The
-    * streaming near-dup screen
-    * ([[graft.streaming.DocumentStream.nearDupStream]]) caps its
-    * per-bucket state at the same value, so the batch and streaming
-    * screens bound skew identically. A boilerplate-heavy corpus can put
-    * k near-identical (but not byte-identical, so exact-dedup-first does
-    * not collapse them) signatures into one bucket; without the cap that
-    * bucket alone emits k²/2 pairs — the skew blow-up the blocker's
+    * treated as boilerplate and dropped from candidate generation. A
+    * boilerplate-heavy corpus can put k near-identical (but not
+    * byte-identical, so exact-dedup-first does not collapse them)
+    * signatures into one bucket; without the cap that bucket alone
+    * emits k²/2 pairs — the skew blow-up the blocker's
     * stopword cost model exists to prevent
     * (`nomenklatura/blocker/index.py:66-71` is the reference's own
     * precedent). Docs in a dropped bucket still pair through their other
@@ -149,10 +146,7 @@ object Dedup {
     cappedPairs(lshBuckets(sig, idCol, bands, rowsPerBand),
       Seq("band", "key"), cap, col(idCol))(idPair, ascending).distinct()
 
-  /** The per-band (band, key) struct array over a signature column —
-    * shared by [[lshBuckets]] and the streaming near-dup screen so
-    * batch and stream band identically.
-    */
+  /** The per-band (band, key) struct array over a signature column. */
   def bandKeys(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
       struct(lit(b).as("band"),

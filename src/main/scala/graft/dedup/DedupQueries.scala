@@ -23,7 +23,6 @@ object DedupQueries {
   val SimhashBands = 6
   val SimhashBandBits = 10
   val SimhashMaxDist = 5
-  val CosineThreshold = 0.4
   val CharGramN = 4
   val CharJaccardThreshold = 0.7
 
@@ -88,7 +87,7 @@ object DedupQueries {
       lshPairsFrom(shinglesCk(s, d)))
 
   /** Shingle+hash table materialized once, in parallel, for an
-    * arbitrary docs frame (streaming twins, soaks, curate): the raw
+    * arbitrary docs frame (specs, soaks, curate): the raw
     * docs scatter FIRST (cheap bytes, explicit partition count so AQE
     * cannot coalesce the CPU-heavy projection onto one task — the sf
     * tables are one row group), the shingle/md5 projection runs

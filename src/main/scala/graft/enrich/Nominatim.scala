@@ -169,17 +169,4 @@ final class NominatimEnricher(gazetteer: DataFrame,
     val freshOut = fresh.drop("q_key")
     cachedHits.map(freshOut.unionByName(_)).getOrElse(freshOut)
   }
-
-  /** The enricher `match` step over a statement table: Address-schema
-    * entities only, their `full` + `country` statements pivoted into
-    * geocode inputs.
-    */
-  def matchAddresses(s: SparkSession, stmts: DataFrame): DataFrame = {
-    val addr = stmts.filter(col("schema") === "Address")
-    val pivoted = addr.groupBy(col("canonical_id").as("id")).agg(
-      max(when(col("prop") === "full", col("value"))).as("full"),
-      max(when(col("prop") === "country", col("value"))).as("country"))
-      .filter(col("full").isNotNull)
-    geocode(s, pivoted)
-  }
 }

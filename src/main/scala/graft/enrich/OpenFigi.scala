@@ -20,10 +20,7 @@ import graft.functions.TextExpressions.lower
   *  - `match_organization` (`:68-80`): Organization entities search by
   *    each name; hits shape into public companies with id
   *    `figi-company-<sha1(name slug)>` (`make_company_id`, `:43-44`,
-  *    FtM `make_entity_id`) and `topics=corp.public`;
-  *  - `expand` (`:106-128`): a confirmed organization match pulls the
-  *    securities whose issuer name equals the matched name *exactly*,
-  *    as Security entities `figi-<figi>` linked back via `issuer`.
+  *    FtM `make_entity_id`) and `topics=corp.public`.
   */
 final class OpenFigiEnricher(mapping: DataFrame) {
 
@@ -56,18 +53,6 @@ final class OpenFigiEnricher(mapping: DataFrame) {
       q("q_name") === mapping("name"))
       .select(col("query_id"), companyId(col("name")).as("match_id"),
         col("name"), lit("corp.public").as("topics"))
-  }
-
-  /** `expand`: securities issued under a confirmed company match —
-    * exact-name instruments only, `figi-<figi>` ids, issuer link.
-    */
-  def expandIssuer(orgMatches: DataFrame): DataFrame = {
-    val m = orgMatches.select(col("match_id"), col("name")).distinct()
-    m.join(mapping, Seq("name"))
-      .select(concat(lit("figi-"), col("figi")).as("id"),
-        col("figi").as("figi_code"), col("match_id").as("issuer"),
-        col("ticker"), col("security_type").as("type"),
-        col("security_description").as("description"))
   }
 }
 

@@ -134,12 +134,6 @@ object Wikidata {
     if (cleaned.isEmpty) None else Some(cleaned)
   }
 
-  /** `is_alias_strong` (`wikidata/value.py:105-114`): multi-word,
-    * name-like, length ≥ 3.
-    */
-  private[enrich] def isAliasStrong(alias: String): Boolean =
-    alias.contains(" ") && isName(alias) && alias.length >= 3
-
   private val cleanNameUdf = udf((s: String) => cleanName(s))
 
   private def langIso(c: Column): Column =

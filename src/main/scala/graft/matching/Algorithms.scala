@@ -44,19 +44,6 @@ object Algorithms {
       features.map(f => scores.getOrElse(f.name, 0.0) * f.weight).sum
   }
 
-  /** Logistic scorer over externally supplied (already scaler-folded)
-    * coefficients — the runtime form of a model imported from JSON
-    * ([[ModelIO]], SURVEY §7.4 risk 6).
-    */
-  final case class ExternalLogistic(name: String, features: Seq[Feat],
-      intercept: Double) extends Algo {
-    def compute(scores: Map[String, Double]): Double = {
-      val z = intercept + features
-        .map(f => scores.getOrElse(f.name, 0.0) * f.weight).sum
-      1.0 / (1.0 + math.exp(-z))
-    }
-  }
-
   import Features._
 
   /** logic-v1 (`matching/logic_v1/model.py:36-61`) with the reference's

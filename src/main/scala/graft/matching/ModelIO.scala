@@ -98,22 +98,4 @@ object ModelIO {
     }
     (means, scales)
   }
-
-  /** An [[Algorithms.Algo]] evaluating imported coefficients over the
-    * base algorithm's feature functions — matched by feature name, so a
-    * JSON trained against a subset or reordering of the features still
-    * applies. Unknown feature names fail fast.
-    */
-  def algoFor(base: Algorithms.Algo, m: ScaledModel): Algorithms.Algo = {
-    val byName = base.features.map(f => f.name -> f).toMap
-    val missing = m.features.filterNot(byName.contains)
-    require(missing.isEmpty,
-      s"model features unknown to ${base.name}: ${missing.mkString(",")}")
-    val flatModel = m.flat
-    val feats = m.features.zip(flatModel.weights).map { case (n, w) =>
-      byName(n).copy(weight = w)
-    }
-    Algorithms.ExternalLogistic(s"${base.name}+json", feats,
-      flatModel.intercept)
-  }
 }

@@ -54,7 +54,7 @@ object ScoringLoss {
         "opencorporates"))
 
   /** One row per pair with every algorithm's score and the target. */
-  def scoredPairs(pairs: DataFrame,
+  def scoreJudged(pairs: DataFrame,
       algoNames: Seq[String] = DefaultAlgorithms): DataFrame = {
     val entities = pairs.select(col("left.*"))
       .unionByName(pairs.select(col("right.*")))

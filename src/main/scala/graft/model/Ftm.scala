@@ -112,9 +112,6 @@ object Ftm {
       case (n, s) if s.featuredProps.nonEmpty => n -> s.featuredProps
     }
 
-  def featuredOf(schema: String): Seq[String] =
-    featured.getOrElse(schema, Nil)
-
   /** Display ordering weight per property type — `tui/util.py:9-17`
     * TYPE_ORDER: names first, then identifiers, dates, countries;
     * free text and URLs last.

@@ -26,7 +26,7 @@ import graft.textanalysis.TextAnalysis
   * and retrieval in a single plan, so the corpus is scanned for
   * postings, dfs and stats separately. A production deployment writes
   * the postings + df tables to the lake once (exactly like
-  * `StatementLake` / the blocker's checkpointed TF index) and retrieval
+  * [[postingsCk]] / the blocker's checkpointed TF index) and retrieval
   * touches only them — the retrieval sub-plan here is unchanged by
   * that split.
   *

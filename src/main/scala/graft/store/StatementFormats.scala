@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Statement file formats: CSV round-trip of the 14-column statement
-  * schema (reference `cli.py:322-334` statement read/write via the
-  * FORMATS registry) and the pack form (a compact JSON tuple per row,
-  * `store/util.py:7-47`).
+/** The statement CSV file format: a round-trip of the 14-column
+  * statement schema (reference `cli.py:322-334` statement read/write
+  * via the FORMATS registry). `nk` reads a `.csv` statement input and
+  * `nk apply` writes a `.csv` output through it.
   */
 object StatementFormats {
 
@@ -34,47 +34,16 @@ object StatementFormats {
     "header" -> "true", "nullValue" -> "\\N", "escape" -> "\"",
     "multiLine" -> "true")
 
+  /** Timestamps are written to the microsecond: Spark's default CSV
+    * pattern keeps milliseconds, and [[readCsv]]'s default parsing
+    * reads the longer form back exactly.
+    */
   def writeCsv(stmts: DataFrame, path: String): Unit =
     stmts.select(EntityStore.statementCols.map(col): _*)
-      .write.mode("overwrite").options(csvOptions).csv(path)
+      .write.mode("overwrite").options(csvOptions)
+      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+      .csv(path)
 
   def readCsv(s: SparkSession, path: String): DataFrame =
     s.read.options(csvOptions).schema(csvSchema).csv(path)
-
-  /** Pack: one compact JSON array per statement — the KV-store wire
-    * form (`store/util.py:7-47`). The external flag and seen-timestamps
-    * ARE part of the tuple: dropping `external` on the wire would let
-    * unvetted enrichment statements re-enter default store views after
-    * a round-trip (`store/memory.py:72-87` gate).
-    */
-  def pack(stmts: DataFrame): DataFrame =
-    stmts.select(col("id").as("key"), to_json(array(
-      col("entity_id"), col("prop"), col("value"),
-      coalesce(col("lang"), lit("")),
-      coalesce(col("original_value"), lit("")),
-      coalesce(col("origin"), lit("")),
-      col("schema"), col("dataset"), col("canonical_id"),
-      col("prop_type"),
-      col("external").cast("string"),
-      coalesce(unix_micros(col("first_seen")).cast("string"), lit("")),
-      coalesce(unix_micros(col("last_seen")).cast("string"), lit(""))))
-      .as("packed"))
-
-  def unpack(packed: DataFrame): DataFrame =
-    packed.select(col("key").as("id"),
-      from_json(col("packed"), ArrayType(StringType)).as("a"))
-      .select(col("id"),
-        col("a")(0).as("entity_id"), col("a")(8).as("canonical_id"),
-        col("a")(1).as("prop"), col("a")(9).as("prop_type"),
-        col("a")(6).as("schema"), col("a")(2).as("value"),
-        when(col("a")(4) === "", null).otherwise(col("a")(4))
-          .as("original_value"),
-        col("a")(7).as("dataset"),
-        when(col("a")(5) === "", null).otherwise(col("a")(5)).as("origin"),
-        when(col("a")(3) === "", null).otherwise(col("a")(3)).as("lang"),
-        (col("a")(10) === "true").as("external"),
-        timestamp_micros(when(col("a")(11) === "", null)
-          .otherwise(col("a")(11)).cast("long")).as("first_seen"),
-        timestamp_micros(when(col("a")(12) === "", null)
-          .otherwise(col("a")(12)).cast("long")).as("last_seen"))
 }

@@ -7,10 +7,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.resolver.Resolver
 import graft.store.MergeLake
 
-/** Streaming incremental resolution — the judgement-edge twin of
-  * [[MergeStream]], closing the streaming side of the incremental loop
-  * (MERGE ingest → delta xref → decide): approved same-as edges arrive
-  * as micro-batches and fold into a PERSISTED cluster state via
+/** Streaming incremental resolution, closing the streaming side of the
+  * incremental loop (MERGE ingest → delta xref → decide): approved
+  * same-as edges arrive as micro-batches and fold into a PERSISTED
+  * cluster state via
   * [[Resolver.addEdgesChanged]] (reference `resolver/resolver.py:
   * 353-401`, the `_decide` recursion, which mutates its stored resolver
   * exactly like this — one edge batch at a time).
@@ -24,8 +24,8 @@ import graft.store.MergeLake
   * the components artifact is write-once per corpus version, while the
   * judgement stream needs in-place growth with delta-sized writes.
   *
-  * Exactly-once note: as with [[MergeStream]], foreachBatch gives
-  * at-least-once on retry — but this sink is idempotent at the state
+  * Exactly-once note: foreachBatch gives at-least-once delivery on
+  * retry — but this sink is idempotent at the state
   * level: a replayed batch finds its edges already intra-cluster
   * (labels equal), the changed set comes back empty, and nothing is
   * written.

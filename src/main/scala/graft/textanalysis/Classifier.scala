@@ -86,29 +86,6 @@ object Classifier {
   final case class Weights(b: Double, w1: Double, w2: Double,
       w3: Double, w4: Double)
 
-  /** The scored probability in 1e-6 fixed point over a WORDS column —
-    * the same feature and scoring arithmetic as [[classifierQ]]
-    * (features inlined instead of named, which leaves the per-row
-    * double operations identical), shared with the streaming gate so
-    * stream and batch decisions agree bit-for-bit.
-    */
-  def score6Expr(w: Column, m: Weights): Column = {
-    val nTok = size(w).cast("double")
-    val stop = size(filter(w, x => x.isInCollection(Markers)))
-      .cast("double")
-    val sumlen = aggregate(transform(w, x => length(x)), lit(0),
-      (acc, x) => acc + x).cast("double")
-    val x1 = least(nTok / 50.0, lit(1.0)) - C1
-    val x2 = size(array_distinct(w)).cast("double") / size(w) - C2
-    val x3 = abs(stop / size(w) - 0.4) - C3
-    val x4 = sumlen / size(w) / 10.0 - C4
-    val z = lit(m.b) + x1 * m.w1 + x2 * m.w2 + x3 * m.w3 + x4 * m.w4
-    val p = lit(1.0) / (lit(1.0) + exp(-z))
-    // NULL (not an ANSI /0 crash) for token-less docs — the batch path
-    // filters them before scoring; the CASE short-circuits the ratios
-    when(size(w) > 0, floor(p * 1e6 + 0.5).cast("long"))
-  }
-
   /** Batch gradient descent with fixed-point gradient sums — see the
     * determinism note above. One distributed aggregation per epoch
     * over the train half.
@@ -164,9 +141,9 @@ object Classifier {
     feat.crossJoin(broadcast(modelCk(s, d)))
       .select(col("doc_id"), col("y").as("label"),
         floor(p * 1e6 + 0.5).cast("long").as("score6"))
-      // pred compares the SAME 1e-6 fixed-point quantity the streaming
-      // gate uses (DocumentStream.classifierGate), so stream and batch
-      // agree bit-for-bit even for p in [0.4999995, 0.5).
+      // pred compares the 1e-6 fixed-point score, so the decision is
+      // exactly the one the reported score6 shows, even for p in
+      // [0.4999995, 0.5).
       .withColumn("pred", when(col("score6") >= 500000L, 1).otherwise(0))
   }
 

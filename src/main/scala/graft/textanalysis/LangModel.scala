@@ -320,7 +320,7 @@ object LangModel {
     * top-|V| unigrams/bigrams before shipping — the count tables are
     * already vocabulary-sized). `avgLogp` reproduces the fixed-point
     * arithmetic of the relational scorer exactly (StrictMath.log is
-    * Spark's `log`), so a stream gated with this model, [[lmScoreOf]]
+    * Spark's `log`), so the curate pipeline's gate, [[lmScoreOf]]
     * and the stored-model query agree bit-for-bit.
     */
   final case class LmModel(uni: Map[String, Long],

@@ -47,40 +47,21 @@ object Sketches {
   /** Small-range-correction threshold: 2.5 * m. */
   val LinearBelow: Double = 2.5 * M
 
-  /** Distinct (source, doc, term) postings — the sketched universe:
-    * per-source posting cardinality (vocabulary × document incidence).
-    */
-  def postingsOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("source"), col("doc_id"),
-        TextAnalysis.words(col("text")).as("w"))
-      .select(col("source"), col("doc_id"),
-        explode(array_distinct(col("w"))).as("term"))
-
   /** Batch postings from the stored inverted index
     * ([[graft.search.Search.postingsCk]] — same tokenizer; its
     * per-(doc, term) rows ARE the distinct triples this produced): the
     * three consumers in [[hllQ]] (registers, per-source exact, global
     * exact) read the session-pinned artifact instead of re-tokenizing
-    * the corpus behind a per-query checkpoint. The streaming gate
-    * keeps the plain [[postingsOf]] (a stored index has no place in a
-    * stateless stream projection).
+    * the corpus behind a per-query checkpoint.
     */
   private def postings(s: SparkSession, d: String): DataFrame =
     graft.search.Search.postingsCk(s, d)
       .select(col("source"), col("doc_id"), col("term"))
 
   /** (source, register, max-rank) — the sketch state, ≤ [[M]] rows per
-    * source no matter the input size. Works on a streaming postings
-    * frame too (stateless projections + one max aggregation), which is
-    * what [[graft.streaming.DocumentStream.hllRegisters]] runs.
-    */
-  def registersOf(post: DataFrame): DataFrame =
-    registersAndCountsOf(post).drop("cnt")
-
-  /** [[registersOf]] plus the per-(source, register) input-row count —
-    * ONE aggregation serving both the sketch state and the exact
-    * distinct counts [[hllQ]] reports next to it (postings are
+    * source no matter the input size — plus the per-(source, register)
+    * input-row count: ONE aggregation serving both the sketch state
+    * and the exact distinct counts [[hllQ]] reports next to it (postings are
     * distinct triples, so summing `cnt` over registers IS the exact
     * count): every consumer then hangs off the same (source, reg)
     * Exchange, which the planner reuses, instead of re-scanning the
@@ -103,37 +84,28 @@ object Sketches {
 
   /** Estimate from the register table: exact-integer harmonic sum, the
     * raw estimate, and linear counting below the small-range threshold.
+    * The input carries a `cnt` column, and the SAME groupBy(source)
+    * additionally sums it — the exact distinct count rides the
+    * estimate's aggregation instead of a second pass + join over the
+    * register table.
     */
-  def estimateOf(regs: DataFrame): DataFrame =
-    estimateCore(regs, withExact = false)
-
-  /** Shared estimate pipeline. With `withExact`, the input must carry
-    * a `cnt` column and the SAME groupBy(source) additionally sums it
-    * — the exact distinct count rides the estimate's aggregation
-    * instead of a second pass + join over the register table (the
-    * estimate expressions are shared, so the `est` column is
-    * bit-identical either way).
-    */
-  private def estimateCore(regs: DataFrame, withExact: Boolean)
-      : DataFrame = {
-    val baseAggs = Seq(
-      sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST(${WBits + 1} - m AS INT))"))
-        .as("s_used")) ++
-      (if (withExact) Seq(sum(col("cnt")).as("exact")) else Nil)
-    val keep = if (withExact) Seq(col("exact")) else Nil
+  private def estimateOf(regs: DataFrame): DataFrame = {
     val withS = regs.groupBy(col("source"))
-      .agg(count(lit(1)).as("used"), baseAggs: _*)
-      .select(Seq(col("source"), col("used"),
+      .agg(count(lit(1)).as("used"),
+        sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST(${WBits + 1} - m AS INT))"))
+          .as("s_used"),
+        sum(col("cnt")).as("exact"))
+      .select(col("source"), col("used"),
         (lit(M.toLong) - col("used")).as("zeros"),
         (col("s_used") + (lit(M.toLong) - col("used")) * lit(1L << (WBits + 1)))
-          .as("s")) ++ keep: _*)
+          .as("s"), col("exact"))
     val rawD = lit(RawNum) / col("s").cast("double")
     val linD = lit(M.toDouble) * log(lit(M.toDouble) / col("zeros"))
-    withS.select(Seq(col("source"), col("used").as("regs_used"),
+    withS.select(col("source"), col("used").as("regs_used"),
       when(col("zeros") > 0 && rawD <= lit(LinearBelow),
         floor(linD + lit(0.5)))
-        .otherwise(floor(rawD + lit(0.5))).cast("long").as("est")) ++
-      keep: _*)
+        .otherwise(floor(rawD + lit(0.5))).cast("long").as("est"),
+      col("exact"))
   }
 
   def hllQ(s: SparkSession, d: String): DataFrame = {
@@ -155,14 +127,14 @@ object Sketches {
     // sources; its exact distinct count is the sum of every source's
     // per-register row counts, which rides the same groupBy(reg) —
     // and the estimate + exact for EVERY output row then come out of
-    // ONE groupBy(source) over the union (estimateCore withExact),
+    // ONE groupBy(source) over the union ([[estimateOf]]),
     // retiring the separate exact/exactAll aggregations and the
     // est ⋈ exact join (8 → 5 jobs measured at sf0.1; the estimate
     // expressions are the shared ones, so `est` is bit-identical)
     val merged = perReg.groupBy(col("reg"))
       .agg(max(col("m")).as("m"), sum(col("cnt")).as("cnt"))
       .select(lit("ALL").as("source"), col("reg"), col("m"), col("cnt"))
-    estimateCore(perReg.unionByName(merged), withExact = true)
+    estimateOf(perReg.unionByName(merged))
       .select(col("source"), col("regs_used"), col("est"), col("exact"),
         (floor(abs(col("est") - col("exact")).cast("double") /
           col("exact").cast("double") * 10000 + lit(0.5)) / lit(100))

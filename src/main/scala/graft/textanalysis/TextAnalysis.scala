@@ -72,7 +72,7 @@ object TextAnalysis {
     * large text-corpus pipelines.
     */
   /** The composite score over a words column — shared by the batch
-    * query and the streaming quality gate. NULL for token-less docs.
+    * query and the curate pipeline. NULL for token-less docs.
     */
   def qualityExpr(w: Column): Column = {
     val nTok = size(w).cast("double")

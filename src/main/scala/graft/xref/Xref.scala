@@ -46,37 +46,30 @@ object Xref {
 
   /** Scored candidate pairs for a statement table (ids are canonical
     * when `stmts` went through [[graft.resolver.Resolver.applyCanonical]]
-    * first, mirroring the reference's canonicalize-on-write). Lazy: the
-    * result is one plan over the statement table.
-    */
-  def scoredPairs(s: SparkSession, stmts: DataFrame,
-      decided: DataFrame, cfg: Config): DataFrame =
-    scoredWith(s, stmts, decided, cfg, identity)
-
-  /** The batch pipeline with each layer passed through `build`: the
-    * tokenized entries, the TF table, the assembled entities and the
-    * match views. [[scoredPairs]] passes them through unchanged;
-    * [[run]] materializes each once with lineage cut.
+    * first, mirroring the reference's canonicalize-on-write), with each
+    * layer — the tokenized entries, the TF table, the assembled
+    * entities and the match views — materialized once through `built`
+    * with lineage cut.
     */
   private def scoredWith(s: SparkSession, stmts0: DataFrame,
       decided: DataFrame, cfg: Config,
-      build: DataFrame => DataFrame): DataFrame = {
+      built: graft.Caches.Held): DataFrame = {
     // external=true by default, like the reference's xref view
     // (`xref.py:38,61`)
     val stmts = EntityStore.view(stmts0, withExternal = cfg.external)
     val compat = compatDf(s)
-    val tf = build(Blocker.termFrequencies(
-      build(EntityTokenizer.entries(stmts)), compat, boostsDf(s),
+    val tf = built.cut(Blocker.termFrequencies(
+      built.cut(EntityTokenizer.entries(stmts)), compat, boostsDf(s),
       cfg.blocker, dampFields = EntityTokenizer.DampFields))
     val pairs = Blocker.pairs(tf, compat,
       cfg.blocker.copy(maxPairs = cfg.limit * cfg.limitFactor))
-    scoreCandidates(stmts, undecidedOf(pairs, decided), cfg, build)
+    scoreCandidates(stmts, undecidedOf(pairs, decided), cfg, built.cut)
   }
 
   /** Incremental xref candidates: pairs touching the delta entity set
     * only, generated in O(|Δ| × postings) by
     * [[graft.blocker.Blocker.deltaPairScores]] and scored through the
-    * SAME tail as [[scoredPairs]] — the post-MERGE re-xref shape
+    * SAME tail as [[run]] — the post-MERGE re-xref shape
     * (`xref.py:29-160` run on an increment). `isDelta` is a column
     * predicate over the TF rows (id/schema/field/token); pass a
     * prebuilt `tf` to reuse the ingest-maintained index artifact
@@ -208,37 +201,13 @@ object Xref {
       .filter(col("score") >= cfg.minThreshold)
   }
 
-  /** Top-`limit` suggestions below the auto threshold
-    * (`xref.py:150-153` + `resolver.suggest`).
-    */
-  def suggestions(s: SparkSession, stmts: DataFrame, decided: DataFrame,
-      cfg: Config = Config()): DataFrame = {
-    val scored = scoredPairs(s, stmts, decided, cfg)
-    val below = cfg.autoThreshold match {
-      case Some(t) => scored.filter(col("score") <= t)
-      case None => scored
-    }
-    below.orderBy(col("score").desc, col("lid").asc, col("rid").asc)
-      .limit(cfg.limit)
-  }
-
-  /** Pairs above the auto-merge threshold → positive judgement edges
-    * (`xref.py:138-147`).
-    */
-  def autoMerges(s: SparkSession, stmts: DataFrame, decided: DataFrame,
-      cfg: Config): DataFrame = {
-    val scored = scoredPairs(s, stmts, decided, cfg)
-    val gate = cfg.autoThreshold
-      .map(t => col("score") > t).getOrElse(lit(false))
-    scored.filter(gate)
-      .select(col("lid").as("src"), col("rid").as("dst"), col("score"))
-  }
-
   /** The standard xref run (`xref.py:138-153`): ONE scored pass,
     * materialized, then partitioned into (auto-merge edges,
-    * suggestions) — calling [[autoMerges]] and [[suggestions]]
-    * separately executes the whole tokenize/TF/pair/score pipeline
-    * twice.
+    * suggestions). The edges are the pairs scoring above the auto
+    * threshold as (src, dst, score) — none without a threshold
+    * (`xref.py:138-147`). The suggestions are the top-`limit`
+    * (lid, rid, score) pairs at or below it, by score descending then
+    * ids (`xref.py:150-153` + `resolver.suggest`).
     *
     * Build once, then release: the entries, the TF table, the
     * assembled entities and the match views are each materialized once
@@ -260,7 +229,7 @@ object Xref {
     // is one scan of a slim (lid, rid, score) table. Materialized once,
     // before both consumers fork.
     val scored =
-      try scoredWith(s, stmts, decided, cfg, built.cut).localCheckpoint(
+      try scoredWith(s, stmts, decided, cfg, built).localCheckpoint(
         eager = true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
       finally built.release()
     val gate = cfg.autoThreshold

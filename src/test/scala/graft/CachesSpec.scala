@@ -41,7 +41,7 @@ class CachesSpec extends AnyFunSuite {
   }
 
   test("ensureAll publishes on-disk artifacts; reads match rebuilds") {
-    val tmp = Files.createTempDirectory("graft-index-spec").toString
+    val tmp = SparkSpec.tempDir("graft-index-spec")
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
     Caches.clearAll()
@@ -84,7 +84,7 @@ class CachesSpec extends AnyFunSuite {
   }
 
   test("a partial artifact (no _SUCCESS) is rebuilt, not served") {
-    val tmp = Files.createTempDirectory("graft-index-partial").toString
+    val tmp = SparkSpec.tempDir("graft-index-partial")
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
     Caches.clearAll()
@@ -110,7 +110,7 @@ class CachesSpec extends AnyFunSuite {
   }
 
   test("concurrent first-touch builders publish exactly one artifact") {
-    val tmp = Files.createTempDirectory("graft-index-race").toString
+    val tmp = SparkSpec.tempDir("graft-index-race")
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
     Caches.clearAll()
@@ -141,7 +141,7 @@ class CachesSpec extends AnyFunSuite {
   test("artifacts publish and read through a file: URI root") {
     // the Hadoop-FS port: the root may be any Hadoop URI, not a bare
     // local path — hdfs://, s3a:// go through the same code path
-    val tmp = Files.createTempDirectory("graft-index-uri").toString
+    val tmp = SparkSpec.tempDir("graft-index-uri")
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", s"file:$tmp")
     Caches.clearAll()
@@ -162,8 +162,7 @@ class CachesSpec extends AnyFunSuite {
 
   test("scenario lakes publish under the owned index root") {
     // a root that does not exist yet: the publish creates it 0700
-    val tmp = Files.createTempDirectory("graft-index-scenario")
-      .resolve("root").toString
+    val tmp = SparkSpec.tempDir("graft-index-scenario") + "/root"
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
     Caches.clearAll()
@@ -191,7 +190,7 @@ class CachesSpec extends AnyFunSuite {
   }
 
   test("gc retires stale generations, keeps the current and the young") {
-    val tmp = Files.createTempDirectory("graft-index-gc").toString
+    val tmp = SparkSpec.tempDir("graft-index-gc")
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
     Caches.clearAll()

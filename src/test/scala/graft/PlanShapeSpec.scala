@@ -144,8 +144,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   /** The xref test corpus as a parquet statement table. */
   private lazy val corpusDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("plan-shape-stmts")
-      .resolve("statements").toString
+    val d = SparkSpec.tempDir("plan-shape-stmts") + "/statements"
     xref.XrefCorpus.statements(spark).write.parquet(d)
     d
   }

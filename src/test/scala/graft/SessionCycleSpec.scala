@@ -17,27 +17,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionCycleSpec extends AnyFunSuite {
 
   test("a stopped session leaves no memo entry behind") {
-    val tmp = Files.createTempDirectory("graft-session-cycle")
-    try {
-      val log = tmp.resolve("child.log")
-      val opens = ManagementFactory.getRuntimeMXBean.getInputArguments
-        .asScala.filter(_.startsWith("--add-opens"))
-      val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString,
-        "-Xmx1g", "-cp", sys.props("java.class.path")) ++ opens ++ Seq(
-        s"-Dgraft.index.dir=${tmp.resolve("index")}",
-        "graft.SessionCycleChild", tmp.resolve("data").toString)
-      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-        .redirectOutput(log.toFile).start()
-      if (!p.waitFor(240, TimeUnit.SECONDS)) p.destroyForcibly()
-      val out = Files.readAllLines(log).asScala
-      val keys = out.collectFirst {
-        case SessionCycleChild.Result(dead, live) => (dead.toInt, live.toInt)
-      }
-      assert(keys.nonEmpty, out.takeRight(30).mkString("\n"))
-      val (dead, live) = keys.get
-      assert(live > 0, "the probe found no memo entry of the live session")
-      assert(dead === 0, "memo entries still keyed by the stopped session")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val tmp = Paths.get(SparkSpec.tempDir("graft-session-cycle"))
+    val log = tmp.resolve("child.log")
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString,
+      "-Xmx1g", "-cp", sys.props("java.class.path")) ++ opens ++ Seq(
+      s"-Dgraft.index.dir=${tmp.resolve("index")}",
+      "graft.SessionCycleChild", tmp.resolve("data").toString)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log.toFile).start()
+    if (!p.waitFor(240, TimeUnit.SECONDS)) p.destroyForcibly()
+    val out = Files.readAllLines(log).asScala
+    val keys = out.collectFirst {
+      case SessionCycleChild.Result(dead, live) => (dead.toInt, live.toInt)
+    }
+    assert(keys.nonEmpty, out.takeRight(30).mkString("\n"))
+    val (dead, live) = keys.get
+    assert(live > 0, "the probe found no memo entry of the live session")
+    assert(dead === 0, "memo entries still keyed by the stopped session")
   }
 }
 

@@ -21,6 +21,12 @@ object SparkSpec {
     s
   }
 
+  /** A new `<prefix>-<uuid>` directory under `java.io.tmpdir`, deleted
+    * when the test JVM exits. Every spec takes its scratch dirs here.
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.SchedulerProbe.tempDir(prefix).toString
+
   /** Tables registered in the session's `CacheManager`
     * (`numCachedEntries` is Spark-private to Scala callers, public in
     * bytecode).

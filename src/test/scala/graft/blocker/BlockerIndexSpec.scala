@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * increment, and the forced-compaction path.
   */
 class BlockerIndexSpec extends AnyFunSuite {
-  import graft.SparkSpec.spark
+  import graft.SparkSpec.{spark, tempDir}
   import spark.implicits._
 
   private val cfg = Blocker.Config()
@@ -59,8 +59,7 @@ class BlockerIndexSpec extends AnyFunSuite {
     corpus.filter($"id".isInCollection(ids))
 
   test("refreshes reproduce the batch build bit-for-bit") {
-    val path = java.nio.file.Files
-      .createTempDirectory("blkidx").toString + "/idx"
+    val path = tempDir("blkidx") + "/idx"
 
     val base = stmts(
       ("a", "Customer", "name", "Alpha Beta"),
@@ -127,8 +126,7 @@ class BlockerIndexSpec extends AnyFunSuite {
   }
 
   test("a refresh racing another refresh: loser fails loudly, retry lands") {
-    val path = java.nio.file.Files
-      .createTempDirectory("blkidx").toString + "/idx"
+    val path = tempDir("blkidx") + "/idx"
     val base = stmts(
       ("a", "Customer", "name", "Alpha Beta"),
       ("b", "Customer", "name", "Beta Gamma"))
@@ -162,8 +160,7 @@ class BlockerIndexSpec extends AnyFunSuite {
   }
 
   test("forced per-refresh compaction preserves equality") {
-    val path = java.nio.file.Files
-      .createTempDirectory("blkidx").toString + "/idx"
+    val path = tempDir("blkidx") + "/idx"
     val base = stmts(
       ("a", "Customer", "name", "Alpha Beta"),
       ("b", "Customer", "name", "Beta Gamma"))

@@ -17,7 +17,7 @@ class CliSpec extends AnyFunSuite {
 
   lazy val fixture = ReferenceFiles("tests/fixtures/donations.ijson")
   private def tmp(name: String) =
-    Files.createTempDirectory(s"cli-$name").toString + "/out"
+    SparkSpec.tempDir(s"cli-$name") + "/out"
 
   test("dedupe main: donations ijson in, merged ijson out") {
     val out = tmp("dedupe")

@@ -23,7 +23,7 @@ class CurateSpec extends AnyFunSuite {
   private val docsPath = "/root/testdata/sf0.001/documents.parquet"
 
   test("curate main: gated, deduped, sharded corpus with exact report") {
-    val out = Files.createTempDirectory("curate").toString + "/o"
+    val out = SparkSpec.tempDir("curate") + "/o"
     Nk.run(spark, Array("curate", docsPath, out))
     val report = Files.readString(Paths.get(s"$out/report.json"))
     val corpus = spark.read.parquet(s"$out/corpus")
@@ -43,7 +43,7 @@ class CurateSpec extends AnyFunSuite {
       "n_windows").subsetOf(cols), s"missing columns in $cols")
     assert(corpus.select(col("shard")).distinct().count() > 1)
     // deterministic: a second run reproduces the report byte-for-byte
-    val out2 = Files.createTempDirectory("curate2").toString + "/o"
+    val out2 = SparkSpec.tempDir("curate2") + "/o"
     Nk.run(spark, Array("curate", docsPath, out2))
     assert(Files.readString(Paths.get(s"$out2/report.json")) === report)
   }

@@ -5,15 +5,17 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.store.StatementFormats
 import graft.xref.XrefCorpus
 
 /** [[Nk]] on the suite's shared session, over the in-repo xref corpus:
   * the composed xref → apply → sorted-aggregate path equals `dedupe`,
+  * `apply` over statement CSV equals `apply` over parquet,
   * `xref` leaves no entry in the session's `CacheManager`,
   * bad arguments fail with the verb's usage before any session is
   * used, `merge-lake` leaves the session alive with its listeners, and
@@ -27,7 +29,7 @@ class NkSpec extends AnyFunSuite {
   private def noSession: SparkSession = fail("the verb used the session")
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("nk").toString
+    val d = SparkSpec.tempDir("nk")
     XrefCorpus.statements(spark).write.parquet(s"$d/stmts")
     d
   }
@@ -64,6 +66,43 @@ class NkSpec extends AnyFunSuite {
     val sources = spark.read.parquet(s"$dir/stmts")
       .select("canonical_id").distinct().count()
     assert(composed.size < sources, "no entities merged")
+  }
+
+  test("apply reads and writes statement CSV as it does parquet") {
+    import spark.implicits._
+    // what a lossy CSV form would break: a newline inside a value,
+    // NULL (not empty) original_values, the external flag and a
+    // microsecond timestamp
+    val stmts = XrefCorpus.statements(spark)
+      .withColumn("value", when(col("prop") === "address",
+        regexp_replace(col("value"), ", ", ",\n")).otherwise(col("value")))
+      .withColumn("external", col("entity_id") === "c3")
+      .withColumn("first_seen", when(col("entity_id") === "p1",
+        timestamp_micros(lit(1700000000123456L))))
+    stmts.write.parquet(s"$dir/csv-in")
+    StatementFormats.writeCsv(stmts, s"$dir/stmts.csv")
+    Seq(("p2", "p1"), ("c2", "c1")).toDF("src", "dst")
+      .write.parquet(s"$dir/csv-edges")
+    def apply(in: String, out: String): Unit =
+      assert(Nk.run(spark, Array("apply", in, out, "--edges",
+        s"$dir/csv-edges")) === s"[apply] wrote $out")
+    apply(s"$dir/csv-in", s"$dir/csv-out")
+    apply(s"$dir/stmts.csv", s"$dir/out.csv")
+
+    def rows(df: DataFrame) = df.orderBy("id").collect().toSeq
+    val viaParquet = spark.read.parquet(s"$dir/csv-out")
+    val viaCsv = StatementFormats.readCsv(spark, s"$dir/out.csv")
+    assert(viaCsv.columns.toSeq === viaParquet.columns.toSeq)
+    assert(rows(viaCsv) === rows(viaParquet))
+    assert(viaCsv.filter(col("entity_id").isin("p1", "p2"))
+      .select("canonical_id").distinct().count() === 1L)
+    assert(viaCsv.filter(col("value").contains(",\n")).count() > 0)
+    assert(viaCsv.filter(col("original_value").isNotNull).count() === 0L)
+    assert(viaCsv.filter(col("external")).select("entity_id").distinct()
+      .as[String].collect().toSeq === Seq("c3"))
+    assert(viaCsv.filter(col("first_seen").isNotNull)
+      .select(unix_micros(col("first_seen"))).as[Long].distinct()
+      .collect().toSeq === Seq(1700000000123456L))
   }
 
   test("xref leaves the CacheManager as it found it") {

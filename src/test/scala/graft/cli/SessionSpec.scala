@@ -16,7 +16,8 @@ import graft.{Profile, SparkSpec}
   * the two publish routines: [[graft.store.ManifestLog]]'s commit and
   * [[graft.IndexLake]]'s publish. [[graft.Soak]] times through the
   * profiler and formats no float by hand, and the CLI's one `main` and
-  * one session stop are [[Nk]]'s.
+  * one session stop are [[Nk]]'s. Every top-level type of `src/main` is
+  * an entry point or named by the code, not only by specs.
   */
 class SessionSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -124,6 +125,35 @@ class SessionSpec extends AnyFunSuite {
           qualified.map(q => s"$rel: $q")
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every top-level src/main type is named outside its declaration") {
+    // an entry point is an object with a `main`; anything else that no
+    // code in src/main or perfbench/src names is reached only by specs
+    def code(dir: Path): List[String] =
+      Files.walk(dir).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toList
+        .map(f => codeOnly(Files.readString(f)))
+    val main = code(root)
+    val bench = code(Paths.get(sys.props("user.dir"), "perfbench", "src"))
+    val decl = ("(?m)^(?:(?:final|sealed|abstract|case|implicit|" +
+      "private(?:\\[\\w+\\])?)\\s+)*(object|class|trait)\\s+(\\w+)").r
+    val declared = main.flatMap { src =>
+      val ds = decl.findAllMatchIn(src).toList
+      ds.zip(ds.drop(1).map(_.start) :+ src.length).map { case (m, end) =>
+        val body = src.substring(m.end, end)
+        (m.group(1), m.group(2), body.contains("def main("))
+      }
+    }
+    val declarations = declared.groupBy(_._2).view.mapValues(_.size).toMap
+    val named = (main ++ bench).flatMap("\\b[A-Z]\\w*".r.findAllIn(_))
+      .groupBy(identity).view.mapValues(_.size).toMap
+    assert(declared.size > 100, s"found only ${declared.size} declarations")
+    val unreached = declared.collect {
+      case (kind, name, withMain) if !(kind == "object" && withMain) &&
+          named.getOrElse(name, 0) <= declarations(name) => s"$kind $name"
+    }
+    assert(unreached.isEmpty, unreached.mkString("\n"))
   }
 
   test("src/main renames only in the manifest log and the IndexLake publish") {

@@ -18,7 +18,7 @@ class WatchMatchSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("available-now drain writes the batch ranking as parquet") {
-    val tmp = Files.createTempDirectory("watchmatch").toString
+    val tmp = SparkSpec.tempDir("watchmatch")
     val corpus = Seq(
       ("c1", "Person", "name", "name", "Johanna Quandt"),
       ("c2", "Person", "name", "name", "Stefan Quandt"),

@@ -1,16 +1,14 @@
 package graft.enrich
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
 /** Nominatim-style mirror geocoding: candidate shaping (tiny-address
-  * skip, country restriction, top-1), Address-schema statement entry
-  * point, and the cached-response path — a second run with the
-  * gazetteer removed must still geocode entirely from the cache.
+  * skip, country restriction, top-1) and the cached-response path — a
+  * second run with the gazetteer removed must still geocode entirely
+  * from the cache.
   */
 class NominatimSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -40,18 +38,8 @@ class NominatimSpec extends AnyFunSuite {
     assert(out === Map("a1" -> "osm-node-10", "a2" -> "osm-node-10"))
   }
 
-  test("matchAddresses only geocodes Address-schema entities") {
-    val stmts = Seq(
-      ("a1", "Address", "full", "5 market street city1"),
-      ("a1", "Address", "country", "C3"),
-      ("p1", "Person", "full", "5 market street city1"))
-      .toDF("canonical_id", "schema", "prop", "value")
-    val out = new NominatimEnricher(gaz).matchAddresses(spark, stmts)
-    assert(out.select("id").as[String].collect().toSeq === Seq("a1"))
-  }
-
   test("cache TTL path: second run geocodes from cache alone") {
-    val path = Files.createTempDirectory("nomcache").toString + "/cache"
+    val path = SparkSpec.tempDir("nomcache") + "/cache"
     val cache = new ResponseCache(path)
     val first = new NominatimEnricher(gaz, Some(cache))
       .geocode(spark, addrs).orderBy("id").collect()

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
 /** OpenFIGI-style mirror enrichment: the composite-FIGI filter and
-  * keep-query-id contract on the ISIN path, sha1 company ids and the
-  * exact-name issuer expansion on the organization path.
+  * keep-query-id contract on the ISIN path, sha1 company ids on the
+  * organization path.
   */
 class OpenFigiSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -59,15 +59,5 @@ class OpenFigiSpec extends AnyFunSuite {
       .map("%02x".format(_)).mkString
     assert(out.head._2 === s"figi-company-$sha")
     assert(out.head._3 === "corp.public")
-  }
-
-  test("expand: exact-name securities with issuer link") {
-    val orgs = enricher.matchOrganizations(queries)
-    val out = enricher.expandIssuer(orgs)
-      .select("id", "issuer", "ticker").as[(String, String, String)]
-      .collect().toSet
-    assert(out.map(_._1) ===
-      Set("figi-BBG000B9XRY4", "figi-BBG000B9Y5X2"))
-    assert(out.forall(_._3 == "AAPL"))
   }
 }

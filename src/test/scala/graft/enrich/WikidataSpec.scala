@@ -27,8 +27,6 @@ class WikidataSpec extends AnyFunSuite {
       === Some("Johanna Quandt"))
     assert(Wikidata.cleanName("(only brackets)") === Some("(only brackets)"))
     assert(Wikidata.cleanName("12345") === None)
-    assert(Wikidata.isAliasStrong("Jo Quandt"))
-    assert(!Wikidata.isAliasStrong("Quandt"))
   }
 
   test("parser follows redirects and drops malformed docs") {

@@ -20,27 +20,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class CaseMapGuardSpec extends AnyFunSuite {
 
   test("xref and curate leave CollationAwareUTF8String uninitialized") {
-    val tmp = Files.createTempDirectory("graft-case-guard")
-    try {
-      val log = tmp.resolve("child.log")
-      val opens = ManagementFactory.getRuntimeMXBean.getInputArguments
-        .asScala.filter(_.startsWith("--add-opens"))
-      val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString,
-        "-Xmx1g", "-cp", sys.props("java.class.path")) ++ opens ++ Seq(
-        s"-Dgraft.index.dir=${tmp.resolve("index")}",
-        s"-Djava.io.tmpdir=$tmp", "graft.functions.CaseMapGuardChild")
-      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-        .redirectOutput(log.toFile).start()
-      if (!p.waitFor(300, TimeUnit.SECONDS)) p.destroyForcibly()
-      val out = Files.readAllLines(log).asScala
-      val seen = out.collect {
-        case CaseMapGuardChild.Result(stage, init) => stage -> init.toBoolean
-      }.toMap
-      assert(seen.size === 3, out.takeRight(30).mkString("\n"))
-      assert(!seen("xref"), "the xref path initialized the class")
-      assert(!seen("curate"), "the curate path initialized the class")
-      assert(seen("spark-lower"), "the probe missed Spark's own lower")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val tmp = Paths.get(graft.SparkSpec.tempDir("graft-case-guard"))
+    val log = tmp.resolve("child.log")
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString,
+      "-Xmx1g", "-cp", sys.props("java.class.path")) ++ opens ++ Seq(
+      s"-Dgraft.index.dir=${tmp.resolve("index")}",
+      s"-Djava.io.tmpdir=$tmp", "graft.functions.CaseMapGuardChild")
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log.toFile).start()
+    if (!p.waitFor(300, TimeUnit.SECONDS)) p.destroyForcibly()
+    val out = Files.readAllLines(log).asScala
+    val seen = out.collect {
+      case CaseMapGuardChild.Result(stage, init) => stage -> init.toBoolean
+    }.toMap
+    assert(seen.size === 3, out.takeRight(30).mkString("\n"))
+    assert(!seen("xref"), "the xref path initialized the class")
+    assert(!seen("curate"), "the curate path initialized the class")
+    assert(seen("spark-lower"), "the probe missed Spark's own lower")
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.matching
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +21,7 @@ class ScoringLossSpec extends AnyFunSuite {
     s"""{"left":$l,"right":$r,"judgement":"$judgement","weight":0.0}"""
 
   lazy val path: String = {
-    val f = Files.createTempFile("pairs", ".json")
+    val f = Paths.get(graft.SparkSpec.tempDir("pairs"), "pairs.json")
     val lines = Seq(
       // clear positive: identical person names
       pair(entity("p1", "Person", "Vladimir Petrov"),
@@ -48,7 +48,7 @@ class ScoringLossSpec extends AnyFunSuite {
   }
 
   test("report aggregates loss and confusion per algorithm") {
-    val scored = ScoringLoss.scoredPairs(
+    val scored = ScoringLoss.scoreJudged(
       ScoringLoss.readPairs(spark, path))
     val rep = ScoringLoss.report(scored).collect()
       .map(r => r.getString(0) -> r).toMap

@@ -91,7 +91,7 @@ class FtmSpec extends AnyFunSuite {
     assert(Ftm.captionProps("Address") === Seq("full"))
     assert(Ftm.featured("Person") === Seq("name", "nationality",
       "birthDate"))
-    assert(Ftm.featuredOf("Thing") === Nil)
+    assert(!Ftm.featured.contains("Thing"))
     assert(Ftm.nameTypeTag("Company") === Ftm.ORG)
     assert(Ftm.nameTypeTag("Person") === Ftm.PER)
     assert(Ftm.nameTypeTag("Vessel") === Ftm.OBJ)

@@ -32,8 +32,7 @@ class SearchIndexSpec extends AnyFunSuite {
   }
 
   test("folds reproduce the full rebuild: adds, drops, replay, compact") {
-    val root = java.nio.file.Files
-      .createTempDirectory("searchidx-spec").toString + "/idx"
+    val root = SparkSpec.tempDir("searchidx-spec") + "/idx"
     val d0 = docs(
       (1L, "alpha beta beta gamma"),
       (2L, "alpha delta"),

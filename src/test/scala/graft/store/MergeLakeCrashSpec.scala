@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a replay of the crashed operation must converge.
   */
 class MergeLakeCrashSpec extends AnyFunSuite {
-  import graft.SparkSpec.spark
+  import graft.SparkSpec.{spark, tempDir}
   import spark.implicits._
 
   private def df(rows: (String, String, String)*) =
@@ -32,8 +32,7 @@ class MergeLakeCrashSpec extends AnyFunSuite {
   }
 
   private def freshLake(): String = {
-    val path = java.nio.file.Files
-      .createTempDirectory("mlcrash").toString + "/lake"
+    val path = tempDir("mlcrash") + "/lake"
     MergeLake.init(df(
       ("a#name", "Alice", "v1"),
       ("b#name", "Bob", "v1"),
@@ -45,8 +44,7 @@ class MergeLakeCrashSpec extends AnyFunSuite {
     Set(("a#name", "Alice"), ("b#name", "Bob"), ("c#name", "Carol"))
 
   test("crash before the init publish: unreadable, re-init recovers") {
-    val path = java.nio.file.Files
-      .createTempDirectory("mlcrash").toString + "/lake"
+    val path = tempDir("mlcrash") + "/lake"
     crashAt("init-written")(MergeLake.init(df(("a#name", "Alice", "v1")),
       path, nBuckets = 4))
     // no manifest was ever committed — readers refuse loudly

@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * MatchPropsSpec.
   */
 class MergeLakePropSpec extends AnyFunSuite {
-  import graft.SparkSpec.spark
+  import graft.SparkSpec.{spark, tempDir}
   import spark.implicits._
   import MergeLakePropSpec._
 
@@ -75,8 +75,7 @@ class MergeLakePropSpec extends AnyFunSuite {
     * full-fold branch (the lake already held `maxGens` generations).
     */
   private def run(c: Case, i: Int): Int = {
-    val path = java.nio.file.Files
-      .createTempDirectory("mlprop").toString + "/lake"
+    val path = tempDir("mlprop") + "/lake"
     MergeLake.init(frame(c.init), path, nBuckets = 8,
       bucketBy = if (c.byEntity) "id" else "stmt_id")
     var batches = Seq(c.init)

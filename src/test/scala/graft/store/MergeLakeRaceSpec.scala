@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * loser resumes into its exists()-check and must error.
   */
 class MergeLakeRaceSpec extends AnyFunSuite {
-  import graft.SparkSpec.spark
+  import graft.SparkSpec.{spark, tempDir}
   import spark.implicits._
 
   private def df(rows: (String, String, String)*) =
@@ -30,8 +30,7 @@ class MergeLakeRaceSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
 
   private def freshLake(): String = {
-    val path = java.nio.file.Files
-      .createTempDirectory("mlrace").toString + "/lake"
+    val path = tempDir("mlrace") + "/lake"
     MergeLake.init(df(
       ("a#name", "Alice", "v1"),
       ("b#name", "Bob", "v1"),
@@ -102,8 +101,7 @@ class MergeLakeRaceSpec extends AnyFunSuite {
 
   test("lake initialized from an empty frame stays readable") {
     // the day-0 stream shape: zero rows at init, data arrives later
-    val path = java.nio.file.Files
-      .createTempDirectory("mlrace").toString + "/lake"
+    val path = tempDir("mlrace") + "/lake"
     MergeLake.init(df().limit(0), path, nBuckets = 4)
     assert(stateOf(path) === Set.empty)
     MergeLake.append(df(("a#name", "Alice", "v2")), path)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * touched-bucket-only compaction.
   */
 class MergeLakeSpec extends AnyFunSuite {
-  import graft.SparkSpec.spark
+  import graft.SparkSpec.{spark, tempDir}
   import spark.implicits._
 
   private def row(id: String, value: String, seen: String) =
@@ -23,8 +23,7 @@ class MergeLakeSpec extends AnyFunSuite {
       .toSet
 
   test("append upserts on stmt_id and compact preserves the resolve") {
-    val path = java.nio.file.Files
-      .createTempDirectory("mergelake").toString + "/lake"
+    val path = tempDir("mergelake") + "/lake"
     MergeLake.init(df(
       ("a#name", "Alice", "v1"),
       ("b#name", "OLD Bob", "v1"),
@@ -49,8 +48,7 @@ class MergeLakeSpec extends AnyFunSuite {
   }
 
   test("compact rewrites only the buckets the deltas touched") {
-    val path = java.nio.file.Files
-      .createTempDirectory("mergelake").toString + "/lake"
+    val path = tempDir("mergelake") + "/lake"
     // many buckets so the single-row delta cannot touch them all
     val base = (1 to 64).map(i => (s"e$i#name", s"N$i", "v1"))
     MergeLake.init(df(base: _*), path, nBuckets = 16)
@@ -86,8 +84,7 @@ class MergeLakeSpec extends AnyFunSuite {
   }
 
   test("repeated partial folds keep the base-generation count bounded") {
-    val path = java.nio.file.Files
-      .createTempDirectory("mergelake").toString + "/lake"
+    val path = tempDir("mergelake") + "/lake"
     val base = (1 to 64).map(i => (s"e$i#name", s"N$i", "v1"))
     MergeLake.init(df(base: _*), path, nBuckets = 16)
     val root = new org.apache.hadoop.fs.Path(path)
@@ -114,8 +111,7 @@ class MergeLakeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val path = java.nio.file.Files
-      .createTempDirectory("mergelake").toString + "/lake"
+    val path = tempDir("mergelake") + "/lake"
     val base = (1 to 200).map(i => (s"e$i#name", s"N$i", "v1"))
     MergeLake.init(df(base: _*), path, nBuckets = 8)
     MergeLake.compact(spark, path) // no deltas: no-op

@@ -26,8 +26,7 @@ class RefIndexSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1))).toSet
 
   test("fold forward adds, retracts, replays, compacts") {
-    val root = java.nio.file.Files
-      .createTempDirectory("refidx-spec").toString
+    val root = SparkSpec.tempDir("refidx-spec")
     val lakeP = s"$root/lake"
     val idxP = s"$root/refidx"
     // a refs x; b refs x and y; c has only a non-entity statement
@@ -77,7 +76,7 @@ class RefIndexSpec extends AnyFunSuite {
   }
 
   private def freshIndex(prefix: String): (String, String) = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val root = SparkSpec.tempDir(prefix)
     val (lakeP, idxP) = (s"$root/lake", s"$root/refidx")
     MergeLake.init(stmts(("a", "entity", "x", "d0")), lakeP,
       bucketBy = "canonical_id")

@@ -48,8 +48,7 @@ class LoopStreamSpec extends AnyFunSuite {
       .withColumn("last_seen", lit(s"d${k + 1}"))
       .as[Stmt].collect().toSeq
 
-    val root = java.nio.file.Files
-      .createTempDirectory("loopstream").toString
+    val root = SparkSpec.tempDir("loopstream")
     val p = LoopStream.Paths(root)
     // the blocker cut must never bind or stream/batch diverge at the
     // rank margin (Soak `loopstream` uses the same limit)

@@ -20,8 +20,7 @@ class ResolveStreamSpec extends AnyFunSuite {
 
   test("streamed edge batches resolve like one full re-cluster") {
     implicit val sc = spark.sqlContext
-    val path = java.nio.file.Files
-      .createTempDirectory("resolvestream").toString + "/state"
+    val path = SparkSpec.tempDir("resolvestream") + "/state"
     val base = Seq("b" -> "c", "c" -> "d", "f" -> "g", "x" -> "y")
     ResolveStream.init(
       Resolver.connectedComponents(base.toDF("src", "dst")), path,

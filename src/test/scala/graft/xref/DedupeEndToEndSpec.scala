@@ -31,8 +31,8 @@ class DedupeEndToEndSpec extends AnyFunSuite {
     // from family members sharing an address and surname (~0.35).
     val cfg = Xref.Config(algorithm = "regression-v1",
       autoThreshold = Some(0.5))
-    val merges = Xref.autoMerges(spark, stmts,
-      Seq.empty[(String, String)].toDF("src", "dst"), cfg).cache()
+    val merges = Xref.run(spark, stmts,
+      Seq.empty[(String, String)].toDF("src", "dst"), cfg)._1.cache()
     assert(merges.count() > 0)
 
     // components over the merge edges → canonical map → rewrite
