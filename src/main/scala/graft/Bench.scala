@@ -1,5 +1,22 @@
 package graft
-import org.apache.spark.sql.DataFrame
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Profile.Lap
+import graft.Record.Rec
+
+/** The query bench. [[run]] laps each selected query on a given
+  * session; `main` adds the ambient gate and its own session, prints
+  * [[Run.line]] and writes [[Run.record]] to `$SPARK_GRAFT_BENCH_OUT`.
+  * `SPARK_GRAFT_ONLY` picks a subset ([[SparkEntry.only]]) and
+  * `SPARK_GRAFT_BENCH_REPEAT=N` keeps each query's fastest of N laps.
+  * Run at sf0.001 with `-Dspark.sql.codegen.fallback=false
+  * -Dspark.sql.codegen.factoryMode=CODEGEN_ONLY`, it is the codegen
+  * check: `failed` names every query whose generated code fails.
+  */
 object Bench {
   /** Force FULL evaluation of every output column: `count()` lets
     * Catalyst prune the projections (a map-only query would be timed as
@@ -21,16 +38,9 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
     val parquets =
-      try {
-        val it = files.iterator()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.toString.endsWith(".parquet") &&
-            java.nio.file.Files.isRegularFile(p)) buf += p
-        }
-        buf.sortBy(_.toString)
-      } finally files.close()
+      try files.iterator().asScala.filter(p => p.toString.endsWith(".parquet")
+        && java.nio.file.Files.isRegularFile(p)).toVector.sortBy(_.toString)
+      finally files.close()
     val target = 64L * 1024 * 1024
     val t0 = System.nanoTime()
     var read = 0L
@@ -65,123 +75,127 @@ object Bench {
     (load, probeSec)
   }
 
+  /** The ambient gate's bounds: 1-minute loadavg, probe seconds, wait. */
+  private val MaxLoad = 2.0
+  private val MaxProbeSec = 0.1
+  private val QuietWaitSec = 180
+
   /** Ambient-load gate: a bench started on a busy host measures the
     * host, not the engine (the r10 driver artifact ran at loadavg 10.1
     * and its query tail came out 1.6× the quiet-window record on an
     * unchanged tree). Before timing anything, poll the machine probe
-    * until the 1-minute loadavg is under ~2 AND the 64 MiB read+sum
-    * probe is under ~0.1 s, up to a bounded wait — then either way run
-    * the bench, stamping `ambient_gate` ok/failed plus the PRE-run
-    * probe numbers so a record taken in weather is self-annotating
-    * instead of needing after-the-fact adjudication.
+    * until the 1-minute loadavg is under [[MaxLoad]] AND the 64 MiB
+    * read+sum probe is under [[MaxProbeSec]], up to [[QuietWaitSec]] —
+    * then either way run the bench, stamping `ambient_gate` ok/failed
+    * plus the PRE-run probe numbers so a record taken in weather is
+    * self-annotating instead of needing after-the-fact adjudication.
     */
-  private def ambientGate(sfDir: String): (String, Double, Double) = {
-    val maxLoad = sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD")
-      .map(_.toDouble).getOrElse(2.0)
-    val maxProbe = sys.env.get("SPARK_GRAFT_BENCH_MAX_PROBE_SEC")
-      .map(_.toDouble).getOrElse(0.1)
-    val waitSec = sys.env.get("SPARK_GRAFT_BENCH_QUIET_WAIT_SEC")
-      .map(_.toInt).getOrElse(180)
-    val deadline = System.nanoTime() + waitSec * 1_000_000_000L
+  private def ambientGate(sfDir: String): Rec = {
+    val deadline = System.nanoTime() + QuietWaitSec * 1_000_000_000L
     var (load, probe) = machineProbe(sfDir)
-    while ((load > maxLoad || probe > maxProbe) &&
-        System.nanoTime() < deadline) {
+    def quiet = load <= MaxLoad && probe <= MaxProbeSec
+    while (!quiet && System.nanoTime() < deadline) {
       System.err.println(
         f"[bench] ambient gate: loadavg $load%.2f / probe $probe%.3fs " +
-          f"over ($maxLoad%.1f, $maxProbe%.2fs) — waiting for quiet")
+          f"over ($MaxLoad%.1f, $MaxProbeSec%.2fs) — waiting for quiet")
       Thread.sleep(15000)
       val p = machineProbe(sfDir)
       load = p._1; probe = p._2
     }
-    val verdict = if (load <= maxLoad && probe <= maxProbe) "ok" else "failed"
-    if (verdict == "failed")
-      System.err.println(f"[bench] ambient gate FAILED after ${waitSec}s " +
+    if (!quiet)
+      System.err.println(f"[bench] ambient gate FAILED after ${QuietWaitSec}s " +
         f"(loadavg $load%.2f, probe $probe%.3fs) — timings are weather")
-    (verdict, load, probe)
+    ListMap("ambient_gate" -> (if (quiet) "ok" else "failed"),
+      "loadavg_pre" -> load, "probe_64mib_pre" -> probe)
   }
 
-  /** A double at 4 decimals, always with a `.` separator: the JVM's
-    * default locale would print `0,1234` under de_DE, which no JSON
-    * parser reads.
-    */
-  private[graft] def fixed4(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+  /** A lap's layer fields, as each query of the keyed record carries them. */
+  private def fields(l: Lap): Rec = ListMap("wall_sec" -> l.wallSec,
+    "jobs" -> l.jobs, "stages" -> l.stages, "shuffle_bytes" -> l.shuffleBytes,
+    "peak_stage_bytes" -> l.peakStageBytes, "cpu_sec" -> l.cpuS,
+    "compiles" -> l.compiles)
 
-  /** The one-line JSON result. The printed line rounds every float to
-    * 4 decimals: at full double precision the 137-query line is ~9 KB
-    * and overflows a log-tail capture of a few KB — 0.1 ms resolution
-    * is far below bench noise and cuts the line ~3×. The
-    * `$SPARK_GRAFT_BENCH_OUT` file keeps full precision (`_.toString`).
+  /** One bench pass: each query's fastest lap in name order, the
+    * queries that threw, and the index build's lap.
     */
-  private[graft] def line(results: Seq[(String, Double)], total: Double,
-      failed: Seq[String], idxSec: Double, gate: String, loadPre: Double,
-      probePre: Double, loadavg: Double, probeSec: Double, sfDir: String,
-      fmt: Double => String): String = {
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"index_build_sec":${fmt(idxSec)},"ambient_gate":"$gate","loadavg_pre":${fmt(loadPre)},"probe_64mib_pre":${fmt(probePre)},"loadavg":${fmt(loadavg)},"probe_64mib_sec":${fmt(probeSec)},"sf":"$sfDir"}"""
+  final case class Run(sfDir: String, laps: Seq[(String, Lap)],
+      failed: Seq[String], index: Lap) {
+    private def head: Rec = ListMap("metric" -> "total",
+      "value" -> laps.map(_._2.wallSec).sum, "unit" -> "sec", "sf" -> sfDir)
+
+    /** The file record: each query's and the index build's lap fields. */
+    def record: Rec = head ++ ListMap(
+      "queries" -> ListMap.from(laps.map { case (n, l) => n -> fields(l) }),
+      "failed" -> failed, "index_build" -> fields(index))
+
+    /** The printed record, short enough for a log tail: the walls in
+      * name order and the SHA-256 of the `,`-joined names.
+      */
+    def line: Rec = head ++ ListMap(
+      "queries" -> laps.map(_._2.wallSec),
+      "names_sha256" -> sha256(laps.map(_._1).mkString(",")),
+      "failed" -> failed, "index_build_sec" -> index.wallSec)
+  }
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** Laps `names` on `spark` against `sfDir` after an untimed warmup
+    * and the index build; an unknown name throws before any job. Its
+    * profiler is removed on the way out, so the session may be shared.
+    */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String]): Run = {
+    val queries = SparkEntry.select(names)
+    val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
+      .map(_.toInt).getOrElse(1)
+    val prof = Profile.attach(spark)
+    try {
+      // untimed warmup: first-query cost is dominated by one-off JVM
+      // work (codegen compiler, shuffle machinery, parquet reader
+      // init), not engine throughput — absorb it before the timed loop
+      try exhaust(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+      // ingest: build-or-read the stored-index lake artifacts BEFORE the
+      // timed loop (indexes are built once when data lands, queries read
+      // them); its lap is reported apart rather than billed to whichever
+      // query first touches each family
+      val (_, index) = prof.timed(
+        try Caches.ensureAll(spark, sfDir) catch { case e: Throwable =>
+          System.err.println(s"[bench] index build FAILED: ${e.getMessage}") })
+      // deterministic name order: per-query timings comparable across
+      // rounds, and shared materializations (tf index, score table) are
+      // attributed to the first query of their family
+      val failed = Seq.newBuilder[String]
+      val laps = queries.map { case (name, fn) =>
+        name -> (1 to repeat).map { _ =>
+          prof.timed(try exhaust(fn(spark, sfDir)) catch {
+            case e: Throwable =>
+              failed += name
+              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          })._2
+        }.minBy(_.wallSec)
+      }
+      Run(sfDir, laps, failed.result().distinct, index)
+    } finally spark.sparkContext.removeSparkListener(prof)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val (gate, loadPre, probePre) = ambientGate(sfDir)
+    val names = SparkEntry.only()
+    val gate = ambientGate(sfDir)
     val spark = cli.CliArgs.session("bench")
-    // untimed warmup: first-query cost is dominated by one-off JVM work
-    // (codegen compiler, shuffle machinery, parquet reader init), not
-    // engine throughput — absorb it before the timed loop
-    try exhaust(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    // ingest: build-or-read the stored-index lake artifacts (blocker
-    // TF, PQ codes, snak table, ...) BEFORE the timed loop — the
-    // production shape: indexes are built once when data lands, queries
-    // read them. The build cost is measured and reported separately
-    // (index_build_sec) rather than billed to whichever query
-    // alphabetically touches each family first; on a dir whose
-    // artifacts already exist this is a no-op.
-    val tIdx = System.nanoTime()
-    try Caches.ensureAll(spark, sfDir) catch { case e: Throwable =>
-      System.err.println(s"[bench] index build FAILED: ${e.getMessage}") }
-    val idxSec = (System.nanoTime() - tIdx) / 1e9
-    // deterministic name order: per-query timings comparable across
-    // rounds, and shared materializations (tf index, score table) are
-    // attributed to the first query of their family
-    var failed = List.empty[String]
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the timed set (local
-    // iteration); SPARK_GRAFT_BENCH_REPEAT times each query N times
-    // and keeps the minimum (steady-state, noise-robust)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-    val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
-      .map(_.toInt).getOrElse(1)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }.map {
-      case (name, fn) =>
-        val times = (1 to repeat).map { _ =>
-          val t0 = System.nanoTime()
-          try exhaust(fn(spark, sfDir)) catch {
-            case e: Throwable =>
-              failed ::= name
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          }
-          (System.nanoTime() - t0) / 1e9
-        }
-        name -> times.min
-    }
-    val total = results.map(_._2).sum
-    val (loadavg, probeSec) = machineProbe(sfDir)
-    def render(fmt: Double => String): String =
-      line(results, total, failed.reverse, idxSec, gate, loadPre, probePre,
-        loadavg, probeSec, sfDir, fmt)
-    println(render(fixed4))
-    // ALSO write the line to a file: the driver's bench artifact keeps
-    // only a truncated log tail, which loses the first half of the
-    // per-query record — the file is the complete, parseable copy
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (render(_.toString) + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $outPath: $e") }
-    spark.stop()
+    try {
+      val r = run(spark, sfDir, names)
+      val (loadavg, probeSec) = machineProbe(sfDir)
+      val machine = gate ++ ListMap("loadavg" -> loadavg,
+        "probe_64mib_sec" -> probeSec)
+      println(Record.json(r.line ++ machine))
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+        "bench_out.json")
+      try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+        (Record.json(r.record ++ machine) + "\n").getBytes("UTF-8"))
+      catch { case e: Exception =>
+        System.err.println(s"[bench] could not write $outPath: $e") }
+    } finally spark.stop()
   }
 }

@@ -1,13 +1,12 @@
 package graft
 
 import scala.collection.immutable.ListMap
-import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.DISK_ONLY
 
+import graft.Record.Rec
 import graft.store.{EntityStore, MergeLake, StarStatements}
 import graft.xref.Xref
 
@@ -62,8 +61,6 @@ object Soak {
     try println(run(spark, args)) finally spark.stop()
   }
 
-  private type Rec = ListMap[String, Any]
-
   /** One soak's arguments, its profiler and its scratch dir. */
   private final case class Soaking(spark: SparkSession, sfDir: String,
       replicas: Int, mode: String, args: Seq[String], prof: Profile,
@@ -99,32 +96,13 @@ object Soak {
         s"soak mode $mode reads the donations fixture $Fixture, which is missing")
     val scratch = java.nio.file.Files.createTempDirectory(s"graft-$mode-soak")
     val prof = Profile.attach(spark)
-    try json(soak(Soaking(spark, args.headOption.getOrElse("/root/testdata/sf0.1"),
+    try Record.json(soak(Soaking(spark, args.headOption.getOrElse("/root/testdata/sf0.1"),
       args.lift(1).map(_.toInt).getOrElse(10), mode, args.toSeq, prof,
       scratch.toString)))
     finally {
       spark.sparkContext.removeSparkListener(prof)
       org.apache.hadoop.fs.FileUtil.fullyDelete(scratch.toFile)
     }
-  }
-
-  private val Mapper = new ObjectMapper()
-
-  /** The one record writer: a `ListMap` is an object with its keys in
-    * order, a `Seq` an array, and every double is rounded to 3 decimals
-    * and printed with a `.` whatever the JVM's default locale.
-    */
-  private def json(rec: Rec): String = {
-    def plain(v: Any): Any = v match {
-      case m: ListMap[_, _] =>
-        val o = new java.util.LinkedHashMap[Any, Any]()
-        m.foreach { case (k, x) => o.put(k, plain(x)) }
-        o
-      case s: Seq[_] => s.map(plain).asJava
-      case d: Double => math.rint(d * 1000) / 1000
-      case x => x
-    }
-    Mapper.writeValueAsString(plain(rec))
   }
 
   private def curate(r: Soaking): Rec = {
@@ -138,7 +116,7 @@ object Soak {
       (report, curated.count())
     }
     head ++ ListMap("docs" -> nDocs, "out" -> nOut,
-      "report" -> Mapper.readTree(report.json), "wall_sec" -> l.wallSec,
+      "report" -> report.fields, "wall_sec" -> l.wallSec,
       "cpu_sec" -> l.cpuS, "compiles" -> l.compiles) ++ shuffle
   }
 

@@ -9,8 +9,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     store.RelationalOps.aggPricing(spark, "/root/testdata/sf0.001")
 
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The query names `SPARK_GRAFT_ONLY` lists (comma-separated, each
+    * name trimmed), or every query's when it is unset, in name order:
+    * the one subset rule of Bench, Verify and the tools. An unknown name
+    * throws, naming it, before any Spark job.
+    */
+  def only(list: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[String] =
+    select(list.fold(queries.keys.toSeq)(
+      _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)).map(_._1)
+
+  /** `names`' queries in name order; an unknown name throws. */
+  def select(names: Seq[String]): Seq[(String, Query)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+    names.distinct.sorted.map(n => n -> all(n))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Query] =
     store.RelationalOps.queries ++ store.StoreQueries.queries ++
       blocker.BlockerQueries.queries ++
       resolver.ResolverQueries.queries ++ matching.MatchingQueries.queries ++

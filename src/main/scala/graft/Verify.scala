@@ -1,40 +1,32 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.collection.immutable.ListMap
+
+/** Correctness dump: each selected SparkEntry.queries result →
+  * parquet, plus oracle_sql.json, for the DuckDB compare
+  * (`tools/check_oracle.py`). `SPARK_GRAFT_ONLY=q_a,q_b` runs a subset
+  * ([[SparkEntry.only]]); unset, every query is dumped.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val names = SparkEntry.only()
     val spark = cli.CliArgs.session("verify")
     new java.io.File(outDir).mkdirs()
-    // Dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_b runs a subset (driver
-    // leaves it unset → full dump).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.select(names).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** The oracle SQL by query name, in name order. */
+  private[graft] def oracleJson(sql: Map[String, String]): String =
+    Record.json(ListMap.from(sql.toSeq.sortBy(_._1)))
 }

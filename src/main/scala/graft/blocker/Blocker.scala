@@ -136,7 +136,8 @@ object Blocker {
 
   /** The IDF expression over (tdf, n_entities) longs — ONE expression
     * tree shared with the incrementally-maintained index
-    * ([[BlockerIndex.idfView]]) so both paths produce bit-equal doubles.
+    * ([[BlockerIndex.termFrequencies]]) so both paths produce bit-equal
+    * doubles.
     */
   private[blocker] def idfExpr: Column =
     lit(1.0) + log(col("n_entities") / col("tdf"))

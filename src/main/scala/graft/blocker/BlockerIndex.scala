@@ -304,8 +304,8 @@ object BlockerIndex {
   }
 
   /** The signed log folded ONCE at its finest grain — every reader
-    * below (tokenFieldStats for stopwords/tokenStats, idfView's tdf
-    * and N rollups) filters this same frame, so within one plan the
+    * below (tokenFieldStatsOf for stopwords/tokenStats, idfViewOf's
+    * tdf and N rollups) filters this same frame, so within one plan the
     * planner reuses a single Exchange over a single log scan instead
     * of paying one scan + shuffle per consumer (r12 measured three
     * separate folds inside every termFrequencies read). Two load-
@@ -326,9 +326,6 @@ object BlockerIndex {
         sum(col("tdf")).as("tdf"), sum(col("n")).as("n"))
 
   /** Folded per-(token, schema, field) stats — vocabulary-sized. */
-  def tokenFieldStats(s: SparkSession, indexPath: String): DataFrame =
-    tokenFieldStatsOf(foldedLog(s, indexPath))
-
   private def tokenFieldStatsOf(log: DataFrame): DataFrame =
     log.filter(col("kind") === "tfs")
       .select(col("token"), col("schema"), col("field"), col("df"),
@@ -351,9 +348,6 @@ object BlockerIndex {
   /** [[Blocker.idf]] from the maintained tdf/N rollups — the "IDF is a
     * scalar recompute" half of the design; same expression tree.
     */
-  def idfView(s: SparkSession, indexPath: String): DataFrame =
-    idfViewOf(foldedLog(s, indexPath))
-
   private def idfViewOf(log: DataFrame): DataFrame = {
     val n = log.filter(col("kind") === "n")
       .agg(sum(col("n")).as("n_entities"))

@@ -1,9 +1,12 @@
 package graft.cli
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Record
 import graft.dedup.DedupQueries
 import graft.textanalysis.{Curation, LangModel, TextAnalysis}
 
@@ -52,13 +55,15 @@ object CurateMain {
       unscoreable: Long, afterQuality: Long,
       afterLm: Long, afterNearDup: Long, shards: Int,
       packWindows: Long) {
-    def json: String =
-      s"""{"input": $input, "after_exact_dedup": $afterExact,
-         | "unscoreable_no_tokens": $unscoreable,
-         | "after_quality": $afterQuality, "after_lm": $afterLm,
-         | "after_near_dup": $afterNearDup, "shards": $shards,
-         | "pack_windows": $packWindows}"""
-        .stripMargin.replace("\n", "")
+    /** The per-stage counts in pipeline order. */
+    def fields: Record.Rec = ListMap("input" -> input,
+      "after_exact_dedup" -> afterExact,
+      "unscoreable_no_tokens" -> unscoreable,
+      "after_quality" -> afterQuality, "after_lm" -> afterLm,
+      "after_near_dup" -> afterNearDup, "shards" -> shards,
+      "pack_windows" -> packWindows)
+
+    def json: String = Record.json(fields)
   }
 
   /** The pipeline on a documents frame; returns (curated, report). */

@@ -768,16 +768,12 @@ object NameMatchV2 {
   /** Collapse runs of ≥2 consecutive single-letter parts into one glued
     * token: initialisms are ordered ("C.B.A." must not multiset-match
     * "A.B.C."), and the glued form matches its spelled-out sibling
-    * ("S.A.R.L." ~ "SARL").
-    */
-  def collapseInitialRuns(parts: List[String]): List[String] =
-    collapseInitialRunsTagged(parts)._1
-
-  /** [[collapseInitialRuns]] plus the set of glued tokens it produced —
-    * the alignment treats those as ordered initialisms that must match
-    * EXACTLY: the frozen run scores "N.A.B.C. Company" vs "A.B.C.
-    * Company" at 0.23, i.e. nabc~abc is a mismatch, never a 1-edit
-    * fuzzy neighbour (fuzzy on acronyms compares initials, not names).
+    * ("S.A.R.L." ~ "SARL"). Returns the collapsed parts and the set of
+    * glued tokens it produced — the alignment treats those as ordered
+    * initialisms that must match EXACTLY: the frozen run scores
+    * "N.A.B.C. Company" vs "A.B.C. Company" at 0.23, i.e. nabc~abc is a
+    * mismatch, never a 1-edit fuzzy neighbour (fuzzy on acronyms
+    * compares initials, not names).
     */
   def collapseInitialRunsTagged(
       parts: List[String]): (List[String], Set[String]) = {

@@ -49,8 +49,8 @@ object Multimodal {
   /** Shared frame explode: one row per (doc_id, frame_no, frame bytes).
     * Map-side only, no shuffle. The `n_frames > 0` filter guards empty
     * content — `sequence(0, -1)` counts DOWN (the oracle's `range(0)`
-    * is empty). All three frame consumers (framesQ, featuresQ,
-    * frameDataset) derive from this single projection.
+    * is empty). Both frame consumers (framesQ, featuresQ) derive from
+    * this single projection.
     */
   private def explodedFrames(s: SparkSession, d: String): DataFrame =
     media(s, d)
@@ -86,59 +86,6 @@ object Multimodal {
       .agg(count(lit(1)).as("n_frames"),
         round(avg(col("f")), 6).as("mean_feature"))
 
-  /** One sampled frame of a media document (decoder input row). */
-  final case class MediaFrame(doc_id: Long, frame_no: Int, frame: Array[Byte])
-
-  /** Decoded per-frame features (decoder output row). */
-  final case class FrameFeature(doc_id: Long, frame_no: Int, width: Int,
-      height: Int, feature: Array[Float])
-
-  /** Typed frame rows for the decoder stage. */
-  def frameDataset(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[MediaFrame] = {
-    import s.implicits._
-    explodedFrames(s, d).as[MediaFrame]
-  }
-
-  /** Partition-batched decode stage — the Scala/Arrow analogue of a
-    * `mapInPandas` decoder: rows stream through `mapPartitions`, the
-    * decoder consumes them in fixed-size batches (the shape a vectorized
-    * image/audio library or JNI binding wants), and emits typed feature
-    * rows. THE DECODE ITSELF IS A STUB (`decodeBatch` derives
-    * width/height/features deterministically from the bytes — no media
-    * codecs exist in this environment); everything around it — the typed
-    * row schema, the per-partition batching, the 1:1 frame→feature
-    * contract, the downstream pooling — is the production plan shape:
-    * map-only, no shuffle, codegen on both sides of the stage.
-    */
-  def decodeFrames(frames: org.apache.spark.sql.Dataset[MediaFrame],
-      batchSize: Int = 64): org.apache.spark.sql.Dataset[FrameFeature] = {
-    import frames.sparkSession.implicits._
-    frames.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // vectorized decoder call-site: one invocation per batch
-        decodeBatch(batch)
-      }
-    }
-  }
-
-  /** STUB vectorized decoder: one call per batch, deterministic
-    * pseudo-decode per frame (replace with the real codec binding).
-    */
-  private def decodeBatch(batch: Seq[MediaFrame]): Seq[FrameFeature] =
-    batch.map { f =>
-      val n = f.frame.length
-      val w = math.max(1, n / 16)
-      val h = math.max(1, n / w)
-      val feat = Array.tabulate(4) { i =>
-        var acc = 0L
-        var j = i
-        while (j < n) { acc += (f.frame(j) & 0xff); j += 4 }
-        (acc % 997).toFloat / 997f
-      }
-      FrameFeature(f.doc_id, f.frame_no, w, h, feat)
-    }
-
   // ---------------------------------------------------- perceptual dedup
 
   /** aHash sample width (32 "pixels"; every corpus doc is ≥ 32 bytes). */
@@ -153,7 +100,7 @@ object Multimodal {
     * The mean comparison is kept in exact integers
     * (`pixels·p_i > Σp` ⇔ `p_i > mean`), so the signature is
     * bit-identical across engines. On real images the intensity row is
-    * the decoder's luma plane (the [[decodeFrames]] stage); here it is
+    * the decoder's luma plane (the [[decodeQ]] stage); here it is
     * the payload's byte values (ASCII-verified corpus — the HASH AND
     * BANDING ALGEBRA is the deliverable, as with [[stubFeature]]).
     */
@@ -380,8 +327,9 @@ object Multimodal {
   }
 
   /** The decode stage as a typed partition-batched Dataset transform —
-    * the same `mapPartitions` shape as [[decodeFrames]], with the stub
-    * replaced by the real ImageIO call. Map-only, no shuffle.
+    * the Scala analogue of a `mapInPandas` decoder: rows stream through
+    * `mapPartitions` and the real ImageIO call consumes them in
+    * fixed-size batches. Map-only, no shuffle.
     */
   def decodeQ(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -58,10 +58,6 @@ object Search {
     bm25Core(s, postingsCk(s, d), QueryTerms,
       statsPre = Some(postingsStatsCk(s, d)))
 
-  def bm25Of(s: SparkSession, docs: DataFrame,
-      queryTerms: Seq[(Int, String)]): DataFrame =
-    bm25Core(s, postingsOf(docs), queryTerms)
-
   /** The inverted index, (doc, term) → tf. dl rides along in the
     * grouping key (functionally dependent on doc_id) to avoid a second
     * join against a doc-length table.
@@ -97,9 +93,8 @@ object Search {
       .agg(count(lit(1)).as("tf"))
 
   /** [[postingsOf]] the document corpus as a lake artifact — the
-    * postings table is the retrieval family's stored index (what the
-    * bm25Of scaladoc's production note promises): built once when data
-    * lands, read by both the BM25 and hybrid-RRF queries, plus a
+    * postings table is the retrieval family's stored index: built once
+    * when data lands, read by both the BM25 and hybrid-RRF queries, plus a
     * read-once-then-cache session copy like the blocker TF table.
     */
   def postingsCk(s: SparkSession, d: String): DataFrame =
@@ -208,7 +203,7 @@ object Search {
     * recall with embedding recall. Query-by-document: each query doc's
     * top-[[MltTerms]] TF-IDF keywords form its lexical query (the
     * Lucene MoreLikeThis idiom), scored with the SAME BM25 core as
-    * [[bm25Of]]; the dense arm is the brute cosine top-K over the
+    * [[bm25Q]]; the dense arm is the brute cosine top-K over the
     * matching embedding ids; the fused score is
     * `Σ_arm floor(1e6 / (k + rank_arm))` — RRF in exact integer units,
     * so the fused ranking is bit-reproducible (the float RRF sum would
@@ -254,7 +249,7 @@ object Search {
       .withColumn("rn", row_number().over(wk))
       .filter(col("rn") <= MltTerms)
       .select(col("qid"), col("term"), col("idf")))
-    // sparse arm: the bm25Of scoring core over the keyword queries,
+    // sparse arm: the bm25Q scoring core over the keyword queries,
     // self-match excluded
     val termE6 = floor(
       col("idf") * ((col("tf") * lit(K1 + 1)) /

@@ -145,7 +145,7 @@ object StoreQueries {
       .withColumn("num", split(col("id"), ":").getItem(1).cast("long"))
     // both snapshot digests from ONE pass (deltaOpsOnePass): the
     // "from" version is a row-level filter of the same frame, so the
-    // two contentDigests scans + full-outer join collapse into a
+    // two per-version digest scans + full-outer join collapse into a
     // single groupBy(id)
     VersionedStore.deltaOpsOnePass(all,
       col("num") % 7 =!= 0 &&

@@ -122,12 +122,6 @@ object VersionedStore {
       .filter(col("op") =!= "SAME")
   }
 
-  /** Per-entity content digest of a statement frame (id, field, value). */
-  def contentDigests(stmts: DataFrame): DataFrame =
-    stmts.groupBy(col("id"))
-      .agg(md5(concat_ws("|", array_sort(collect_list(
-        concat(col("field"), lit("="), col("value")))))).as("digest"))
-
   /** [[deltaOps]] specialized to the snapshot-diff shape where BOTH
     * versions derive from one statement frame — "from" is the rows
     * satisfying `fromCond`, "to" is every row. Both digests then ride
@@ -136,8 +130,9 @@ object VersionedStore {
     * like filtering first), instead of two scans + two aggregations +
     * a full-outer join: 4 Exchanges → 1, and the join disappears.
     * DEL is unreachable by construction (from ⊆ to in id space), and
-    * the digest expression is [[contentDigests]]' own, so the output
-    * is bit-identical to the two-sided form — PROVIDED `id` is
+    * each digest is the md5 of the version's sorted `field=value`
+    * entries joined by `|`, so the output is bit-identical to the
+    * two-sided form over those digests — PROVIDED `id` is
     * non-null: the two-sided full-outer join never matches null keys
     * (emitting separate ADD+DEL rows for a null-id group) while this
     * groupBy folds them into one row. Every current caller feeds

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.resolver.Resolver
 import graft.store.MergeLake
@@ -24,11 +23,11 @@ import graft.store.MergeLake
   * the components artifact is write-once per corpus version, while the
   * judgement stream needs in-place growth with delta-sized writes.
   *
-  * Exactly-once note: foreachBatch gives at-least-once delivery on
-  * retry — but this sink is idempotent at the state
-  * level: a replayed batch finds its edges already intra-cluster
-  * (labels equal), the changed set comes back empty, and nothing is
-  * written.
+  * Exactly-once note: a stream's micro-batch sink (`nk loop-stream`,
+  * [[LoopStream]]) delivers at least once on retry — but the fold is
+  * idempotent at the state level: a replayed batch finds its edges
+  * already intra-cluster (labels equal), the changed set comes back
+  * empty, and nothing is written.
   */
 object ResolveStream {
 
@@ -79,13 +78,4 @@ object ResolveStream {
       changed
     } finally { cc.unpersist(); () }
   }
-
-  /** Attach the resolver-state sink to a judgement-edge stream. */
-  def sink(edges: DataFrame, path: String): DataStreamWriter[Row] =
-    edges.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          applyBatch(batch.sparkSession, batch, path, s"b$batchId")
-      }
 }

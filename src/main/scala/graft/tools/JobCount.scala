@@ -10,13 +10,12 @@ import graft.Profile
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val queries = graft.SparkEntry.select(args.toSeq)
     val spark = graft.cli.CliArgs.session("jobcount")
     val prof = Profile.attach(spark,
       keepStages = sys.env.contains("SPARK_GRAFT_STAGES"))
     graft.Caches.ensureAll(spark, sfDir)
-    val names = args.toSeq
-    names.foreach { n =>
-      val fn = graft.SparkEntry.queries(n)
+    queries.foreach { case (n, fn) =>
       // warm
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       prof.lap()

@@ -13,6 +13,23 @@ class CachesSpec extends AnyFunSuite {
 
   val dir = "/root/testdata/sf0.001"
 
+  /** `body` with the index lake rooted at `root`, every in-session
+    * cache dropped on the way in and out.
+    */
+  private def withIndexRoot[A](root: String)(body: => A): A = {
+    val prev = sys.props.get("graft.index.dir")
+    sys.props.put("graft.index.dir", root)
+    Caches.clearAll()
+    try body
+    finally {
+      prev match {
+        case Some(v) => sys.props.put("graft.index.dir", v)
+        case None => sys.props.remove("graft.index.dir")
+      }
+      Caches.clearAll()
+    }
+  }
+
   test("clearAll drops and rebuilds every stored-index cache") {
     val ivf = similarity.SimilarityQueries.queries("q_sim_ivf")
     val pairs = dedup.DedupQueries.queries("q_dedup_winnow")
@@ -42,21 +59,24 @@ class CachesSpec extends AnyFunSuite {
 
   test("ensureAll publishes on-disk artifacts; reads match rebuilds") {
     val tmp = SparkSpec.tempDir("graft-index-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props.put("graft.index.dir", tmp)
-    Caches.clearAll()
-    try {
+    withIndexRoot(tmp) {
       Caches.ensureAll(spark, dir)
       val fp = IndexLake.fingerprint(dir)
-      val names = Seq("blocker_entries", "blocker_tf", "resolver_scores",
+      // every entry under the fingerprint is a published artifact with
+      // its marker, and no losing writer's `.tmp-` sibling remains
+      val entries = Paths.get(tmp, fp).toFile.listFiles().toSeq
+      val published = entries.map(_.getName).toSet
+      assert(!published.exists(_.contains(".tmp-")), published)
+      for (e <- entries)
+        assert(new java.io.File(e, "_SUCCESS").isFile,
+          s"artifact ${e.getName} has no _SUCCESS")
+      val names = Set("blocker_entries", "blocker_tf", "resolver_scores",
         "wd_snaks", "ivf_centroids", "pq_codebook", "pq_codes",
         "near_banded", "fp_sets", "fp_pos", "bpe_merges",
         // the four scenario lakes, so no timed query builds one
         "q_store_merge", "q_blk_index_add", "q_ref_index_add",
         "q_search_index_add")
-      for (n <- names)
-        assert(Files.exists(Paths.get(tmp, fp, n, "_SUCCESS")),
-          s"artifact $n not published")
+      assert(names.subsetOf(published), names -- published)
       // a fresh memo (new session would do the same) reads the artifact
       // and the result matches a from-scratch rebuild bit-for-bit
       val viaDisk = blocker.BlockerQueries.tfCk(spark, dir)
@@ -73,22 +93,12 @@ class CachesSpec extends AnyFunSuite {
       assert(!Files.exists(Paths.get(tmp, fp, "blocker_tf", "_SUCCESS")))
       blocker.BlockerQueries.tfCk(spark, dir).count()
       assert(Files.exists(Paths.get(tmp, fp, "blocker_tf", "_SUCCESS")))
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.index.dir", v)
-        case None => sys.props.remove("graft.index.dir")
-      }
-      Caches.clearAll()
-      IndexLake.invalidate(dir) // no-op under the restored root
     }
   }
 
   test("a partial artifact (no _SUCCESS) is rebuilt, not served") {
     val tmp = SparkSpec.tempDir("graft-index-partial")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props.put("graft.index.dir", tmp)
-    Caches.clearAll()
-    try {
+    withIndexRoot(tmp) {
       // plant a garbage directory where the artifact would live,
       // WITHOUT the _SUCCESS marker — a crashed writer's leftovers
       val dir = Paths.get(tmp, IndexLake.fingerprint(this.dir),
@@ -100,21 +110,12 @@ class CachesSpec extends AnyFunSuite {
       val direct = blocker.BlockerQueries.tf(spark, this.dir).count()
       assert(viaLake === direct, "partial artifact must be rebuilt")
       assert(Files.exists(dir.resolve("_SUCCESS")))
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.index.dir", v)
-        case None => sys.props.remove("graft.index.dir")
-      }
-      Caches.clearAll()
     }
   }
 
   test("concurrent first-touch builders publish exactly one artifact") {
     val tmp = SparkSpec.tempDir("graft-index-race")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props.put("graft.index.dir", tmp)
-    Caches.clearAll()
-    try {
+    withIndexRoot(tmp) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -129,12 +130,6 @@ class CachesSpec extends AnyFunSuite {
       val leftovers = Files.list(Paths.get(tmp, fp)).toArray
         .map(_.toString).filter(_.contains(".tmp-"))
       assert(leftovers.isEmpty, leftovers.mkString(","))
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.index.dir", v)
-        case None => sys.props.remove("graft.index.dir")
-      }
-      Caches.clearAll()
     }
   }
 
@@ -142,33 +137,21 @@ class CachesSpec extends AnyFunSuite {
     // the Hadoop-FS port: the root may be any Hadoop URI, not a bare
     // local path — hdfs://, s3a:// go through the same code path
     val tmp = SparkSpec.tempDir("graft-index-uri")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props.put("graft.index.dir", s"file:$tmp")
-    Caches.clearAll()
-    try {
+    withIndexRoot(s"file:$tmp") {
       val viaLake = blocker.BlockerQueries.tfCk(spark, dir).count()
       val fp = IndexLake.fingerprint(dir)
       assert(Files.exists(Paths.get(tmp, fp, "blocker_tf", "_SUCCESS")))
       Caches.clearAll()
       assert(blocker.BlockerQueries.tfCk(spark, dir).count() === viaLake)
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.index.dir", v)
-        case None => sys.props.remove("graft.index.dir")
-      }
-      Caches.clearAll()
     }
   }
 
   test("scenario lakes publish under the owned index root") {
     // a root that does not exist yet: the publish creates it 0700
     val tmp = SparkSpec.tempDir("graft-index-scenario") + "/root"
-    val prev = sys.props.get("graft.index.dir")
-    sys.props.put("graft.index.dir", tmp)
-    Caches.clearAll()
     def rows(): Seq[String] = store.StoreQueries.mergeQ(spark, dir)
       .collect().map(_.mkString("|")).toSeq.sorted
-    try {
+    withIndexRoot(tmp) {
       val built = rows()
       val lake = Paths.get(tmp, IndexLake.fingerprint(dir), "q_store_merge")
       assert(Files.exists(lake.resolve("_SUCCESS")))
@@ -180,21 +163,12 @@ class CachesSpec extends AnyFunSuite {
       assert(!Files.exists(lake))
       assert(rows() === built)
       assert(Files.exists(lake.resolve("_SUCCESS")))
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.index.dir", v)
-        case None => sys.props.remove("graft.index.dir")
-      }
-      Caches.clearAll()
     }
   }
 
   test("gc retires stale generations, keeps the current and the young") {
     val tmp = SparkSpec.tempDir("graft-index-gc")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props.put("graft.index.dir", tmp)
-    Caches.clearAll()
-    try {
+    withIndexRoot(tmp) {
       def mk(name: String, ageMs: Long): Unit = {
         val d = Paths.get(tmp, name, "some_artifact")
         Files.createDirectories(d)
@@ -214,12 +188,6 @@ class CachesSpec extends AnyFunSuite {
       assert(!Files.exists(Paths.get(tmp, "aaaa00000000stal")))
       assert(Files.exists(Paths.get(tmp, "bbbb00000000kept")))
       assert(Files.exists(Paths.get(tmp, "cccc00000000youn")))
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.index.dir", v)
-        case None => sys.props.remove("graft.index.dir")
-      }
-      Caches.clearAll()
     }
   }
 

@@ -109,15 +109,6 @@ class BlockerIndexSpec extends AnyFunSuite {
     assert(idxTf(path, tightCfg) === batchTf(corpus2, tightCfg),
       "g2 TF diverges under the tight stopword cap (alpha crossed it)")
 
-    // idf view matches the batch idf exactly
-    val bIdf = Blocker.idf(tokenize(corpus2)).collect()
-      .map(r => (r.getString(0),
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))).toSet
-    val iIdf = BlockerIndex.idfView(spark, path).collect()
-      .map(r => (r.getString(0),
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))).toSet
-    assert(iIdf === bIdf, "idf diverges")
-
     // double-applying a committed generation fails loudly
     val e = intercept[IllegalArgumentException](
       BlockerIndex.refresh(spark, path,

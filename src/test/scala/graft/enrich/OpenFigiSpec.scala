@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
 /** OpenFIGI-style mirror enrichment: the composite-FIGI filter and
-  * keep-query-id contract on the ISIN path, sha1 company ids on the
-  * organization path.
+  * keep-query-id contract on the ISIN path.
   */
 class OpenFigiSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -46,18 +45,5 @@ class OpenFigiSpec extends AnyFunSuite {
         .toDF("id", "schema", "isin", "name"))
       .select("figi_code").as[String].collect().toSeq
     assert(noComposite === Seq("BBG00NOCOMP0"))
-  }
-
-  test("match_organization: sha1 company id, topics") {
-    val out = enricher.matchOrganizations(queries)
-      .select("query_id", "match_id", "topics")
-      .as[(String, String, String)].collect().toSeq
-    assert(out.map(_._1) === Seq("org1"))
-    // figi-company-<sha1("apple-inc")>
-    val sha = java.security.MessageDigest.getInstance("SHA-1")
-      .digest("apple-inc".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    assert(out.head._2 === s"figi-company-$sha")
-    assert(out.head._3 === "corp.public")
   }
 }

@@ -1,54 +1,16 @@
 package graft.multimodal
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** The decoder-stage plumbing: typed frame rows, partition-batched
-  * decode (the mapInPandas analogue), 1:1 frame→feature contract,
-  * deterministic stub output.
+/** The media decoders and the perceptual-hash algebra: aHash banding,
+  * and the BMP, JPEG, PNG and WAV decodes checked against the JDK's own
+  * parsers.
   */
 class MultimodalSpec extends AnyFunSuite {
   private val s = SparkSpec.spark
   private val sf = "/root/testdata/sf0.001"
-
-  test("frameDataset matches the framesQ explode") {
-    val typed = Multimodal.frameDataset(s, sf)
-      .select(col("doc_id"), col("frame_no"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val sql = Multimodal.framesQ(s, sf)
-      .select(col("doc_id"), col("frame_no"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(typed === sql)
-    assert(typed.nonEmpty)
-  }
-
-  test("decode stage is 1:1, deterministic, and bounded") {
-    val frames = Multimodal.frameDataset(s, sf)
-    val n = frames.count()
-    val feats = Multimodal.decodeFrames(frames, batchSize = 16)
-    assert(feats.count() === n)
-    val a = feats.collect().map(f =>
-      (f.doc_id, f.frame_no, f.feature.toSeq)).sortBy(x => (x._1, x._2))
-    val b = Multimodal.decodeFrames(frames, batchSize = 7).collect()
-      .map(f => (f.doc_id, f.frame_no, f.feature.toSeq))
-      .sortBy(x => (x._1, x._2))
-    // batch size must not change the result — only the call granularity
-    assert(a.toSeq === b.toSeq)
-    assert(a.forall(_._3.forall(v => v >= 0f && v < 1f)))
-  }
-
-  test("pooled decode agrees with the column-stub pooling shape") {
-    val feats = Multimodal.decodeFrames(Multimodal.frameDataset(s, sf))
-    val pooled = feats.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_frames"))
-    val expected = Multimodal.featuresQ(s, sf)
-      .select(col("doc_id"), col("n_frames"))
-    assert(pooled.join(expected, Seq("doc_id"))
-      .filter(pooled("n_frames") =!= expected("n_frames")).count() === 0)
-    assert(pooled.count() === expected.count())
-  }
 
   test("aHash: identical payloads collide, pairs respect the bound") {
     import s.implicits._

@@ -66,7 +66,7 @@ class SearchIndexSpec extends AnyFunSuite {
           SearchIndex.postings(spark, root), qt,
           statsPre = Some(SearchIndex.stats(spark, root)))
         .collect().map(_.toString).sorted.toSeq
-      val want = Search.bm25Of(spark, finalCorpus, qt)
+      val want = Search.bm25Core(spark, Search.postingsOf(finalCorpus), qt)
         .collect().map(_.toString).sorted.toSeq
       assert(got === want, "maintained BM25 diverges from the rebuild")
     }

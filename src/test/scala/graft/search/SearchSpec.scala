@@ -17,12 +17,17 @@ class SearchSpec extends AnyFunSuite {
     (3L, "banana banana banana"),
     (4L, "durian fig grape")).toDF("doc_id", "text")
 
+  /** q_search_bm25's scoring core over this fixture's postings. */
+  private def bm25(docs: org.apache.spark.sql.DataFrame,
+      terms: Seq[(Int, String)]) =
+    Search.bm25Core(spark, Search.postingsOf(docs), terms)
+
   test("tf saturation beats length normalization for a repeated term") {
     // query "apple": doc 1 (tf=2, dl=3) vs doc 2 (tf=1, dl=2).
     // avgdl = 11/4; k1=1.2, b=0.75:
     //   doc1 weight = 2*2.2 / (2 + 1.2*(0.25 + 0.75*3/2.75)) ≈ 1.341
     //   doc2 weight = 1*2.2 / (1 + 1.2*(0.25 + 0.75*2/2.75)) ≈ 1.126
-    val out = Search.bm25Of(spark, docs, Seq(0 -> "apple")).collect()
+    val out = bm25(docs, Seq(0 -> "apple")).collect()
       .sortBy(_.getInt(3))
     assert(out.map(_.getLong(1)).toSeq === Seq(1L, 2L))
     // docs without the term never appear (no zero-score padding)
@@ -34,7 +39,7 @@ class SearchSpec extends AnyFunSuite {
   test("multi-term queries sum per-term contributions") {
     // "apple banana": doc 1 matches both terms — must outrank the
     // single-term docs 2 and 3
-    val out = Search.bm25Of(spark, docs, Seq(0 -> "apple", 0 -> "banana"))
+    val out = bm25(docs, Seq(0 -> "apple", 0 -> "banana"))
       .collect().sortBy(_.getInt(3))
     assert(out.head.getLong(1) === 1L)
     assert(out.map(_.getLong(1)).toSet === Set(1L, 2L, 3L))
@@ -43,7 +48,7 @@ class SearchSpec extends AnyFunSuite {
   test("rarer terms carry higher idf") {
     // "cherry" appears in 1 doc, "apple" in 2 → for equal tf and dl the
     // cherry hit must score higher than an apple hit in the same doc
-    val out = Search.bm25Of(spark, docs,
+    val out = bm25(docs,
       Seq(0 -> "cherry", 1 -> "apple")).collect()
     val cherry = out.filter(r => r.getInt(0) == 0 && r.getLong(1) == 2L)
       .head.getDouble(2)
@@ -53,8 +58,8 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("fixed-point scoring is reproducible across runs") {
-    val a = Search.bm25Of(spark, docs, Search.QueryTerms).collect().toSeq
-    val b = Search.bm25Of(spark, docs, Search.QueryTerms).collect().toSeq
+    val a = bm25(docs, Search.QueryTerms).collect().toSeq
+    val b = bm25(docs, Search.QueryTerms).collect().toSeq
     assert(a === b)
   }
 

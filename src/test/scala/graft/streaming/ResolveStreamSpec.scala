@@ -1,15 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.resolver.Resolver
 
-/** Streaming incremental resolution driven through MemoryStream: edge
-  * micro-batches folded into the persisted state must resolve to
-  * EXACTLY the components a full batch re-cluster of all edges
-  * produces — and each micro-batch must write only its affected rows.
+/** Incremental resolution: edge batches folded one at a time into the
+  * persisted state (as `nk resolve-state add` and the loop's decide
+  * stage fold them) must resolve to EXACTLY the components a full batch
+  * re-cluster of all edges produces — and each batch must write only
+  * its affected rows.
   */
 class ResolveStreamSpec extends AnyFunSuite {
   import SparkSpec.spark
@@ -18,8 +18,7 @@ class ResolveStreamSpec extends AnyFunSuite {
   private def ccMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-  test("streamed edge batches resolve like one full re-cluster") {
-    implicit val sc = spark.sqlContext
+  test("edge batches folded one at a time resolve like one full re-cluster") {
     val path = SparkSpec.tempDir("resolvestream") + "/state"
     val base = Seq("b" -> "c", "c" -> "d", "f" -> "g", "x" -> "y")
     ResolveStream.init(
@@ -32,17 +31,8 @@ class ResolveStreamSpec extends AnyFunSuite {
     val batch2 = Seq("p" -> "q")
     val batch3 = batch1
 
-    val src = MemoryStream[(String, String)]
-    val edges = src.toDF().toDF("src", "dst")
-    src.addData(batch1: _*)
-    val q = ResolveStream.sink(edges, path).start()
-    try {
-      q.processAllAvailable()
-      src.addData(batch2: _*)
-      q.processAllAvailable()
-      src.addData(batch3: _*)
-      q.processAllAvailable()
-    } finally q.stop()
+    for ((batch, i) <- Seq(batch1, batch2, batch3).zipWithIndex)
+      ResolveStream.applyBatch(spark, batch.toDF("src", "dst"), path, s"b$i")
 
     val want = ccMap(Resolver.connectedComponents(
       (base ++ batch1 ++ batch2).toDF("src", "dst")))
