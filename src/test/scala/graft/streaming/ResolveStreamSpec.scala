@@ -18,7 +18,7 @@ class ResolveStreamSpec extends AnyFunSuite {
   private def ccMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-  test("edge batches folded one at a time resolve like one full re-cluster") {
+  test("streamed edge batches resolve like one full re-cluster") {
     val path = SparkSpec.tempDir("resolvestream") + "/state"
     val base = Seq("b" -> "c", "c" -> "d", "f" -> "g", "x" -> "y")
     ResolveStream.init(
