@@ -1,8 +1,12 @@
 package graft.blocker
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextExpressions.lower
 
@@ -15,8 +19,10 @@ import graft.functions.TextExpressions.lower
   * (`blocker/tokenizer.py:61-132`, `blocker/index.py:232-307,499-531,
   * 588-694`), re-expressed as declarative DataFrame plans so Catalyst
   * plans the joins:
-  *  - the `compat` / `boosts` tables are tiny literal DataFrames →
-  *    broadcast joins, never a shuffle;
+  *  - the `compat` / `boosts` tables are tiny constant DataFrames,
+  *    collected once into literal expressions (an `InSet` over the
+  *    schema pair, a map lookup on the field) — no join and no
+  *    broadcast hash relation, each of which would cost a memory page;
   *  - the token self-join shuffles both sides on (token, field) — a
   *    sort-merge join whose worst key skew is *provably bounded* by the
   *    stopword cost cap, which is what makes this safe at 100 TB;
@@ -91,7 +97,7 @@ object Blocker {
     * token carries at most one (schema, df) row per schema, so the
     * ls ≤ rs pair terms are generated IN-ROW from a collected
     * per-token list (bounded by the schema count) and summed after
-    * the broadcast compat filter — the self-join cloned the stats
+    * the literal compat filter — the self-join cloned the stats
     * aggregation subtree per side (AQE runs the twin exchanges
     * twice) and paid a second vocabulary shuffle. The explode keeps
     * the collect's token clustering, so the final sum needs no new
@@ -111,11 +117,40 @@ object Blocker {
         p => p.getField("ls") <= p.getField("rs"))))
     perTok.select(col("token"), prs.as("prs"))
       .select(col("token"), explode(col("prs")).as("p"))
-      .select(col("token"), col("p.ls").as("ls"), col("p.rs").as("rs"),
-        col("p.c").as("c"))
-      .join(broadcast(compat), Seq("ls", "rs"))
+      .filter(compatible(compat, col("p.ls"), col("p.rs")))
+      .select(col("token"), col("p.c").as("c"))
       .groupBy(col("token"))
       .agg(sum(col("c")).as("cost"))
+  }
+
+  /** The `compat` table `(ls, rs)` as one predicate over a schema
+    * pair: an `InSet` of its rows, collected once (a local
+    * relation bounded by the ontology runs no job). The table is a
+    * set: a pair it lists twice still passes once, so its rows must be
+    * distinct, as [[graft.model.Ftm.compatPairs]] are. A null schema
+    * matches nothing.
+    */
+  private[blocker] def compatible(compat: DataFrame, ls: Column,
+      rs: Column): Column = {
+    val pairs: Set[Any] = compat.select(col("ls"), col("rs")).collect().iterator
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => InternalRow(UTF8String.fromString(r.getString(0)),
+        UTF8String.fromString(r.getString(1))))
+      .toSet
+    Bridge.column(InSet(Bridge.expression(struct(ls, rs)), pairs))
+  }
+
+  /** The `boosts` table `(field, boost)` as a literal map lookup on the
+    * `field` column, collected once; null (so boost 1) for a
+    * field it does not list.
+    */
+  private[blocker] def boostOf(boosts: DataFrame): Column = {
+    val m = boosts.select(col("field"), col("boost").cast("double"))
+      .collect().iterator.filter(!_.isNullAt(0))
+      .map(r => r.getString(0) -> r.getDouble(1)).toSeq
+    require(m.map(_._1).distinct.size == m.size,
+      s"boosts lists a field twice: ${m.map(_._1)}")
+    element_at(typedLit(m.toMap), col("field"))
   }
 
   def stopwords(stats: DataFrame, compat: DataFrame, cfg: Config): DataFrame =
@@ -143,19 +178,21 @@ object Blocker {
     lit(1.0) + log(col("n_entities") / col("tdf"))
 
   /** Per-entity name-token mass, for alias damping
-    * (`blocker/index.py:514-519`).
+    * (`blocker/index.py:514-519`): at least 1, summed over the
+    * entity's own entries rows by a window on `id`, so each row
+    * carries it without a join back to a per-entity table; 1 for an
+    * entity without name tokens.
     */
-  def nameCounts(entries: DataFrame): DataFrame =
-    entries.filter(col("field") === "name")
-      .groupBy(col("id"))
-      .agg(greatest(lit(1L), sum(col("cnt"))).as("n_names"))
+  private def nameMass: Column =
+    greatest(lit(1L), sum(when(col("field") === "name", col("cnt")))
+      .over(Window.partitionBy(col("id"))))
 
   /** Weighted term frequencies: entries minus stopwords, weighted
     * boost · idf, damped by sqrt(n_names) only for the alias-multiplying
     * fields (reference: NAME_PART_FIELD/SYMBOL_FIELD,
-    * `blocker/index.py:504-531`). name_counts is LEFT-joined with a
-    * default of 1 so entities without name tokens keep their rows.
-    * Stopword anti-join + two joins; `boosts` broadcast.
+    * `blocker/index.py:504-531`). The name mass is taken over every
+    * entries row, stopwords included, before the stopword anti-join;
+    * then one join to the idf; `boosts` is a literal lookup.
     */
   def termFrequencies(entries0: DataFrame, compat: DataFrame,
       boosts: DataFrame, cfg: Config = Config(),
@@ -163,24 +200,22 @@ object Blocker {
     val e = entries0
     val stats = tokenStats(e)
     val sw = stopwords(stats, compat, cfg).select(col("token"))
-    val i = idf(e)
-    val nc = nameCounts(e)
     weightSelect(
-      e.join(sw, Seq("token"), "left_anti")
-        .join(i, Seq("token"))
-        .join(nc, Seq("id"), "left_outer")
-        .join(broadcast(boosts), Seq("field"), "left_outer"),
-      dampFields)
+      e.withColumn("n_names", nameMass)
+        .join(sw, Seq("token"), "left_anti")
+        .join(idf(e), Seq("token")),
+      boosts, dampFields)
   }
 
-  /** The weighting tail over a joined frame carrying `idf`, `boost`
-    * (nullable) and `n_names` (nullable) — ONE expression tree shared
-    * with [[BlockerIndex.termFrequencies]] so the batch build and the
+  /** The weighting tail over a joined frame carrying `field`, `idf`
+    * and `n_names` (nullable), with the boost looked up from `boosts`
+    * ([[boostOf]]) — ONE expression tree shared with
+    * [[BlockerIndex.termFrequencies]] so the batch build and the
     * incrementally-maintained index produce bit-equal weights.
     */
-  private[blocker] def weightSelect(joined: DataFrame,
+  private[blocker] def weightSelect(joined: DataFrame, boosts: DataFrame,
       dampFields: Seq[String]): DataFrame = {
-    val base = col("idf") * coalesce(col("boost"), lit(1.0))
+    val base = col("idf") * coalesce(boostOf(boosts), lit(1.0))
     joined.select(col("schema"), col("id"), col("field"), col("token"),
       when(col("field").isin(dampFields: _*),
         base / sqrt(coalesce(col("n_names"), lit(1L))))
@@ -207,16 +242,23 @@ object Blocker {
     */
   def pairScores(tf: DataFrame, compat: DataFrame): DataFrame = {
     val l = tf.as("l")
-    val r = tf.as("r")
+    // the sort-merge join of the scaladoc at every size: AQE would
+    // otherwise broadcast a small TF side, one more hash relation
+    val r = tf.as("r").hint("merge")
     val joined = l.join(r,
       col("l.token") === col("r.token") && col("l.field") === col("r.field") &&
         col("l.id") > col("r.id"))
-      .join(broadcast(compat),
-        col("ls") === least(col("l.schema"), col("r.schema")) &&
-          col("rs") === greatest(col("l.schema"), col("r.schema")))
+      .filter(compatiblePair(compat))
     scorePairs(joined, col("l.id"), col("r.id"),
       col("l.weight") + col("r.weight"))
   }
+
+  /** The `compat` test of a joined `l`/`r` token pair, on the
+    * schemata ordered as the table is (`ls <= rs`).
+    */
+  private def compatiblePair(compat: DataFrame): Column =
+    compatible(compat, least(col("l.schema"), col("r.schema")),
+      greatest(col("l.schema"), col("r.schema")))
 
   /** Candidate pairs capped to the global top-N (`blocker/index.py:608-610`).
     * The returned plan ends in TakeOrderedAndProject — no global sort
@@ -253,9 +295,7 @@ object Blocker {
       col("l.token") === col("r.token") && col("l.field") === col("r.field") &&
         (col("l.id") > col("r.id") || !col("r.is_delta")) &&
         col("l.id") =!= col("r.id"))
-      .join(broadcast(compat),
-        col("ls") === least(col("l.schema"), col("r.schema")) &&
-          col("rs") === greatest(col("l.schema"), col("r.schema")))
+      .filter(compatiblePair(compat))
     scorePairs(joined,
       greatest(col("l.id"), col("r.id")), least(col("l.id"), col("r.id")),
       col("l.weight") + col("r.weight"))
@@ -280,9 +320,7 @@ object Blocker {
     val joined = l.join(r,
       col("l.token") === col("r.token") && col("l.field") === col("r.field") &&
         col("l.id") =!= col("r.id"))
-      .join(broadcast(compat),
-        col("ls") === least(col("l.schema"), col("r.schema")) &&
-          col("rs") === greatest(col("l.schema"), col("r.schema")))
+      .filter(compatiblePair(compat))
     val scored = scorePairs(joined, col("l.id"), col("r.id"), col("r.weight"))
       .withColumnRenamed("lid", "qid").withColumnRenamed("rid", "cid")
     // Rank alone first: a pure row_number filter lets Catalyst insert

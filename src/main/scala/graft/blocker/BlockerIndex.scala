@@ -105,9 +105,9 @@ object BlockerIndex {
     "token:string,cnt:bigint>>"
 
   /** Entries rows of one-or-more entities → one packed row per entity.
-    * `n_names` is [[Blocker.nameCounts]]'s value materialized at write
-    * time (per-entity scalar; zero cost at read, where the batch path
-    * pays a corpus groupBy).
+    * `n_names` is the batch path's per-entity name mass
+    * ([[Blocker.termFrequencies]]) materialized at write time (zero cost
+    * at read, where the batch path pays a window over the corpus).
     */
   private def pack(entries: DataFrame): DataFrame =
     entries.groupBy(col("id")).agg(
@@ -360,8 +360,9 @@ object BlockerIndex {
 
   /** The maintained TF index — [[Blocker.termFrequencies]] served from
     * the stored artifacts: entries explode (pruned scan) ⟕̸ stopwords
-    * (vocab) ⋈ idf (vocab) ⟕ boosts (broadcast), weighted through the
-    * shared expression tree. The idf join shuffles on `token` only if
+    * (vocab) ⋈ idf (vocab), boosted by the same literal lookup and
+    * weighted through the shared expression tree. The idf join
+    * shuffles on `token` only if
     * the vocab outgrows the broadcast threshold — the same key the
     * downstream pair self-join shuffles on anyway.
     */
@@ -380,8 +381,7 @@ object BlockerIndex {
       .select(col("token"))
     Blocker.weightSelect(
       e.join(sw, Seq("token"), "left_anti")
-        .join(idfViewOf(log), Seq("token"))
-        .join(broadcast(boosts), Seq("field"), "left_outer"),
-      dampFields)
+        .join(idfViewOf(log), Seq("token")),
+      boosts, dampFields)
   }
 }

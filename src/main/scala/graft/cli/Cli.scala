@@ -60,23 +60,24 @@ object CliArgs {
 
   /** Canonicalize a full statement table through a (member, canonical)
     * map: rewrite `canonical_id` and entity-reference values
-    * (`resolver/linker.py:91-133` apply_statement). The map broadcasts;
+    * (`resolver/linker.py:91-133` apply_statement). The map broadcasts
+    * once: both lookups read the same broadcast subtree, so the second
+    * reuses the first's exchange and one hashed relation serves both;
     * statements never shuffle.
     */
   def applyCanonical(stmts: DataFrame, cm: DataFrame): DataFrame = {
-    val byId = broadcast(cm.select(col("member"),
-      col("canonical").as("_new_cid")))
-    val byVal = broadcast(cm.select(col("member").as("_vmember"),
-      col("canonical").as("_new_val")))
+    val byKey = broadcast(cm.select(col("member").as("_key"),
+      col("canonical").as("_to")))
+    val (byId, byVal) = (byKey.as("_id"), byKey.as("_val"))
     stmts
-      .join(byId, stmts("canonical_id") === byId("member"), "left_outer")
+      .join(byId, col("canonical_id") === col("_id._key"), "left_outer")
       .withColumn("canonical_id",
-        coalesce(col("_new_cid"), col("canonical_id")))
-      .drop("member", "_new_cid")
+        coalesce(col("_id._to"), col("canonical_id")))
+      .drop("_key", "_to")
       .join(byVal, col("prop_type") === "entity" &&
-        col("value") === col("_vmember"), "left_outer")
-      .withColumn("value", coalesce(col("_new_val"), col("value")))
-      .drop("_vmember", "_new_val")
+        col("value") === col("_val._key"), "left_outer")
+      .withColumn("value", coalesce(col("_val._to"), col("value")))
+      .drop("_key", "_to")
   }
 
   /** Positive edges → transitive canonical map. */

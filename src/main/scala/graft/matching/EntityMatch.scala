@@ -54,7 +54,9 @@ object EntityMatch {
         Option(refAddr).getOrElse(Nil)))
 
   /** Assembled entities (+ statements, for addressEntity dereference) →
-    * one `view` struct per entity.
+    * one `view` struct per entity, carrying the entity's `schema` and
+    * `datasets` alongside so a pair scorer can gate on them without
+    * joining the entities again.
     */
   def views(assembled: DataFrame, stmts: DataFrame): DataFrame = {
     val addrVals = stmts
@@ -67,7 +69,8 @@ object EntityMatch {
     assembled.join(refFull, assembled("id") === refFull("eid"), "left_outer")
       .select(assembled("id"),
         viewUdf(assembled("id"), col("schema"), col("properties"),
-          col("ref_addresses")).as("view"))
+          col("ref_addresses")).as("view"),
+        col("schema"), col("datasets"))
   }
 
   private[matching] def rowToView(r: Row): EntityView = EntityView(
@@ -88,7 +91,9 @@ object EntityMatch {
       .select(col("view.*")).collect().toSeq.map(rowToView)
 
   /** Candidate pairs (`lid`, `rid`, …) × views → one score column per
-    * algorithm in [[Algorithms.registry]].
+    * algorithm in [[Algorithms.registry]], plus each side's `schema`
+    * and `datasets` from its view as `lschema`/`ldatasets` and
+    * `rschema`/`rdatasets`.
     */
   def scorePairs(pairs: DataFrame, views: DataFrame,
       algoNames: Seq[String] = Algorithms.registry.keys.toSeq.sorted)
@@ -99,8 +104,10 @@ object EntityMatch {
       val c = rowToView(r)
       algos.map(_.score(q, c))
     })
-    val lv = views.select(col("id").as("lid"), col("view").as("lview"))
-    val rv = views.select(col("id").as("rid"), col("view").as("rview"))
+    def side(p: String) = views.select(col("id").as(s"${p}id"),
+      col("view").as(s"${p}view"), col("schema").as(s"${p}schema"),
+      col("datasets").as(s"${p}datasets"))
+    val (lv, rv) = (side("l"), side("r"))
     val scored = pairs.join(lv, Seq("lid")).join(rv, Seq("rid"))
       .withColumn("scores", scoreUdf(col("lview"), col("rview")))
     algoNames.zipWithIndex.foldLeft(scored) { case (df, (n, i)) =>

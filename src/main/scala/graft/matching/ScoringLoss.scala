@@ -58,7 +58,7 @@ object ScoringLoss {
       algoNames: Seq[String] = DefaultAlgorithms): DataFrame = {
     val entities = pairs.select(col("left.*"))
       .unionByName(pairs.select(col("right.*")))
-      .select(col("id"), col("schema"), col("properties"))
+      .select(col("id"), col("schema"), col("properties"), col("datasets"))
       .dropDuplicates("id")
     val views = EntityMatch.views(entities,
       emptyStmts(pairs.sparkSession))

@@ -156,8 +156,9 @@ object Ftm {
     isMatchable(a) && isMatchable(b) &&
       (ancestors(a).contains(b) || ancestors(b).contains(a))
 
-  /** Compatibility pairs, normalized ls <= rs — the broadcast `schemata`
-    * table (`blocker/index.py:220-225`).
+  /** Compatibility pairs, normalized ls <= rs, each listed once — the
+    * `schemata` table (`blocker/index.py:220-225`) that
+    * [[graft.blocker.Blocker]] turns into a literal predicate.
     */
   val compatPairs: Seq[(String, String)] = {
     val ms = schemata.keys.filter(isMatchable).toSeq.sorted

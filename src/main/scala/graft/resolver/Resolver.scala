@@ -193,16 +193,20 @@ object Resolver {
     * reference's precedence rule QID > NK- > raw
     * (`resolver/identifier.py:11-27`). `weightOf` must map an id to a
     * single-digit precedence so the (weight, id) argmax can be computed
-    * as a plain string max — one agg, no window.
+    * as a plain string max — one agg, no window, and no join back to
+    * the components: the same agg collects the cluster's member ids,
+    * which one explode turns into the (member, canonical) rows. Rows
+    * with a null cluster or a null id (which no component has) map
+    * nothing.
     */
   def canonicalMap(components: DataFrame, weightOf: Column => Column): DataFrame =
     components
-      .withColumn("wkey",
-        concat(weightOf(col("id")).cast("string"), lit("|"), col("id")))
+      .filter(col("cluster").isNotNull)
       .groupBy(col("cluster"))
-      .agg(element_at(split(max(col("wkey")), "\\|"), 2).as("canonical"))
-      .join(components, Seq("cluster"))
-      .select(col("id").as("member"), col("canonical"))
+      .agg(element_at(split(max(concat(weightOf(col("id")).cast("string"),
+          lit("|"), col("id"))), "\\|"), 2).as("canonical"),
+        collect_list(col("id")).as("members"))
+      .select(explode(col("members")).as("member"), col("canonical"))
 
   /** Canonicalize a statement table: rewrite `id` to its cluster
     * canonical (identity when unresolved). The cluster map is tiny

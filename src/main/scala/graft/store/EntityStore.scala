@@ -17,9 +17,10 @@ import graft.model.Ftm
   *
   * Scale design: ingestion is `spark.read.json` with an explicit schema
   * (no sampling pass) followed by two narrow explodes — a pure map-side
-  * pipeline that parallelizes by input split. Assembly is one shuffle on
-  * `canonical_id` (the statement table's natural partitioning key at
-  * 100 TB, so in a bucketed lake this becomes shuffle-free). Property
+  * pipeline that parallelizes by input split. Assembly is one
+  * aggregation, so one shuffle, on `canonical_id` (the statement
+  * table's natural partitioning key at 100 TB, so in a bucketed lake
+  * this becomes shuffle-free) and no join. Property
   * typing uses a literal map baked into the plan (broadcast by closure),
   * never a join.
   */
@@ -97,25 +98,29 @@ object EntityStore {
         .nextOption().getOrElse(id))
 
   /** Statements → assembled entities, grouped by `canonical_id`: one
-    * shuffle; properties become a map of sorted distinct values;
-    * `referents` = source entity ids beyond the canonical; caption and
-    * merged schema follow FtM rules (`store/base.py:74-89`).
+    * aggregation, so one shuffle; properties become a map, in prop
+    * order, of sorted distinct non-null values (a prop whose values are
+    * all null maps to an empty array; an entity with only its `id`
+    * statement gets an empty map), built in-row from the collected
+    * (prop, value) pairs — props per entity are few, as in
+    * [[StoreQueries.assembleQ]]; `referents` = source entity ids beyond
+    * the canonical; caption and merged schema follow FtM rules
+    * (`store/base.py:74-89`).
     */
   def assemble(stmts: DataFrame): DataFrame = {
-    val byProp = stmts.filter(col("prop") =!= "id")
-      .groupBy(col("canonical_id"), col("prop"))
-      .agg(array_sort(collect_set(col("value"))).as("values"))
-      .groupBy(col("canonical_id"))
-      .agg(map_from_entries(array_sort(
-        collect_list(struct(col("prop"), col("values"))))).as("properties"))
-    val meta = stmts.groupBy(col("canonical_id")).agg(
+    val grouped = stmts.groupBy(col("canonical_id")).agg(
       commonSchemaUdf(collect_set(col("schema"))).as("schema"),
       array_sort(collect_set(col("dataset"))).as("datasets"),
-      collect_set(col("entity_id")).as("members"))
-    meta.join(byProp, Seq("canonical_id"), "left_outer")
+      collect_set(col("entity_id")).as("members"),
+      collect_list(when(col("prop") =!= "id",
+        struct(col("prop"), col("value")))).as("pv"))
+    val props = array_sort(array_distinct(transform(col("pv"), _("prop"))))
+    grouped
       .select(col("canonical_id").as("id"), col("schema"),
-        coalesce(col("properties"), typedLit(Map.empty[String, Seq[String]]))
-          .as("properties"),
+        map_from_entries(transform(props, p => struct(p,
+          array_sort(array_distinct(filter(
+            transform(filter(col("pv"), _("prop") === p), _("value")),
+            _.isNotNull)))))).as("properties"),
         col("datasets"),
         array_sort(filter(col("members"), e => e =!= col("canonical_id")))
           .as("referents"))

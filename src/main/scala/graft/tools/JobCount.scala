@@ -5,7 +5,8 @@ import graft.Profile
 /** Scratch profiler: count Spark jobs/stages each named query bills —
   * the wd-family queries are fixed-overhead bound (sequential
   * micro-jobs of scheduler latency), so the job count IS the cost
-  * model locally and the thing to minimize.
+  * model locally and the thing to minimize — and the broadcast hash
+  * relations its plans build ([[HashedBroadcasts]], `hashed=`).
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -15,10 +16,12 @@ object JobCount {
     val prof = Profile.attach(spark,
       keepStages = sys.env.contains("SPARK_GRAFT_STAGES"))
     graft.Caches.ensureAll(spark, sfDir)
+    val hashed = new HashedBroadcasts.Recorder(spark)
     queries.foreach { case (n, fn) =>
       // warm
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       prof.lap()
+      hashed.lap()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
@@ -27,7 +30,8 @@ object JobCount {
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
       val l = prof.lap()
-      println(f"[jobcount] $n%-20s jobs=${l.jobs}%3d stages=${l.stages}%3d sec=$sec%.2f build=$tBuild%.2f plan=$tPlan%.2f")
+      val h = hashed.lap().size
+      println(f"[jobcount] $n%-20s jobs=${l.jobs}%3d stages=${l.stages}%3d hashed=$h%2d sec=$sec%.2f build=$tBuild%.2f plan=$tPlan%.2f")
       l.stageInfos.foreach { i =>
         val ms = (for {a <- i.completionTime; b <- i.submissionTime}
           yield a - b).getOrElse(-1L)

@@ -47,8 +47,8 @@ object Xref {
   /** Scored candidate pairs for a statement table (ids are canonical
     * when `stmts` went through [[graft.resolver.Resolver.applyCanonical]]
     * first, mirroring the reference's canonicalize-on-write), with each
-    * layer — the tokenized entries, the TF table, the assembled
-    * entities and the match views — materialized once through `built`
+    * layer — the tokenized entries, the TF table and the match views
+    * (over the assembled entities) — materialized once through `built`
     * with lineage cut.
     */
   private def scoredWith(s: SparkSession, stmts0: DataFrame,
@@ -155,33 +155,25 @@ object Xref {
   /** The scoring tail shared by the full and delta candidate paths:
     * assemble views, score with the configured algorithm, gate on
     * focus/range, discount same-dataset pairs, threshold. `build`
-    * receives the assembled entities and the match views.
+    * receives the match views.
     */
   private def scoreCandidates(stmts: DataFrame, undecided: DataFrame,
       cfg: Config, build: DataFrame => DataFrame): DataFrame = {
-    val assembled = build(EntityStore.assemble(stmts))
-    val views = build(EntityMatch.views(assembled, stmts))
+    val views = build(EntityMatch.views(EntityStore.assemble(stmts), stmts))
     val algoCol = cfg.algorithm.replace("-", "_")
-    // gate schema must be deterministic under mixed-schema clusters —
-    // reuse the assembled entity's merged FtM schema, not first(); its
-    // dataset set is the same collect_set the gates need (they only
-    // test overlap, so its sort order is irrelevant)
-    val meta = assembled.select(col("id"), col("datasets").as("ds"),
-      col("schema"))
-    val lm = meta.select(col("id").as("lid"), col("ds").as("lds"),
-      col("schema").as("lschema"))
-    val rm = meta.select(col("id").as("rid"), col("ds").as("rds"),
-      col("schema").as("rschema"))
+    // the gates read each side's schema and datasets from its view:
+    // the assembled entity's merged FtM schema (deterministic under
+    // mixed-schema clusters, unlike first()) and its dataset set (the
+    // gates only test overlap, so its sort order is irrelevant)
     val scored0 = EntityMatch.scorePairs(undecided, views, Seq(cfg.algorithm))
-      .join(lm, Seq("lid")).join(rm, Seq("rid"))
     // focus-dataset gate: at least one side in the focus set
     // (`xref.py:105-109`)
     val focused =
       if (cfg.focusDatasets.isEmpty) scored0
       else {
         val f = typedLit(cfg.focusDatasets.toSeq)
-        scored0.filter(arrays_overlap(col("lds"), f) ||
-          arrays_overlap(col("rds"), f))
+        scored0.filter(arrays_overlap(col("ldatasets"), f) ||
+          arrays_overlap(col("rdatasets"), f))
       }
     // schema-range gate: one side must descend from the range schema
     // (`xref.py:111-116`)
@@ -195,7 +187,7 @@ object Xref {
     }
     ranged
       .select(col("lid"), col("rid"),
-        round(when(arrays_overlap(col("lds"), col("rds")),
+        round(when(arrays_overlap(col("ldatasets"), col("rdatasets")),
           col(algoCol) * cfg.discountInternal).otherwise(col(algoCol)), 6)
           .as("score"))
       .filter(col("score") >= cfg.minThreshold)
@@ -209,9 +201,9 @@ object Xref {
     * (lid, rid, score) pairs at or below it, by score descending then
     * ids (`xref.py:150-153` + `resolver.suggest`).
     *
-    * Build once, then release: the entries, the TF table, the
-    * assembled entities and the match views are each materialized once
-    * with lineage cut (`localCheckpoint`, memory spilling to disk), so
+    * Build once, then release: the entries, the TF table and the
+    * match views are each materialized once with lineage cut
+    * (`localCheckpoint`, memory spilling to disk), so
     * every consumer reads them as a leaf instead of planning and
     * running its own copy of the subtree (AQE never reuses cloned
     * exchanges). They are released as soon as `scored` is

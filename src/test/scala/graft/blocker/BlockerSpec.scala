@@ -76,7 +76,7 @@ class BlockerSpec extends AnyFunSuite {
     val tf = Blocker.termFrequencies(e, compat, noBoosts,
       dampFields = Seq("name")).collect()
       .map(r => (r.getString(1), r.getString(3)) -> r.getDouble(4)).toMap
-    // b survives the left join with default n_names = 1
+    // b keeps its rows with the default name mass of 1
     assert(tf.contains(("b", "d:1999")))
     // a's date weight is NOT damped, equals b's
     assert(math.abs(tf(("a", "d:1999")) - tf(("b", "d:1999"))) < 1e-9)
@@ -119,5 +119,72 @@ class BlockerSpec extends AnyFunSuite {
     val shared = sy.collect { case ("p1", t) => t }
       .intersect(sy.collect { case ("p2", t) => t })
     assert(shared.exists(_.startsWith("sy:nick:")))
+  }
+
+  test("the windowed name mass equals the joined name counts it replaced") {
+    val corpus = EntityTokenizer.entries(graft.xref.XrefCorpus.statements(spark))
+    val e = corpus.unionByName(entriesDf(
+      // a name-less entity, and name tokens that become stopwords
+      ("Address", "addr", "address", "n:street", 1L),
+      ("Person", "s1", "name", "n:common", 2L),
+      ("Person", "s1", "name", "n:rare", 1L),
+      ("Person", "s2", "name", "n:common", 1L),
+      ("Person", "s3", "name", "n:common", 1L))).localCheckpoint(true)
+    val compat = graft.xref.Xref.compatDf(spark)
+    val boosts = graft.xref.Xref.boostsDf(spark)
+    val damp = EntityTokenizer.DampFields :+ "name"
+    for (cap <- Seq(1L, Blocker.Config.reference.maxPairCost)) {
+      val cfg = Blocker.Config(maxPairCost = cap)
+      // the old plan: a per-entity aggregate over every entries row,
+      // LEFT-joined back on id after the stopword anti-join
+      val nc = e.filter(col("field") === "name").groupBy(col("id"))
+        .agg(greatest(lit(1L), sum(col("cnt"))).as("n_names"))
+      val sw = Blocker.stopwords(Blocker.tokenStats(e), compat, cfg)
+        .select(col("token"))
+      val want = Blocker.weightSelect(e.join(sw, Seq("token"), "left_anti")
+        .join(Blocker.idf(e), Seq("token"))
+        .join(nc, Seq("id"), "left_outer"), boosts, damp)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("schema", "id", "field", "token", "weight").collect()
+          .map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+      val got = rows(Blocker.termFrequencies(e, compat, boosts, cfg, damp))
+      assert(got === rows(want))
+      // at cap 1 "n:common" is a stopword, yet its count stays in s1's
+      // name mass
+      assert(got.exists(r => r(1) == "s1" && r(3) == "n:common") ===
+        (cap > 1L))
+    }
+  }
+
+  test("the literal compat and boost lookups equal the joins they replace") {
+    // the inner compat join kept a pair once per matching row, the
+    // literal set once: they agree while the tables' rows are distinct
+    Seq(graft.model.Ftm.compatPairs, graft.store.StarStatements.compat)
+      .foreach(c => assert(c.distinct.size === c.size))
+    Seq(EntityTokenizer.Boosts, graft.store.StarStatements.boosts)
+      .foreach(b => assert(b.map(_._1).distinct.size === b.size))
+    val ftmCompat = graft.xref.Xref.compatDf(spark)
+    val schemas = graft.model.Ftm.schemata.keys.toSeq.map(Option(_)) :+ None
+    val pairs = (for (a <- schemas; b <- schemas) yield (a, b))
+      .toDF("a", "b")
+    val (ls, rs) = (least(col("a"), col("b")), greatest(col("a"), col("b")))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+        .sortBy(_.toString)
+    val viaJoin = pairs.join(ftmCompat, ls === col("ls") && rs === col("rs"))
+      .select("a", "b")
+    val viaSet = pairs.filter(Blocker.compatible(ftmCompat, ls, rs))
+    assert(sorted(viaSet) === sorted(viaJoin))
+    assert(viaJoin.count() > 0)
+
+    val boosts = graft.xref.Xref.boostsDf(spark)
+    val fields = (EntityTokenizer.Boosts.map(f => Option(f._1)) ++
+      Seq(Some("nope"), None)).toDF("field")
+    def byField(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.getString(0)),
+        Option(r.get(1)).map(_.asInstanceOf[Double]))).toSeq.sortBy(_.toString)
+    assert(byField(fields.select(col("field"), Blocker.boostOf(boosts))) ===
+      byField(fields.join(boosts, Seq("field"), "left_outer")
+        .select("field", "boost")))
   }
 }

@@ -56,6 +56,50 @@ class CliSpec extends AnyFunSuite {
     assert(n === canonical.select("canonical_id").distinct().count())
   }
 
+  test("applyCanonical builds one broadcast relation for both lookups") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    val dir = tmp("apply-canonical")
+    Seq(("s1", "a", "name", "name", "Acme"),
+      ("s2", "b", "name", "name", "ACME"),
+      ("s3", "c", "owner", "entity", "a"),
+      ("s4", "c", "owner", "entity", "z"),
+      ("s5", "b", "note", "text", "b"),
+      ("s6", "d", "owner", "entity", null))
+      .toDF("id", "canonical_id", "prop", "prop_type", "value")
+      .write.parquet(dir)
+    val stmts = spark.read.parquet(dir)
+    val cm = CliArgs.canonicalMapOf(Seq(("b", "a")).toDF("src", "dst"))
+      .localCheckpoint(true)
+    // the two-relation form: one broadcast per lookup
+    val byId = broadcast(cm.select(col("member"),
+      col("canonical").as("_new_cid")))
+    val byVal = broadcast(cm.select(col("member").as("_vmember"),
+      col("canonical").as("_new_val")))
+    val want = stmts
+      .join(byId, stmts("canonical_id") === byId("member"), "left_outer")
+      .withColumn("canonical_id", coalesce(col("_new_cid"), col("canonical_id")))
+      .drop("member", "_new_cid")
+      .join(byVal, col("prop_type") === "entity" &&
+        col("value") === col("_vmember"), "left_outer")
+      .withColumn("value", coalesce(col("_new_val"), col("value")))
+      .drop("_vmember", "_new_val")
+    val got = CliArgs.applyCanonical(stmts, cm)
+    assert(got.columns.toSeq === stmts.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.head)
+    assert(rows(got) === rows(want))
+    // "b" outranks "a" (same weight, larger id): both rewrite to it
+    assert(got.filter(col("id").isin("s1", "s3"))
+      .select("canonical_id", "value").collect().map(_.toSeq).toSet ===
+      Set(Seq("b", "Acme"), Seq("c", "b")))
+    val plans = new AdaptiveSparkPlanHelper {}
+    val p = got.queryExecution.executedPlan
+    assert(plans.collect(p) { case b: BroadcastExchangeExec => b }.size === 1, p)
+    assert(plans.collect(p) { case r: ReusedExchangeExec => r }.size === 1, p)
+  }
+
   test("match main ranks the Johanna Quandt duplicate first") {
     import spark.implicits._
     val stmts = CliArgs.readStatements(spark, fixture, "donations")

@@ -107,6 +107,31 @@ class ResolverSpec extends AnyFunSuite {
     assert(m === Map("c:9" -> "c:9", "s:2" -> "c:9", "raw" -> "c:9"))
   }
 
+  test("canonical map equals the join-back form on random components") {
+    val weightOf = graft.cli.CliArgs.idWeight _
+    val rnd = new scala.util.Random(18)
+    def id(): String = rnd.nextInt(3) match {
+      case 0 => s"Q${rnd.nextInt(500)}"
+      case 1 => s"NK-${rnd.nextInt(500)}"
+      case _ => s"e${rnd.nextInt(500)}"
+    }
+    for (_ <- 1 to 5) {
+      // duplicate rows and singleton clusters included
+      val comps = Seq.fill(300)((id(), s"k${rnd.nextInt(60)}"))
+        .toDF("id", "cluster")
+      val joinBack = comps
+        .withColumn("wkey",
+          concat(weightOf(col("id")).cast("string"), lit("|"), col("id")))
+        .groupBy(col("cluster"))
+        .agg(element_at(split(max(col("wkey")), "\\|"), 2).as("canonical"))
+        .join(comps, Seq("cluster"))
+        .select(col("id").as("member"), col("canonical"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+      assert(rows(Resolver.canonicalMap(comps, weightOf)) === rows(joinBack))
+    }
+  }
+
   test("explode soft-deletes every edge touching the cluster") {
     val log = Seq(
       ("a", "b", "positive"), ("b", "c", "positive"),

@@ -157,12 +157,43 @@ class XrefSpec extends AnyFunSuite {
       persisted -- start
     }
     // each run holds exactly one frame: its DISK_ONLY scored table; the
-    // entries, TF, assembled entities and views it built are released
+    // entries, TF and views it built are released
     added.foreach { ids =>
       assert(ids.size === 1, s"persisted after run: $ids")
       assert(sc.getPersistentRDDs(ids.head).getStorageLevel ===
         StorageLevel.DISK_ONLY)
     }
     added.flatten.foreach(id => sc.getPersistentRDDs(id).unpersist())
+  }
+
+  test("a batch pass builds at most 5 broadcast hash relations, none of a literal") {
+    import spark.implicits._
+    import graft.tools.HashedBroadcasts
+    val dir = SparkSpec.tempDir("xref-hashed")
+    XrefCorpus.statements(spark).write.parquet(s"$dir/input")
+    val rec = new HashedBroadcasts.Recorder(spark)
+    val builds = try {
+      // the batch path of `nk xref` → `nk apply` → assembly, forced at
+      // each layer boundary as perfbench's xref_batch unit does
+      val stmts = spark.read.parquet(s"$dir/input")
+      val (merges, sugg) = Xref.run(spark, stmts,
+        Seq.empty[(String, String)].toDF("src", "dst"),
+        Xref.Config(algorithm = "logic-v1", autoThreshold = Some(0.6)))
+      assert(merges.count() > 0 && sugg.count() > 0)
+      val cm = graft.cli.CliArgs.canonicalMapOf(merges).localCheckpoint(true)
+      graft.cli.CliArgs.applyCanonical(stmts, cm)
+        .write.parquet(s"$dir/canonical")
+      assert(EntityStore.assemble(spark.read.parquet(s"$dir/canonical"))
+        .collect().nonEmpty)
+      rec.builds()
+    } finally rec.close()
+    def show = builds.map(_.treeString).mkString("\n")
+    // every relation left is sized by the data — the stopwords, the
+    // entries of the idf join, the candidate pairs, the view lookup and
+    // the canonical map — and AQE chose to broadcast it
+    assert(builds.size <= 5, show)
+    assert(builds.forall(b => HashedBroadcasts.find(b)(
+      _.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+      .isEmpty), show)
   }
 }
