@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** The one stage profiler of the drivers (Soak, tools/JobCount): a
   * listener counting jobs, completed stages, shuffle bytes written and
   * the largest single-stage write, plus the process CPU time and the
-  * number of Janino compiles of generated code (driver and local
-  * executors share the process). [[lap]] returns the deltas since the
+  * number of Janino compiles of generated code and the time they took
+  * (driver and local executors share the process). [[lap]] returns the deltas since the
   * previous lap (or since [[Profile.attach]]), so a driver brackets each
   * stage it reports with laps instead of keeping running totals;
   * [[total]] still reports the whole run since attach.
@@ -36,6 +36,8 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
   private var lastCpu = attachedCpu
   private val attachedCompiles = Profile.compiles()
   private var lastCompiles = attachedCompiles
+  private val attachedCompileNs = Profile.compileNanos()
+  private var lastCompileNs = attachedCompileNs
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
     started.incrementAndGet()
@@ -61,23 +63,24 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
     settle()
     synchronized {
       val now = System.nanoTime()
-      val (cpu, cc) = (Profile.cpuNanos(), Profile.compiles())
+      val (cpu, cc, cn) =
+        (Profile.cpuNanos(), Profile.compiles(), Profile.compileNanos())
       val (j, st, w) = (started.get, stages.get, written.get)
       val done = Iterator.continually(infos.poll())
         .takeWhile(_ != null).toVector
       val l = Lap((now - lastT) / 1e9, j - lastJobs, st - lastStages,
         w - lastWritten, peak, done, (cpu - lastCpu) / 1e9,
-        cc - lastCompiles)
+        cc - lastCompiles, (cn - lastCompileNs) / 1e6)
       lastT = now; lastJobs = j; lastStages = st; lastWritten = w
-      lastCpu = cpu; lastCompiles = cc
+      lastCpu = cpu; lastCompiles = cc; lastCompileNs = cn
       peak = 0L
       l
     }
   }
 
   /** Everything since [[Profile.attach]], whatever laps were taken in
-    * between: its wall clock, counts, shuffle bytes, largest stage, CPU
-    * and compiles.
+    * between: its wall clock, counts, shuffle bytes, largest stage, CPU,
+    * compiles and compile time.
     */
   def total(): Lap = {
     settle()
@@ -85,7 +88,8 @@ final class Profile private (keepStages: Boolean) extends SparkListener {
       Lap((System.nanoTime() - attachedT) / 1e9, started.get, stages.get,
         written.get, allPeak, Vector.empty,
         (Profile.cpuNanos() - attachedCpu) / 1e9,
-        Profile.compiles() - attachedCompiles)
+        Profile.compiles() - attachedCompiles,
+        (Profile.compileNanos() - attachedCompileNs) / 1e6)
     }
   }
 
@@ -103,14 +107,15 @@ object Profile {
 
   /** Deltas over one lap; `stageInfos` is filled only for a profiler
     * attached with `keepStages`. `cpuS` is the CPU time of the whole
-    * process (JIT, GC and every other thread included) and `compiles`
-    * the number of generated classes Spark compiled, both counted
-    * process-wide, so concurrent work elsewhere in the JVM is billed
+    * process (JIT, GC and every other thread included), `compiles`
+    * the number of generated classes Spark compiled and `compileMs` the
+    * Janino time they took, all counted process-wide, so concurrent work elsewhere in the JVM is billed
     * to the lap too.
     */
   final case class Lap(wallSec: Double, jobs: Long, stages: Long,
       shuffleBytes: Long, peakStageBytes: Long,
-      stageInfos: Seq[StageInfo], cpuS: Double, compiles: Long) {
+      stageInfos: Seq[StageInfo], cpuS: Double, compiles: Long,
+      compileMs: Double) {
     def shuffleMb: Double = shuffleBytes / 1e6
     def peakStageMb: Double = peakStageBytes / 1e6
   }
@@ -125,6 +130,11 @@ object Profile {
   private def compiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
       .getCount
+
+  /** Janino compile time so far, in ns (Spark sums it per class). */
+  private def compileNanos(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime
 
   def attach(s: SparkSession, keepStages: Boolean = false): Profile = {
     val p = new Profile(keepStages)

@@ -117,7 +117,8 @@ object Soak {
     }
     head ++ ListMap("docs" -> nDocs, "out" -> nOut,
       "report" -> report.fields, "wall_sec" -> l.wallSec,
-      "cpu_sec" -> l.cpuS, "compiles" -> l.compiles) ++ shuffle
+      "cpu_sec" -> l.cpuS, "compiles" -> l.compiles,
+      "compile_ms" -> l.compileMs) ++ shuffle
   }
 
   private def dedup(r: Soaking): Rec = {
@@ -565,7 +566,7 @@ object Soak {
     }
     head ++ ListMap("statements" -> nStmts, "entities" -> nEntities,
       "wall_sec" -> l.wallSec, "cpu_sec" -> l.cpuS, "compiles" -> l.compiles,
-      "merges" -> nMerges, "suggestions" -> nSuggest) ++ shuffle
+      "compile_ms" -> l.compileMs, "merges" -> nMerges, "suggestions" -> nSuggest) ++ shuffle
   }
 
   /** The reference blocker caps with the pair-cost cap scaled by N:

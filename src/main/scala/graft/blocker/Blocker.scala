@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -130,7 +131,7 @@ object Blocker {
     * distinct, as [[graft.model.Ftm.compatPairs]] are. A null schema
     * matches nothing.
     */
-  private[blocker] def compatible(compat: DataFrame, ls: Column,
+  private[graft] def compatible(compat: DataFrame, ls: Column,
       rs: Column): Column = {
     val pairs: Set[Any] = compat.select(col("ls"), col("rs")).collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
@@ -145,7 +146,7 @@ object Blocker {
     * field it does not list.
     */
   private[blocker] def boostOf(boosts: DataFrame): Column = {
-    val m = boosts.select(col("field"), col("boost").cast("double"))
+    val m = boosts.select(col("field"), col("boost").cast(DoubleType))
       .collect().iterator.filter(!_.isNullAt(0))
       .map(r => r.getString(0) -> r.getDouble(1)).toSeq
     require(m.map(_._1).distinct.size == m.size,

@@ -1,10 +1,10 @@
 package graft.blocker
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
-import graft.functions.TextExpressions.{lower, upper}
+import graft.functions.TextExpressions.entityTokens
 import graft.model.Ftm
 
 /** Typed entity tokenizer — the FtM-aware token emission of the
@@ -70,22 +70,13 @@ object EntityTokenizer {
     "och", "med", "pa", "av",
     "na", "po", "pri", "za", "iz", "ot", "pod", "nad")
 
-  /** Accent-fold source/target alphabets — shared with the DuckDB
-    * oracle SQL (BlockerQueries) so both sides tokenize identically on
-    * accented input.
+  /** Accent-fold source/target alphabets — shared by the token kernel
+    * ([[graft.functions.TokenKernels]]) and the DuckDB oracle SQL
+    * (BlockerQueries) so both sides tokenize identically on accented
+    * input.
     */
   val FoldSrc = "àáâãäåæçèéêëìíîïñòóôõöøùúûüýÿšžđ"
   val FoldDst = "aaaaaaaceeeeiiiinoooooouuuuyyszd"
-
-  /** Lower + latin-1 accent fold (ä→a … ß→ss) — the pragmatic subset of
-    * rigour's transliteration the fixtures need.
-    */
-  def foldAscii(c: Column): Column =
-    translate(regexp_replace(lower(c), "ß", "ss"), FoldSrc, FoldDst)
-
-  /** Lowercased, folded, non-alphanumeric-split parts of a value. */
-  def parts(c: Column): Column =
-    filter(split(foldAscii(c), "[^a-z0-9]+"), p => length(p) > 0)
 
   /** Matchable-schema statement projection shared by the batch entries
     * build and the streaming tokenizer: filter + column shaping only.
@@ -99,70 +90,15 @@ object EntityTokenizer {
         col("prop_type"), col("value"))
   }
 
-  private val EmittedType = ArrayType(StructType(Seq(
-    StructField("field", StringType), StructField("token", StringType),
-    StructField("counted", BooleanType))))
-
-  /** All (field, token, counted) tuples of one statement row. Each family
-    * is gated on the row's `prop_type`, so a row evaluates only the
-    * families that apply to it. Reads the row's value parts `p` and name
-    * fingerprint `fp` as attributes (see [[emitted]]).
-    */
-  private def tokensOf: Column = {
-    val t = col("prop_type")
-    val v = col("value")
-    val p = col("p")
-    val fp = col("fp")
-    def fam(cond: Column, arr: Column): Column =
-      when(cond, arr).otherwise(array().cast(EmittedType))
-    def one(field: Column, token: Column, counted: Boolean): Column =
-      struct(field.as("field"), token.as("token"), lit(counted).as("counted"))
-    def prefixed(xs: Column, field: String, prefix: String,
-        counted: Boolean): Column =
-      transform(xs, x => one(lit(field), concat(lit(prefix), x), counted))
-    val isName = t === Ftm.T.Name
-    val ident = concat(lit("i:"), regexp_replace(upper(v), "[^A-Z0-9]+", ""))
-    val words = filter(p, w => !w.isInCollection(Stopwords))
-    concat(
-      // set semantics
-      fam(isName && length(fp) > 3 && length(fp) < 200,
-        array(one(lit("name"), concat(lit("n:"), fp), counted = false))),
-      fam(isName, prefixed(filter(p, x => length(x) >= 3 && length(x) <= 30),
-        NamePartField, "np:", counted = false)),
-      fam(isName, transform(symbolsUdf(p),
-        x => one(lit(SymbolField), x, counted = false))),
-      fam(t.isin(Ftm.T.Country, Ftm.T.Phone, Ftm.T.Email),
-        array(one(t, concat(t, lit(":"), lower(substring(v, 1, 300))),
-          counted = false))),
-      fam(t === Ftm.T.Identifier && length(ident) > 2,
-        array(one(lit("identifier"), ident, counted = false))),
-      fam(t === Ftm.T.Date, array(one(lit("date"),
-        concat(lit("d:"), substring(v, 1, 10)), counted = false))),
-      // counted
-      fam(t === Ftm.T.Address, concat(
-        prefixed(filter(words, w => length(w) > 3), "address", "a:",
-          counted = true),
-        prefixed(filter(words, w => length(w) > 6), WordField, "wd:",
-          counted = true))),
-      fam(t.isin(Ftm.T.StringT, Ftm.T.Text, Ftm.T.Identifier),
-        prefixed(filter(words, w => length(w) >= 6), WordField, "wd:",
-          counted = true)))
-  }
-
   /** Prepared statements → one (id, schema, field, token, counted) row
-    * per token occurrence: a projection computing the value parts and
-    * the name fingerprint once per row, then one explode. Stateless and
+    * per token occurrence, from one generator whose generated code calls
+    * the static [[graft.functions.TokenKernels.tokens]]. Stateless and
     * map-side only; shared by [[entries]] and the streaming tokenizer
     * (which dedupes in its own state instead of a batch aggregation).
     */
   def emitted(st: DataFrame): DataFrame =
-    st.select(col("id"), col("schema"), col("prop_type"), col("value"),
-        parts(col("value")).as("p"))
-      .withColumn("fp", when(col("prop_type") === Ftm.T.Name,
-        array_join(array_sort(array_distinct(col("p"))), "")))
-      .select(col("id"), col("schema"), explode(tokensOf).as("t"))
-      .select(col("id"), col("schema"), col("t.field").as("field"),
-        col("t.token").as("token"), col("t.counted").as("counted"))
+    st.select(col("id"), col("schema"),
+      entityTokens(col("prop_type"), col("value")))
 
   /** Statements → (schema, id, field, token, cnt) entries for matchable
     * schemata. `idCol` selects entity_id vs canonical_id grouping.
@@ -184,14 +120,10 @@ object EntityTokenizer {
       .select(commonSchemaUdf(col("schemas")).as("schema"), col("id"),
         col("field"), col("token"),
         when(col("counted"), col("n"))
-          .otherwise(size(col("schemas")).cast("long")).as("cnt"))
+          .otherwise(size(col("schemas")).cast(LongType)).as("cnt"))
 
   private val commonSchemaUdf =
     udf((schemata: Seq[String]) => Ftm.commonSchema(schemata))
-
-  private val symbolsUdf = udf((parts: Seq[String]) =>
-    if (parts == null) Seq.empty[String]
-    else parts.flatMap(graft.text.Symbols.blockingSymbols).distinct)
 
   /** Symbol tokens of raw (id, schema, value) name rows →
     * (schema, id, field='sy', token, cnt=1), set semantics. The
@@ -200,8 +132,9 @@ object EntityTokenizer {
     */
   def symbolEntries(named: DataFrame): DataFrame =
     named.select(col("schema"), col("id"),
-        explode(symbolsUdf(parts(col("value")))).as("token"))
+        entityTokens(lit(Ftm.T.Name), col("value")))
+      .filter(col("field") === SymbolField)
+      .select(col("schema"), col("id"), col("field"), col("token"),
+        lit(1L).as("cnt"))
       .distinct()
-      .select(col("schema"), col("id"), lit(SymbolField).as("field"),
-        col("token"), lit(1L).as("cnt"))
 }

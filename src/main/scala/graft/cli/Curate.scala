@@ -5,6 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.Record
 import graft.dedup.DedupQueries
@@ -114,7 +115,7 @@ object CurateMain {
       val drop = DedupQueries.clustersOf(
           lmKept.select(col("doc_id"), col("text")))
         .filter(!col("keep"))
-        .select(col("doc_id").cast("long").as("doc_id"))
+        .select(col("doc_id").cast(LongType).as("doc_id"))
       val nearKept = lmKept.join(drop, Seq("doc_id"), "left_anti")
 
       // 5+6. shard assignment + sequence packing — packFrom keys its
@@ -123,15 +124,15 @@ object CurateMain {
       //    corpus out as per-shard 256-token context windows. The
       //    carried words give the token count; they are dropped here.
       val curated = Curation.packFrom(nearKept
-          .withColumn("n_tokens", size(col("w")).cast("long")))
+          .withColumn("n_tokens", size(col("w")).cast(LongType)))
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("quality"), col("avg_logp"), col("shard"), col("n_tokens"),
           col("start_tok"), col("first_window"), col("window_offset"),
           col("n_windows"))
         .localCheckpoint(true)
       // per shard: its documents and the end of its last window
-      val shardEnd = expr("(start_tok + n_tokens + " +
-        s"${Curation.PackContext - 1}) div ${Curation.PackContext}")
+      val shardEnd = Curation.div(col("start_tok") + col("n_tokens") +
+        (Curation.PackContext - 1), lit(Curation.PackContext))
       val perShard = curated.groupBy(col("shard"))
         .agg(count(lit(1)), max(shardEnd)).collect()
       val nNear = perShard.map(_.getLong(1)).sum

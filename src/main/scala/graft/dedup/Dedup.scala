@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
 import graft.functions.Hashing
 import graft.functions.TextExpressions.lower
@@ -91,7 +92,7 @@ object Dedup {
       .join(sets.select(col(idCol).as("a"), col(setCol).as("sa")), Seq("a"))
       .repartition(par, col("b"))
       .join(sets.select(col(idCol).as("b"), col(setCol).as("sb")), Seq("b"))
-      .select(cand.columns.toSeq.map(col) :+ (inter.cast("double") /
+      .select(cand.columns.toSeq.map(col) :+ (inter.cast(DoubleType) /
         (size(col("sa")) + size(col("sb")) - inter)).as("jaccard"): _*)
   }
 
@@ -119,7 +120,7 @@ object Dedup {
         (0 until n).map(k => element_at(wordsCol, i + k + 1)): _*))
     // sequence(0, negative) would count DOWN — guard short docs explicitly
     when(size(wordsCol) >= n, array_distinct(grams))
-      .otherwise(array().cast("array<string>"))
+      .otherwise(array().cast(ArrayType(StringType)))
   }
 
   /** MinHash signature from an already-hashed shingle column. The md5

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.Tables
 import graft.functions.Hashing
@@ -225,10 +226,10 @@ object DedupQueries {
 
   private def ccOf(lshPairs: DataFrame): DataFrame =
     graft.resolver.Resolver.connectedComponents(lshPairs.select(
-      col("a").cast("string").as("src"), col("b").cast("string").as("dst")))
+      col("a").cast(StringType).as("src"), col("b").cast(StringType).as("dst")))
 
   private def clustersFrom(cc: DataFrame, docs: DataFrame): DataFrame =
-    elect(cc, docs.select(col("doc_id").cast("string").as("id"),
+    elect(cc, docs.select(col("doc_id").cast(StringType).as("id"),
       length(col("text")).as("len")))
 
   /** Survivor election over `(id, cluster)` components and `(id, len)`
@@ -268,13 +269,13 @@ object DedupQueries {
     */
   def splitQ(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-      .select(col("doc_id").cast("string").as("doc_id"))
+      .select(col("doc_id").cast(StringType).as("doc_id"))
     val canon = clustersQ(s, d).select(col("doc_id"), col("canonical"))
     val keyed = docs.join(canon, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("canonical"), col("doc_id")).as("group_key"))
     val bucket = conv(substring(md5(col("group_key")), 1, 4), 16, 10)
-      .cast("long") % 100
+      .cast(LongType) % 100
     keyed.select(col("doc_id"), col("group_key"),
       when(bucket < SplitTrainLt, "train")
         .when(bucket < SplitValLt, "val")
@@ -299,7 +300,7 @@ object DedupQueries {
   def sampleQ(s: SparkSession, d: String): DataFrame = {
     val rates = typedLit(SampleRates)
     val bucket = conv(substring(
-      md5(col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
+      md5(col("doc_id").cast(StringType)), 1, 4), 16, 10).cast(LongType)
     Tables.documents(s, d)
       .withColumn("rate", element_at(rates, col("lang")))
       .filter(col("rate").isNotNull &&
@@ -542,7 +543,7 @@ object DedupQueries {
         // one pass: char array → codes (lambda only touches its own
         // variable); grams pack arithmetically — see ngramJaccardQ
         val codes = transform(split(lower(col("text")), ""),
-          c => ascii(c).cast("long"))
+          c => ascii(c).cast(LongType))
         val gram = transform(sequence(lit(1), size(col("cs")) - (n - 1)),
           i => element_at(col("cs"), i) * 16777216L +
             element_at(col("cs"), i + 1) * 65536L +
@@ -697,7 +698,7 @@ object DedupQueries {
     graft.textanalysis.TextAnalysis.withWords(docs)
       .filter(size(col("w")) >= n)
       .select(col("doc_id"), col("w"),
-        (size(col("w")) - (n - 1)).cast("long").as("total_grams"))
+        (size(col("w")) - (n - 1)).cast(LongType).as("total_grams"))
       .select(col("doc_id"), col("total_grams"), col("w"),
         explode(sequence(lit(0), size(col("w")) - n)).as("gpos"))
       .select(col("doc_id"), col("total_grams"), col("gpos"),
@@ -726,15 +727,15 @@ object DedupQueries {
       .withColumn("span", sum(col("brk")).over(wOrd))
       .groupBy(col("doc_id"), col("total_grams"), col("span"))
       .agg(count(lit(1)).as("ng"),
-        (max(col("gpos")) - min(col("gpos")) + n).cast("long")
+        (max(col("gpos")) - min(col("gpos")) + n).cast(LongType)
           .as("span_tokens"))
     spans.groupBy(col("doc_id"), col("total_grams"))
       .agg(count(lit(1)).as("n_spans"), sum(col("ng")).as("dup_grams"),
         max(col("span_tokens")).as("longest_span_tokens"))
       .select(col("doc_id"), col("n_spans"), col("dup_grams"),
         col("longest_span_tokens"),
-        (floor(col("dup_grams").cast("double") /
-          col("total_grams").cast("double") * 10000 + 0.5) / 10000)
+        (floor(col("dup_grams").cast(DoubleType) /
+          col("total_grams").cast(DoubleType) * 10000 + 0.5) / 10000)
           .as("dup_frac"))
   }
 

@@ -256,6 +256,13 @@ object TextExpressions {
     Bridge.column(OfacSim(
       Bridge.expression(a), Bridge.expression(b)))
 
+  /** The `(field, token, counted)` rows of one statement, through
+    * [[EntityTokens]]; a generator, so it names its three columns.
+    */
+  def entityTokens(propType: Column, value: Column): Column =
+    Bridge.column(EntityTokens(
+      Bridge.expression(propType), Bridge.expression(value)))
+
   /** Spark's `lower`, through [[CaseMap]]. */
   def lower(c: Column): Column =
     Bridge.column(CaseMap(Bridge.expression(c), upper = false))

@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Ftm
@@ -50,11 +50,12 @@ object EntityMatch {
   private val viewUdf = udf(
     (id: String, schema: String, props: Map[String, Seq[String]],
         refAddr: Seq[String]) =>
-      buildView(id, schema, Option(props).getOrElse(Map.empty),
-        Option(refAddr).getOrElse(Nil)))
+      EntityView.encode(buildView(id, schema,
+        Option(props).getOrElse(Map.empty), Option(refAddr).getOrElse(Nil))))
 
   /** Assembled entities (+ statements, for addressEntity dereference) →
-    * one `view` struct per entity, carrying the entity's `schema` and
+    * one binary `view` per entity ([[EntityView.encode]]), carrying the
+    * entity's `schema` and
     * `datasets` alongside so a pair scorer can gate on them without
     * joining the entities again.
     */
@@ -73,22 +74,14 @@ object EntityMatch {
         col("schema"), col("datasets"))
   }
 
-  private[matching] def rowToView(r: Row): EntityView = EntityView(
-    r.getString(0), r.getString(1),
-    r.getSeq[String](2), r.getSeq[String](3), r.getSeq[String](4),
-    r.getSeq[String](5), r.getSeq[String](6), r.getSeq[String](7),
-    r.getSeq[String](8), r.getSeq[String](9), r.getSeq[String](10),
-    r.getSeq[String](11), r.getSeq[String](12), r.getSeq[String](13),
-    r.getSeq[String](14))
-
   /** Driver-side view objects for the matcher micro-bench (the `nk
     * bench` path, `matching/bench.py:15-33`): up to `limit` views in
     * deterministic id order. Bounded collect by design — the bench
     * times the per-pair comparator on one core, like the reference.
     */
   def collectViews(views: DataFrame, limit: Int): Seq[EntityView] =
-    views.orderBy(col("id")).limit(limit)
-      .select(col("view.*")).collect().toSeq.map(rowToView)
+    views.orderBy(col("id")).limit(limit).select(col("view")).collect()
+      .toSeq.map(r => EntityView.decode(r.getAs[Array[Byte]](0)))
 
   /** Candidate pairs (`lid`, `rid`, …) × views → one score column per
     * algorithm in [[Algorithms.registry]], plus each side's `schema`
@@ -99,9 +92,9 @@ object EntityMatch {
       algoNames: Seq[String] = Algorithms.registry.keys.toSeq.sorted)
       : DataFrame = {
     val algos = algoNames.map(Algorithms.registry(_))
-    val scoreUdf = udf((l: Row, r: Row) => {
-      val q = rowToView(l)
-      val c = rowToView(r)
+    val scoreUdf = udf((l: Array[Byte], r: Array[Byte]) => {
+      val q = EntityView.decode(l)
+      val c = EntityView.decode(r)
       algos.map(_.score(q, c))
     })
     def side(p: String) = views.select(col("id").as(s"${p}id"),

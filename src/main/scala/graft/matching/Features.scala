@@ -28,6 +28,64 @@ final case class EntityView(
   def isA(ancestor: String): Boolean = Ftm.ancestors(schema).contains(ancestor)
 }
 
+/** The binary form a view travels in through Spark plans: one `binary`
+  * column instead of a 17-field struct of string arrays, so no operator
+  * between the view builder and the scorers writes or converts the
+  * arrays. Layout, big-endian: `id` and `schema` as strings, then the
+  * 15 lists in declaration order, each an `int` count followed by its
+  * strings; a string is an `int` byte length and its UTF-8 bytes.
+  * A null string or list has length or count -1.
+  */
+object EntityView {
+  import java.nio.ByteBuffer
+  import java.nio.charset.StandardCharsets.UTF_8
+
+  private def lists(v: EntityView): Seq[Seq[String]] = Seq(v.names,
+    v.weakAliases, v.lastNames, v.birthDates, v.genders, v.countries,
+    v.identifiers, v.addresses, v.addressEntityIds, v.firstNames, v.phones,
+    v.emails, v.birthPlaces, v.isins, v.urls)
+
+  def encode(v: EntityView): Array[Byte] = {
+    val ls = lists(v)
+    val strs = (Iterator(v.id, v.schema) ++ ls.iterator.filter(_ != null)
+      .flatten).map(s => if (s == null) null else s.getBytes(UTF_8)).toArray
+    val size = 4 * (strs.length + ls.size) +
+      strs.iterator.filter(_ != null).map(_.length).sum
+    val b = ByteBuffer.allocate(size)
+    var i = 0
+    def put(): Unit = {
+      val s = strs(i)
+      if (s == null) b.putInt(-1) else b.putInt(s.length).put(s)
+      i += 1
+    }
+    put(); put()
+    ls.foreach { l =>
+      if (l == null) b.putInt(-1)
+      else { b.putInt(l.size); l.foreach(_ => put()) }
+    }
+    b.array()
+  }
+
+  def decode(bytes: Array[Byte]): EntityView = {
+    val b = ByteBuffer.wrap(bytes)
+    def str(): String = b.getInt() match {
+      case -1 => null
+      case n =>
+        val s = new String(bytes, b.position(), n, UTF_8)
+        b.position(b.position() + n)
+        s
+    }
+    def list(): Seq[String] = b.getInt() match {
+      case -1 => null
+      case n => Vector.fill(n)(str())
+    }
+    val (id, schema) = (str(), str())
+    val l = Vector.fill(15)(list())
+    EntityView(id, schema, l(0), l(1), l(2), l(3), l(4), l(5), l(6), l(7),
+      l(8), l(9), l(10), l(11), l(12), l(13), l(14))
+  }
+}
+
 /** The pair comparator library (reference `matching/compare/`,
   * `matching/logic_v1/`, `matching/name_based/`): pure functions
   * `(query, result) → score` shared by every algorithm. All scores in

@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Trainer for the regression matchers — the Spark replacement for the
@@ -14,15 +14,16 @@ import org.apache.spark.sql.functions._
   */
 object Training {
 
-  /** Judged pairs (lid, rid, label 0/1) × views → one row per pair with
-    * the feature vector of `algo` as columns f0..fn.
+  /** Judged pairs (lid, rid, label 0/1) × views (`id`, binary `view`,
+    * [[EntityView.encode]]) → one row per pair with the feature vector
+    * of `algo` as columns f0..fn.
     */
   def trainingFrame(pairs: DataFrame, views: DataFrame,
       algo: Algorithms.Algo = Algorithms.ErUnstable): DataFrame = {
     val featNames = algo.features.map(_.name)
-    val featUdf = udf((l: Row, r: Row) => {
-      val q = rowToView(l)
-      val c = rowToView(r)
+    val featUdf = udf((l: Array[Byte], r: Array[Byte]) => {
+      val q = EntityView.decode(l)
+      val c = EntityView.decode(r)
       algo.features.map(f => f.fn(q, c))
     })
     val lv = views.select(col("id").as("lid"), col("view").as("lview"))
@@ -33,8 +34,6 @@ object Training {
       df.withColumn(s"f_$n", element_at(col("fs"), i + 1))
     }.drop("lview", "rview", "fs")
   }
-
-  private def rowToView(r: Row): EntityView = EntityMatch.rowToView(r)
 
   /** Digest-grouped dedup + contradiction quarantine
     * (`erun/train.py:155-216`): identical feature vectors collapse to

@@ -2,6 +2,7 @@ package graft.resolver
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Cluster resolution: positive same-as edges → connected components →
   * canonical-ID selection → canonicalization of statements.
@@ -40,8 +41,8 @@ object Resolver {
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       driverLimit: Long = 2000000L): DataFrame = {
     val cap = math.min(driverLimit, Int.MaxValue - 1L).toInt
-    val rows = edges.select(col("src").cast("string"),
-      col("dst").cast("string")).limit(cap + 1).collect()
+    val rows = edges.select(col("src").cast(StringType),
+      col("dst").cast(StringType)).limit(cap + 1).collect()
     if (rows.length <= driverLimit)
       return driverUnionFind(edges.sparkSession,
         rows.iterator.map(r => (r.getString(0), r.getString(1))))
@@ -203,7 +204,7 @@ object Resolver {
     components
       .filter(col("cluster").isNotNull)
       .groupBy(col("cluster"))
-      .agg(element_at(split(max(concat(weightOf(col("id")).cast("string"),
+      .agg(element_at(split(max(concat(weightOf(col("id")).cast(StringType),
           lit("|"), col("id"))), "\\|"), 2).as("canonical"),
         collect_list(col("id")).as("members"))
       .select(explode(col("members")).as("member"), col("canonical"))

@@ -79,13 +79,13 @@ object EntityStore {
         col("entity_id"),
         col("entity_id").as("canonical_id"),
         col("prop"), col("prop_type"), col("schema"), col("value"),
-        lit(null).cast("string").as("original_value"),
+        lit(null).cast(StringType).as("original_value"),
         lit(dataset).as("dataset"),
-        lit(null).cast("string").as("origin"),
-        lit(null).cast("string").as("lang"),
+        lit(null).cast(StringType).as("origin"),
+        lit(null).cast(StringType).as("lang"),
         lit(false).as("external"),
-        lit(null).cast("timestamp").as("first_seen"),
-        lit(null).cast("timestamp").as("last_seen"))
+        lit(null).cast(TimestampType).as("first_seen"),
+        lit(null).cast(TimestampType).as("last_seen"))
   }
 
   private val commonSchemaUdf =

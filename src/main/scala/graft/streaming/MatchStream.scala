@@ -33,7 +33,8 @@ case class MatchState(seen: Map[String, Double])
   *     and batch can never drift; the batch (id, field, token)
   *     aggregation is deferred to stage 3's state;
   *  2. a stream-static equi-join on (token, field) against the TF
-  *     index plus the broadcast schema-compat table — stateless, so
+  *     index, filtered by the schema-compat table as a literal `InSet`
+  *     ([[Blocker]]'s own compat test) — stateless, so
   *     the static side plans exactly like the batch join (the index
   *     never shuffles per micro-batch; stopword tokens cannot join
   *     because the TF index is already stopword-filtered);
@@ -95,7 +96,8 @@ object MatchStream {
   }
 
   /** Streamed statements × static TF index → live per-entity candidate
-    * rankings. `tfIndex`/`compat` are batch frames (the lake's index).
+    * rankings. `tfIndex`/`compat` are batch frames (the lake's index);
+    * `compat` is collected once into the join's literal compat test.
     *
     * `stateTtl` ages out idle query entities via a processing-time
     * timeout. Leave it `None` under the default zero-interval trigger:
@@ -115,9 +117,9 @@ object MatchStream {
     val joined = l.join(r,
       col("l.token") === col("r.token") &&
         col("l.field") === col("r.field") && col("l.id") =!= col("r.id"))
-      .join(broadcast(compat),
-        col("ls") === least(col("l.schema"), col("r.schema")) &&
-          col("rs") === greatest(col("l.schema"), col("r.schema")))
+      .filter(Blocker.compatible(compat,
+        least(col("l.schema"), col("r.schema")),
+        greatest(col("l.schema"), col("r.schema"))))
       .select(col("l.id").as("qid"), col("r.id").as("cid"),
         col("l.field").as("field"), col("l.token").as("token"),
         col("r.weight").as("weight"))

@@ -175,6 +175,8 @@ object TextNorm {
 
   def foldAscii(s: String): String = {
     val lower0 = s.toLowerCase
+    // nothing below changes an all-ASCII string
+    if (isAscii(lower0)) return lower0
     // word-level Han name translations run before the per-character
     // pinyin fallback (see Transliterate.hanNames)
     val lower =
@@ -184,12 +186,27 @@ object TextNorm {
     val pre =
       if (Transliterate.hasKhmer(lower)) Transliterate.khmerWord(lower)
       else lower
-    pre.flatMap(c =>
-      if (c < 128) c.toString
-      else accentMap.getOrElse(c, cyrillicMap.getOrElse(c,
-        romanizeChar(c)
-          .orElse(stripDiacritics(c))
-          .getOrElse(c.toString))))
+    val b = new java.lang.StringBuilder(pre.length)
+    var i = 0
+    while (i < pre.length) {
+      val c = pre.charAt(i)
+      if (c < 128) b.append(c) else b.append(foldChar(c))
+      i += 1
+    }
+    b.toString
+  }
+
+  /** The folded spelling of one non-ASCII character of lowercase text. */
+  private[text] def foldChar(c: Char): String =
+    accentMap.getOrElse(c, cyrillicMap.getOrElse(c,
+      romanizeChar(c)
+        .orElse(stripDiacritics(c))
+        .getOrElse(c.toString)))
+
+  private def isAscii(s: String): Boolean = {
+    var i = 0
+    while (i < s.length && s.charAt(i) < 128) i += 1
+    i == s.length
   }
 
   /** Apostrophe-family characters are deleted, not spaced: "Qa'ida" is
@@ -260,8 +277,12 @@ object TextNorm {
     while (changed) {
       changed = false
       for (p <- PersonPrefixes) {
-        if (out.startsWith(p + " ") || out.startsWith(p + ". ")) {
-          out = out.stripPrefix(p).stripPrefix(".").trim
+        val n = p.length
+        // `p + " "` or `p + ". "` starts the name
+        if (out.startsWith(p) && out.length > n && (out.charAt(n) == ' ' ||
+            (out.charAt(n) == '.' && out.length > n + 1 &&
+              out.charAt(n + 1) == ' '))) {
+          out = out.substring(if (out.charAt(n) == '.') n + 1 else n).trim
           changed = true
         }
       }
@@ -295,16 +316,18 @@ object TextNorm {
   // key replacing first destroys the longer phrase it is part of
   // ("limited" → "ltd" would turn "limited liability company" into
   // "ltd liability co" so the "llc" entry could never fire).
-  private val LegalFormsOrdered: Seq[(Pattern, String)] =
+  // Each pattern runs only on a string that contains its literal, so
+  // a name without legal forms allocates no `Matcher`.
+  private[text] val LegalFormsOrdered: Seq[(String, Pattern, String)] =
     LegalForms.toSeq.sortBy { case (k, _) => (-k.length, k) }.map {
       case (long, short) =>
-        Pattern.compile(s"\\b${Pattern.quote(long)}\\b") -> short
+        (long, Pattern.compile(s"\\b${Pattern.quote(long)}\\b"), short)
     }
 
-  private def replaceLegalForms(s: String): String = {
+  private[text] def replaceLegalForms(s: String): String = {
     var out = s
-    for ((long, short) <- LegalFormsOrdered)
-      out = long.matcher(out).replaceAll(short)
+    for ((literal, long, short) <- LegalFormsOrdered)
+      if (out.contains(literal)) out = long.matcher(out).replaceAll(short)
     out
   }
 

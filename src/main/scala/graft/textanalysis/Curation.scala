@@ -2,7 +2,10 @@ package graft.textanalysis
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.Tables
 
@@ -49,7 +52,7 @@ object Curation {
   // floor(x*1e4+0.5)/1e4 everywhere a double fraction is emitted — see
   // TextAnalysis.qualityExpr for why round() diverges across engines
   private def frac4(num: Column, den: Column): Column =
-    floor(num.cast("double") / den.cast("double") * 10000 + 0.5) / 10000
+    floor(num.cast(DoubleType) / den.cast(DoubleType) * 10000 + 0.5) / 10000
 
   /** Gopher-style repetition profile: the fraction of the document
     * occupied by its single most frequent bigram, and the fraction of
@@ -172,13 +175,13 @@ object Curation {
     * size). Map-only (sequence + explode), no shuffle at any scale.
     */
   def chunksOf(docs: DataFrame): DataFrame = {
-    val nTok = size(col("w")).cast("long")
+    val nTok = size(col("w")).cast(LongType)
     TextAnalysis.withWords(docs)
       .filter(size(col("w")) > 0)
       .select(col("doc_id"), nTok.as("n"))
       .select(col("doc_id"), col("n"),
         explode(sequence(lit(0L),
-          floor((col("n") + (ChunkLen - 1L)) / ChunkLen).cast("long") - 1L))
+          floor((col("n") + (ChunkLen - 1L)) / ChunkLen).cast(LongType) - 1L))
           .as("chunk_id"))
       .select(col("doc_id"), col("chunk_id"),
         least(lit(ChunkLen), col("n") - col("chunk_id") * ChunkLen)
@@ -201,15 +204,15 @@ object Curation {
     // staged projection — see TextAnalysis.withWords for the rule
     val toks = docs
       .select(col("doc_id"), col("source"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n"))
+        size(TextAnalysis.words(col("text"))).cast(LongType).as("n"))
       .filter(col("n") > 0)
     val nShards = toks.groupBy(col("source"))
-      .agg(ceil(sum(col("n")).cast("double") / ShardTokens)
-        .cast("long").as("n_shards"))
+      .agg(ceil(sum(col("n")).cast(DoubleType) / ShardTokens)
+        .cast(LongType).as("n_shards"))
     val rn = row_number().over(
       Window.partitionBy(col("source"))
         .orderBy(col("n").desc, col("doc_id")))
-    toks.withColumn("rn", rn.cast("long"))
+    toks.withColumn("rn", rn.cast(LongType))
       .join(broadcast(nShards), Seq("source"))
       .select(col("source"),
         pmod(col("rn") - 1L, col("n_shards")).as("shard_id"), col("n"))
@@ -233,7 +236,7 @@ object Curation {
     */
   def mixtureOf(docs: DataFrame): DataFrame = {
     val bucket = conv(substring(
-      md5(col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
+      md5(col("doc_id").cast(StringType)), 1, 4), 16, 10).cast(LongType)
     // ONE corpus pass: the old shape tokenized the corpus twice (once
     // for the per-source totals, once for the selection counts after
     // the rates existed). The selection predicate `bucket < rate *
@@ -245,16 +248,16 @@ object Curation {
     // re-run the scan + tokenize per consumer), and tokenization, the
     // real cost at lake scale, happens exactly once.
     val hist = docs.select(col("source"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n"),
+        size(TextAnalysis.words(col("text"))).cast(LongType).as("n"),
         bucket.as("bucket"))
       .groupBy(col("source"), col("bucket"))
       .agg(count(lit(1)).as("docs"), sum(col("n")).as("toks"))
       .localCheckpoint(true)
-    val w = substring(col("source"), 4, 10).cast("long") + 1L
+    val w = substring(col("source"), 4, 10).cast(LongType) + 1L
     val src = hist.groupBy(col("source"))
       .agg(sum(col("toks")).as("tokens"))
       .withColumn("w", w)
-    val t = src.agg(min(col("tokens").cast("double") / col("w"))
+    val t = src.agg(min(col("tokens").cast(DoubleType) / col("w"))
       .as("t_units"))
     // no broadcast on `rates` itself: it is the PRESERVED side of the
     // final left-outer join (unsupported build side — the hint would
@@ -296,8 +299,8 @@ object Curation {
     * shards always match q_doc_shuffle's.
     */
   def shuffleKey(epoch: Column): Column = conv(substring(
-    md5(concat(col("doc_id").cast("string"), lit(":"),
-      epoch.cast("string"))), 1, 15), 16, 10).cast("long")
+    md5(concat(col("doc_id").cast(StringType), lit(":"),
+      epoch.cast(StringType))), 1, 15), 16, 10).cast(LongType)
 
   def shuffleOf(docs: DataFrame): DataFrame = {
     val key = shuffleKey(col("epoch"))
@@ -338,9 +341,13 @@ object Curation {
     */
   def packOf(docs: DataFrame): DataFrame =
     packFrom(docs.select(col("doc_id"),
-      size(TextAnalysis.words(col("text"))).cast("long").as("n_tokens")))
+      size(TextAnalysis.words(col("text"))).cast(LongType).as("n_tokens")))
       .select(col("shard"), col("doc_id"), col("n_tokens"), col("start_tok"),
         col("first_window"), col("window_offset"), col("n_windows"))
+
+  /** `a div b`: Spark's `IntegralDivide`, built without parsing SQL. */
+  private[graft] def div(a: Column, b: Column): Column =
+    Bridge.column(IntegralDivide(Bridge.expression(a), Bridge.expression(b)))
 
   /** The packing arithmetic over a frame that already carries its
     * token count as `n_tokens` (BIGINT): drops token-less rows and adds
@@ -357,11 +364,11 @@ object Curation {
       .withColumn("k", shuffleKey(lit(0)))
       .withColumn("shard", pmod(col("k"), lit(ShuffleShards.toLong)))
       .withColumn("start_tok", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-      .withColumn("first_window", expr(s"start_tok div $PackContext"))
+      .withColumn("first_window", div(col("start_tok"), lit(PackContext)))
       .withColumn("window_offset", pmod(col("start_tok"), lit(PackContext)))
       .withColumn("n_windows",
-        expr(s"(start_tok + n_tokens - 1) div $PackContext") -
-          expr(s"start_tok div $PackContext") + lit(1L))
+        div(col("start_tok") + col("n_tokens") - 1, lit(PackContext)) -
+          div(col("start_tok"), lit(PackContext)) + lit(1L))
       .drop("k")
   }
 
@@ -384,13 +391,13 @@ object Curation {
     */
   def wsampleOf(docs: DataFrame): DataFrame = {
     val u = (conv(substring(md5(concat(lit("ws:"),
-      col("doc_id").cast("string"))), 1, 4), 16, 10).cast("double") +
+      col("doc_id").cast(StringType))), 1, 4), 16, 10).cast(DoubleType) +
       lit(0.5)) / lit(65536.0)
     TextAnalysis.withWords(docs)
-      .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(col("w")).cast(LongType).as("n_tokens"))
       .filter(col("n_tokens") > 0)
       .withColumn("prio_e6",
-        floor(log(u) / col("n_tokens") * lit(1e6) + lit(0.5)).cast("long"))
+        floor(log(u) / col("n_tokens") * lit(1e6) + lit(0.5)).cast(LongType))
       .orderBy(col("prio_e6").desc, col("doc_id").asc)
       .limit(WSampleN)
   }
@@ -414,10 +421,10 @@ object Curation {
   def fimOf(docs: DataFrame): DataFrame = {
     val L = length(col("text"))
     val bucket = conv(substring(
-      md5(col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
+      md5(col("doc_id").cast(StringType)), 1, 4), 16, 10).cast(LongType)
     def cut(from: Int) = pmod(conv(substring(
-      md5(concat(lit("fim:"), col("doc_id").cast("string"))),
-      from, 8), 16, 10).cast("long"), L.cast("long")) + 1
+      md5(concat(lit("fim:"), col("doc_id").cast(StringType))),
+      from, 8), 16, 10).cast(LongType), L.cast(LongType)) + 1
     val (c1, c2) = (cut(1), cut(9))
     val lo = least(c1, c2)
     val hi = greatest(c1, c2)

@@ -2,6 +2,7 @@ package graft.textanalysis
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.Tables
 
@@ -74,7 +75,7 @@ object LangModel {
   val LmBigramsPerContext = 64
 
   private def bucket = conv(substring(
-    md5(col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
+    md5(col("doc_id").cast(StringType)), 1, 4), 16, 10).cast(LongType)
 
   /** The capped LM count tables as ONE kind-tagged lake artifact
     * (`uni` ≤ topV + `bi` ≤ topV·64 + 1 `tot` row — model-sized, a
@@ -92,13 +93,13 @@ object LangModel {
       val (uni, bi, tot) =
         lmTables(corpusTokenRows(s, d).filter(bucket < TrainBuckets),
           LmTopV, LmBigramsPerContext, held)
-      uni.select(lit("uni").as("kind"), lit(null).cast("string").as("prev"),
+      uni.select(lit("uni").as("kind"), lit(null).cast(StringType).as("prev"),
           col("term"), col("un").as("cnt"))
         .unionByName(bi.select(lit("bi").as("kind"), col("prev"),
           col("term"), col("bc").as("cnt")))
         .unionByName(tot.select(lit("tot").as("kind"),
-          lit(null).cast("string").as("prev"),
-          lit(null).cast("string").as("term"), col("t").as("cnt")))
+          lit(null).cast(StringType).as("prev"),
+          lit(null).cast(StringType).as("term"), col("t").as("cnt")))
     } finally held.release()
   }
 
@@ -149,7 +150,7 @@ object LangModel {
     val words = TextAnalysis.withWords(docs)
       .filter(size(col("w")) > 0).select(col("doc_id"), col("w"))
     val model = heldOutModel(words, topV, bigramsPerContext)
-    words.select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
+    words.select(col("doc_id"), size(col("w")).cast(LongType).as("n_tokens"),
       avgLogpOf(model, col("w")).as("avg_logp"))
   }
 
@@ -190,11 +191,11 @@ object LangModel {
   private[graft] def lmScoreFrom(rows: DataFrame, uni: DataFrame,
       bi: DataFrame, tot: DataFrame): DataFrame = {
     val unPrev = uni.select(col("term").as("prev"), col("un").as("un_prev"))
-    val pUni = coalesce(col("un").cast("double"), lit(OovCount)) /
-      col("t").cast("double")
+    val pUni = coalesce(col("un").cast(DoubleType), lit(OovCount)) /
+      col("t").cast(DoubleType)
     val p = when(col("prev").isNull, pUni)
       .when(col("bc").isNotNull,
-        col("bc").cast("double") / col("un_prev").cast("double"))
+        col("bc").cast(DoubleType) / col("un_prev").cast(DoubleType))
       .otherwise(lit(Backoff) * pUni)
     // LM tables broadcast — bounded by the LmTopV cap above, so the
     // hint is safe at any corpus size; the corpus token stream is
@@ -206,12 +207,12 @@ object LangModel {
       .join(broadcast(bi), Seq("prev", "term"), "left")
       .crossJoin(broadcast(tot))
       .select(col("doc_id"),
-        floor(log(p) * lit(1e6) + lit(0.5)).cast("long").as("e6"))
+        floor(log(p) * lit(1e6) + lit(0.5)).cast(LongType).as("e6"))
     scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("e6")).as("s6"))
       .select(col("doc_id"), col("n_tokens"),
-        round(col("s6").cast("double") /
-          (col("n_tokens").cast("double") * lit(1e6)), 6).as("avg_logp"))
+        round(col("s6").cast(DoubleType) /
+          (col("n_tokens").cast(DoubleType) * lit(1e6)), 6).as("avg_logp"))
   }
 
   /** The one training pass over the corpus: grouping on (prev, term)

@@ -2,6 +2,7 @@ package graft.textanalysis
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.Tables
 import graft.functions.Hashing
@@ -62,8 +63,8 @@ object TextAnalysis {
       size(w).as("n_tokens"),
       size(array_distinct(w)).as("n_distinct"),
       safe(round(aggregate(transform(w, x => length(x)), lit(0),
-        (acc, x) => acc + x).cast("double") / nTok, 4)).as("avg_token_len"),
-      safe(round(size(array_distinct(w)).cast("double") / nTok, 4))
+        (acc, x) => acc + x).cast(DoubleType) / nTok, 4)).as("avg_token_len"),
+      safe(round(size(array_distinct(w)).cast(DoubleType) / nTok, 4))
         .as("ttr"))
   }
 
@@ -75,10 +76,10 @@ object TextAnalysis {
     * query and the curate pipeline. NULL for token-less docs.
     */
   def qualityExpr(w: Column): Column = {
-    val nTok = size(w).cast("double")
+    val nTok = size(w).cast(DoubleType)
     val lenScore = least(nTok / 50.0, lit(1.0))
-    val ttr = size(array_distinct(w)).cast("double") / nTok
-    val stopRatio = langScore(w, LangMarkers.head._2).cast("double") / nTok
+    val ttr = size(array_distinct(w)).cast(DoubleType) / nTok
+    val stopRatio = langScore(w, LangMarkers.head._2).cast(DoubleType) / nTok
     // floor(x*1e4+0.5)/1e4 instead of round(x, 4): Spark rounds via the
     // double's shortest decimal repr (BigDecimal.valueOf) while DuckDB
     // rounds the binary value — they disagree on representation ties.
@@ -166,7 +167,7 @@ object TextAnalysis {
       i => struct(
         (i + array_position(slice(col("hs"), i + 1, lit(FpWin)),
           array_min(slice(col("hs"), i + 1, lit(FpWin)))) - 1)
-          .cast("long").as("gpos"),
+          .cast(LongType).as("gpos"),
         array_min(slice(col("hs"), i + 1, lit(FpWin))).as("h")))
     withWords(docs)
       .filter(size(col("w")) >= FpN + FpWin - 1)
@@ -262,7 +263,7 @@ object TextAnalysis {
     */
   private[textanalysis] def quantileTargets(counts: DataFrame): DataFrame =
     counts.select(col("lang"), col("n"), explode(typedLit(Quantiles)).as("q"))
-      .withColumn("pos", ceil(col("q") * col("n")).cast("long"))
+      .withColumn("pos", ceil(col("q") * col("n")).cast(LongType))
 
   /** Exact type-1 quantile values of `x` per language at the targets. */
   private[textanalysis] def exactQuantiles(vals: DataFrame,
@@ -309,8 +310,8 @@ object TextAnalysis {
     val scored = tf.join(df, Seq("t"))
       .select(col("doc_id"), col("t"), col("tf"), col("df"),
         floor(col("tf") * (lit(1.0) +
-          log(lit(nDocs).cast("double") / col("df").cast("double")))
-          * 1e6 + lit(0.5)).cast("long").as("score6"))
+          log(lit(nDocs).cast(DoubleType) / col("df").cast(DoubleType)))
+          * 1e6 + lit(0.5)).cast(LongType).as("score6"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("score6").desc, col("t").asc)

@@ -71,7 +71,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("the printed line for 137 queries stays within 2,000 characters") {
     val lap = Profile.Lap(999.999, 99999L, 99999L, 1L << 40, 1L << 40,
-      Nil, 9999.999, 99999L)
+      Nil, 9999.999, 99999L, 99999.999)
     val names = (1 to 137).map(i => f"q_synthetic_query_name_$i%03d")
     val r = Bench.Run("sf0.1", names.map(_ -> lap), Nil, lap)
     val machine = ListMap("ambient_gate" -> "failed",

@@ -69,6 +69,17 @@ class SoakSpec extends AnyFunSuite {
     assert(r.get("state_mismatches").asLong === 0L)
   }
 
+  test("xref and curate: records carry Janino compile time next to compiles") {
+    for ((mode, before) <- Seq("xref" -> "merges", "curate" -> "shuffle_write_mb")) {
+      val r = soak(sf, "1", mode)
+      val ks = keys(r)
+      assert(ks.indexOf("compile_ms") === ks.indexOf("compiles") + 1, ks)
+      assert(ks.indexOf(before) === ks.indexOf("compile_ms") + 1, ks)
+      assert(r.get("compile_ms").isNumber, mode)
+      assert(r.get("compile_ms").asDouble >= 0.0, mode)
+    }
+  }
+
   test("an unknown mode throws the usage text before any job") {
     val before = listeners
     val e = intercept[IllegalArgumentException](

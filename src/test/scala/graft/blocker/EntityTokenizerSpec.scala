@@ -1,26 +1,102 @@
 package graft.blocker
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.functions.EntityTokens
 import graft.model.Ftm
 import graft.streaming.MatchStream
 
-/** The single-scan tokenizer against the family-union form it replaced,
-  * kept here as the reference: one select + explode branch per token
+/** The tokenizer against two references kept here. The family-union
+  * form it replaced first: one select + explode branch per token
   * family, a `distinct` over the set-semantics families, a count over
   * the counted ones, and a union folded by (id, field, token). Both
   * [[EntityTokenizer.entries]] and [[MatchStream.queryTokens]] must
   * equal it row for row on generated statement tables (sampled
-  * generators, as in MatchPropsSpec).
+  * generators, as in MatchPropsSpec). Then the single-explode Column
+  * form that the native generator ([[EntityTokens]]) replaced: the
+  * generator must emit its rows occurrence for occurrence, through
+  * generated code and interpreted.
   */
 class EntityTokenizerSpec extends AnyFunSuite {
   import SparkSpec.spark
   import spark.implicits._
+
+  /** The tokenizer's former Column form, verbatim: the value parts and
+    * name fingerprint projected once per row, then one `explode` of the
+    * concatenated family arrays, each gated on `prop_type`.
+    */
+  private object ColumnForm {
+    import EntityTokenizer._
+    import graft.functions.TextExpressions.{lower, upper}
+
+    def foldAscii(c: Column): Column =
+      translate(regexp_replace(lower(c), "ß", "ss"), FoldSrc, FoldDst)
+
+    def parts(c: Column): Column =
+      filter(split(foldAscii(c), "[^a-z0-9]+"), p => length(p) > 0)
+
+    private val EmittedType = ArrayType(StructType(Seq(
+      StructField("field", StringType), StructField("token", StringType),
+      StructField("counted", BooleanType))))
+
+    val symbolsUdf = udf((parts: Seq[String]) =>
+      if (parts == null) Seq.empty[String]
+      else parts.flatMap(graft.text.Symbols.blockingSymbols).distinct)
+
+    private def tokensOf: Column = {
+      val t = col("prop_type")
+      val v = col("value")
+      val p = col("p")
+      val fp = col("fp")
+      def fam(cond: Column, arr: Column): Column =
+        when(cond, arr).otherwise(array().cast(EmittedType))
+      def one(field: Column, token: Column, counted: Boolean): Column =
+        struct(field.as("field"), token.as("token"), lit(counted).as("counted"))
+      def prefixed(xs: Column, field: String, prefix: String,
+          counted: Boolean): Column =
+        transform(xs, x => one(lit(field), concat(lit(prefix), x), counted))
+      val isName = t === Ftm.T.Name
+      val ident = concat(lit("i:"), regexp_replace(upper(v), "[^A-Z0-9]+", ""))
+      val words = filter(p, w => !w.isInCollection(Stopwords))
+      concat(
+        fam(isName && length(fp) > 3 && length(fp) < 200,
+          array(one(lit("name"), concat(lit("n:"), fp), counted = false))),
+        fam(isName, prefixed(filter(p, x => length(x) >= 3 && length(x) <= 30),
+          NamePartField, "np:", counted = false)),
+        fam(isName, transform(symbolsUdf(p),
+          x => one(lit(SymbolField), x, counted = false))),
+        fam(t.isin(Ftm.T.Country, Ftm.T.Phone, Ftm.T.Email),
+          array(one(t, concat(t, lit(":"), lower(substring(v, 1, 300))),
+            counted = false))),
+        fam(t === Ftm.T.Identifier && length(ident) > 2,
+          array(one(lit("identifier"), ident, counted = false))),
+        fam(t === Ftm.T.Date, array(one(lit("date"),
+          concat(lit("d:"), substring(v, 1, 10)), counted = false))),
+        fam(t === Ftm.T.Address, concat(
+          prefixed(filter(words, w => length(w) > 3), "address", "a:",
+            counted = true),
+          prefixed(filter(words, w => length(w) > 6), WordField, "wd:",
+            counted = true))),
+        fam(t.isin(Ftm.T.StringT, Ftm.T.Text, Ftm.T.Identifier),
+          prefixed(filter(words, w => length(w) >= 6), WordField, "wd:",
+            counted = true)))
+    }
+
+    def emitted(st: DataFrame): DataFrame =
+      st.select(col("id"), col("schema"), col("prop_type"), col("value"),
+          parts(col("value")).as("p"))
+        .withColumn("fp", when(col("prop_type") === Ftm.T.Name,
+          array_join(array_sort(array_distinct(col("p"))), "")))
+        .select(col("id"), col("schema"), explode(tokensOf).as("t"))
+        .select(col("id"), col("schema"), col("t.field").as("field"),
+          col("t.token").as("token"), col("t.counted").as("counted"))
+  }
 
   /** The family-union tokenizer, verbatim apart from a null guard in
     * the symbol UDF: on a null name value the original UDF threw, so
@@ -28,13 +104,10 @@ class EntityTokenizerSpec extends AnyFunSuite {
     */
   private object Reference {
     import EntityTokenizer._
+    import ColumnForm.{parts, symbolsUdf}
 
     private val commonSchemaUdf =
       udf((schemata: Seq[String]) => Ftm.commonSchema(schemata))
-
-    private val symbolsUdf = udf((parts: Seq[String]) =>
-      if (parts == null) Seq.empty[String]
-      else parts.flatMap(graft.text.Symbols.blockingSymbols).distinct)
 
     def entries(stmts: DataFrame, idCol: String): DataFrame = {
       val st = preparedStatements(stmts, idCol)
@@ -189,6 +262,64 @@ class EntityTokenizerSpec extends AnyFunSuite {
     sameRows(MatchStream.queryTokens(st), Reference.queryTokens(st, "entity_id"))
     st.unpersist()
   }
+
+  /** Values the generated tables lack: non-ASCII scripts, case
+    * mappings that change length or leave ASCII (`ß`, `ẞ`, `İ`, `ﬁ`),
+    * supplementary-plane characters, a value past 300 characters and a
+    * name whose fingerprint reaches 200.
+    */
+  private val edgeValues: Seq[String] = Seq(null, "", " - ", "ß", "STRAßE",
+    "ẞ", "İstanbul", "Iİıi", "ﬁnance ﬂow", "Ærø Zoë José Đorđe",
+    "Šiško Žižek", "Ωμέγα Βήτα Holdings", "Москва Кремль Банк", "北京 银行",
+    "ខ្មែរ ភាសា", "\uD835\uDD18\uD835\uDD2B\uD835\uDD26 \uD83D\uDE00 emoji",
+    "HRB-12345 ß-99", "2001-02-03T04:05:06", "1999 2000 the und",
+    "John Smith Holding Ltd", "Deutschland Beteiligungs GmbH",
+    "Bahnhofstraße 12, Bad Homburg vor der Höhe",
+    "Überseering " * 30, (1 to 60).map(i => f"p$i%03d").mkString(" "))
+
+  /** Every (type, value) pair of the edge values, null type included,
+    * next to the generated tables' rows.
+    */
+  private def kernelInput: DataFrame = {
+    val edge = for {
+      (t, i) <- ((null: String) +: "unknown" +: propTypes).zipWithIndex
+      (v, j) <- edgeValues.zipWithIndex
+    } yield (s"x$i.$j", "Person", t, v)
+    val generated = (4L to 6L).flatMap(seed => table(seed, 160)
+      .select(col("entity_id"), col("schema"), col("prop_type"),
+        col("value")).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3))))
+    spark.sparkContext.parallelize(edge ++ generated, 4)
+      .toDF("id", "schema", "prop_type", "value")
+  }
+
+  for (codegen <- Seq(true, false))
+    test("the token generator emits the Column form's rows " +
+        s"(${if (codegen) "codegen" else "interpreted"})") {
+      val confs = Map(
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" ->
+          (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+      val before = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val st = kernelInput.cache()
+        val got = EntityTokenizer.emitted(st)
+        val plan = got.queryExecution.executedPlan.toString
+        assert(plan.contains(
+          if (codegen) "*(1) Generate entity_tokens" else "Generate entity_tokens"),
+          plan)
+        assert(got.schema === ColumnForm.emitted(st).schema)
+        val want = ColumnForm.emitted(st)
+        assert(want.count() > 500)
+        sameRows(got, want)
+        st.unpersist()
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
 
   test("a null name value emits no token") {
     val st = Seq(("e1", "c1", "Person", "name", Ftm.T.Name, null: String))

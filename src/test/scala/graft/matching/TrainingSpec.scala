@@ -37,7 +37,8 @@ class TrainingSpec extends AnyFunSuite {
       Seq(id -> view(id, sch, cap), s"$id-t" -> view(s"$id-t", sch,
         typo(cap)))
     }
-    val viewsDf = views.toDF("id", "view")
+    val viewsDf = views.map { case (id, v) => id -> EntityView.encode(v) }
+      .toDF("id", "view")
     // positives: entity vs its typo twin; negatives: consecutive entities
     val pos = base.map { case (id, _, _) => (id, s"$id-t", 1) }
     val neg = base.zip(base.tail).map { case ((a, _, _), (b, _, _)) =>

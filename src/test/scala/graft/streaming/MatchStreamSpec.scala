@@ -107,6 +107,42 @@ class MatchStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("the literal compat test keeps exactly the broadcast compat join's hits") {
+    // shared tokens across compatible and incompatible schema pairs
+    val mixed = stmtsDf(Seq(
+      ("m1", "Company", "name", "name", "Quandt Holding"),
+      ("m2", "Vessel", "name", "name", "Johanna Quandt"),
+      ("m3", "LegalEntity", "name", "name", "Johanna Quandt"),
+      ("m4", "Address", "full", "address", "Quandt Strasse 1"),
+      ("m5", "Organization", "country", "country", "de")))
+    val index = Blocker.termFrequencies(
+      EntityTokenizer.entries(corpus.unionByName(mixed)),
+      Xref.compatDf(spark), Xref.boostsDf(spark), cfg,
+      dampFields = EntityTokenizer.DampFields)
+    val queries = stmtsDf(query ++ Seq(
+      ("q3", "Company", "name", "name", "Johanna Quandt"),
+      ("q4", "Vessel", "name", "name", "Quandt Holding"),
+      ("q5", "Address", "full", "address", "Quandt Strasse 1")))
+    val compat = Xref.compatDf(spark)
+    val joined = MatchStream.queryTokens(queries).as("l")
+      .join(index.as("r"), col("l.token") === col("r.token") &&
+        col("l.field") === col("r.field") && col("l.id") =!= col("r.id"))
+    val hit = Seq(col("l.id"), col("r.id"), col("l.field"), col("l.token"),
+      col("r.weight"))
+    def rows(df: DataFrame) = df.select(hit: _*).collect().toSeq
+      .map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    val literal = rows(joined.filter(Blocker.compatible(compat,
+      least(col("l.schema"), col("r.schema")),
+      greatest(col("l.schema"), col("r.schema")))))
+    val broadcastJoin = rows(joined.join(broadcast(compat),
+      col("ls") === least(col("l.schema"), col("r.schema")) &&
+        col("rs") === greatest(col("l.schema"), col("r.schema"))))
+    assert(literal === broadcastJoin)
+    assert(literal.size > 5)
+    // some shared-token hits are incompatible and dropped by both
+    assert(rows(joined).size > literal.size)
+  }
+
   test("rank applies the relative score floor and candidate cap") {
     val seen = Map(
       "c1\u0000name\u0000n:x" -> 10.0,
