@@ -9,10 +9,10 @@ import org.apache.spark.sql.SparkSession
   * listener counting jobs, completed stages, shuffle bytes written and
   * the largest single-stage write, plus the process CPU time and the
   * number of Janino compiles of generated code and the time they took
-  * (driver and local executors share the process). [[lap]] returns the deltas since the
-  * previous lap (or since [[Profile.attach]]), so a driver brackets each
-  * stage it reports with laps instead of keeping running totals;
-  * [[total]] still reports the whole run since attach.
+  * (driver and local executors share the process). [[lap]] returns the
+  * deltas since the previous lap (or since [[Profile.attach]]), so a
+  * driver brackets each stage it reports with laps instead of keeping
+  * running totals; [[total]] still reports the whole run since attach.
   *
   * Listener events arrive asynchronously: `lap` first waits (at most
   * [[Profile.SettleMs]]) until every job the listener has seen start
@@ -109,8 +109,8 @@ object Profile {
     * attached with `keepStages`. `cpuS` is the CPU time of the whole
     * process (JIT, GC and every other thread included), `compiles`
     * the number of generated classes Spark compiled and `compileMs` the
-    * Janino time they took, all counted process-wide, so concurrent work elsewhere in the JVM is billed
-    * to the lap too.
+    * Janino time they took, all counted process-wide, so concurrent
+    * work elsewhere in the JVM is billed to the lap too.
     */
   final case class Lap(wallSec: Double, jobs: Long, stages: Long,
       shuffleBytes: Long, peakStageBytes: Long,

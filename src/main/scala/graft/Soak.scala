@@ -566,7 +566,8 @@ object Soak {
     }
     head ++ ListMap("statements" -> nStmts, "entities" -> nEntities,
       "wall_sec" -> l.wallSec, "cpu_sec" -> l.cpuS, "compiles" -> l.compiles,
-      "compile_ms" -> l.compileMs, "merges" -> nMerges, "suggestions" -> nSuggest) ++ shuffle
+      "compile_ms" -> l.compileMs, "merges" -> nMerges,
+      "suggestions" -> nSuggest) ++ shuffle
   }
 
   /** The reference blocker caps with the pair-cost cap scaled by N:

@@ -55,9 +55,8 @@ object EntityMatch {
 
   /** Assembled entities (+ statements, for addressEntity dereference) →
     * one binary `view` per entity ([[EntityView.encode]]), carrying the
-    * entity's `schema` and
-    * `datasets` alongside so a pair scorer can gate on them without
-    * joining the entities again.
+    * entity's `schema` and `datasets` alongside so a pair scorer can
+    * gate on them without joining the entities again.
     */
   def views(assembled: DataFrame, stmts: DataFrame): DataFrame = {
     val addrVals = stmts
