@@ -95,16 +95,17 @@ object Bench {
     var (load, probe) = machineProbe(sfDir)
     def quiet = load <= MaxLoad && probe <= MaxProbeSec
     while (!quiet && System.nanoTime() < deadline) {
-      System.err.println(
-        f"[bench] ambient gate: loadavg $load%.2f / probe $probe%.3fs " +
-          f"over ($MaxLoad%.1f, $MaxProbeSec%.2fs) — waiting for quiet")
+      System.err.println(Record.fmt("[bench] ambient gate: loadavg %.2f / " +
+        "probe %.3fs over (%.1f, %.2fs) — waiting for quiet", load, probe,
+        MaxLoad, MaxProbeSec))
       Thread.sleep(15000)
       val p = machineProbe(sfDir)
       load = p._1; probe = p._2
     }
     if (!quiet)
-      System.err.println(f"[bench] ambient gate FAILED after ${QuietWaitSec}s " +
-        f"(loadavg $load%.2f, probe $probe%.3fs) — timings are weather")
+      System.err.println(Record.fmt("[bench] ambient gate FAILED after %ds " +
+        "(loadavg %.2f, probe %.3fs) — timings are weather", QuietWaitSec,
+        load, probe))
     ListMap("ambient_gate" -> (if (quiet) "ok" else "failed"),
       "loadavg_pre" -> load, "probe_64mib_pre" -> probe)
   }

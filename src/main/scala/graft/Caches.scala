@@ -10,6 +10,15 @@ package graft
   * directories calls `clearAll` between dirs; otherwise every entry
   * would pin its checkpoints for the session's lifetime and a
   * regenerated dir would keep serving its stale index.
+  *
+  * This object is the only code that persists, caches or unpersists a
+  * frame. Every materialized frame has one of three lifetimes:
+  *
+  *  - call-scoped: a [[Held]] the caller releases in its `finally`
+  *    ([[holding]]), once the call's product is materialized;
+  *  - session-scoped: [[pinned]], a memo entry [[clearAll]] releases;
+  *  - returned: [[checkpoint]], for an intermediate the returned frame
+  *    still reads. Its blocks go with the frame.
   */
 object Caches {
 
@@ -38,12 +47,12 @@ object Caches {
     memoMap.getOrElseUpdate((s, sfDir, name), build).asInstanceOf[T]
   }
 
-  /** Session-pin a multiply-consumed frame: eager persist (one parallel
-    * materialization job; every consumer then reads the cache) with
-    * LINEAGE RETAINED — unlike `localCheckpoint`, whose blocks live in
-    * non-reliable executor storage and are unrecoverable after an
-    * executor loss on a real cluster, a pinned partition that goes
-    * missing recomputes from its parquet/shuffle lineage.
+  /** Eager persist (one parallel materialization job; every consumer
+    * then reads the cache) with LINEAGE RETAINED — unlike
+    * `localCheckpoint`, whose blocks live in non-reliable executor
+    * storage and are unrecoverable after an executor loss on a real
+    * cluster, a pinned partition that goes missing recomputes from its
+    * parquet/shuffle lineage.
     *
     * DISK_ONLY, not MEMORY_AND_DISK: the corpus-sized array tables
     * (shingles, fp positions) cached on-heap taxed EVERY subsequent
@@ -53,19 +62,39 @@ object Caches {
     * once and read back at page-cache speed with zero heap footprint
     * — the xref scored-table rationale, applied session-wide.
     */
-  def pin(df: org.apache.spark.sql.DataFrame)
+  private def pin(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     df.count()
     df
   }
 
+  /** Session-scoped: `df` pinned once per (session, data dir) as the
+    * memo entry `name`, released by [[clearAll]].
+    */
+  def pinned(s: org.apache.spark.sql.SparkSession, sfDir: String,
+      name: String)(df: => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    memo(s, sfDir, name)(pin(df))
+
+  /** Returned: `df` materialized once with lineage cut, on local disk
+    * (`localCheckpoint(eager)`, DISK_ONLY). Not registered in the
+    * `CacheManager`; the blocks are freed once the frames reading them
+    * are gone, or by the [[Held]] that adopts one of those frames.
+    */
+  def checkpoint(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    df.localCheckpoint(eager = true,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+
   /** The intermediates of one pipeline call, built once and released
     * together: `cut` materializes with lineage cut
     * (`localCheckpoint(eager)`, memory spilling to disk); `persist` is
-    * [[pin]]'s DISK_ONLY persist without the eager count — the first
-    * action over the frame fills it, so a frame whose first consumer
-    * reads all of it pays no extra job; `adopt` takes over the
+    * a DISK_ONLY persist without an eager count — the first action over
+    * the frame fills it, so a frame whose first consumer reads all of
+    * it pays no extra job; `pin` is that persist filled at once, for a
+    * frame whose consumers fan out in parallel (lazily, each would
+    * compute it before any partition is cached); `adopt` takes over the
     * checkpoint blocks a frame built elsewhere reads. `release()` frees
     * every block these hold. A caller releases in a `finally` once its
     * product is materialized, so the call leaves nothing persisted but
@@ -90,6 +119,12 @@ object Caches {
       df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     }
 
+    def pin(df: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      persisted += df
+      Caches.pin(df)
+    }
+
     def adopt(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
       rdds ++= checkpointRdds(df)
@@ -102,6 +137,14 @@ object Caches {
       rdds.clear()
       persisted.clear()
     }
+  }
+
+  /** `body` with a fresh [[Held]], released when `body` returns or
+    * throws.
+    */
+  def holding[T](body: Held => T): T = {
+    val held = new Held
+    try body(held) finally held.release()
   }
 
   /** The RDDs a frame reads through `LogicalRDD` leaves: for a
@@ -119,20 +162,22 @@ object Caches {
     * fanned out compute-heavily (the banded embedding corpus, the
     * SemDedup ranked table) that decode measured ~2× on the whole
     * family vs `localCheckpoint(true)`, whose raw-row blocks are the
-    * only true decode-once form. Rule: corpus-text-sized caches →
-    * [[pin]] (heap tax dominates); small array-heavy fan-out tables →
-    * localCheckpoint (decode dominates, heap footprint is noise, and
-    * an executor-loss rebuild from the backing lake artifact costs
-    * seconds).
+    * only true decode-once form. Rule, within each lifetime above:
+    * corpus-text-sized frames → a persist ([[pinned]], `Held.pin`,
+    * `Held.persist`; heap tax dominates); small array-heavy fan-out
+    * tables → a checkpoint (`Held.cut`, or a memo entry over
+    * `localCheckpoint(true)`, which [[clearAll]] releases too; decode
+    * dominates, heap footprint is noise, and an executor-loss rebuild
+    * from the backing lake artifact costs seconds).
     */
 
-  /** Drop every in-session memo entry and fingerprint and release
-    * the proposal scaffolds; the lake artifacts on disk key on the
-    * data fingerprint and need no clearing. A dropped pin or checkpoint
-    * is released too — otherwise its blocks outlive the entry for the
-    * session's life, and the next "rebuild" of an unchanged pin is a
-    * cache hit on them. So a frame taken from the memo must not run
-    * after `clearAll`: its checkpoint blocks are gone.
+  /** Drop every in-session memo entry and fingerprint; the lake
+    * artifacts on disk key on the data fingerprint and need no
+    * clearing. A dropped pin or checkpoint is released too — otherwise
+    * its blocks outlive the entry for the session's life, and the next
+    * "rebuild" of an unchanged pin is a cache hit on them. So a frame
+    * taken from the memo must not run after `clearAll`: its checkpoint
+    * blocks are gone.
     */
   def clearAll(): Unit = {
     val dropped = memoMap.toList
@@ -146,7 +191,6 @@ object Caches {
       case _ => ()
     }
     IndexLake.resetFingerprints()
-    enrich.Propose.releaseScaffolds()
   }
 
   /** Build and publish every stored-index artifact for a data dir —

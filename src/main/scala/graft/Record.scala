@@ -28,4 +28,11 @@ object Record {
     }
     Mapper.writeValueAsString(plain(rec))
   }
+
+  /** `pattern` formatted as `String.format` does, with a `.` decimal
+    * separator whatever the JVM's default locale: the report lines of
+    * the mains and the `nk` verbs.
+    */
+  def fmt(pattern: String, args: Any*): String =
+    pattern.formatLocal(java.util.Locale.ROOT, args: _*)
 }

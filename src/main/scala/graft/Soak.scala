@@ -4,7 +4,6 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.DISK_ONLY
 
 import graft.Record.Rec
 import graft.store.{EntityStore, MergeLake, StarStatements}
@@ -61,10 +60,12 @@ object Soak {
     try println(run(spark, args)) finally spark.stop()
   }
 
-  /** One soak's arguments, its profiler and its scratch dir. */
+  /** One soak's arguments, its profiler, its scratch dir and the frames
+    * it holds until its record is built.
+    */
   private final case class Soaking(spark: SparkSession, sfDir: String,
       replicas: Int, mode: String, args: Seq[String], prof: Profile,
-      scratch: String) {
+      scratch: String, held: Caches.Held) {
     def head: Rec = ListMap("soak" -> mode, "sf" -> sfDir,
       "replicas" -> replicas)
     /** Whole-run shuffle volumes, corpus preparation included. */
@@ -75,7 +76,9 @@ object Soak {
     }
   }
 
-  /** Runs the soak mode `args(2)` names on `spark`; returns its record line. */
+  /** Runs the soak mode `args(2)` names on `spark`; returns its record
+    * line and leaves no frame persisted.
+    */
   def run(spark: SparkSession, args: Array[String]): String = {
     val mode = args.lift(2).getOrElse("xref")
     val soak: Soaking => Rec = mode match {
@@ -96,9 +99,10 @@ object Soak {
         s"soak mode $mode reads the donations fixture $Fixture, which is missing")
     val scratch = java.nio.file.Files.createTempDirectory(s"graft-$mode-soak")
     val prof = Profile.attach(spark)
-    try Record.json(soak(Soaking(spark, args.headOption.getOrElse("/root/testdata/sf0.1"),
+    try Caches.holding(held => Record.json(soak(Soaking(spark,
+      args.headOption.getOrElse("/root/testdata/sf0.1"),
       args.lift(1).map(_.toInt).getOrElse(10), mode, args.toSeq, prof,
-      scratch.toString)))
+      scratch.toString, held))))
     finally {
       spark.sparkContext.removeSparkListener(prof)
       org.apache.hadoop.fs.FileUtil.fullyDelete(scratch.toFile)
@@ -107,13 +111,12 @@ object Soak {
 
   private def curate(r: Soaking): Rec = {
     import r._
-    val docs = docCorpus(spark, sfDir, replicas, marker = false)
-      .persist(DISK_ONLY)
+    val docs = held.persist(docCorpus(spark, sfDir, replicas, marker = false))
     val nDocs = docs.count()
     val ((report, nOut), l) = prof.timed {
       val (curated, report) =
         cli.CurateMain.run(spark, docs, minQuality = 0.3, minLogp = -12.0)
-      (report, curated.count())
+      (report, held.adopt(curated).count())
     }
     head ++ ListMap("docs" -> nDocs, "out" -> nOut,
       "report" -> report.fields, "wall_sec" -> l.wallSec,
@@ -124,8 +127,7 @@ object Soak {
   private def dedup(r: Soaking): Rec = {
     import r._
     import graft.dedup.{Dedup, DedupQueries}
-    val docs = docCorpus(spark, sfDir, replicas, marker = true)
-      .persist(DISK_ONLY)
+    val docs = held.persist(docCorpus(spark, sfDir, replicas, marker = true))
     val nDocs = docs.count()
     val ((hotAgg, cand, verified), lsh) = prof.timed {
       val sh = DedupQueries.hashedShinglesOf(docs)
@@ -141,12 +143,13 @@ object Soak {
           sum(expr("n * (n - 1) div 2")).as("pairs")).head()
       (hotAgg, Dedup.lshCandidates(sigs, "doc_id",
         DedupQueries.Bands, DedupQueries.RowsPerBand).count(),
-        DedupQueries.lshPairsOf(docs).count())
+        held.adopt(DedupQueries.lshPairsOf(docs)).count())
     }
     // the exact-substring pass under the same boilerplate: nearly
     // every gram is duplicated 10×, but marking is a semi join —
     // rows stay corpus-linear no matter the duplication factor
-    val (substrDocs, substr) = prof.timed(DedupQueries.substrOf(docs).count())
+    val (substrDocs, substr) =
+      prof.timed(held.adopt(DedupQueries.substrOf(docs)).count())
     head ++ ListMap("docs" -> nDocs, "hot_buckets" -> hotAgg.getLong(0),
       // the pair volume those buckets would have emitted uncapped —
       // what the cap prevented (upper bound; candidate distinct would
@@ -164,14 +167,13 @@ object Soak {
     // N× corpus, FIXED standing query workload — the serving shape:
     // retrieval work must be linear in the corpus when the query set
     // is bounded (the broadcast arms grow with queries, not corpus)
-    val docs = docCorpus(spark, sfDir, replicas, marker = true)
-      .persist(DISK_ONLY)
+    val docs = held.persist(docCorpus(spark, sfDir, replicas, marker = true))
     val nDocs = docs.count()
     // the whole-retrieval wall holds laps of its own: read it off the
     // since-attach clock
     val t0 = prof.total().wallSec
     val ((postings, nPostings), build) = prof.timed {
-      val p = Search.postingsOf(docs).localCheckpoint(true)
+      val p = held.cut(Search.postingsOf(docs))
       (p, p.count())
     }
     val (sparseRows, sparse) = prof.timed(
@@ -180,11 +182,10 @@ object Soak {
     // BASE slice (vec_id < span), corpus grows N×
     val emb = Tables.embeddings(spark, sfDir)
     val eMax = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    val corpusV = replicate(emb, replicas)((e, i) =>
+    val corpusV = held.persist(replicate(emb, replicas)((e, i) =>
         e.withColumn("vec_id", col("vec_id") + lit(i * eMax)))
       .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-      .persist(DISK_ONLY)
+      .withColumn("nrm", Similarity.norm(col("v"))))
     val nVecs = corpusV.count()
     val queries = corpusV.filter(col("vec_id") < eMax &&
       col("vec_id") % SimilarityQueries.QueryMod === 0)
@@ -211,13 +212,13 @@ object Soak {
       ReconcileQueries, Wikipedia, WikidataQueries, WikipediaQueries}
     def repl(df: DataFrame, cols: String*) = suffixed(df, replicas, cols: _*)
     val snaks = WikidataQueries.snakCk(spark, sfDir)
-    val stmtsN = repl(ProposeQueries.personStmtsCk(spark, sfDir),
-      "entity_id", "canonical_id").persist(DISK_ONLY)
+    val stmtsN = held.persist(repl(ProposeQueries.personStmtsCk(spark, sfDir),
+      "entity_id", "canonical_id"))
     val nStmts = stmtsN.count()
     val pairsN = repl(ProposeQueries.pairs(spark, sfDir), "entity_id")
     val positionsN = repl(ProposeQueries.positions(spark, sfDir),
       "entity_id")
-    val (nPropose, propose) = prof.timed(Propose.enrich(pairsN, stmtsN,
+    val (nPropose, propose) = prof.timed(Propose.enrich(held)(pairsN, stmtsN,
       snaks, positionsN, retrieved = Some(ProposeQueries.Retrieved)).count())
     val recStmtsN = repl(EntityStore.statements(
       ReconcileQueries.reconPersons(spark, sfDir), "rec"),
@@ -257,11 +258,11 @@ object Soak {
 
     // -- ingest: fixture → statements ×N → bucketed statement lake
     val (nStmts, ingest) = prof.timed {
-      donationsCorpus(spark, Fixture, replicas)
+      donationsCorpus(spark, Fixture, replicas, held)
         .write.mode("overwrite").parquet(s"$scratch/lake")
       spark.read.parquet(s"$scratch/lake").count()
     }
-    val lake = spark.read.parquet(s"$scratch/lake").persist(DISK_ONLY)
+    val lake = held.persist(spark.read.parquet(s"$scratch/lake"))
     lake.count()
 
     // -- xref under the reference caps scaled by N
@@ -277,13 +278,13 @@ object Soak {
       blocker = scaledCaps(replicas))
     val ((merges, nMerges, nSuggest), xref) = prof.timed {
       val (m, sg) = Xref.run(spark, lake, decided, cfg)
-      val merges = Caches.pin(m)
+      val merges = held.pin(held.adopt(m))
       (merges, merges.count(), sg.count())
     }
 
     // -- resolve: connected components over the merge edges
     val (cm, resolve) =
-      prof.timed(Caches.pin(cli.CliArgs.canonicalMapOf(merges)))
+      prof.timed(held.pin(cli.CliArgs.canonicalMapOf(merges)))
     val nCanon = cm.count()
 
     // -- apply: canonicalize the lake through the map, write back
@@ -320,11 +321,10 @@ object Soak {
     val base0 = StarStatements(spark, sfDir)
       .withColumn("stmt_id", concat(col("id"), lit("#"), col("field")))
       .withColumn("num", split(col("id"), ":").getItem(1).cast("long"))
-    val reps = suffixed(base0, replicas, "stmt_id", "id")
+    val reps = held.persist(suffixed(base0, replicas, "stmt_id", "id")
       .withColumn("last_seen", lit("v1"))
       .select(col("stmt_id"), col("id"), col("schema"), col("field"),
-        col("value"), col("last_seen"), col("num"))
-      .persist(DISK_ONLY)
+        col("value"), col("last_seen"), col("num")))
     val nBase = reps.count()
     val path = s"$scratch/lake"
     val cols = Seq("stmt_id", "id", "schema", "field", "value",
@@ -334,11 +334,10 @@ object Soak {
     // re-asserted with a bumped value
     val deltas = Seq(4096L, 256L, 16L).zipWithIndex.map {
       case (mod, i) =>
-        val del = reps.filter(col("num") % mod === 0)
+        val del = held.persist(reps.filter(col("num") % mod === 0)
           .withColumn("value", concat(col("value"), lit(s" u$i")))
           .withColumn("last_seen", lit(s"v${i + 2}"))
-          .select(cols: _*)
-          .persist(DISK_ONLY)
+          .select(cols: _*))
         val n = del.count()
         val (_, l) = prof.timed(MergeLake.append(del, path))
         ListMap("rows" -> n, "append_wall_sec" -> l.wallSec)
@@ -368,9 +367,8 @@ object Soak {
     val nVerts = replicas.toLong * 100000L
     def v(c: Column) = concat(lit("v"), c)
     // n/2 two-vertex clusters: (v0,v1)(v2,v3)...
-    val baseEdges = spark.range(nVerts / 2)
-      .select(v(col("id") * 2).as("src"), v(col("id") * 2 + 1).as("dst"))
-      .persist(DISK_ONLY)
+    val baseEdges = held.persist(spark.range(nVerts / 2)
+      .select(v(col("id") * 2).as("src"), v(col("id") * 2 + 1).as("dst")))
     val nEdges = baseEdges.count()
     val path = s"$scratch/state"
     val (_, init) = prof.timed(
@@ -382,7 +380,7 @@ object Soak {
       .select(v(col("id") * 4 + 1).as("src"), v(col("id") * 4 + 2).as("dst"))
     val deltas = Seq(4096L, 256L, 16L).zipWithIndex.map {
       case (mod, k) =>
-        val del = bridges(col("id") % mod === k).persist(DISK_ONLY)
+        val del = held.persist(bridges(col("id") % mod === k))
         val n = del.count()
         val (_, l) =
           prof.timed(ResolveStream.applyBatch(spark, del, path, s"b$k"))
@@ -422,7 +420,7 @@ object Soak {
     import graft.streaming.LoopStream
     def isDeltaId(c: Column) =
       c.endsWith("-r0") && pmod(xxhash64(c), lit(8)) === 0
-    val rows = donationsCorpus(spark, Fixture, replicas)
+    val rows = donationsCorpus(spark, Fixture, replicas, held)
       .withColumn("stmt_id", col("id"))
       .withColumn("last_seen", lit("d0"))
     val day0 = rows.filter(!isDeltaId(col("canonical_id")))
@@ -521,13 +519,13 @@ object Soak {
     // end-state oracle: one from-scratch batch run over the final
     // corpus (the LoopStreamSpec assertion at scale)
     val (mismatches, full) = prof.timed {
-      val all = MergeLake.snapshot(spark, p.lake).drop("bucket")
-        .persist(DISK_ONLY)
+      val all =
+        held.persist(MergeLake.snapshot(spark, p.lake).drop("bucket"))
       all.count()
       val none = Seq.empty[(String, String)].toDF("src", "dst")
       val (m, _) = Xref.run(spark, all, none, cfg)
       val cm = cli.CliArgs.canonicalMapOf(
-        m.filter(col("score") > threshold)
+        held.adopt(m).filter(col("score") > threshold)
           .select(col("src"), col("dst")))
       val want = cli.CliArgs.applyCanonical(all, cm)
         .select(col("id"), col("canonical_id"), col("prop"), col("value"))
@@ -546,7 +544,7 @@ object Soak {
   private def xrefSoak(r: Soaking): Rec = {
     import r._
     import spark.implicits._
-    val stmts = corpus(spark, sfDir, replicas).persist(DISK_ONLY)
+    val stmts = held.persist(corpus(spark, sfDir, replicas))
     val nStmts = stmts.count()
     val nEntities = stmts.select("canonical_id").distinct().count()
     val decided = Seq.empty[(String, String)].toDF("src", "dst")
@@ -562,7 +560,7 @@ object Soak {
     val ((nMerges, nSuggest), l) = prof.timed {
       val (merges, suggestions) = Xref.run(spark, stmts, decided,
         Xref.Config(autoThreshold = Some(0.7), blocker = blkCfg))
-      (merges.count(), suggestions.count())
+      (held.adopt(merges).count(), suggestions.count())
     }
     head ++ ListMap("statements" -> nStmts, "entities" -> nEntities,
       "wall_sec" -> l.wallSec, "cpu_sec" -> l.cpuS, "compiles" -> l.compiles,
@@ -594,13 +592,13 @@ object Soak {
   /** N replicas of the donations fixture as statements (474 entities
     * each, suffixed ids, entity refs re-pointed inside each replica —
     * every entity ends up with N−1 exact duplicates, the worst case
-    * for the blocker). The fixture is parsed ONCE and pinned — each of
-    * the N union legs otherwise re-runs the ijson parse (measured
-    * 43 s → 9 s at 100×).
+    * for the blocker). The fixture is parsed ONCE and pinned in `held`
+    * — each of the N union legs otherwise re-runs the ijson parse
+    * (measured 43 s → 9 s at 100×).
     */
-  def donationsCorpus(s: SparkSession, fixture: String,
-      replicas: Int): DataFrame = {
-    val base = Caches.pin(EntityStore.statements(
+  def donationsCorpus(s: SparkSession, fixture: String, replicas: Int,
+      held: Caches.Held): DataFrame = {
+    val base = held.pin(EntityStore.statements(
       EntityStore.readIjson(s, fixture), "donations"))
     replicate(base, replicas) { (b, i) =>
       val sfx = lit(s"-r$i")

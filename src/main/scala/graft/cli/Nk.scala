@@ -388,7 +388,7 @@ object Nk {
         (c.flags.get("retrieved"), c.flags.get("source-url"))
       val positions = c.flags.get("positions").map(c.parquet).getOrElse(
         emptyFrame(c.spark, "entity_id", "pos_qid", "start", "end"))
-      val enriched = Propose.enrich(pairsDf, stmts, c.parquet(snaksIn),
+      val enriched = Propose.enrich(c.held)(pairsDf, stmts, c.parquet(snaksIn),
         positions, retrieved, sourceUrl)
       val all =
         if (c.flags.get("create-unmatched").contains("true")) {
@@ -433,7 +433,7 @@ object Nk {
           alg)
         case None => Reconcile.searchCandidates(persons, snaks)
       }
-      val (decisions, merges, commands) = Reconcile.reconcile(
+      val (decisions, merges, commands) = Reconcile.reconcile(c.held)(
         stmts, snaks, canonicals, decided, candidates,
         c.flags.get("threshold").map(_.toDouble)
           .getOrElse(Reconcile.Threshold),
@@ -494,8 +494,8 @@ object Nk {
           val p = pairs(i % pairs.size); algo.score(p._1, p._2); i += 1
         }
         val dt = System.nanoTime() - t0
-        f"[bench] ${algo.name}%-16s n=$n%-6d " +
-          f"total=${dt / 1e9}%.3f s  ${dt / 1e3 / n}%.1f us/call"
+        graft.Record.fmt("[bench] %-16s n=%-6d total=%.3f s  %.1f us/call",
+          algo.name, n, dt / 1e9, dt / 1e3 / n)
       }.mkString("\n")
     },
     // `contrib/name_bench/perf.py`: median-of-N per case after a warmup
@@ -515,16 +515,16 @@ object Nk {
       }
       require(comps.nonEmpty, "unknown comparator")
       val stats = NameBench.run(cases, comps, runs, threshold).flatMap { st =>
-        (f"[name-bench] ${st.name}%-14s mean=${st.meanUs}%8.1f us  " +
-          f"p50=${st.p50Us}%7.1f  p95=${st.p95Us}%8.1f  " +
-          f"total=${st.totalMs}%7.1f ms  P=${st.precision}%.3f " +
-          f"R=${st.recall}%.3f F1=${st.f1}%.3f") +:
+        graft.Record.fmt("[name-bench] %-14s mean=%8.1f us  p50=%7.1f  " +
+          "p95=%8.1f  total=%7.1f ms  P=%.3f R=%.3f F1=%.3f", st.name,
+          st.meanUs, st.p50Us, st.p95Us, st.totalMs, st.precision,
+          st.recall, st.f1) +:
           st.slowest.map { case (k, us) =>
-            f"[name-bench]   slow ${us}%9.1f us  [${k.schema}] " +
-              s"'${k.name1}' vs '${k.name2}'"
+            graft.Record.fmt("[name-bench]   slow %9.1f us  [%s] ", us,
+              k.schema) + s"'${k.name1}' vs '${k.name2}'"
           }
       }
-      (f"[name-bench] ${cases.size} cases, runs=$runs, threshold=$threshold"
+      (s"[name-bench] ${cases.size} cases, runs=$runs, threshold=$threshold"
         +: stats).mkString("\n")
     },
     // the ingest of every stored-index lake artifact for a data dir, the
@@ -535,18 +535,26 @@ object Nk {
         Seq("index-dir DIR", "gc", "gc-age-hours H"),
         "build and publish every stored-index artifact of a dir") { c =>
       val d = c.pos(0)
+      // --index-dir holds for this verb only: the property is JVM-global,
+      // and a long-lived session's later verbs read their own root
+      val prev = sys.props.get("graft.index.dir")
       c.flags.get("index-dir").foreach(sys.props.put("graft.index.dir", _))
-      val t0 = System.nanoTime()
-      graft.Caches.ensureAll(c.spark, d)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val built = graft.IndexLake.fingerprint(d)
-      val out = java.nio.file.Paths.get(graft.IndexLake.root, built)
-      val gc = if (!c.flags.contains("gc")) "" else {
-        val age = c.flag("gc-age-hours", "6.0").toDouble
-        val gone = graft.IndexLake.gc(Set(built), (age * 3600 * 1000).toLong)
-        s"\n[index-build] gc retired ${gone.size} stale generations"
+      try {
+        val t0 = System.nanoTime()
+        graft.Caches.ensureAll(c.spark, d)
+        val sec = (System.nanoTime() - t0) / 1e9
+        val built = graft.IndexLake.fingerprint(d)
+        val out = java.nio.file.Paths.get(graft.IndexLake.root, built)
+        val gc = if (!c.flags.contains("gc")) "" else {
+          val age = c.flag("gc-age-hours", "6.0").toDouble
+          val gone = graft.IndexLake.gc(Set(built), (age * 3600 * 1000).toLong)
+          s"\n[index-build] gc retired ${gone.size} stale generations"
+        }
+        graft.Record.fmt("[index-build] %s -> %s in %.1f s", d, out, sec) + gc
+      } finally prev match {
+        case Some(v) => sys.props.put("graft.index.dir", v)
+        case None => sys.props.remove("graft.index.dir")
       }
-      f"[index-build] $d -> $out in $sec%.1f s" + gc
     },
     // the resolver state in lake form, folding approved edge batches in
     // O(affected members) ([[graft.streaming.ResolveStream]],
@@ -708,8 +716,7 @@ object Nk {
       val frozen = c.pos.lift(0).getOrElse(EntityBench.DefaultChecksPath
         .replace("entity_bench/checks.yml",
           "name_bench/run_data/logicv2-frozen.csv"))
-      val lex = sys.env.get("GRAFT_NAME_VARIANTS")
-        .orElse(sys.props.get("graft.name.variants"))
+      val lex = graft.text.Symbols.lexiconPath
       val threshold = 0.7
       def view(schema: String, name: String): EntityView =
         EntityView("x", schema, Seq(name), Nil, Nil, Nil, Nil, Nil, Nil,
@@ -732,14 +739,13 @@ object Nk {
         c.pos.lift(1).getOrElse(EntityBench.DefaultChecksPath))
       val r = EntityBench.run(checks, Algorithms.LogicV2, threshold)
       Seq(s"[lexicon-bench] GRAFT_NAME_VARIANTS=${lex.getOrElse("(none)")}",
-        f"[lexicon-bench] name-bench n=$n " +
-          f"agreeFrozen=$agreeFrozen (${agreeFrozen.toDouble / n}%.5f) " +
-          f"agreeTruth=$agreeTruth (${agreeTruth.toDouble / n}%.5f) " +
-          f"MAE=$mae%.4f",
-        f"[lexicon-bench] entity_bench@$threshold%.1f " +
-          f"correct=${r.total.correct}/${checks.size} " +
-          f"FP=${r.total.falsePositives} FN=${r.total.falseNegatives} " +
-          f"loss=${r.total.avgLoss}%.3f").mkString("\n")
+        graft.Record.fmt("[lexicon-bench] name-bench n=%d agreeFrozen=%d " +
+          "(%.5f) agreeTruth=%d (%.5f) MAE=%.4f", n, agreeFrozen,
+          agreeFrozen.toDouble / n, agreeTruth, agreeTruth.toDouble / n, mae),
+        graft.Record.fmt("[lexicon-bench] entity_bench@%.1f correct=%d/%d " +
+          "FP=%d FN=%d loss=%.3f", threshold, r.total.correct, checks.size,
+          r.total.falsePositives, r.total.falseNegatives, r.total.avgLoss)
+      ).mkString("\n")
     })
 
   val Usage: String = (

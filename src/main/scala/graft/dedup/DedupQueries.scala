@@ -92,14 +92,15 @@ object DedupQueries {
     * docs scatter FIRST (cheap bytes, explicit partition count so AQE
     * cannot coalesce the CPU-heavy projection onto one task — the sf
     * tables are one row group), the shingle/md5 projection runs
-    * post-shuffle on every core, and the session pin stops the three
-    * downstream branches from re-deriving it. For the gated corpus
-    * queries the same table is a lake artifact instead —
+    * post-shuffle on every core, and one materialization (`keep`: a
+    * checkpoint the returned frame reads, or the caller's persist)
+    * stops the three downstream branches from re-deriving it. For the
+    * gated corpus queries the same table is a lake artifact instead —
     * [[shinglesCk]].
     */
   private def parShingles(docs: DataFrame,
-      pin: DataFrame => DataFrame = graft.Caches.pin): DataFrame =
-    pin(hashedShinglesOf(docs.repartition(
+      keep: DataFrame => DataFrame = graft.Caches.checkpoint): DataFrame =
+    keep(hashedShinglesOf(docs.repartition(
       docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))))
 
   def lshPairsOf(docs: DataFrame): DataFrame =
@@ -217,12 +218,8 @@ object DedupQueries {
     * persisted only until the components are built (they are collected
     * or checkpointed), so the call leaves nothing persisted.
     */
-  def clustersOf(docs: DataFrame): DataFrame = {
-    val held = new graft.Caches.Held
-    try clustersFrom(ccOf(lshPairsFrom(parShingles(docs, held.persist))),
-      docs)
-    finally held.release()
-  }
+  def clustersOf(docs: DataFrame): DataFrame = graft.Caches.holding(held =>
+    clustersFrom(ccOf(lshPairsFrom(parShingles(docs, held.persist))), docs))
 
   private def ccOf(lshPairs: DataFrame): DataFrame =
     graft.resolver.Resolver.connectedComponents(lshPairs.select(
@@ -501,16 +498,16 @@ object DedupQueries {
   // and the arrays decode expensively from parquet per consumer. Each
   // pin's memo name differs from its artifact's (see Caches.memo).
   def fpSetsCk(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, d, "fp_sets_pinned")(graft.Caches.pin(
+    graft.Caches.pinned(s, d, "fp_sets_pinned")(
       graft.IndexLake.artifact(s, d, "fp_sets")(
         graft.textanalysis.TextAnalysis.fingerprintSets(
-          Tables.documents(s, d)))))
+          Tables.documents(s, d))))
 
   def fpPosCk(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, d, "fp_pos_pinned")(graft.Caches.pin(
+    graft.Caches.pinned(s, d, "fp_pos_pinned")(
       graft.IndexLake.artifact(s, d, "fp_pos")(
         graft.textanalysis.TextAnalysis.fingerprintPositions(
-          Tables.documents(s, d)))))
+          Tables.documents(s, d))))
 
   /** Scatter raw docs (cheap bytes) before a CPU-heavy projection so
     * the ingest build runs on every core instead of the one-row-group
@@ -529,15 +526,15 @@ object DedupQueries {
     * blocks holding the only copy mid-pipeline.
     */
   def shinglesCk(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, d, "shingles_pinned")(graft.Caches.pin(
+    graft.Caches.pinned(s, d, "shingles_pinned")(
       graft.IndexLake.artifact(s, d, "shingles")(
-        hashedShinglesOf(scattered(s, d)))))
+        hashedShinglesOf(scattered(s, d))))
 
   /** Packed char-[[CharGramN]]-gram table (doc_id, cg) as a lake
     * artifact — the char-channel sibling of [[shinglesCk]].
     */
   def charGramsCk(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, d, "char_grams_pinned")(graft.Caches.pin(
+    graft.Caches.pinned(s, d, "char_grams_pinned")(
       graft.IndexLake.artifact(s, d, "char_grams") {
         val n = CharGramN
         // one pass: char array → codes (lambda only touches its own
@@ -553,7 +550,7 @@ object DedupQueries {
           .select(col("doc_id"), codes.as("cs"))
           .filter(size(col("cs")) >= n)
           .select(col("doc_id"), array_distinct(gram).as("cg"))
-      }))
+      })
 
   /** SimHash signature table (doc_id, simhash) as a lake artifact —
     * two longs per doc; no session pin needed, consumers column-prune
@@ -618,8 +615,8 @@ object DedupQueries {
       spansFrom(fpPosCk(s, d)))
 
   def spansOf(docs: DataFrame): DataFrame =
-    // pin before the fan-out (df aggregate + both join sides)
-    spansFrom(graft.Caches.pin(
+    // materialize once before the fan-out (df aggregate + both join sides)
+    spansFrom(graft.Caches.checkpoint(
       graft.textanalysis.TextAnalysis.fingerprintPositions(docs)))
 
   private def spansFrom(pos: DataFrame): DataFrame = {
@@ -682,8 +679,8 @@ object DedupQueries {
     substrFrom(substrPosCk(s, d))
 
   def substrOf(docs: DataFrame): DataFrame =
-    // pin before the fan-out (df aggregate + the semi-join side)
-    substrFrom(graft.Caches.pin(substrPosOf(docs.repartition(
+    // materialize once before the fan-out (df aggregate + the semi-join)
+    substrFrom(graft.Caches.checkpoint(substrPosOf(docs.repartition(
       docs.sparkSession.sparkContext.defaultParallelism, col("doc_id")))))
 
   /** The exploded gram-position rows behind [[substrQ]] — positions

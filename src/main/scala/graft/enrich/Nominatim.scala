@@ -34,18 +34,20 @@ final class NominatimEnricher(gazetteer: DataFrame,
     trim(regexp_replace(lower(c), "\\s+", " "))
 
   /** Geocode `(id, full, country)` rows → top-1 result per address:
-    * `(id, match_id, full, country, city, state, postalCode)`.
+    * `(id, match_id, full, country, city, state, postalCode)`,
+    * materialized before the call returns, so the parsed queries it
+    * pinned are released with the call.
     */
-  def geocode(s: SparkSession, addresses: DataFrame): DataFrame = {
+  def geocode(s: SparkSession, addresses: DataFrame)
+      : DataFrame = graft.Caches.holding { held =>
     // scatter + pin the parsed-query scaffold: it feeds TWO branches
     // (countryful / country-less), and every branch filter plus the
     // join-key isnotnull conditions would otherwise predicate-push the
     // whole regexp pipeline back into the address scan's Condition —
     // the plan dump showed the normalize/extract tree inlined 4× over
     // two single-task scan stages (~1.4 s serial at sf0.1). One 32-way
-    // materialization; the branches read the cache. Re-invocations of
-    // the same batch dedupe by plan in the cache manager.
-    val q = graft.Caches.pin(addresses
+    // materialization; the branches read the cache.
+    val q = held.pin(addresses
       .repartition(
         addresses.sparkSession.sparkContext.defaultParallelism, col("id"))
       .withColumn("q_norm", norm(col("full")))
@@ -167,6 +169,7 @@ final class NominatimEnricher(gazetteer: DataFrame,
           col("city"), col("state"), col("postalCode"))).as("text")))
     }
     val freshOut = fresh.drop("q_key")
-    cachedHits.map(freshOut.unionByName(_)).getOrElse(freshOut)
+    graft.Caches.checkpoint(
+      cachedHits.map(freshOut.unionByName(_)).getOrElse(freshOut))
   }
 }

@@ -262,46 +262,26 @@ object Propose {
     single.unionByName(p27)
   }
 
-  /** Persisted batch scaffolds, unpersisted by [[releaseScaffolds]]
-    * (called only by `Caches.clearAll`). NOT unpersisted per-call:
-    * Spark's cache manager deduplicates by logical plan, so a re-issued
-    * batch (bench repeats, a retried job) REUSES the earlier scaffold's
-    * cache — an eager per-call unpersist would drop that shared entry
-    * and force a cold rebuild every time (measured 2.3 → 4.3 s).
-    */
-  private val scaffolds =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def persistScaffold(df: DataFrame): DataFrame = {
-    scaffolds.add(df.persist())
-    // EAGER materialization: the scaffold fans out into several union
-    // legs whose tasks all start at once — with a lazy persist each leg
-    // recomputes the whole scaffold concurrently before any partition
-    // is marked cached (measured 2.3 → 5.3 s: a thundering herd of
-    // "already cached" duplicates). One blocking count fills the cache
-    // once; every leg then reads it.
-    df.count()
-    df
-  }
-
-  /** Unpersist every scaffold this session pinned. */
-  private[graft] def releaseScaffolds(): Unit = {
-    var df = scaffolds.poll()
-    while (df != null) { df.unpersist(blocking = false); df = scaffolds.poll() }
-  }
-
   /** `propose_enrich` (`propose.py:186-214`) in batch form: for each
     * resolved (entity_id, qid) pair, missing names become append-only
     * aliases, P31/P569/P21/P27 are added only when absent, and
     * qid-resolved positions (`positions`: entity_id, pos_qid, start,
     * end — nullable dates) become P39 with date qualifiers only for
     * single-occupancy posts (`propose.py:185-216` conservatism).
-    * Returns `(entity_id, qid, ord, line)`.
+    * Returns `(entity_id, qid, ord, line)`, which reads the scaffold
+    * `held` pins: materialize it before releasing `held`.
+    *
+    * The scaffold is pinned EAGERLY: it fans out into several union
+    * legs whose tasks all start at once — with a lazy persist each leg
+    * recomputes the whole scaffold concurrently before any partition
+    * is marked cached (measured 2.3 → 5.3 s: a thundering herd of
+    * "already cached" duplicates).
     */
-  def enrich(pairs: DataFrame, stmts: DataFrame, snaks: DataFrame,
-      positions: DataFrame, retrieved: Option[String] = None,
+  def enrich(held: graft.Caches.Held)(pairs: DataFrame, stmts: DataFrame,
+      snaks: DataFrame, positions: DataFrame,
+      retrieved: Option[String] = None,
       fallbackUrl: Option[String] = None): DataFrame =
-    enrichFrom(persistScaffold(
+    enrichFrom(held.pin(
       scaffoldOf(pairs, stmts, snaks, retrieved, fallbackUrl)),
       stmts, positions)
 
@@ -310,7 +290,7 @@ object Propose {
     * aggregate and the batch entities' fused statement bundles. A pure
     * function of (pairs, stmts, snaks), so for a standing batch it can
     * be a stored artifact (see ProposeQueries.scaffoldCk) instead of a
-    * per-session persist.
+    * per-call pin.
     */
   def scaffoldOf(pairs: DataFrame, stmts: DataFrame, snaks: DataFrame,
       retrieved: Option[String] = None,

@@ -202,9 +202,10 @@ object Reconcile {
     * proposals for the linked persons (with their store-walked position
     * claims) and CREATE blocks for the rest.
     *
-    * Returns (decisions, mergeEdges, commands).
+    * Returns (decisions, mergeEdges, commands); `commands` reads the
+    * proposal scaffold `held` pins (see [[Propose.enrich]]).
     */
-  def reconcile(stmts: DataFrame, snaks: DataFrame,
+  def reconcile(held: graft.Caches.Held)(stmts: DataFrame, snaks: DataFrame,
       canonicals: DataFrame, decided: DataFrame,
       candidates: DataFrame, threshold: Double = Threshold,
       create: Boolean = true, retrieved: Option[String] = None,
@@ -218,7 +219,7 @@ object Reconcile {
     val merges = decisions.filter(col("decision") === "merge")
       .select(col("entity_id").as("src"), col("qid").as("dst"),
         col("score"))
-    val enrichCmds = Propose.enrich(
+    val enrichCmds = Propose.enrich(held)(
       linked, persons, snaks, positionClaims(stmts), retrieved,
       sourceUrl)
     val commands =

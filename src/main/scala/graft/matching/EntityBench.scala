@@ -174,13 +174,13 @@ object EntityBench {
   /** Format one report as the reference's console table, markdown-ish. */
   def format(r: Report): String = {
     val sb = new StringBuilder
-    sb ++= f"## ${r.algorithm} @ ${r.threshold}%.1f%n"
+    sb ++= graft.Record.fmt("## %s @ %.1f%n", r.algorithm, r.threshold)
     sb ++= "| schema | checks | correct | % | FP | FN | avg loss |\n"
     sb ++= "|---|---|---|---|---|---|---|\n"
     for (row <- r.rows :+ r.total)
-      sb ++= f"| ${row.schema} | ${row.checks} | ${row.correct} | " +
-        f"${row.pctCorrect}%.1f | ${row.falsePositives} | " +
-        f"${row.falseNegatives} | ${row.avgLoss}%.3f |%n"
+      sb ++= graft.Record.fmt("| %s | %d | %d | %.1f | %d | %d | %.3f |%n",
+        row.schema, row.checks, row.correct, row.pctCorrect,
+        row.falsePositives, row.falseNegatives, row.avgLoss)
     sb.toString
   }
 

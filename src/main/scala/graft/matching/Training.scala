@@ -69,13 +69,15 @@ object Training {
   }
 
   /** Batch gradient descent for logistic regression: per epoch one
-    * distributed aggregation of the gradient over the (cached) training
-    * frame. L2 regularization keeps weights bounded on small corpora.
+    * distributed aggregation of the gradient over the (persisted)
+    * training frame. L2 regularization keeps weights bounded on small
+    * corpora.
     */
   def trainLogistic(train: DataFrame, featCols: Seq[String],
-      epochs: Int = 200, lr: Double = 0.5, l2: Double = 1e-3): Model = {
-    val cached = train.select((col("label").cast("double") +:
-      featCols.map(c => col(c).cast("double"))): _*).cache()
+      epochs: Int = 200, lr: Double = 0.5, l2: Double = 1e-3)
+      : Model = graft.Caches.holding { held =>
+    val cached = held.persist(train.select((col("label").cast("double") +:
+      featCols.map(c => col(c).cast("double"))): _*))
     val n = cached.count().toDouble
     val k = featCols.length
     val w = Array.fill(k)(0.0)
@@ -96,7 +98,6 @@ object Training {
       for (i <- 0 until k)
         w(i) -= lr * (row.getDouble(i + 1) / n + l2 * w(i))
     }
-    cached.unpersist()
     Model(b, w.toSeq)
   }
 

@@ -98,8 +98,8 @@ object Search {
     * read-once-then-cache session copy like the blocker TF table.
     */
   def postingsCk(s: SparkSession, d: String): DataFrame =
-    graft.Caches.memo(s, d, "postings_pinned")(
-      // Caches.pin, not localCheckpoint: the session copy of a
+    graft.Caches.pinned(s, d, "postings_pinned")(
+      // a pin, not localCheckpoint: the session copy of a
       // corpus-sized table belongs on local disk with lineage retained
       // (recoverable after executor loss; zero heap footprint — the
       // on-heap block tax measured in Caches.pin's scaladoc).
@@ -116,11 +116,11 @@ object Search {
       // score aggregates now run EXCHANGE-FREE on the cached rows;
       // term-keyed consumers shuffle exactly as before. The one
       // repartition is paid at ingest (ensureAll pins this copy).
-      graft.Caches.pin(graft.IndexLake.artifact(s, d, "postings")(
+      graft.IndexLake.artifact(s, d, "postings")(
         postingsWithSourceOf(Tables.documents(s, d)
           .repartition(s.sparkContext.defaultParallelism,
             col("doc_id"))))
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
 
   /** (n_docs, avgdl) of the postings corpus as a one-row lake artifact
     * plus a per-session scalar memo: corpus statistics are INGEST

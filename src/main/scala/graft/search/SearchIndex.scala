@@ -100,28 +100,27 @@ object SearchIndex {
     // the stats lake is the generation log — skip a committed replay
     if (MergeLake.snapshot(s, statsPath(indexPath))
         .filter(col("stmt_id") === gen).limit(1).count() > 0) return
-    val nw = rows(delta, live = true, gen)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val touched = delta.select(col("doc_id").cast("string")).distinct()
-      .collect().map(_.getString(0)).toIndexedSeq
-    val p = postingsPath(indexPath)
-    val bs = MergeLake.bucketsOf(s, p, touched)
-    val old = MergeLake.snapshot(s, p, Some(bs))
-      .join(broadcast(touched.toDF("tk")), col("doc_key") === col("tk"),
-        "left_semi")
-      .filter(col("live"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val dead = old
-      .join(nw.select(col("stmt_id")), Seq("stmt_id"), "left_anti")
-      .select(col("stmt_id"), col("doc_key"), col("doc_id"), col("term"),
-        col("tf"), col("dl"), col("source"), lit(false).as("live"),
-        lit(gen).as("last_seen"), lit("").as("value"))
-    MergeLake.append(nw.unionByName(dead), p): Unit
-    val (nN, sN) = measure(nw)
-    val (nO, sO) = measure(old)
-    MergeLake.append(statsRow(s, gen, nN - nO, sN - sO),
-      statsPath(indexPath)): Unit
-    nw.unpersist(); old.unpersist(): Unit
+    graft.Caches.holding { held =>
+      val nw = held.persist(rows(delta, live = true, gen))
+      val touched = delta.select(col("doc_id").cast("string")).distinct()
+        .collect().map(_.getString(0)).toIndexedSeq
+      val p = postingsPath(indexPath)
+      val bs = MergeLake.bucketsOf(s, p, touched)
+      val old = held.persist(MergeLake.snapshot(s, p, Some(bs))
+        .join(broadcast(touched.toDF("tk")), col("doc_key") === col("tk"),
+          "left_semi")
+        .filter(col("live")))
+      val dead = old
+        .join(nw.select(col("stmt_id")), Seq("stmt_id"), "left_anti")
+        .select(col("stmt_id"), col("doc_key"), col("doc_id"), col("term"),
+          col("tf"), col("dl"), col("source"), lit(false).as("live"),
+          lit(gen).as("last_seen"), lit("").as("value"))
+      MergeLake.append(nw.unionByName(dead), p): Unit
+      val (nN, sN) = measure(nw)
+      val (nO, sO) = measure(old)
+      MergeLake.append(statsRow(s, gen, nN - nO, sN - sO),
+        statsPath(indexPath)): Unit
+    }
   }
 
   /** Scheduled maintenance on the loop's `maintainEvery` pattern. */

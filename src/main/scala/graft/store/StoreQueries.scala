@@ -134,6 +134,39 @@ object StoreQueries {
     SELECT sid AS id, 'in' AS dir, prop, entity_id AS other
     FROM refs JOIN subjects ON refs.value = subjects.sid"""
 
+  /** The versioned store's ADD/MOD/DEL digest compare
+    * (`delta.py:1-4`) in the snapshot-diff shape where BOTH
+    * versions derive from one statement frame — "from" is the rows
+    * satisfying `fromCond`, "to" is every row. Both digests then ride
+    * a single groupBy(id) over a single scan (a conditional
+    * collect_list drops the null entries the condition masks, exactly
+    * like filtering first), instead of two scans + two aggregations +
+    * a full-outer join: 4 Exchanges → 1, and the join disappears.
+    * DEL is unreachable by construction (from ⊆ to in id space), and
+    * each digest is the md5 of the version's sorted `field=value`
+    * entries joined by `|`, so the output is bit-identical to the
+    * two-sided form over those digests — PROVIDED `id` is
+    * non-null: the two-sided full-outer join never matches null keys
+    * (emitting separate ADD+DEL rows for a null-id group) while this
+    * groupBy folds them into one row. Every current caller feeds
+    * non-null ids by construction.
+    */
+  private def deltaOpsOnePass(stmts: DataFrame,
+      fromCond: org.apache.spark.sql.Column): DataFrame = {
+    val entry = concat(col("field"), lit("="), col("value"))
+    stmts.groupBy(col("id"))
+      .agg(
+        md5(concat_ws("|", array_sort(collect_list(entry)))).as("d_to"),
+        md5(concat_ws("|", array_sort(collect_list(
+          when(fromCond, entry))))).as("d_from"),
+        max(when(fromCond, 1).otherwise(0)).as("in_from"))
+      .select(col("id"),
+        when(col("in_from") === 0, "ADD")
+          .when(col("d_from") =!= col("d_to"), "MOD")
+          .otherwise("SAME").as("op"))
+      .filter(col("op") =!= "SAME")
+  }
+
   /** Versioned-store ADD/MOD/DEL delta (`store/versioned.py:62-153`,
     * `delta.py:1-4`) over two simulated snapshots of the statement
     * corpus: the "from" version is missing every 7th entity (→ ADD in
@@ -147,7 +180,7 @@ object StoreQueries {
     // "from" version is a row-level filter of the same frame, so the
     // two per-version digest scans + full-outer join collapse into a
     // single groupBy(id)
-    VersionedStore.deltaOpsOnePass(all,
+    deltaOpsOnePass(all,
       col("num") % 7 =!= 0 &&
         !(col("field") === "type" && col("num") % 5 === 0))
   }

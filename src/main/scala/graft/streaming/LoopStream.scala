@@ -20,7 +20,7 @@ import graft.xref.Xref
   *                        [[RefIndex.refresh]], O(|Δ|·refs)
   *  3. delta xref       — [[Xref.scoredDeltaPairs]] against everything
   *                        decided so far, O(|Δ|·postings)
-  *  4. incremental decide — [[ResolveStream.applyBatchChanged]],
+  *  4. incremental decide — [[ResolveStream.applyBatch]],
   *                        O(affected members)
   *  5. Δ-scoped apply   — re-elect canonicals for the touched clusters
   *                        only, upsert ONLY their members' rewritten
@@ -194,8 +194,7 @@ object LoopStream {
         .select(col("lid").as("src"), col("rid").as("dst"))))
 
     // 4. incremental decide
-    val changed = staged("decide")(
-      ResolveStream.applyBatchChanged(s, edges, p.state, gen))
+    staged("decide")(ResolveStream.applyBatch(s, edges, p.state, gen))
 
     // 5. Δ-scoped apply into the canonical lake. The write set is the
     // full closure a relabeling actually dirties — the touched
@@ -209,7 +208,7 @@ object LoopStream {
     // (canonical election is per-cluster, so a referenced member pulls
     // its whole cluster into the map) — without the closure an upsert
     // would regress a day-0 rewrite back to a raw id.
-    staged("apply") {
+    staged("apply")(graft.Caches.holding { held =>
       val st = ResolveStream.state(s, p.state)
       // the write-set clusters derive from the batch's TOUCHED entities,
       // not from `changed`: every cluster this batch's edges merged
@@ -245,7 +244,7 @@ object LoopStream {
         .unionByName(referrers).unionByName(touched.toDF("eid"))
         .distinct().collect().map(_.getString(0)).toIndexedSeq
       val writeIds = writeIdSeq.toDF("eid")
-      val slice = graft.Caches.pin(corpus.join(broadcast(writeIds),
+      val slice = held.pin(corpus.join(broadcast(writeIds),
         col("canonical_id") === col("eid"), "left_semi"))
       val refs = slice.filter(col("prop_type") === "entity")
         .select(col("value").as("eid")).distinct()
@@ -262,9 +261,7 @@ object LoopStream {
         CliArgs.applyCanonical(slice, cm)
           .withColumn("last_seen", lit(gen)),
         p.canonical): Unit
-      slice.unpersist(): Unit
-      changed.unpersist(): Unit
-    }
+    })
 
     // 6. scheduled maintenance: every lake this loop appends to folds
     // its deltas once the live count crosses the threshold (the

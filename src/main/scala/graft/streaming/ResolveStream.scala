@@ -50,18 +50,7 @@ object ResolveStream {
     * the changed members, upsert them. The write is O(affected).
     */
   def applyBatch(s: SparkSession, edges: DataFrame, path: String,
-      seen: String): Unit = {
-    applyBatchChanged(s, edges, path, seen).unpersist(): Unit
-  }
-
-  /** [[applyBatch]] variant returning the changed-member set
-    * `(id, cluster)` — the batch's Δ-sized write set, still pinned —
-    * for callers that scope downstream work (canonical re-election,
-    * statement rewrite) to the members the batch actually touched.
-    * Callers unpersist it when done.
-    */
-  def applyBatchChanged(s: SparkSession, edges: DataFrame, path: String,
-      seen: String): DataFrame = {
+      seen: String): Unit = graft.Caches.holding { held =>
     // pin the merge-on-read resolve ONCE per batch: addEdgesChanged
     // consumes the state in 4-5 passes (touched slice ×3, final
     // relabel join) — even with the exchange-free snapshot, repeated
@@ -70,12 +59,9 @@ object ResolveStream {
     // The Δ-sized changed set is pinned too: it is evaluated twice
     // (emptiness gate, then the append) and each evaluation would
     // otherwise re-run the relabel join over the full state.
-    val cc = graft.Caches.pin(state(s, path))
-    try {
-      val changed = graft.Caches.pin(Resolver.addEdgesChanged(cc, edges))
-      if (!changed.isEmpty)
-        MergeLake.append(asRows(changed, seen), path): Unit
-      changed
-    } finally { cc.unpersist(); () }
+    val cc = held.pin(state(s, path))
+    val changed = held.pin(Resolver.addEdgesChanged(cc, edges))
+    if (!changed.isEmpty)
+      MergeLake.append(asRows(changed, seen), path): Unit
   }
 }

@@ -297,7 +297,7 @@ object Symbols {
     * scoring, which is why the path is deliberately NOT a runtime
     * setter.
     */
-  private def lexiconPath: Option[String] =
+  private[graft] def lexiconPath: Option[String] =
     sys.props.get("graft.name.variants")
       .orElse(sys.env.get("GRAFT_NAME_VARIANTS"))
 

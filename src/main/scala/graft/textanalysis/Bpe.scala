@@ -110,38 +110,45 @@ object Bpe {
     * across k iterations (the k-means/connected-components rule).
     */
   def trainMerges(vocab: DataFrame, k: Int): Seq[(String, String)] = {
-    var seg = vocab.select(col("freq"), symsOf(toSeq0(col("w"))).as("syms"))
-      .localCheckpoint(true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var round = 0
-    var dry = false
-    while (round < k && !dry) {
-      val top = seg.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(
-          zip_with(slice(col("syms"), lit(1), size(col("syms")) - 1),
-            slice(col("syms"), lit(2), size(col("syms")) - 1),
-            (x, y) => struct(x.as("a"), y.as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) dry = true
-      else {
-        val a: String = top(0).getString(0)
-        val b: String = top(0).getString(1)
-        out += ((a, b))
-        val merged = replace(
-          concat(lit(Sep + Sep), concat_ws(Sep + Sep, col("syms")),
-            lit(Sep + Sep)),
-          mergeSearch(lit(a), lit(b)), mergeRepl(lit(a), lit(b)))
-        val next = seg.select(col("freq"), symsOf(merged).as("syms"))
-          .localCheckpoint(true)
-        seg.unpersist()
-        seg = next
-        round += 1
+    // each round's Held frees the round before it once the next
+    // segmentation is cut
+    var held = new graft.Caches.Held
+    try {
+      var seg = held.cut(
+        vocab.select(col("freq"), symsOf(toSeq0(col("w"))).as("syms")))
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      var round = 0
+      var dry = false
+      while (round < k && !dry) {
+        val top = seg.filter(size(col("syms")) >= 2)
+          .select(col("freq"), explode(
+            zip_with(slice(col("syms"), lit(1), size(col("syms")) - 1),
+              slice(col("syms"), lit(2), size(col("syms")) - 1),
+              (x, y) => struct(x.as("a"), y.as("b")))).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        if (top.isEmpty) dry = true
+        else {
+          val a: String = top(0).getString(0)
+          val b: String = top(0).getString(1)
+          out += ((a, b))
+          val merged = replace(
+            concat(lit(Sep + Sep), concat_ws(Sep + Sep, col("syms")),
+              lit(Sep + Sep)),
+            mergeSearch(lit(a), lit(b)), mergeRepl(lit(a), lit(b)))
+          val next = new graft.Caches.Held
+          val nextSeg =
+            next.cut(seg.select(col("freq"), symsOf(merged).as("syms")))
+          held.release()
+          held = next
+          seg = nextSeg
+          round += 1
+        }
       }
-    }
-    out.toSeq
+      out.toSeq
+    } finally held.release()
   }
 
   /** [[trainMerges]] once per corpus, the ordered merge list published
@@ -191,7 +198,7 @@ object Bpe {
     * vocabulary and everything derived roll up from it.
     */
   def encodeOf(docs: DataFrame): DataFrame =
-    encodeFrom(graft.Caches.pin(TextAnalysis.withWords(docs)
+    encodeFrom(graft.Caches.checkpoint(TextAnalysis.withWords(docs)
       .select(col("doc_id"), explode(col("w")).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))))
 

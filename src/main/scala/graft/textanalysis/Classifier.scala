@@ -90,11 +90,11 @@ object Classifier {
     * determinism note above. One distributed aggregation per epoch
     * over the train half.
     */
-  def train(feat: DataFrame): Weights = {
+  def train(feat: DataFrame): Weights = graft.Caches.holding { held =>
     // pinned, not checkpointed: every epoch re-reads this train-half
     // table — local-disk blocks with lineage retained survive an
     // executor loss mid-training (checkpoint blocks would not)
-    val cached = graft.Caches.pin(feat.filter(col("is_train"))
+    val cached = held.pin(feat.filter(col("is_train"))
       .select(col("x1"), col("x2"), col("x3"), col("x4"),
         col("y").cast("double").as("y")))
     val n = cached.count().toDouble

@@ -214,16 +214,13 @@ object Xref {
     */
   def run(s: SparkSession, stmts: DataFrame, decided: DataFrame,
       cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val built = new graft.Caches.Held
     // DISK_ONLY: the scored table is bounded by limit·limitFactor (50k
     // at reference defaults) but operators raise the cap — local disk
     // keeps a raised cap from pinning executor memory; the extra pass
     // is one scan of a slim (lid, rid, score) table. Materialized once,
     // before both consumers fork.
-    val scored =
-      try scoredWith(s, stmts, decided, cfg, built).localCheckpoint(
-        eager = true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      finally built.release()
+    val scored = graft.Caches.holding(built =>
+      graft.Caches.checkpoint(scoredWith(s, stmts, decided, cfg, built)))
     val gate = cfg.autoThreshold
       .map(t => col("score") > t).getOrElse(lit(false))
     val merges = scored.filter(gate)

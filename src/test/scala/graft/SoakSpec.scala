@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Soak.run]] on the suite's shared session: each record parses as
   * JSON under de_DE with its mode's keys in order, and the run leaves
-  * the session alive with no listener of its own behind.
+  * the session alive with no listener and no persisted RDD of its own
+  * behind.
   */
 class SoakSpec extends AnyFunSuite {
   import SparkSpec.{listeners, spark}
@@ -22,10 +23,13 @@ class SoakSpec extends AnyFunSuite {
     // the session's first query registers Spark's SQL status listener
     spark.range(1).count()
     val before = listeners
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val line = Soak.run(spark, args.toArray)
       assert(!spark.sparkContext.isStopped)
       assert(listeners === before)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+      assert(left.isEmpty, s"RDDs left persisted: ${left.mkString(", ")}")
       new ObjectMapper().readTree(line)
     } finally Locale.setDefault(prev)
   }

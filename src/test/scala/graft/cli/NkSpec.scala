@@ -18,9 +18,10 @@ import graft.xref.XrefCorpus
   * `apply` over statement CSV equals `apply` over parquet,
   * `xref` leaves no entry in the session's `CacheManager`,
   * bad arguments fail with the verb's usage before any session is
-  * used, `merge-lake` leaves the session alive with its listeners, and
+  * used, `merge-lake` leaves the session alive with its listeners,
   * `name-bench`, `bench-checks` and `lexicon-bench` never ask for a
-  * session.
+  * session, `bench-matchers` prints a `.` decimal separator under
+  * de_DE, and `index-build --index-dir` restores the JVM's index root.
   */
 class NkSpec extends AnyFunSuite {
   import SparkSpec.{cachedEntries, listeners, spark}
@@ -177,6 +178,26 @@ class NkSpec extends AnyFunSuite {
     for (args <- Seq(Array("bench-checks", s"$dir/absent.yml"),
         Array("lexicon-bench", s"$dir/absent.csv", s"$dir/absent.yml")))
       intercept[java.nio.file.NoSuchFileException](Nk.run(noSession, args))
+  }
+
+  test("bench-matchers prints a dot decimal separator under de_DE") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val out =
+      try Nk.run(spark, Array("bench-matchers", s"$dir/stmts", "--number",
+        "20", "--limit", "50", "--algorithm", "logic-v1"))
+      finally java.util.Locale.setDefault(prev)
+    assert(out.matches(
+      "\\[bench\\] logic-v1 +n=20 +total=\\d+\\.\\d{3} s  \\d+\\.\\d us/call"),
+      out)
+  }
+
+  test("index-build --index-dir restores the index root, even on a throw") {
+    val prev = sys.props.get("graft.index.dir")
+    // a missing data dir fails before any artifact is built
+    intercept[Exception](Nk.run(spark, Array("index-build",
+      s"$dir/absent-sf", "--index-dir", s"$dir/index")))
+    assert(sys.props.get("graft.index.dir") === prev)
   }
 
   test("scoring-loss returns its table as the report") {

@@ -69,13 +69,13 @@ class ProposeSpec extends AnyFunSuite {
     .toDF("id", "schema", "properties")
   lazy val stmts = EntityStore.statements(entities, "t")
 
-  lazy val enrichLines = Propose.enrich(
+  lazy val enrichLines = graft.Caches.holding(Propose.enrich(_)(
     Seq(("e1", "Q1")).toDF("entity_id", "qid"), stmts, snaks,
     Seq(("e1", "Q901", "2001", null.asInstanceOf[String]),
       ("e1", "Q900", "1999", "2003"))
       .toDF("entity_id", "pos_qid", "start", "end"),
     retrieved = Some("2024-06-01"))
-    .orderBy("ord").collect().map(_.getAs[String]("line"))
+    .orderBy("ord").collect().map(_.getAs[String]("line")))
 
   test("enrich emits only what wikidata lacks, in reference order") {
     val refs = "\tS854\t\"https://src.example/e1\"" +
@@ -128,12 +128,12 @@ class ProposeSpec extends AnyFunSuite {
       "name" -> Seq("FRANZ STRAUSS"),
       "alias" -> Seq("F. Strauß", "f. strauss"))))
       .toDF("id", "schema", "properties")
-    val lines = Propose.enrich(
+    val lines = graft.Caches.holding(Propose.enrich(_)(
       Seq(("e4", "Q7")).toDF("entity_id", "qid"),
       EntityStore.statements(ent, "t"), sz,
       Seq.empty[(String, String, String, String)]
         .toDF("entity_id", "pos_qid", "start", "end"))
-      .orderBy("ord").collect().map(_.getAs[String]("line"))
+      .orderBy("ord").collect().map(_.getAs[String]("line")))
     // the name casefold-matches the label (ß→ss, as Python casefold);
     // the two alias spellings fold together and emit once
     assert(lines === Array("Q7\tAmul\t\"F. Strauß\""))

@@ -122,21 +122,23 @@ class ReconcileSpec extends AnyFunSuite {
     val decided = canonicals
       .select(col("member").as("entity_id"), col("canonical").as("qid"))
     val candidates = Reconcile.searchCandidates(stmts, snaks)
-    val (decisions, merges, commands) = Reconcile.reconcile(
-      stmts, snaks, canonicals, decided, candidates,
-      retrieved = Some("2024-06-01"))
-    val d = decisions.orderBy("entity_id").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    // p2 is linked via its wikidataId prop; p1's label hit merges
-    assert(d === Seq(("p1", "merge"), ("p2", "enrich")))
-    assert(merges.collect().map(r => (r.getString(0), r.getString(1)))
-      .toSeq === Seq(("p1", "Q1")))
-    val lines = commands.select("line").as[String].collect()
-    // the linked person enriches its item: birth-date-less Q77951 gets
-    // nothing here (p2 has no dates), but its P39 claim must appear
-    assert(lines.exists(_.startsWith("Q77951\tP39\tQ2824523")))
-    // no CREATE block: every person is linked or merged
-    assert(!lines.contains("CREATE"))
+    graft.Caches.holding { held =>
+      val (decisions, merges, commands) = Reconcile.reconcile(held)(
+        stmts, snaks, canonicals, decided, candidates,
+        retrieved = Some("2024-06-01"))
+      val d = decisions.orderBy("entity_id").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      // p2 is linked via its wikidataId prop; p1's label hit merges
+      assert(d === Seq(("p1", "merge"), ("p2", "enrich")))
+      assert(merges.collect().map(r => (r.getString(0), r.getString(1)))
+        .toSeq === Seq(("p1", "Q1")))
+      val lines = commands.select("line").as[String].collect()
+      // the linked person enriches its item: birth-date-less Q77951 gets
+      // nothing here (p2 has no dates), but its P39 claim must appear
+      assert(lines.exists(_.startsWith("Q77951\tP39\tQ2824523")))
+      // no CREATE block: every person is linked or merged
+      assert(!lines.contains("CREATE"))
+    }
   }
 
   test("rankCandidates scores persons against the dump mirror") {
@@ -171,12 +173,14 @@ class ReconcileSpec extends AnyFunSuite {
     val decided = empty
       .select(col("member").as("entity_id"), col("canonical").as("qid"))
     val candidates = Reconcile.searchCandidates(noPersonLink, snaks)
-    val (decisions, merges, commands) = Reconcile.reconcile(
-      noPersonLink, snaks, empty, decided, candidates)
-    assert(decisions.filter(col("decision") === "create").count() === 2)
-    assert(merges.count() === 0)
-    val lines = commands.select("line").as[String].collect()
-    assert(lines.count(_ === "CREATE") === 2)
-    assert(lines.exists(_.contains("\tLmul\t\"Johanna Quandt\"")))
+    graft.Caches.holding { held =>
+      val (decisions, merges, commands) = Reconcile.reconcile(held)(
+        noPersonLink, snaks, empty, decided, candidates)
+      assert(decisions.filter(col("decision") === "create").count() === 2)
+      assert(merges.count() === 0)
+      val lines = commands.select("line").as[String].collect()
+      assert(lines.count(_ === "CREATE") === 2)
+      assert(lines.exists(_.contains("\tLmul\t\"Johanna Quandt\"")))
+    }
   }
 }
